@@ -18,55 +18,56 @@ object Lake {
 
   /** Full pipeline: VCF glob → annotated, per-position `entries` rows.
     *
-    * Join strategy at scale: the annotation tables are *not* hinted
-    * broadcast — dbSNP/gnomAD are billion-row datasets in production, so
-    * the joins shuffle on (chrom,pos[,ref,alt]) and AQE converts to
-    * broadcast at runtime when a side is actually small (as in tests).
-    * All four joins + both aggregations share the same leading key
-    * (chrom,pos), so Spark reuses the child partitioning instead of
-    * reshuffling between stages.
+    * The per-sample rows are shuffled ONCE, on the lake's own key
+    * (chrom, pos_bucket) — the "ByRanges" scheme, M:74-76 — then folded
+    * per variant, annotated and folded per position. Both fold keys
+    * contain (chrom, pos_bucket), so with broadcast joins the folds,
+    * joins and [[write]] run in one stage after that shuffle, and Spark
+    * drops [[write]]'s repartition. Joining after the variant fold (the
+    * reference joins first, M:52-70) gives the same rows: every join key
+    * is a subset of the variant key, so k annotation matches still yield
+    * k entries, each with the full hom/het sets.
     *
-    * Determinism deviation (documented, SURVEY §7): both collect_set
-    * results are wrapped in sort_array — same set, fixed order — so lake
-    * output is byte-stable run-to-run.
+    * The annotation tables are *not* hinted broadcast — dbSNP/gnomAD are
+    * billion-row datasets in production. AQE broadcasts a side that is
+    * actually small; otherwise the joins sort-merge and each shuffles the
+    * folded variants on its own key (ARCHITECTURE.md, both plans).
+    *
+    * Determinism deviation (SURVEY §7): both collect_set results are
+    * wrapped in sort_array (same set, fixed order), so output is stable.
     */
   def build(spark: SparkSession, inputPath: String, impactPath: String,
             dbSnpPath: String, t2t: Boolean, gnomadPath: String,
-            alphaPath: String,
-            partitionSize: Int = PartitionSize): DataFrame = {
-    val variants = Vcf.mutations(spark, inputPath)
-    val annotated = variants
-      .join(Annotations.impact(spark, impactPath), Seq("chrom", "pos", "ref", "alt"), "left")
-      .join(Annotations.dbSnp(spark, dbSnpPath, t2t), Seq("chrom", "pos", "ref", "alt"), "left")
-      .join(Annotations.gnomad(spark, gnomadPath), Seq("chrom", "pos", "ref", "alt"), "left")
-    val withAlpha = Annotations.attachAlpha(annotated, alphaPath)
+            alphaPath: String): DataFrame = {
+    val bucketed = Vcf.mutations(spark, inputPath)
+      .withColumn("pos_bucket", floor(col("pos") / lit(PartitionSize)))
+      .repartition(col("chrom"), col("pos_bucket"))
 
-    // Per-variant: fold per-sample rows into hom/het evidence arrays.
-    // collect_set also drops the nulls produced by the when-gating in
-    // Vcf.mutations (reference M:64-66 relies on the same property).
-    val annKeys = Seq("chrom", "pos", "ref", "alt", "impact", "dbSNP",
-      "gnomad_an", "gnomad_ac", "gnomad_nhomalt", "hg38_coordinate", "alphamissense")
-    val perVariant = withAlpha
-      .groupBy(annKeys.map(col): _*)
+    // Per-variant: fold per-sample rows into hom/het evidence arrays;
+    // collect_set drops Vcf.mutations' when-gated nulls (as M:64-66 does).
+    val perVariant = bucketed
+      .groupBy(col("chrom"), col("pos_bucket"), col("pos"), col("ref"), col("alt"))
       .agg(
         sort_array(collect_set(col("hom_ev"))).as("hom"),
         sort_array(collect_set(col("het_ev"))).as("het"))
+    val annotated = perVariant
+      .join(Annotations.impact(spark, impactPath), Seq("chrom", "pos", "ref", "alt"), "left")
+      .join(Annotations.dbSnp(spark, dbSnpPath, t2t), Seq("chrom", "pos", "ref", "alt"), "left")
+      .join(Annotations.gnomad(spark, gnomadPath), Seq("chrom", "pos", "ref", "alt"), "left")
 
-    // Per-position: fold alleles into the `entries` array and derive the
-    // range-partitioning bucket (the "ByRanges" scheme, M:74-76).
-    perVariant
-      .withColumn("resp", struct(
+    // Per-position: fold alleles into the `entries` array.
+    Annotations.attachAlpha(annotated, alphaPath)
+      .groupBy(col("chrom"), col("pos_bucket"), col("pos"))
+      .agg(sort_array(collect_set(struct(
         col("ref"), col("alt"), col("impact"), col("dbSNP"),
         col("gnomad_an"), col("gnomad_ac"), col("gnomad_nhomalt"),
-        col("hg38_coordinate"), col("alphamissense"), col("hom"), col("het")))
-      .withColumn("pos_bucket", floor(col("pos") / lit(partitionSize)))
-      .groupBy(col("chrom"), col("pos_bucket"), col("pos"))
-      .agg(sort_array(collect_set(col("resp"))).as("entries"))
+        col("hg38_coordinate"), col("alphamissense"), col("hom"), col("het")))).as("entries"))
   }
 
-  /** Hive-partitioned lake write: one shuffle to co-locate each
-    * (chrom, pos_bucket) directory's rows in one task, rows clustered by
-    * pos within files (an addition over the reference — parquet min/max
+  /** Hive-partitioned lake write: one shuffle (elided on [[build]]'s
+    * output, already so partitioned) co-locates each (chrom, pos_bucket)
+    * directory's rows in one task, rows clustered by pos within files
+    * (an addition over the reference — parquet min/max
     * stats then prune row groups for downstream point queries, the E3
     * contract in SURVEY §3), capped file sizes.
     *

@@ -118,9 +118,8 @@ object Vcf {
   }
 
   /** One-row ingest status: distinct coordinate/mutation/sample counts +
-    * timestamp (M:140-153). Counts are exact (Expand-based countDistinct);
-    * at 100 TB swap for approx_count_distinct — the status row is
-    * informational, not a join input.
+    * timestamp (M:140-153). Counts are exact (Expand-based countDistinct):
+    * the status row is part of the reference output contract.
     */
   def status(spark: SparkSession, inputPath: String): DataFrame =
     raw(spark, inputPath)
