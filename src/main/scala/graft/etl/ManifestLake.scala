@@ -2709,15 +2709,7 @@ object ManifestLake {
     // side is summed from parquet FOOTERS (metadata-only, no job), so a
     // stats-less append costs exactly ONE Spark job end to end.
     val staged = stagedFiles(fs, root, commitDir)
-    consSeq.foreach { case (n, e) =>
-      val bad = obsLong(obs, s"viol_$n")
-      if (bad > 0) {
-        fs.delete(commitDir, true)
-        throw new IllegalStateException(
-          s"CHECK constraint $n (`$e`) on $path violated by $bad batch row(s) — " +
-            s"nothing published, table still at v${v - 1}")
-      }
-    }
+    requireNoViolations(fs, commitDir, obs, consSeq, path, "batch", v - 1)
     val rowsIn = obsLong(obs, "rows")
     // empty input stages no parquet files — nothing to re-read (an empty
     // replace is a defined state: the manifest lists nothing)
@@ -4007,10 +3999,10 @@ object ManifestLake {
     require(partitionCols.forall(keyCols.contains),
       "partition columns must be part of the key")
     val (fs, root) = fsFor(spark, path)
-    // the batch feeds ~5 actions (key-unique check, partition collect,
-    // merge write, verification joins) — pin it for the call's lifetime
-    // so each action reuses one evaluation instead of replaying the
-    // caller's upstream plan
+    // the batch feeds four queries (the batch aggregate, the merge
+    // write, the key-coverage check, the change files) — pin it for the
+    // call's lifetime so each reuses one evaluation instead of replaying
+    // the caller's upstream plan
     updates.persist()
     val v =
       try upsertPinned(spark, fs, root, path, updates, partitionCols, keyCols, txn, changeFeed)
@@ -4039,11 +4031,23 @@ object ManifestLake {
     if (txn.exists { case (app, b) =>
       manifest0.exists(_.txns.get(app).exists(_ >= b)) })
       return v
-    // key-uniqueness holds on EVERY path, including the table-creating
-    // first batch — a duplicate key that slipped into v1 would corrupt
-    // the first real merge with a nondeterministic winner
-    val nUpd = updates.count()
-    val nUpdKeys = updates.select(keyCols.map(col): _*).distinct().count()
+    // ONE aggregate over the batch (it also materializes the pin): row
+    // count, distinct-key count, distinct partition values. The key
+    // holds the partition columns, so one shuffle serves both groupings.
+    // Key-uniqueness holds on EVERY path, including the table-creating
+    // first batch — a duplicate key in v1 would give the first real
+    // merge a nondeterministic winner.
+    val batchBytes = updates.queryExecution.optimizedPlan.stats.sizeInBytes
+    val partRows = updates.select(keyCols.map(col): _*)
+      .repartition(shuffleWidth(spark, batchBytes), partitionCols.map(col): _*)
+      .groupBy(keyCols.map(col): _*).agg(count(lit(1)).as("__n"))
+      .groupBy(partitionCols.map(col): _*)
+      .agg(sum(col("__n")).as("__n"), count(lit(1)).as("__k"))
+      .select(partitionCols.map(c => col(c).cast("string").as(c)) ++
+        Seq(col("__n"), col("__k")): _*)
+      .collect()
+    val nUpd = partRows.map(_.getLong(partitionCols.size)).sum
+    val nUpdKeys = partRows.map(_.getLong(partitionCols.size + 1)).sum
     if (nUpd != nUpdKeys)
       throw new IllegalArgumentException(
         s"updates are not key-unique on ${keyCols.mkString(",")}: $nUpd rows, $nUpdKeys keys")
@@ -4091,11 +4095,8 @@ object ManifestLake {
     }
 
     // affected partition dirs, rendered exactly as partitioned writes
-    // render them (one small collect — bounded by the batch's partition
-    // spread, which is small against the lake by definition)
-    val partRows = updatesP
-      .select(partitionCols.map(c => col(c).cast("string").as(c)): _*)
-      .distinct().collect()
+    // render them (the batch aggregate's rows — bounded by the batch's
+    // partition spread, which is small against the lake by definition)
     require(partRows.forall(r => partitionCols.indices.forall(i => !r.isNullAt(i))),
       "null partition values are not supported by the manifest upsert")
     val affectedDirs = partRows.map(r =>
@@ -4129,13 +4130,18 @@ object ManifestLake {
         Manifest(widened.orElse(manifest.schema), manifest.partCols, affectedFiles))
         .select(tableSchema.fieldNames.map(n =>
           col(n).cast(tableSchema(n).dataType)): _*))
+    val width = shuffleWidth(spark, affectedFiles.map(_.bytes).sum + batchBytes)
+    // ONE merge shuffle, sized like every shuffle below to the bytes this
+    // commit moves: the repartition on the partition columns clusters
+    // every key, so the row_number window and the write both run on it
     val merged = affected match {
-      case None => updatesP
+      case None => updatesP.repartition(width, partitionCols.map(col): _*)
       case Some(aff) =>
         val byKey = org.apache.spark.sql.expressions.Window
           .partitionBy(keyColsP.map(col): _*).orderBy(col("__src").desc)
         aff.withColumn("__src", lit(0))
           .unionByName(updatesP.withColumn("__src", lit(1)))
+          .repartition(width, partitionCols.map(col): _*)
           .withColumn("__rn", row_number().over(byKey))
           .where(col("__rn") === 1)
           .drop("__src", "__rn")
@@ -4174,51 +4180,36 @@ object ManifestLake {
               s"against this upsert batch: ${ex.getMessage}", ex)
       }
     }
+    // count(*) always rides the write: violation counts (absent keys
+    // default to 0) are trusted once it matches the staged footer count
     val obsU = org.apache.spark.sql.Observation()
-    val observed =
-      if (consSeqU.isEmpty) merged
-      else {
-        // count(*) rides along so a lost CollectMetrics on a non-empty
-        // write is detectable (absent keys default to 0 — trustworthy
-        // only if the observed row count matches the staged count)
-        val aggsU = count(lit(1)).as("n_obs_rows") +:
-          consSeqU.map { case (n, e) =>
-            count(when(not(coalesce(expr(e), lit(true))), lit(1))).as(s"viol_$n")
-          }
-        merged.observe(obsU, aggsU.head, aggsU.tail: _*)
+    val aggsU = count(lit(1)).as("n_obs_rows") +:
+      consSeqU.map { case (n, e) =>
+        count(when(not(coalesce(expr(e), lit(true))), lit(1))).as(s"viol_$n")
       }
-    observed.repartition(partitionCols.map(col): _*)
+    merged.observe(obsU, aggsU.head, aggsU.tail: _*)
       .sortWithinPartitions(keyColsP.map(col): _*)
       .write.mode(SaveMode.Overwrite)
       .partitionBy(partitionCols: _*)
       .parquet(commitDir.toString)
-    // verify the staged merge while it is invisible: key-unique and
-    // every update key present
-    val out = spark.read.parquet(commitDir.toString)
-    val rowsOut = out.count()
-    // defaulted-to-0 violation counts are trusted only after the
-    // observed count(*) matches the staged count (both 0 when empty) —
-    // a lost CollectMetrics on a non-empty write fails loudly instead
-    // of silently disabling enforcement
-    if (consSeqU.nonEmpty && obsLong(obsU, "n_obs_rows") != rowsOut) {
-      fs.delete(commitDir, true)
-      throw new IllegalStateException(
-        s"manifest upsert observation lost for $path: observed " +
-          s"${obsLong(obsU, "n_obs_rows")} row(s) but $rowsOut staged — " +
-          s"constraint metrics are untrustworthy, table still at v$v")
-    }
-    consSeqU.foreach { case (n, e) =>
-      val bad = obsLong(obsU, s"viol_$n")
-      if (bad > 0) {
-        fs.delete(commitDir, true)
-        throw new IllegalStateException(
-          s"CHECK constraint $n (`$e`) on $path violated by $bad merged row(s) — " +
-            s"nothing published, table still at v$v")
-      }
-    }
-    val keysOut = out.select(keyColsP.map(col): _*).distinct().count()
-    val updKeysOut = out.join(broadcast(updatesP.select(keyColsP.map(col): _*)),
-      keyColsP.toSeq, "left_semi").count()
+    // verify the staged merge while it is invisible: the footer row
+    // count against the observed one, the constraints, then key
+    // uniqueness and update-key coverage in one read-back aggregate
+    val staged = stagedFiles(fs, root, commitDir)
+    val rowsOut = footerRowCount(fs, root, staged)
+    requireObservedStaged(fs, commitDir, obsLong(obsU, "n_obs_rows"), rowsOut,
+      s"manifest upsert observation lost for $path", "constraint", s"table still at v$v")
+    requireNoViolations(fs, commitDir, obsU, consSeqU, path, "merged", v)
+    val updKeys = updatesP.select(keyColsP.map(col): _*).withColumn("__upd", lit(true))
+    val keyCheck = spark.read.parquet(commitDir.toString)
+      .select(keyColsP.map(col): _*)
+      .join(broadcast(updKeys), keyColsP.toSeq, "left")
+      .repartition(width, partitionCols.map(col): _*)
+      .groupBy(keyColsP.map(col): _*).agg(max(col("__upd")).as("__upd"))
+      .agg(count(lit(1)), count(when(col("__upd"), lit(1))))
+      .head()
+    val keysOut = keyCheck.getLong(0)
+    val updKeysOut = keyCheck.getLong(1)
     if (rowsOut != keysOut || updKeysOut != nUpdKeys) {
       fs.delete(commitDir, true)
       throw new IllegalStateException(
@@ -4228,7 +4219,6 @@ object ManifestLake {
     }
     // rewritten partitions re-collect whatever stats columns the live
     // manifest tracks — same stats-are-maintained stance as compact
-    val staged = stagedFiles(fs, root, commitDir)
     val statKeys =
       (live.flatMap(_.stats.keys) ++ live.flatMap(_.nullCounts.keys) ++
         live.flatMap(_.valueSets.keys)).distinct
@@ -4257,7 +4247,6 @@ object ManifestLake {
             updNorm.withColumn(ChangeTypeCol, lit("insert"))
           case Some(aff) =>
             val keySeq = keyColsP.toSeq
-            val updKeys = updatesP.select(keyColsP.map(col): _*)
             val pre = aff.select(tableCols: _*)
               .join(broadcast(updKeys), keySeq, "left_semi")
             val preKeys = pre.select(keyColsP.map(col): _*)
@@ -4268,7 +4257,7 @@ object ManifestLake {
                 .withColumn(ChangeTypeCol, lit("insert")))
         }
         val cdfP = new Path(commitDir, CdfDir)
-        changes.repartition(partitionCols.map(col): _*)
+        changes.repartition(width, partitionCols.map(col): _*)
           .write.mode(SaveMode.Overwrite).parquet(cdfP.toString)
         val rootQ = fs.makeQualified(root).toString
         Some(fs.makeQualified(cdfP).toString.stripPrefix(rootQ).stripPrefix("/"))
@@ -4495,15 +4484,7 @@ object ManifestLake {
         .repartition(partitionCols.map(col): _*)
         .write.mode(SaveMode.Overwrite).partitionBy(partitionCols: _*)
         .parquet(commitDir.toString)
-      consSeq.foreach { case (n, e) =>
-        val bad = obsLong(obs, s"viol_$n")
-        if (bad > 0) {
-          fs.delete(commitDir, true)
-          throw new IllegalStateException(
-            s"CHECK constraint $n (`$e`) on $path violated by $bad batch " +
-              s"row(s) — nothing published, table still at v$v")
-        }
-      }
+      requireNoViolations(fs, commitDir, obs, consSeq, path, "batch", v)
       val rowsIn = obsLong(obs, "rows")
       val staged = stagedFiles(fs, root, commitDir)
       val rowsOut = footerRowCount(fs, root, staged)
@@ -5033,23 +5014,10 @@ object ManifestLake {
       // below pass even with real constraint violations — fails HERE.
       val staged = stagedFiles(fs, root, commitDir)
       val rowsOut = footerRowCount(fs, root, staged)
-      val nObs = obsLong(obsM, "n_obs_rows")
-      if (nObs != rowsOut) {
-        fs.delete(commitDir, true)
-        throw new IllegalStateException(
-          s"manifest merge observation lost for $path: observed $nObs row(s) " +
-            s"but $rowsOut staged — constraint/row metrics are untrustworthy, " +
-            s"nothing published, table still at v$v")
-      }
-      consSeqM.foreach { case (n, e) =>
-        val bad = obsLong(obsM, s"viol_$n")
-        if (bad > 0) {
-          fs.delete(commitDir, true)
-          throw new IllegalStateException(
-            s"CHECK constraint $n (`$e`) on $path violated by $bad merged " +
-              s"row(s) — nothing published, table still at v$v")
-        }
-      }
+      requireObservedStaged(fs, commitDir, obsLong(obsM, "n_obs_rows"), rowsOut,
+        s"manifest merge observation lost for $path", "constraint/row",
+        s"nothing published, table still at v$v")
+      requireNoViolations(fs, commitDir, obsM, consSeqM, path, "merged", v)
       val nUpd = obsLong(obsM, "n_upd")
       val nIns = obsLong(obsM, "n_ins")
       // nDel came from the validation pass above
@@ -5548,17 +5516,29 @@ object ManifestLake {
   /** The subset of `dirs` (hive partition-dir strings) whose TYPED
     * partition values satisfy `predicate`, or None when the predicate
     * cannot be decided from partition values alone: it references data
-    * columns (fails to resolve against the partition-only frame), is
-    * nondeterministic (would evaluate per-partition instead of
-    * per-row), or any table column is named `__dir` (collides with the
-    * helper column). NULL partition values keep SQL semantics — the
-    * predicate evaluates NULL there, which is not a match.
+    * columns (its references, resolved against the table's `schema`,
+    * are not all partition columns), is nondeterministic (would
+    * evaluate per-partition instead of per-row), or any table column is
+    * named `__dir` (collides with the helper column). Deciding from the
+    * references runs no query that fails analysis on purpose — Spark
+    * reports every failed analysis to the session's listeners. NULL
+    * partition values keep SQL semantics — the predicate evaluates NULL
+    * there, which is not a match.
     */
   private def matchedPartitionDirs(spark: SparkSession, schema: StructType,
                                    partCols: Seq[String], predicate: Column,
-                                   dirs: Seq[String]): Option[Set[String]] =
+                                   dirs: Seq[String]): Option[Set[String]] = {
+    import org.apache.spark.sql.catalyst.plans.logical.Filter
+    def conditionOf(df: DataFrame) =
+      df.queryExecution.analyzed.collectFirst { case f: Filter => f.condition }
+    // a predicate that does not resolve against the table at all fails
+    // the rewrite path's scan with the same analysis error
+    lazy val refs = try
+      conditionOf(spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+        .where(predicate)).map(_.references.map(_.name).toSet)
+    catch { case _: org.apache.spark.sql.AnalysisException => None }
     if (partCols.isEmpty || partCols.contains("__dir") ||
-        schema.fieldNames.contains("__dir")) None
+        schema.fieldNames.contains("__dir") || !refs.exists(_.subsetOf(partCols.toSet))) None
     else {
       import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
       val rows = dirs.map { d =>
@@ -5571,20 +5551,14 @@ object ManifestLake {
       val strSchema = StructType(StructField("__dir", StringType) +:
         partCols.map(c => StructField(c, StringType)).toArray)
       import scala.jdk.CollectionConverters._
-      val frame = spark.createDataFrame(rows.asJava, strSchema)
+      val filtered = spark.createDataFrame(rows.asJava, strSchema)
         .select(col("__dir") +: partCols.map(c =>
           col(c).cast(schema(c).dataType).as(c)): _*)
-      try {
-        val filtered = frame.where(predicate)
-        val deterministic = filtered.queryExecution.analyzed.collectFirst {
-          case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
-            f.condition.deterministic
-        }.getOrElse(true)
-        if (!deterministic) None
-        else Some(filtered.select("__dir").collect().map(_.getString(0)).toSet)
-      }
-      catch { case _: org.apache.spark.sql.AnalysisException => None }
+        .where(predicate)
+      if (!conditionOf(filtered).forall(_.deterministic)) None
+      else Some(filtered.select("__dir").collect().map(_.getString(0)).toSet)
     }
+  }
 
   /** Test seam for the optimistic-commit specs: when set, fired ONCE
     * (one-shot, self-clearing) with the op kind right before a
@@ -5726,20 +5700,14 @@ object ManifestLake {
     // files leave the live set BY REFERENCE — zero rewrite I/O, and
     // with the change feed disabled zero data I/O at all: "drop the
     // bad source/day/shard" on a 100 TB table is one manifest write.
-    // Detection is by ANALYSIS, not expression inspection: the
+    // Detection is by the predicate's references, resolved against
+    // the table's logical columns: all partition columns → the
     // predicate is applied to a tiny local frame holding only the
-    // typed partition values; if it fails to resolve there it
-    // references data columns and the rewrite path below handles it.
+    // typed partition values; any data column → the rewrite path below.
     // NULL partition values keep their SQL DELETE semantics — the
     // predicate evaluates NULL there, which is not a match.
-    // a DATA column literally named __dir would resolve the predicate
-    // against the helper frame's directory-string column instead of row
-    // data — bail to the rewrite path for any __dir anywhere in the table
-    val metadataOnlyDirs: Option[Set[String]] =
-      if (logicalSchemaOf(manifest).fieldNames.contains("__dir")) None
-      else matchedPartitionDirs(spark, schema, manifest.partCols, predicate,
-        manifest.files.map(f => partDirOf(f.path)).distinct)
-    metadataOnlyDirs match {
+    matchedPartitionDirs(spark, logicalSchemaOf(manifest), manifest.partCols, predicate,
+      manifest.files.map(f => partDirOf(f.path)).distinct) match {
       case Some(matched) =>
         val candidates =
           manifest.files.filter(f => matched.contains(partDirOf(f.path)))
@@ -6077,22 +6045,10 @@ object ManifestLake {
       val nUpd = obsLong(obs, "n_upd")
       val staged = stagedFiles(fs, root, commitDir)
       val rowsOut = footerRowCount(fs, root, staged)
-      if (consSeq.nonEmpty && obsLong(obsPost, "n_obs_rows") != rowsOut) {
-        fs.delete(commitDir, true)
-        throw new IllegalStateException(
-          s"manifest update observation lost for $path: observed " +
-            s"${obsLong(obsPost, "n_obs_rows")} row(s) but $rowsOut staged — " +
-            s"constraint metrics are untrustworthy, table still at v$v")
-      }
-      consSeq.foreach { case (n, e) =>
-        val bad = obsLong(obsPost, s"viol_$n")
-        if (bad > 0) {
-          fs.delete(commitDir, true)
-          throw new IllegalStateException(
-            s"CHECK constraint $n (`$e`) on $path violated by $bad updated " +
-              s"row(s) — nothing published, table still at v$v")
-        }
-      }
+      if (consSeq.nonEmpty)
+        requireObservedStaged(fs, commitDir, obsLong(obsPost, "n_obs_rows"), rowsOut,
+          s"manifest update observation lost for $path", "constraint", s"table still at v$v")
+      requireNoViolations(fs, commitDir, obsPost, consSeq, path, "updated", v)
       if (rowsOut != rowsIn) {
         fs.delete(commitDir, true)
         throw new IllegalStateException(
@@ -7071,6 +7027,49 @@ object ManifestLake {
     */
   private def obsLong(obs: org.apache.spark.sql.Observation, key: String): Long =
     obs.get.get(key).map(_.asInstanceOf[Long]).getOrElse(0L)
+
+  /** The guard before any defaulted-to-0 observed count is trusted
+    * (see [[obsLong]]): the observed count(*) must equal the staged
+    * footer row count, or the stage is withdrawn and the commit fails.
+    */
+  private def requireObservedStaged(fs: FileSystem, commitDir: Path, observed: Long,
+                                    staged: Long, lost: String, metrics: String,
+                                    state: String): Unit =
+    if (observed != staged) {
+      fs.delete(commitDir, true)
+      throw new IllegalStateException(
+        s"$lost: observed $observed row(s) but $staged staged — $metrics metrics " +
+          s"are untrustworthy, $state")
+    }
+
+  /** Withdraws the stage and fails the commit when an observed CHECK
+    * violation count (`viol_<name>`) is positive.
+    */
+  private def requireNoViolations(fs: FileSystem, commitDir: Path,
+                                  obs: org.apache.spark.sql.Observation,
+                                  constraints: Seq[(String, String)], path: String,
+                                  rows: String, v: Long): Unit =
+    constraints.foreach { case (n, e) =>
+      val bad = obsLong(obs, s"viol_$n")
+      if (bad > 0) {
+        fs.delete(commitDir, true)
+        throw new IllegalStateException(
+          s"CHECK constraint $n (`$e`) on $path violated by $bad $rows row(s) — " +
+            s"nothing published, table still at v$v")
+      }
+    }
+
+  /** Width of a commit shuffle that moves `bytes`: one partition per
+    * advisory partition size, at least one and at most the session's
+    * shuffle partitions. A large commit keeps the session's width; a
+    * small one stops writing a block per empty partition per map task.
+    */
+  private def shuffleWidth(spark: SparkSession, bytes: BigInt): Int = {
+    val conf = spark.sessionState.conf
+    val advisory = conf.getConf(
+      org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+    ((bytes + advisory - 1) / advisory).max(1).min(conf.numShufflePartitions).toInt
+  }
 
   /** The constraint set every row-adding commit actually enforces: the
     * declared CHECK constraints plus one synthetic equality per

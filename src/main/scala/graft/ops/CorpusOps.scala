@@ -633,6 +633,8 @@ object CorpusOps {
   def bm25(docs: DataFrame, id: String, text: String, terms: Seq[String],
            k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(terms.nonEmpty, "need at least one query term")
+    // a query term counts once however often the query repeats it
+    val qterms = terms.distinct
     // Single-pass shape: per-term tf is a PER-ROW array expression
     // (size minus size-after-remove — codegen'd collection ops, no
     // HOF lambda), so the whole per-document state (dl, tf per query
@@ -649,16 +651,16 @@ object CorpusOps {
     val perDoc = docs
       .select(col(id), TextOps.tokens(col(text)).as("__toks"))
       .select(Seq(col(id), size(col("__toks")).cast("long").as("dl")) ++
-        terms.indices.map(i =>
+        qterms.indices.map(i =>
           (size(col("__toks")) -
-            size(array_remove(col("__toks"), lit(terms(i)))))
+            size(array_remove(col("__toks"), lit(qterms(i)))))
             .cast("long").as(s"__tf$i")): _*)
     val statAggs = Seq(
       count(lit(1)).as("__n"), avg(col("dl")).as("__avgdl")) ++
-      terms.indices.map(i =>
+      qterms.indices.map(i =>
         sum(when(col(s"__tf$i") > 0, 1L).otherwise(0L)).as(s"__df$i"))
     val stats = perDoc.agg(statAggs.head, statAggs.tail: _*)
-    val score = terms.indices.map { i =>
+    val score = qterms.indices.map { i =>
       val tf = col(s"__tf$i")
       val df = col(s"__df$i")
       when(tf > 0,
@@ -668,7 +670,7 @@ object CorpusOps {
         .otherwise(lit(0.0))
     }.reduce(_ + _)
     perDoc
-      .where(terms.indices.map(i => col(s"__tf$i") > 0).reduce(_ || _))
+      .where(qterms.indices.map(i => col(s"__tf$i") > 0).reduce(_ || _))
       .crossJoin(broadcast(stats))
       .select(col(id), round(score, 4).as("bm25"))
   }

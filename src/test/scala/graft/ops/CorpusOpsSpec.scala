@@ -269,6 +269,19 @@ class CorpusOpsSpec extends AnyFunSuite {
     assert(r(2L) === expect)
   }
 
+  test("bm25: a repeated query term scores as the term given once") {
+    val docs = Seq(
+      (1L, "join join pad"),
+      (2L, "join pad pad pad"),
+      (3L, "rare pad"),
+      (4L, "pad pad")
+    ).toDF("doc_id", "text")
+    def scores(terms: Seq[String]) = CorpusOps.bm25(docs, "doc_id", "text", terms)
+      .collect().map(x => x.getAs[Long]("doc_id") -> x.getAs[Double]("bm25")).toMap
+    assert(scores(Seq("join", "join")) === scores(Seq("join")))
+    assert(scores(Seq("join", "rare", "join")) === scores(Seq("join", "rare")))
+  }
+
   test("bm25 single-pass shape equals the multi-pass reference on every edge shape") {
     // equivalence pin for the round-22 restructure (per-term tf columns
     // + df folded into the stats row, replacing the explode → tf/df
