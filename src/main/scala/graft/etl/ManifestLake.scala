@@ -4032,14 +4032,13 @@ object ManifestLake {
       manifest0.exists(_.txns.get(app).exists(_ >= b)) })
       return v
     // ONE aggregate over the batch (it also materializes the pin): row
-    // count, distinct-key count, distinct partition values. The key
-    // holds the partition columns, so one shuffle serves both groupings.
-    // Key-uniqueness holds on EVERY path, including the table-creating
-    // first batch — a duplicate key in v1 would give the first real
-    // merge a nondeterministic winner.
+    // count, distinct-key count, distinct partition values (a small
+    // batch's one partition serves both groupings; a larger one hashes
+    // on the key). Key-uniqueness holds on EVERY path, including the
+    // table-creating first batch — a duplicate key in v1 would give the
+    // first real merge a nondeterministic winner.
     val batchBytes = updates.queryExecution.optimizedPlan.stats.sizeInBytes
-    val partRows = updates.select(keyCols.map(col): _*)
-      .repartition(shuffleWidth(spark, batchBytes), partitionCols.map(col): _*)
+    val partRows = commitRepartition(spark, updates.select(keyCols.map(col): _*), batchBytes, keyCols)
       .groupBy(keyCols.map(col): _*).agg(count(lit(1)).as("__n"))
       .groupBy(partitionCols.map(col): _*)
       .agg(sum(col("__n")).as("__n"), count(lit(1)).as("__k"))
@@ -4130,18 +4129,17 @@ object ManifestLake {
         Manifest(widened.orElse(manifest.schema), manifest.partCols, affectedFiles))
         .select(tableSchema.fieldNames.map(n =>
           col(n).cast(tableSchema(n).dataType)): _*))
-    val width = shuffleWidth(spark, affectedFiles.map(_.bytes).sum + batchBytes)
-    // ONE merge shuffle, sized like every shuffle below to the bytes this
-    // commit moves: the repartition on the partition columns clusters
-    // every key, so the row_number window and the write both run on it
+    val commitBytes = affectedFiles.map(_.bytes).sum + batchBytes
+    // ONE merge shuffle: the repartition on the partition columns
+    // clusters every key, so the row_number window and the write both
+    // run on it
     val merged = affected match {
-      case None => updatesP.repartition(width, partitionCols.map(col): _*)
+      case None => commitRepartition(spark, updatesP, commitBytes, partitionCols)
       case Some(aff) =>
         val byKey = org.apache.spark.sql.expressions.Window
           .partitionBy(keyColsP.map(col): _*).orderBy(col("__src").desc)
-        aff.withColumn("__src", lit(0))
-          .unionByName(updatesP.withColumn("__src", lit(1)))
-          .repartition(width, partitionCols.map(col): _*)
+        commitRepartition(spark, aff.withColumn("__src", lit(0))
+          .unionByName(updatesP.withColumn("__src", lit(1))), commitBytes, partitionCols)
           .withColumn("__rn", row_number().over(byKey))
           .where(col("__rn") === 1)
           .drop("__src", "__rn")
@@ -4201,10 +4199,9 @@ object ManifestLake {
       s"manifest upsert observation lost for $path", "constraint", s"table still at v$v")
     requireNoViolations(fs, commitDir, obsU, consSeqU, path, "merged", v)
     val updKeys = updatesP.select(keyColsP.map(col): _*).withColumn("__upd", lit(true))
-    val keyCheck = spark.read.parquet(commitDir.toString)
-      .select(keyColsP.map(col): _*)
-      .join(broadcast(updKeys), keyColsP.toSeq, "left")
-      .repartition(width, partitionCols.map(col): _*)
+    val keyCheck = commitRepartition(spark, spark.read.parquet(commitDir.toString)
+        .select(keyColsP.map(col): _*)
+        .join(broadcast(updKeys), keyColsP.toSeq, "left"), commitBytes, keyColsP)
       .groupBy(keyColsP.map(col): _*).agg(max(col("__upd")).as("__upd"))
       .agg(count(lit(1)), count(when(col("__upd"), lit(1))))
       .head()
@@ -4257,7 +4254,7 @@ object ManifestLake {
                 .withColumn(ChangeTypeCol, lit("insert")))
         }
         val cdfP = new Path(commitDir, CdfDir)
-        changes.repartition(width, partitionCols.map(col): _*)
+        commitRepartition(spark, changes, commitBytes, partitionCols)
           .write.mode(SaveMode.Overwrite).parquet(cdfP.toString)
         val rootQ = fs.makeQualified(root).toString
         Some(fs.makeQualified(cdfP).toString.stripPrefix(rootQ).stripPrefix("/"))
@@ -7059,16 +7056,20 @@ object ManifestLake {
       }
     }
 
-  /** Width of a commit shuffle that moves `bytes`: one partition per
-    * advisory partition size, at least one and at most the session's
-    * shuffle partitions. A large commit keeps the session's width; a
-    * small one stops writing a block per empty partition per map task.
+  /** A commit shuffle on `cols` moving about `bytes`. Under AQE's
+    * minimum partition size per core (at most one advisory partition) it
+    * is ONE partition, which satisfies every later grouping and writes
+    * no empty map-side blocks; larger commits keep `repartition(cols)`,
+    * which AQE coalesces to the data at run time.
     */
-  private def shuffleWidth(spark: SparkSession, bytes: BigInt): Int = {
+  private def commitRepartition(spark: SparkSession, df: DataFrame, bytes: BigInt,
+                                cols: Seq[String]): DataFrame = {
+    import org.apache.spark.sql.internal.SQLConf.{ADVISORY_PARTITION_SIZE_IN_BYTES => Advisory,
+      COALESCE_PARTITIONS_MIN_PARTITION_SIZE => MinPart}
     val conf = spark.sessionState.conf
-    val advisory = conf.getConf(
-      org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
-    ((bytes + advisory - 1) / advisory).max(1).min(conf.numShufflePartitions).toInt
+    if (bytes <= (conf.getConf(MinPart) * spark.sparkContext.defaultParallelism).min(conf.getConf(Advisory)))
+      df.repartition(1, cols.map(col): _*)
+    else df.repartition(cols.map(col): _*)
   }
 
   /** The constraint set every row-adding commit actually enforces: the

@@ -9,7 +9,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_COL, REPARTITION_BY_NUM, ShuffleExchangeExec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -69,8 +69,29 @@ class ManifestUpsertSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     model
   }
 
-  test("seeded upserts match an in-memory model: rows, change feed, and rewritten files' pos bounds") {
-    val rnd = new SplittableRandom(11L)
+  /** Runs `upsert` and returns the plans of the queries it ran. */
+  private def planned(upsert: => Long): (Long, Seq[SparkPlan]) = {
+    val plans = new java.util.concurrent.LinkedBlockingQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.put(qe.executedPlan)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val v = upsert
+      (v, ListenerDrain.drain(spark, plans))
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  private def exchanges(ps: Seq[SparkPlan]): Seq[ShuffleExchangeExec] =
+    ps.flatMap(p => collect(p) { case s: ShuffleExchangeExec => s })
+
+  /** Six seeded rounds, each commit checked against the model; `plans`
+    * sees the queries each upsert ran.
+    */
+  private def modelRounds(seed: Long, plans: Seq[SparkPlan] => Unit): Unit = {
+    val rnd = new SplittableRandom(seed)
     val dir = freshDir("mlake-upsert-model")
     val model = seedTable(dir, rnd)
     for (round <- 1 to 6) {
@@ -92,7 +113,9 @@ class ManifestUpsertSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       val before = model.toMap
       val filesBefore = manifestAt(dir, v).files.map(_.path).toSet
 
-      assert(ManifestLake.upsert(spark, dir, frame(batch), Parts, Keys) === v + 1)
+      val (newV, ps) = planned(ManifestLake.upsert(spark, dir, frame(batch), Parts, Keys))
+      assert(newV === v + 1)
+      plans(ps)
       model ++= batch
       assert(tableRows(dir) === model.toMap, s"round $round rows")
 
@@ -124,6 +147,31 @@ class ManifestUpsertSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
         val (lo, hi) = actual(path)
         assert(f.stats.get("pos") === Some((lo.toString, hi.toString)), s"round $round ${f.path}")
       }
+    }
+  }
+
+  test("seeded upserts match an in-memory model: rows, change feed, and rewritten files' pos bounds") {
+    // sub-MB commits: one-partition shuffles, never an AQE-sized one
+    modelRounds(11L, { ps =>
+      val origins = exchanges(ps).map(_.shuffleOrigin)
+      assert(origins.contains(REPARTITION_BY_NUM), origins)
+      assert(!origins.contains(REPARTITION_BY_COL), origins)
+    })
+  }
+
+  test("an upsert above the one-partition size keeps AQE-sized repartitions and matches the model") {
+    // every commit here moves more than one advisory partition, so each
+    // shuffle the upsert plans is `repartition(cols)`, never a fixed count
+    val saved = spark.conf.getOption("spark.sql.adaptive.advisoryPartitionSizeInBytes")
+    spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1")
+    try modelRounds(13L, { ps =>
+      val origins = exchanges(ps).map(_.shuffleOrigin)
+      assert(origins.contains(REPARTITION_BY_COL), origins)
+      assert(!origins.contains(REPARTITION_BY_NUM), origins)
+    })
+    finally saved match {
+      case Some(w) => spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", w)
+      case None => spark.conf.unset("spark.sql.adaptive.advisoryPartitionSizeInBytes")
     }
   }
 
@@ -168,18 +216,17 @@ class ManifestUpsertSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     val (c, b) = (model.keys.min._1, model.keys.min._2)
     val batch = model.keys.filter(k => k._1 == c && k._2 == b).map(_ -> "u").toMap ++
       Map(key(c, (b * Bucket + 999).toInt) -> "i", key("chr9", 9000) -> "n")
-    // width = clamp(ceil(bytes / advisory), 1, shuffle partitions): the
-    // affected files plus the batch are far below one advisory partition
+    // a commit under AQE's minimum partition size per core (at most one
+    // advisory partition) shuffles into one partition; this one is far
+    // below 1 MB
     val advisory = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
       spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes"))
     assert(manifestAt(dir, 1L).files.map(_.bytes).sum < (1L << 20) && advisory >= (1L << 20))
     val derivedWidth = 1
 
-    val plans = new java.util.concurrent.LinkedBlockingQueue[SparkPlan]()
     val failures = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        plans.put(qe.executedPlan)
+    val failed = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = ()
       override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = {
         failures.incrementAndGet(); ()
       }
@@ -188,18 +235,15 @@ class ManifestUpsertSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     val saved = spark.conf.getOption("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "200")
     val updates = frame(batch)
-    spark.listenerManager.register(listener)
-    val execs = try {
-      ManifestLake.upsert(spark, dir, updates, Parts, Keys)
-      ListenerDrain.drain(spark, plans)
-    } finally {
-      spark.listenerManager.unregister(listener)
+    spark.listenerManager.register(failed)
+    val execs = try planned(ManifestLake.upsert(spark, dir, updates, Parts, Keys))._2
+    finally {
+      spark.listenerManager.unregister(failed)
       saved match {
         case Some(w) => spark.conf.set("spark.sql.shuffle.partitions", w)
         case None => spark.conf.unset("spark.sql.shuffle.partitions")
       }
     }
-    def exchanges(ps: Seq[SparkPlan]) = ps.flatMap(p => collect(p) { case s: ShuffleExchangeExec => s })
     val widths = exchanges(execs).map(_.outputPartitioning.numPartitions)
     val shape = s"${execs.size} executions, ${widths.size} exchanges, widths $widths"
     // the stats pass (the query yielding per-file `__rows`) shuffles
