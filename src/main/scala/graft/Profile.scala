@@ -325,7 +325,7 @@ object Profile {
             "n_chars" -> ("12", "87431")))
       var files = (0 until n).map(file(_, 0))
       val t0 = System.nanoTime()
-      ManifestLake.publish(fs, root, 1L, files, Some(schema), Seq("lang"))
+      ManifestLake.publish(fs, root, 1L, ManifestLake.Manifest(Some(schema), Seq("lang"), files))
       val tSnap = (System.nanoTime() - t0) / 1e9
       def bytesOf(v: Long) = {
         val gz = fs.getFileStatus(
@@ -349,7 +349,8 @@ object Profile {
         val added = (0 until 10).map(j => file(n + k * 100 + j, k))
         files = files.drop(5) ++ added
         val t = System.nanoTime()
-        ManifestLake.publish(fs, root, k + 1L, files, Some(schema), Seq("lang"),
+        ManifestLake.publish(fs, root, k + 1L,
+          ManifestLake.Manifest(Some(schema), Seq("lang"), files),
           deltaHint = Some((added, dropped)))
         ((System.nanoTime() - t) / 1e9, bytesOf(k + 1L))
       }
@@ -393,7 +394,7 @@ object Profile {
             "n_chars" -> ("12", "87431")))
       }
       val t0 = System.nanoTime()
-      ManifestLake.publish(fs, root, 1L, files, Some(schema), Seq("lang"))
+      ManifestLake.publish(fs, root, 1L, ManifestLake.Manifest(Some(schema), Seq("lang"), files))
       val tPub = (System.nanoTime() - t0) / 1e9
       val gzBytes = fs.getFileStatus(
         new Path(root, "_manifest/v000001.list.gz")).getLen
@@ -435,7 +436,7 @@ object Profile {
           f"data/v${i % 512 + 1}%06d/lang=l${i % 32}%02d/part-$i%08d-c000.snappy.parquet",
           Map("doc_id" -> ((i * 100L).toString, (i * 100L + 99L).toString)))
       }
-      ManifestLake.publish(fs, root, 1L, files, Some(schema), Seq("lang"))
+      ManifestLake.publish(fs, root, 1L, ManifestLake.Manifest(Some(schema), Seq("lang"), files))
       val t0 = System.nanoTime()
       ManifestLake.shallowClone(spark, dir, tgt)
       val tClone = (System.nanoTime() - t0) / 1e9
@@ -472,7 +473,7 @@ object Profile {
         out.write(payload); out.close()
         ManifestLake.LiveFile(128L, rel)
       }
-      ManifestLake.publish(fs, root, 1L, files, Some(schema), Seq("lang"))
+      ManifestLake.publish(fs, root, 1L, ManifestLake.Manifest(Some(schema), Seq("lang"), files))
       // driver-side baseline: the raw single-thread FileUtil.copy cost
       // on this filesystem, to separate fabric overhead from fs cost
       val baseDir = new org.apache.hadoop.fs.Path(root, "basep")

@@ -38,8 +38,14 @@ object ScalingProbe {
 
     // amplified corpus on disk, built once and shared by every core
     // count (deterministic content; REBUILT if absent, so a cleaned /tmp
-    // only costs the build, never skews the timed reads)
-    val corpusPath = s"/tmp/graft_scaling_probe_x$amplify"
+    // only costs the build, never skews the timed reads). The key names
+    // the source SF dir and a short hash of its full path, so a run
+    // against another SF dir builds its own corpus instead of reusing
+    // a stale one
+    val sfAbs = new java.io.File(sfDir).getAbsolutePath
+    val sfKey = new java.io.File(sfAbs).getName.replaceAll("[^A-Za-z0-9._-]", "_") +
+      f"-${sfAbs.hashCode}%08x"
+    val corpusPath = s"/tmp/graft_scaling_probe_${sfKey}_x$amplify"
     if (!new java.io.File(corpusPath, "_SUCCESS").exists()) {
       Tables.documents(spark, sfDir)
         .select(col("doc_id"), col("text"),

@@ -258,7 +258,7 @@ object ManifestLake {
     * versions its resolution consumed (what vacuum must retain for the
     * version to stay readable).
     */
-  private[etl] final case class Manifest(schema: Option[StructType],
+  private[graft] final case class Manifest(schema: Option[StructType],
                                          partCols: Seq[String],
                                          files: Seq[LiveFile],
                                          txns: Map[String, Long] = Map.empty,
@@ -279,7 +279,13 @@ object ManifestLake {
                                          identity: Option[(String, Long, Long, Long, Boolean)] = None,
                                          clusterCols: Seq[String] = Seq.empty,
                                          extras: Seq[(String, String)] = Seq.empty,
-                                         requires: Seq[String] = Seq.empty)
+                                         requires: Seq[String] = Seq.empty) {
+    /** This manifest as the base of the next commit `op`: every header
+      * fact and file carries, and the change-feed pointer — which names
+      * one commit's own change files — does not.
+      */
+    def asNext(op: String): Manifest = copy(op = Some(op), cdf = None)
+  }
 
   /** Published manifests are IMMUTABLE (a version is never rewritten —
     * restore publishes a NEW version), so parsed manifests cache across
@@ -1106,67 +1112,53 @@ object ManifestLake {
       .flatMap(v => readManifest(fs, root, v).txns.get(appId))
   }
 
-  /** Publish `files` (+ the table shape) as version `v`: stage hidden,
-    * then commit with an ATOMIC fail-if-exists install — on HDFS-class
-    * stores a `FileContext.rename` without `Options.Rename.OVERWRITE`
-    * (the NameNode checks the destination server-side), on local FS a
-    * hard link (`link(2)` fails EEXIST atomically in the kernel; the
-    * local AbstractFileSystem's "no-overwrite" rename is only
-    * check-then-rename and POSIX rename replaces). Either way the
-    * committer that loses a same-version race gets a typed
-    * `IllegalStateException` instead of silently clobbering the winner
-    * — this is what turns the single-writer contract from prose into a
-    * checked invariant.
+  /** Publish `next` — the file set and every header fact — as version
+    * `v`: stage hidden, then commit with an ATOMIC fail-if-exists
+    * install — on HDFS-class stores a `FileContext.rename` without
+    * `Options.Rename.OVERWRITE` (the NameNode checks the destination
+    * server-side), on local FS a hard link (`link(2)` fails EEXIST
+    * atomically in the kernel; the local AbstractFileSystem's
+    * "no-overwrite" rename is only check-then-rename and POSIX rename
+    * replaces). Either way the committer that loses a same-version race
+    * gets a typed `IllegalStateException` instead of silently clobbering
+    * the winner — this is what turns the single-writer contract from
+    * prose into a checked invariant. The read-side fields of `next`
+    * (`ckptRef`, `chain`, `baseVersions`) are ignored; `requires` is
+    * unioned with the previous version's (see below).
     */
-  private[graft] def publish(fs: FileSystem, root: Path, v: Long, files: Seq[LiveFile],
-                           schema: Option[StructType], partCols: Seq[String],
-                           txns: Map[String, Long] = Map.empty,
-                           op: Option[String] = None,
-                           cdf: Option[String] = None,
-                           constraints: Map[String, String] = Map.empty,
-                           colMap: Option[Seq[(String, String)]] = None,
-                           droppedPhys: Seq[String] = Seq.empty,
-                           bloomCols: Seq[String] = Seq.empty,
-                           generated: Seq[(String, String)] = Seq.empty,
-                           fieldMap: Seq[(String, String, String)] = Seq.empty,
-                           statsColsDefault: Seq[String] = Seq.empty,
-                           fieldDropped: Seq[(String, String)] = Seq.empty,
-                           deltaHint: Option[(Seq[LiveFile], Seq[String])] = None,
-                           defaults: Seq[(String, String)] = Seq.empty,
-                           identity: Option[(String, Long, Long, Long, Boolean)] = None,
-                           clusterCols: Seq[String] = Seq.empty,
-                           extras: Seq[(String, String)] = Seq.empty,
-                           requires: Seq[String] = Seq.empty,
-                           dropRequires: Seq[String] = Seq.empty,
-                           forceSnapshot: Boolean = false): Unit = {
+  private[graft] def publish(fs: FileSystem, root: Path, v: Long, next: Manifest,
+                             deltaHint: Option[(Seq[LiveFile], Seq[String])] = None,
+                             dropRequires: Seq[String] = Seq.empty,
+                             forceSnapshot: Boolean = false): Unit = {
+    val files = next.files
     // the header is a tab/newline/comma-delimited text format — reject
     // values that would corrupt it at COMMIT time, not at the next read
-    txns.keys.foreach(app => require(!app.exists(c => c == '\t' || c == '\n' || c == '\r'),
+    next.txns.keys.foreach(app => require(!app.exists(c => c == '\t' || c == '\n' || c == '\r'),
       s"txn appId must not contain tabs or newlines: ${app.replaceAll("\\s", "·")}"))
-    constraints.foreach { case (n, e) =>
+    next.constraints.foreach { case (n, e) =>
       require(n.nonEmpty && !n.exists(c => c == '\t' || c == '\n' || c == '\r'),
         s"constraint name must be non-empty with no tabs or newlines: $n")
       require(!e.exists(c => c == '\n' || c == '\r'),
         s"constraint expression must not contain newlines: $n")
     }
-    extras.foreach { case (k, value) =>
+    next.extras.foreach { case (k, value) =>
       require(k.nonEmpty && !k.exists(c => c == '\t' || c == '\n' || c == '\r'),
         s"header fact key must be non-empty with no tabs or newlines: $k")
       require(!value.exists(c => c == '\t' || c == '\n' || c == '\r'),
         s"header fact $k must not contain tabs or newlines")
     }
-    colMap.foreach(_.foreach { case (l, p) =>
+    next.colMap.foreach(_.foreach { case (l, p) =>
       require(l.nonEmpty && p.nonEmpty &&
         !(l + p).exists(c => c == '\t' || c == '\n' || c == '\r'),
         s"column-mapping names must be non-empty with no tabs or newlines: $l -> $p")
     })
-    defaults.foreach { case (n, e) =>
+    next.defaults.foreach { case (n, e) =>
       require(n.nonEmpty && !n.exists(c => c == '\t' || c == '\n' || c == '\r'),
         s"default-column name must be non-empty with no tabs or newlines: $n")
       require(!e.exists(c => c == '\t' || c == '\n' || c == '\r'),
         s"default expression must not contain tabs or newlines: $n")
     }
-    partCols.foreach(c => require(!c.exists(ch => ch == ',' || ch == '\t' || ch == '\n' || ch == '\r'),
+    next.partCols.foreach(c => require(!c.exists(ch => ch == ',' || ch == '\t' || ch == '\n' || ch == '\r'),
       s"partition column name must not contain ',' or whitespace control chars: $c"))
     val dir = new Path(root, ManifestDir)
     fs.mkdirs(dir)
@@ -1176,27 +1168,27 @@ object ManifestLake {
     // writing one shared tmp file
     val tmp = new Path(dir,
       f".tmp-v$v%06d-${java.util.UUID.randomUUID().toString.take(8)}.list.gz")
-    def mkHeader(reqEff: Seq[String]): Seq[String] = schema.toSeq.flatMap(s =>
-      Seq(s"#schema\t${s.json}", s"#partcols\t${partCols.mkString(",")}")) ++
+    def mkHeader(reqEff: Seq[String]): Seq[String] = next.schema.toSeq.flatMap(s =>
+      Seq(s"#schema\t${s.json}", s"#partcols\t${next.partCols.mkString(",")}")) ++
       reqEff.sorted.map(f => s"#requires\t$f") ++
-      op.map(o => s"#op\t$o").toSeq ++
-      cdf.map(c => s"#cdf\t$c").toSeq ++
-      constraints.toSeq.sortBy(_._1).map { case (n, e) => s"#constraint\t$n\t$e" } ++
-      colMap.toSeq.flatten.map { case (l, p) => s"#colmap\t$l\t$p" } ++
-      droppedPhys.map(p => s"#coldropped\t$p") ++
-      (if (bloomCols.isEmpty) Nil else Seq(s"#bloomcols\t${bloomCols.mkString(",")}")) ++
-      (if (statsColsDefault.isEmpty) Nil
-       else Seq(s"#statscols\t${statsColsDefault.mkString(",")}")) ++
-      (if (clusterCols.isEmpty) Nil
-       else Seq(s"#clustercols\t${clusterCols.mkString(",")}")) ++
-      extras.map { case (k, value) => s"#extra\t$k\t$value" } ++
-      generated.map { case (n, e) => s"#gencol\t$n\t$e" } ++
-      defaults.map { case (n, e) => s"#coldefault\t$n\t$e" } ++
-      identity.map { case (n, st, sp, wm, bd) =>
+      next.op.map(o => s"#op\t$o").toSeq ++
+      next.cdf.map(c => s"#cdf\t$c").toSeq ++
+      next.constraints.toSeq.sortBy(_._1).map { case (n, e) => s"#constraint\t$n\t$e" } ++
+      next.colMap.toSeq.flatten.map { case (l, p) => s"#colmap\t$l\t$p" } ++
+      next.droppedPhys.map(p => s"#coldropped\t$p") ++
+      (if (next.bloomCols.isEmpty) Nil else Seq(s"#bloomcols\t${next.bloomCols.mkString(",")}")) ++
+      (if (next.statsColsDefault.isEmpty) Nil
+       else Seq(s"#statscols\t${next.statsColsDefault.mkString(",")}")) ++
+      (if (next.clusterCols.isEmpty) Nil
+       else Seq(s"#clustercols\t${next.clusterCols.mkString(",")}")) ++
+      next.extras.map { case (k, value) => s"#extra\t$k\t$value" } ++
+      next.generated.map { case (n, e) => s"#gencol\t$n\t$e" } ++
+      next.defaults.map { case (n, e) => s"#coldefault\t$n\t$e" } ++
+      next.identity.map { case (n, st, sp, wm, bd) =>
         s"#identity\t$n\t$st\t$sp\t$wm" + (if (bd) "\tbydefault" else "") }.toSeq ++
-      fieldMap.map { case (c, l, ph) => s"#fieldmap\t$c\t$l\t$ph" } ++
-      fieldDropped.map { case (c, pp) => s"#fielddropped\t$c\t$pp" } ++
-      txns.toSeq.sortBy(_._1).map { case (app, b) => s"#txn\t$app\t$b" }
+      next.fieldMap.map { case (c, l, ph) => s"#fieldmap\t$c\t$l\t$ph" } ++
+      next.fieldDropped.map { case (c, pp) => s"#fielddropped\t$c\t$pp" } ++
+      next.txns.toSeq.sortBy(_._1).map { case (app, b) => s"#txn\t$app\t$b" }
     def fileLine(f: LiveFile): String =
       if (f.stats.isEmpty && f.rows.isEmpty && f.nullCounts.isEmpty &&
         f.valueSets.isEmpty && f.dv.isEmpty && f.bloom.isEmpty)
@@ -1211,13 +1203,6 @@ object ManifestLake {
     // not actually be smaller — a replace naturally snapshots). The
     // header is always written in full: it is small and keeping it
     // whole means resolution never merges table-shape state.
-    val timing = sys.env.contains("GRAFT_PUBLISH_TIMING")
-    var tMark = System.nanoTime()
-    def mark(label: String): Unit = if (timing) {
-      val now = System.nanoTime()
-      println(f"PUBLISH_TIMING v$v $label ${(now - tMark) / 1e9}%.3fs")
-      tMark = now
-    }
     val prevMW: Option[(Manifest, Long)] =
       if (v <= 1) None
       else try Some(readManifestWeighted(fs, root, v - 1))
@@ -1237,7 +1222,7 @@ object ManifestLake {
     // inherited union but BEFORE the auto-stamp: a drop can never
     // outrun the evidence — files still carrying DV masks re-stamp the
     // fact no matter what the caller asked
-    val reqEff = ((prevM.toSeq.flatMap(_.requires) ++ requires)
+    val reqEff = ((prevM.toSeq.flatMap(_.requires) ++ next.requires)
       .filterNot(dropRequires.contains) ++
       (if (files.exists(_.dv.nonEmpty)) Seq("deletion-vectors") else Nil))
       .distinct
@@ -1245,7 +1230,6 @@ object ManifestLake {
       !f.exists(c => c == '\t' || c == '\n' || c == '\r'),
       s"required-feature name must be non-empty with no tabs or newlines: $f"))
     val header = mkHeader(reqEff)
-    mark("readPrev")
     val delta: Option[(Seq[LiveFile], Seq[String], Int)] = prevM.flatMap { pm =>
       // forceSnapshot: a DELTA would keep resolving through chain BASES
       // whose own headers this commit exists to retire (DROP FEATURE:
@@ -1293,7 +1277,6 @@ object ManifestLake {
           else None
       }
     }
-    mark("diff")
     // Render entry lines IN PARALLEL above a size floor (per-entry
     // stats-JSON rendering dominates a multi-million-line checkpoint;
     // the lines are independent), then STREAM them through the gzip
@@ -1329,18 +1312,14 @@ object ManifestLake {
         // manifest rename — a losing racer leaves an orphan dir that
         // vacuum reaps after the grace window.
         val sorted = filesSorted
-        mark("sort")
         val (rel, nSh) = writeCheckpointShards(fs, root, v, sorted)
         ckptRefOut = Some(rel)
-        mark("shards")
         header.iterator ++ Iterator(s"#ckpt\t$rel\t$nSh\t${sorted.length}")
       case None =>
         val sorted = filesSorted
-        mark("sort")
         val lines = renderLines(sorted)
         header.iterator ++ lines.iterator
     }
-    mark("render")
     // BEST_SPEED deflate: the manifest is read hot and written on every
     // commit — a multi-MB checkpoint deflates ~3x faster at level 1 for
     // ~15% more bytes, the right trade for a once-per-cadence artifact
@@ -1354,7 +1333,6 @@ object ManifestLake {
         out.write(l.getBytes("UTF-8")); out.write('\n')
       }
     } finally out.close()
-    mark("write")
     // a PLAIN-extension manifest for this version (older library
     // version racing, or a partially-migrated table) means the version
     // is taken — the no-overwrite rename only guards the gz name, so
@@ -1463,37 +1441,117 @@ object ManifestLake {
         case None =>
           (filesSorted, 64L + weightOf(filesSorted))
       }
-      val resolved = Manifest(schema, partCols, resolvedFiles, txns, op, cdf,
-        constraints, colMap.filter(_.nonEmpty), droppedPhys, bloomCols, generated,
-        fieldMap, statsColsDefault, fieldDropped, ckptRefOut,
-        defaults = defaults, identity = identity, clusterCols = clusterCols,
-        extras = extras, requires = reqEff,
+      val resolved = next.copy(files = resolvedFiles,
+        colMap = next.colMap.filter(_.nonEmpty), ckptRef = ckptRefOut, requires = reqEff,
         chain = delta.map(_._3).getOrElse(0),
         baseVersions =
           delta.map(_ => prevM.get.baseVersions :+ (v - 1)).getOrElse(Seq.empty))
       val st = fs.getFileStatus(target)
       val key = (fs.makeQualified(target).toString, st.getModificationTime, st.getLen)
       cacheManifest(key, resolved, w)
-      mark("cacheInsert")
     } catch { case _: Throwable => () }
   }
 
-  /** Terminal arm of every optimistic-retry loop: after the bounded
+  /** Terminal arm of the optimistic-retry loop: after the bounded
     * retries each re-validated conflict-free yet still lost the version
     * race, the failure is CONTENTION, not a single-writer violation —
     * name it as such (the raw publish error's "serialize committers"
     * message would mislead) and withdraw the staged dirs the way the
-    * genuine-conflict branches already do.
+    * genuine-conflict branch does.
     */
   private def retriesExhausted(fs: FileSystem, op: String, path: String,
                                stages: Seq[Path], e: Throwable): Nothing = {
     stages.foreach(fs.delete(_, true))
-    throw new IllegalStateException(
-      s"$op on $path exhausted its optimistic commit retries under sustained " +
-        "contention — every retry re-validated as conflict-free but lost the " +
-        "version race; the staged commit was withdrawn and the table is " +
-        "intact at the winner's version. Back off and re-run.", e)
+    throw new IllegalStateException(exhaustedMessage(op, path), e)
   }
+
+  private def exhaustedMessage(op: String, path: String): String =
+    s"$op on $path exhausted its optimistic commit retries under sustained " +
+      "contention — every retry re-validated as conflict-free but lost the " +
+      "version race; the staged commit was withdrawn and the table is " +
+      "intact at the winner's version. Back off and re-run."
+
+  /** The one OPTIMISTIC commit (Delta's conflict-checked commit). The
+    * commit's file change is `adds` (staged entries, including in-place
+    * entry changes) and `removes` (paths leaving the live set); it is
+    * applied to a base manifest — the snapshot at `v`, or the re-read
+    * head on a retry — together with the txn ledger entry, and `next`
+    * adds the verb's own header changes. So facts a racing commit
+    * changed (comments, properties, sticky stats) survive a retry
+    * instead of reverting to the snapshot's. On a lost version race
+    * the head is re-read (through `rebase`), and
+    *  - when the txn ledger shows this `(appId, batchId)` already
+    *    committed (an at-least-once redelivery racing itself), `stages`
+    *    are withdrawn and `Left(headV)` returns;
+    *  - when `conflict(headV, head)` names a reason — the verb's staged
+    *    work is stale against the head — `stages` are withdrawn and the
+    *    reason throws (a `conflict` that throws withdraws too);
+    *  - otherwise the commit rebases onto head+1, at most 5 retries.
+    * The first attempt reads nothing beyond the snapshot. Returns
+    * `Right(version)` on publish.
+    */
+  private def publishOptimistic(spark: SparkSession, fs: FileSystem, root: Path,
+                                path: String, op: String, verb: String,
+                                snapshot: Manifest, v: Long, stages: Seq[Path],
+                                txn: Option[(String, Long)],
+                                adds: Seq[LiveFile], removes: Set[String],
+                                rebase: Manifest => Manifest = identity)(
+                                conflict: (Long, Manifest) => Option[String])(
+                                next: Manifest => Manifest): Either[Long, Long] = {
+    fireRaceHook(op)
+    def withdraw(): Unit = stages.foreach(fs.delete(_, true))
+    @annotation.tailrec
+    def attempt(n: Int, head: Manifest, curV: Long): Either[Long, Long] = {
+      val m = next(head.asNext(op).copy(
+        files = head.files.filterNot(f => removes.contains(f.path)) ++ adds,
+        txns = head.txns ++ txn.toMap))
+      val lost =
+        try { publish(fs, root, curV, m, Some((adds, removes.toSeq))); None }
+        catch { case e: IllegalStateException => Some(e) }
+      lost match {
+        case None => Right(curV)
+        case Some(e) if n >= 5 => retriesExhausted(fs, verb, path, stages, e)
+        case Some(e) =>
+          val headV = currentVersion(spark, path).getOrElse(throw e)
+          val h = rebase(readManifest(fs, root, headV))
+          if (txn.exists { case (app, b) => h.txns.get(app).exists(_ >= b) }) {
+            withdraw()
+            Left(headV)
+          } else {
+            val reason =
+              try conflict(headV, h)
+              catch { case scala.util.control.NonFatal(c) => withdraw(); throw c }
+            reason.foreach { msg => withdraw(); throw new IllegalStateException(msg, e) }
+            attempt(n + 1, h, headV + 1)
+          }
+      }
+    }
+    attempt(0, snapshot, v)
+  }
+
+  /** Whether `head` moved the recorded shape a staged commit was built
+    * against — schema, partitioning, column and nested-field mapping,
+    * and (`constraints`, for verbs that judged rows against them) the
+    * effective CHECK set: a concurrently added generated column's
+    * validation was never run against the stage.
+    */
+  private def shapeMoved(head: Manifest, snapshot: Manifest, partCols: Seq[String],
+                         constraints: Boolean): Boolean =
+    head.schema != snapshot.schema || head.partCols != partCols ||
+      head.colMap != snapshot.colMap || head.fieldMap != snapshot.fieldMap ||
+      (constraints && effectiveConstraints(head) != effectiveConstraints(snapshot))
+
+  /** A unique staging dir for a commit at `v`: optimistic committers
+    * computing the same next version must never share one. The version
+    * prefix is for operator legibility and vacuum's in-flight
+    * heuristics; nothing parses it back out of data paths.
+    */
+  private def stagingDir(root: Path, v: Long): Path =
+    new Path(root, f"$DataDir/v$v%06d-${java.util.UUID.randomUUID().toString.take(8)}")
+
+  /** `p` relative to the table root, as manifest entries record paths. */
+  private def relToRoot(fs: FileSystem, root: Path, p: Path): String =
+    fs.makeQualified(p).toString.stripPrefix(fs.makeQualified(root).toString).stripPrefix("/")
 
   private def withFileStats(f: LiveFile, s: Option[FileStats],
                             bloomRef: Option[String] = None): LiveFile =
@@ -1733,10 +1791,10 @@ object ManifestLake {
           "directory, not file stats")
     }
     val schema = StructType(data.fields ++ partFields)
-    publish(fs, root, 1L, files.map { case (rel, bytes) => LiveFile(bytes, rel) },
-      Some(schema), partCols, op = Some("adopt"),
+    publish(fs, root, 1L, Manifest(Some(schema), partCols,
+      files.map { case (rel, bytes) => LiveFile(bytes, rel) }, op = Some("adopt"),
       statsColsDefault = statsCols.map(c =>
-        data.fieldNames.find(_.equalsIgnoreCase(c)).get))
+        data.fieldNames.find(_.equalsIgnoreCase(c)).get)))
     1L
   }
 
@@ -2002,12 +2060,7 @@ object ManifestLake {
       s"manifest table already exists at $targetPath — use CREATE OR " +
         "REPLACE TABLE ... SHALLOW CLONE (or IF NOT EXISTS to skip)")
     val v = existing.map(_ + 1).getOrElse(1L)
-    publish(fs, root, v, entries, srcM.schema, srcM.partCols,
-      op = Some("clone"), constraints = srcM.constraints,
-      colMap = srcM.colMap, droppedPhys = srcM.droppedPhys,
-      bloomCols = srcM.bloomCols, statsColsDefault = srcM.statsColsDefault,
-      generated = srcM.generated, defaults = srcM.defaults, identity = srcM.identity, clusterCols = srcM.clusterCols, extras = srcM.extras, requires = srcM.requires,
-      fieldMap = srcM.fieldMap, fieldDropped = srcM.fieldDropped)
+    publish(fs, root, v, srcM.asNext("clone").copy(files = entries, txns = Map.empty))
     v
   }
 
@@ -2066,12 +2119,7 @@ object ManifestLake {
     val (entries, copies) =
       repathForCopy(srcM.files, abs, v, all = true, "DEEP CLONE")
     distributedCopy(spark, fs, root, copies)
-    publish(fs, root, v, entries, srcM.schema, srcM.partCols,
-      op = Some("clone"), constraints = srcM.constraints,
-      colMap = srcM.colMap, droppedPhys = srcM.droppedPhys,
-      bloomCols = srcM.bloomCols, statsColsDefault = srcM.statsColsDefault,
-      generated = srcM.generated, defaults = srcM.defaults, identity = srcM.identity, clusterCols = srcM.clusterCols, extras = srcM.extras, requires = srcM.requires,
-      fieldMap = srcM.fieldMap, fieldDropped = srcM.fieldDropped)
+    publish(fs, root, v, srcM.asNext("clone").copy(files = entries, txns = Map.empty))
     v
   }
 
@@ -2100,12 +2148,7 @@ object ManifestLake {
     distributedCopy(spark, fs, root, copies)
     val oldPaths = m.files.map(_.path).toSet
     val newPaths = entries.map(_.path).toSet
-    publish(fs, root, v + 1, entries, m.schema, m.partCols, m.txns,
-      op = Some("materialize"), constraints = m.constraints,
-      colMap = m.colMap, droppedPhys = m.droppedPhys,
-      bloomCols = m.bloomCols, statsColsDefault = m.statsColsDefault,
-      generated = m.generated, defaults = m.defaults, identity = m.identity, clusterCols = m.clusterCols, extras = m.extras,
-      fieldMap = m.fieldMap, fieldDropped = m.fieldDropped,
+    publish(fs, root, v + 1, m.asNext("materialize").copy(files = entries),
       deltaHint = Some((entries.filterNot(e => oldPaths(e.path)),
         (oldPaths -- newPaths).toSeq)))
     v + 1
@@ -2418,8 +2461,7 @@ object ManifestLake {
       val out = new java.util.zip.GZIPOutputStream(fs.create(p, true))
       try out.write((entries.mkString("\n") + "\n").getBytes("UTF-8"))
       finally out.close()
-      val rootQ = fs.makeQualified(root).toString
-      Some(fs.makeQualified(p).toString.stripPrefix(rootQ).stripPrefix("/"))
+      Some(relToRoot(fs, root, p))
     }
   }
 
@@ -2589,9 +2631,12 @@ object ManifestLake {
         val byLogical = cm.toMap ++ colMapOut.toSeq.flatten.toMap
         bloomCols.map(c => byLogical.getOrElse(c, c))
     }
-    val bloomColsOut =
-      (if (replace) bloomColsP
-       else (prev.map(_.bloomCols).getOrElse(Seq.empty) ++ bloomColsP).distinct)
+    // the table before this commit (empty for a CREATE); a lost race
+    // rebases onto the head instead, so the sticky sets below union
+    // with whatever that head records
+    val base0 = prev.getOrElse(Manifest(None, Seq.empty, Seq.empty))
+    def bloomColsOn(base: Manifest): Seq[String] =
+      if (replace) bloomColsP else (base.bloomCols ++ bloomColsP).distinct
     // MIN/MAX STAT TRACKING is sticky too: once declared (at CREATE or
     // on any write), every later commit keeps collecting the columns
     // for its new files — without this, one plain append silently stops
@@ -2604,9 +2649,8 @@ object ManifestLake {
         case None => n
       }
     }
-    val statsColsOut =
-      ((if (replace) statsColsP
-        else (prev.map(_.statsColsDefault).getOrElse(Seq.empty) ++ statsColsP).distinct)
+    def statsColsOn(base: Manifest): Seq[String] =
+      ((if (replace) statsColsP else (base.statsColsDefault ++ statsColsP).distinct)
         ++ identityPhys.toSeq).distinct
     // an append joins an existing table, so its shape must match what
     // the manifest records. A legacy HEADERLESS manifest has no recorded
@@ -2658,9 +2702,7 @@ object ManifestLake {
     // single-writer, and the plain name is what lets vacuum reap its
     // superseded files immediately rather than after a grace window.
     val commitDir =
-      if (replace) new Path(root, f"$DataDir/v$v%06d")
-      else new Path(root,
-        f"$DataDir/v$v%06d-${java.util.UUID.randomUUID().toString.take(8)}")
+      if (replace) new Path(root, f"$DataDir/v$v%06d") else stagingDir(root, v)
     // the input row count rides the WRITE job itself as an observed
     // metric — re-executing `df` for a count would run the entire input
     // plan (joins, aggregations, a 100 TB scan) a second time per
@@ -2721,7 +2763,7 @@ object ManifestLake {
           s"$rowsOut staged — table still at v${v - 1}")
     }
     val withStats = stageStats(spark, fs, root, commitDir, tableSchema,
-      statsColsOut, bloomColsOut, partitionCols, staged)
+      statsColsOn(base0), bloomColsOn(base0), partitionCols, staged)
     // the watermark advances to one past the largest value this write
     // assigned — read off the staged files' OWN stats, zero extra jobs
     val newIdentity = identityPrev.map { case (n, st, sp, wm, bd) =>
@@ -2757,6 +2799,26 @@ object ManifestLake {
         case _ => wm
       }, bd)
     }
+    var curSchema = tableSchema
+    def next(base: Manifest): Manifest = base.copy(
+      schema = Some(curSchema), partCols = partitionCols,
+      // COPY INTO's per-file entries ride the txn ledger — exactly-once
+      // by file identity
+      txns = base.txns ++ copyLedger,
+      colMap = colMapOut, droppedPhys = droppedOut,
+      bloomCols = bloomColsOn(base), statsColsDefault = statsColsOn(base),
+      identity = newIdentity.orElse(base.identity))
+    // replace keeps the strict single-writer contract (its semantics —
+    // "the table becomes exactly this" — are not commutative), as do
+    // restore and the metadata verbs; it snapshots (no delta hint). The
+    // txn ledger survives even a replace: a stream's replay detection
+    // must not reset because a batch job rewrote the table underneath it
+    if (replace) {
+      fireRaceHook("replace")
+      publish(fs, root, v, next(base0.asNext("replace").copy(files = withStats,
+        txns = base0.txns ++ txn.toMap)))
+      return v
+    }
     // OPTIMISTIC CONCURRENT APPENDS: the checked no-overwrite publish
     // turns a same-version race into a loud loss — and for an APPEND
     // the loss is retryable, because appends never conflict logically:
@@ -2765,114 +2827,65 @@ object ManifestLake {
     // shape against it (the winner may have widened the schema — a
     // batch now missing a recorded column is a REAL conflict and still
     // fails loudly), and re-publishes carried-from-new-head ∪ staged at
-    // head+1. Bounded retries; replace keeps the strict single-writer
-    // contract (its semantics — "the table becomes exactly this" — are
-    // not commutative), as do upsert/compact/restore.
-    fireRaceHook(if (replace) "replace" else "append")
-    var attempt = 0
-    var curPrev = prev
-    var curV = v
-    var curSchema = tableSchema
-    while (true) {
-      val carried =
-        if (replace) Seq.empty
-        else curPrev.map(_.files).getOrElse(Seq.empty)
-      // the txn ledger survives every commit kind — even a replace: a
-      // stream's replay detection must not reset because a batch job
-      // rewrote the table underneath it (COPY INTO's per-file entries
-      // ride the same ledger — exactly-once by file identity)
-      val txns = curPrev.map(_.txns).getOrElse(Map.empty) ++ txn.toMap ++ copyLedger
-      try {
-        publish(fs, root, curV, carried ++ withStats, Some(curSchema), partitionCols,
-          txns, op = Some(if (replace) "replace" else "append"),
-          constraints = prev.map(_.constraints).getOrElse(Map.empty),
-          colMap = colMapOut,
-          droppedPhys = droppedOut, bloomCols = bloomColsOut,
-          statsColsDefault = statsColsOut,
-          generated = genCols,
-          defaults = curPrev.map(_.defaults).getOrElse(Seq.empty),
-          identity = newIdentity.orElse(curPrev.flatMap(_.identity)),
-          clusterCols = curPrev.map(_.clusterCols).getOrElse(Seq.empty),
-          extras = curPrev.map(_.extras).getOrElse(Seq.empty),
-          fieldMap = curPrev.map(_.fieldMap).getOrElse(Seq.empty),
-          fieldDropped = curPrev.map(_.fieldDropped).getOrElse(Seq.empty),
-          // an append drops nothing: the delta is exactly the staged
-          // files (a replace rewrites wholesale and snapshots)
-          deltaHint = if (replace) None else Some((withStats, Seq.empty)))
-        return curV
-      } catch {
-        case e: IllegalStateException if !replace && attempt >= 5 =>
-          retriesExhausted(fs, "append", path, Seq(commitDir), e)
-        case e: IllegalStateException if !replace && attempt < 5 =>
-          attempt += 1
-          val headV = currentVersion(spark, path).getOrElse(throw e)
-          val headM = readManifest(fs, root, headV)
-          // the winner may have BEEN this batch (an at-least-once
-          // redelivery racing itself): the ledger decides, same as the
-          // entry check — withdraw the duplicate stage entirely
-          if (txn.exists { case (app, b) => headM.txns.get(app).exists(_ >= b) }) {
-            fs.delete(commitDir, true)
-            return headV
-          }
-          // a racing COPY INTO already recorded some of THIS
-          // invocation's source files: rebasing would load them twice —
-          // withdraw instead; a re-run recomputes its candidate set
-          // from the new head and skips what the winner loaded
-          if (copyLedger.keys.exists(headM.txns.contains)) {
-            fs.delete(commitDir, true)
-            throw new IllegalStateException(
-              s"COPY INTO $path lost its race to a concurrent COPY that " +
-                "loaded overlapping source files — nothing published by " +
-                s"this invocation; the table is intact at v$headV. Re-run " +
-                "the COPY (already-loaded files are skipped).", e)
-          }
-          // the winner moved the IDENTITY watermark: the values this
-          // batch staged were generated from the OLD one and may
-          // overlap the winner's — withdraw the stage and RE-STAGE from
-          // the new head (bounded; disjoint ranges are the contract,
-          // never an overlapping publish)
-          if (identityPrev.exists(pi => headM.identity.exists(_._4 != pi._4))) {
-            fs.delete(commitDir, true)
-            if (identityRestage >= 5)
-              retriesExhausted(fs, "append", path, Seq.empty,
-                new IllegalStateException(
-                  "identity watermark moved on every restage attempt"))
-            return writePinned(spark, df, path, partitionCols, replace, txn,
-              statsCols, bloomCols, identityRestage + 1, copyLedger)
-          }
-          // a constraint added by the winner was never checked against
-          // this batch — adopting it unvalidated would publish unjudged
-          // rows under a declared contract: genuine conflict
-          require(effectiveConstraints(headM) == consLogical.toMap,
-            s"append to $path lost its race to a commit that changed the " +
-              "table's CHECK constraints — the batch was not validated " +
-              "against them; re-run the append")
-          require(headM.colMap == mapping,
-            s"append to $path lost its race to a commit that changed the " +
-              "table's column mapping — the batch was renamed under the old " +
-              "mapping; re-run the append")
-          require(headM.fieldMap == prevFieldMap,
-            s"append to $path lost its race to a commit that changed the " +
-              "table's nested-field mapping — the batch's struct columns were " +
-              "cast under the old mapping; re-run the append")
-          curSchema = headM.schema match {
-            case Some(recorded) =>
-              require(headM.partCols == partitionCols,
-                s"append partitioned by ${partitionCols.mkString(",")} but the " +
-                  s"table (after a concurrent commit) is partitioned by " +
-                  s"${headM.partCols.mkString(",")} — genuine conflict, not retryable")
-              widen(recorded, df.schema, partitionCols, "append")
-            case None =>
-              // a concurrent writer replaced the table with a headerless
-              // manifest mid-race — pre-header writers are single-writer
-              // by contract; surface the race rather than guess
-              throw e
-          }
-          curPrev = Some(headM)
-          curV = headV + 1
+    // head+1. An append drops nothing: the delta is exactly the staged
+    // files.
+    publishOptimistic(spark, fs, root, path, "append", "append", base0, v,
+      Seq(commitDir), txn, withStats, Set.empty) { (headV, head) =>
+      // a racing COPY INTO already recorded some of THIS invocation's
+      // source files: rebasing would load them twice — withdraw
+      // instead; a re-run recomputes its candidate set from the new
+      // head and skips what the winner loaded
+      if (copyLedger.keys.exists(head.txns.contains))
+        Some(s"COPY INTO $path lost its race to a concurrent COPY that " +
+          "loaded overlapping source files — nothing published by " +
+          s"this invocation; the table is intact at v$headV. Re-run " +
+          "the COPY (already-loaded files are skipped).")
+      // the winner moved the IDENTITY watermark: the values this batch
+      // staged were generated from the OLD one and may overlap the
+      // winner's — withdraw the stage and RE-STAGE from the new head
+      // (bounded; disjoint ranges are the contract, never an
+      // overlapping publish)
+      else if (identityPrev.exists(pi => head.identity.exists(_._4 != pi._4))) {
+        if (identityRestage >= 5) Some(exhaustedMessage("append", path))
+        else {
+          fs.delete(commitDir, true)
+          return writePinned(spark, df, path, partitionCols, replace, txn,
+            statsCols, bloomCols, identityRestage + 1, copyLedger)
+        }
+      } else {
+        // a constraint added by the winner was never checked against
+        // this batch — adopting it unvalidated would publish unjudged
+        // rows under a declared contract: genuine conflict
+        require(effectiveConstraints(head) == consLogical.toMap,
+          s"append to $path lost its race to a commit that changed the " +
+            "table's CHECK constraints — the batch was not validated " +
+            "against them; re-run the append")
+        require(head.colMap == mapping,
+          s"append to $path lost its race to a commit that changed the " +
+            "table's column mapping — the batch was renamed under the old " +
+            "mapping; re-run the append")
+        require(head.fieldMap == prevFieldMap,
+          s"append to $path lost its race to a commit that changed the " +
+            "table's nested-field mapping — the batch's struct columns were " +
+            "cast under the old mapping; re-run the append")
+        head.schema match {
+          case Some(recorded) =>
+            require(head.partCols == partitionCols,
+              s"append partitioned by ${partitionCols.mkString(",")} but the " +
+                s"table (after a concurrent commit) is partitioned by " +
+                s"${head.partCols.mkString(",")} — genuine conflict, not retryable")
+            curSchema = widen(recorded, df.schema, partitionCols, "append")
+            None
+          // a concurrent writer replaced the table with a headerless
+          // manifest mid-race — pre-header writers are single-writer by
+          // contract; surface the race rather than guess
+          case None =>
+            Some(s"append to $path lost its race to a commit that published " +
+              s"a headerless manifest at v$headV — pre-header writers are " +
+              "single-writer; re-run the append")
+        }
       }
-    }
-    curV // unreachable; the loop exits via return
+    }(next).merge
   }
 
   /** Read a manifest's live files as ONE scan via [[ManifestFileIndex]]:
@@ -3838,8 +3851,7 @@ object ManifestLake {
     // (the dir name is operator legibility only — manifests reference
     // files by full relative path; an abandoned stage vacuums as an
     // in-flight orphan after the grace window)
-    val commitDir = new Path(root,
-      f"$DataDir/v$newV%06d-${java.util.UUID.randomUUID().toString.take(8)}")
+    val commitDir = stagingDir(root, newV)
     val report = plans.map { case (part, fls, want) =>
       // deletion-vector-masked inputs compact through the masked-aware
       // slice read (the rewrite MATERIALIZES the masks: rewritten files
@@ -3907,52 +3919,25 @@ object ManifestLake {
     // an input file is a GENUINE conflict: the staged rewrite bakes in
     // superseded rows, so the stage is withdrawn and the failure loud.
     val inputPaths: Set[String] = plans.flatMap(_._2).map(_.path).toSet
-    fireRaceHook("compact")
-    var attempt = 0
-    var curM = manifest
-    var curV = newV
-    while (true) {
-      val untouched = curM.files.filterNot(f => inputPaths.contains(f.path))
-      try {
-        publish(fs, root, curV, untouched ++ withStats,
-          curM.schema, curM.partCols, curM.txns, op = Some("compact"),
-          constraints = curM.constraints, colMap = curM.colMap,
-          droppedPhys = curM.droppedPhys, bloomCols = curM.bloomCols,
-          statsColsDefault = curM.statsColsDefault,
-          generated = curM.generated, defaults = curM.defaults, identity = curM.identity, clusterCols = curM.clusterCols, extras = curM.extras, fieldMap = curM.fieldMap, fieldDropped = curM.fieldDropped,
-          deltaHint = Some((withStats, inputPaths.toSeq)))
-        return report
-      } catch {
-        case e: IllegalStateException if attempt >= 5 =>
-          retriesExhausted(fs, "compact", path, Seq(commitDir), e)
-        case e: IllegalStateException if attempt < 5 =>
-          attempt += 1
-          val headV = currentVersion(spark, path).getOrElse(throw e)
-          val headM = readManifest(fs, root, headV)
-          val headPaths = headM.files.map(_.path).toSet
-          // the rewrite is equivalent ONLY if every input is live at
-          // the head with the SAME deletion-vector state the rewrite
-          // read: a concurrent DV-delete leaves the file live but masks
-          // rows the staged rewrite has already materialized — carrying
-          // the stage forward would silently resurrect them
-          val headDv = headM.files.map(f => f.path -> ((f.dv, f.dvRows))).toMap
-          val snapDv = manifest.files.map(f => f.path -> ((f.dv, f.dvRows))).toMap
-          val dvDrift = inputPaths.exists(p =>
-            headDv.get(p) != snapDv.get(p))
-          if (!inputPaths.forall(headPaths.contains) || dvDrift) {
-            fs.delete(commitDir, true)
-            throw new IllegalStateException(
-              s"compact of $path lost its race to a commit that rewrote, " +
-                "removed, or re-masked compacted input files — the staged " +
-                "layout bakes in superseded rows and was withdrawn; the " +
-                s"table is intact at v$headV. Re-run compact against the " +
-                "new head.", e)
-          }
-          curM = headM
-          curV = headV + 1
-      }
-    }
-    report // unreachable; the loop exits via return
+    // the rewrite is equivalent ONLY if every input is live at the head
+    // with the SAME deletion-vector state the rewrite read: a concurrent
+    // DV-delete leaves the file live but masks rows the staged rewrite
+    // has already materialized — carrying the stage forward would
+    // silently resurrect them
+    lazy val snapDv = manifest.files.map(f => f.path -> ((f.dv, f.dvRows))).toMap
+    publishOptimistic(spark, fs, root, path, "compact", "compact", manifest, newV,
+      Seq(commitDir), None, withStats, inputPaths) { (headV, head) =>
+      val headPaths = head.files.map(_.path).toSet
+      val headDv = head.files.map(f => f.path -> ((f.dv, f.dvRows))).toMap
+      val dvDrift = inputPaths.exists(p => headDv.get(p) != snapDv.get(p))
+      if (inputPaths.forall(headPaths.contains) && !dvDrift) None
+      else Some(s"compact of $path lost its race to a commit that rewrote, " +
+        "removed, or re-masked compacted input files — the staged " +
+        "layout bakes in superseded rows and was withdrawn; the " +
+        s"table is intact at v$headV. Re-run compact against the " +
+        "new head.")
+    }(identity)
+    report
   }
 
   /** Key-level upsert (merge-into) under manifest commit — the
@@ -4151,8 +4136,7 @@ object ManifestLake {
     // version must never share a staging path — and the change files
     // stamp INSIDE it (manifest-referenced via #cdf), so they can never
     // collide either
-    val commitDir = new Path(root,
-      f"$DataDir/v$newV%06d-${java.util.UUID.randomUUID().toString.take(8)}")
+    val commitDir = stagingDir(root, newV)
     // CHECK constraints ride the merge write as observed metrics (zero
     // extra jobs): carried rows already satisfy them (write/addConstraint
     // invariant), so any violation is the update batch's — judged
@@ -4256,8 +4240,7 @@ object ManifestLake {
         val cdfP = new Path(commitDir, CdfDir)
         commitRepartition(spark, changes, commitBytes, partitionCols)
           .write.mode(SaveMode.Overwrite).parquet(cdfP.toString)
-        val rootQ = fs.makeQualified(root).toString
-        Some(fs.makeQualified(cdfP).toString.stripPrefix(rootQ).stripPrefix("/"))
+        Some(relToRoot(fs, root, cdfP))
       }
     // OPTIMISTIC PUBLISH for partition-disjoint racers: the staged
     // merge (and its stamped pre-images) stays exact as long as the
@@ -4267,56 +4250,19 @@ object ManifestLake {
     // schema — invalidates the pre-images: loud conflict, stage
     // withdrawn.
     val inputPaths = affectedFiles.map(_.path).toSet
-    fireRaceHook("upsert")
-    var attempt = 0
-    var curM = manifest
-    var curV = newV
-    while (true) {
-      try {
-        publish(fs, root, curV, curM.files.filterNot(f => inputPaths.contains(f.path))
-          ++ stagedWithStats,
-          Some(tableSchema), partitionCols,
-          curM.txns ++ txn.toMap, op = Some("upsert"), cdf = relCdf,
-          constraints = manifest.constraints, colMap = colMapOutU,
-          droppedPhys = manifest.droppedPhys, bloomCols = manifest.bloomCols,
-          statsColsDefault = manifest.statsColsDefault,
-          generated = manifest.generated, defaults = manifest.defaults, identity = manifest.identity, clusterCols = manifest.clusterCols, extras = manifest.extras, fieldMap = manifest.fieldMap, fieldDropped = manifest.fieldDropped,
-          deltaHint = Some((stagedWithStats, inputPaths.toSeq)))
-        return curV
-      } catch {
-        case e: IllegalStateException if attempt >= 5 =>
-          retriesExhausted(fs, "upsert", path, Seq(commitDir), e)
-        case e: IllegalStateException if attempt < 5 =>
-          attempt += 1
-          val headV = currentVersion(spark, path).getOrElse(throw e)
-          val headM = readManifest(fs, root, headV)
-          // an at-least-once redelivery racing itself: the ledger wins
-          if (txn.exists { case (app, b) => headM.txns.get(app).exists(_ >= b) }) {
-            fs.delete(commitDir, true)
-            return headV
-          }
-          val headAffected = headM.files
-            .filter(f => affectedDirs.contains(partDirOf(f.path))).toSet
-          // effectiveConstraints: see the merge guard — a concurrently
-          // added generated column's validation must not be bypassed
-          if (headAffected != affectedFiles.toSet ||
-            headM.schema != manifest.schema || headM.partCols != partitionCols ||
-            effectiveConstraints(headM) != effectiveConstraints(manifest) ||
-            headM.colMap != manifest.colMap ||
-              headM.fieldMap != manifest.fieldMap) {
-            fs.delete(commitDir, true)
-            throw new IllegalStateException(
-              s"upsert of $path lost its race to a commit that touched its " +
-                s"affected partitions (or changed the recorded shape) — the " +
-                "staged merge bakes in superseded pre-images and was " +
-                s"withdrawn; the table is intact at v$headV. Re-run the " +
-                "upsert against the new head.", e)
-          }
-          curM = headM
-          curV = headV + 1
-      }
-    }
-    curV // unreachable; the loop exits via return
+    publishOptimistic(spark, fs, root, path, "upsert", "upsert", manifest, newV,
+      Seq(commitDir), txn, stagedWithStats, inputPaths) { (headV, head) =>
+      val headAffected = head.files
+        .filter(f => affectedDirs.contains(partDirOf(f.path))).toSet
+      if (headAffected == affectedFiles.toSet &&
+        !shapeMoved(head, manifest, partitionCols, constraints = true)) None
+      else Some(s"upsert of $path lost its race to a commit that touched its " +
+        s"affected partitions (or changed the recorded shape) — the " +
+        "staged merge bakes in superseded pre-images and was " +
+        s"withdrawn; the table is intact at v$headV. Re-run the " +
+        "upsert against the new head.")
+    }(_.copy(schema = Some(tableSchema), partCols = partitionCols, cdf = relCdf,
+      colMap = colMapOutU)).merge
   }
 
   /** DYNAMIC PARTITION OVERWRITE as ONE manifest commit — Spark's
@@ -4475,8 +4421,7 @@ object ManifestLake {
         count(when(not(coalesce(expr(e), lit(true))), lit(1))).as(s"viol_$n")
       }
       val newV = v + 1
-      val commitDir = new Path(root,
-        f"$DataDir/v$newV%06d-${java.util.UUID.randomUUID().toString.take(8)}")
+      val commitDir = stagingDir(root, newV)
       dfP.observe(obs, aggs.head, aggs.tail: _*)
         .repartition(partitionCols.map(col): _*)
         .write.mode(SaveMode.Overwrite).partitionBy(partitionCols: _*)
@@ -4512,68 +4457,32 @@ object ManifestLake {
           val cdfP = new Path(commitDir, CdfDir)
           changes.repartition(partitionCols.map(col): _*)
             .write.mode(SaveMode.Overwrite).parquet(cdfP.toString)
-          val rootQ = fs.makeQualified(root).toString
-          Some(fs.makeQualified(cdfP).toString.stripPrefix(rootQ).stripPrefix("/"))
+          Some(relToRoot(fs, root, cdfP))
         }
       val inputPaths = affectedFiles.map(_.path).toSet
-      fireRaceHook("replacepart")
-      var attempt = 0
-      var curM = manifest
-      var curV = newV
-      while (true) {
-        try {
-          publish(fs, root, curV,
-            curM.files.filterNot(f => inputPaths.contains(f.path)) ++ stagedWithStats,
-            Some(tableSchema), partitionCols,
-            curM.txns ++ txn.toMap, op = Some("replacepart"), cdf = relCdf,
-            constraints = manifest.constraints, colMap = colMapOut,
-            droppedPhys = manifest.droppedPhys, bloomCols = manifest.bloomCols,
-          statsColsDefault = manifest.statsColsDefault,
-            generated = manifest.generated, defaults = manifest.defaults, identity = manifest.identity, clusterCols = manifest.clusterCols, extras = manifest.extras, fieldMap = manifest.fieldMap, fieldDropped = manifest.fieldDropped,
-            deltaHint = Some((stagedWithStats, inputPaths.toSeq)))
-          return curV
-        } catch {
-          case e: IllegalStateException if attempt >= 5 =>
-            retriesExhausted(fs, "overwritePartitions", path, Seq(commitDir), e)
-          case e: IllegalStateException if attempt < 5 =>
-            attempt += 1
-            val headV = currentVersion(spark, path).getOrElse(throw e)
-            val headM = readManifest(fs, root, headV)
-            if (txn.exists { case (app, b) => headM.txns.get(app).exists(_ >= b) }) {
-              fs.delete(commitDir, true)
-              return headV
-            }
-            val headAffected = headM.files
-              .filter(f => affectedDirs.contains(partDirOf(f.path))).toSet
-            // a racer may have created a NEW partition under the
-            // static prefix (not in affectedDirs, so the file check
-            // alone would miss it) — static semantics clear EVERYTHING
-            // matching the prefix at commit time, so a changed
-            // prefix-dir set must withdraw, never silently survive
-            val headPrefixDirs: Set[String] =
-              if (prefixSegs.isEmpty) Set.empty
-              else headM.files.map(f => partDirOf(f.path)).filter { d =>
-                prefixSegs.zip(d.split("/").toSeq).forall { case (a, b) => a == b }
-              }.toSet
-            if (headAffected != affectedFiles.toSet ||
-              headPrefixDirs != staticDirs ||
-              headM.schema != manifest.schema || headM.partCols != partitionCols ||
-              effectiveConstraints(headM) != effectiveConstraints(manifest) ||
-              headM.colMap != manifest.colMap ||
-              headM.fieldMap != manifest.fieldMap) {
-              fs.delete(commitDir, true)
-              throw new IllegalStateException(
-                s"partition overwrite of $path lost its race to a commit that " +
-                  "touched its affected partitions (or changed the recorded " +
-                  "shape) — the staged swap bakes in superseded pre-images and " +
-                  s"was withdrawn; the table is intact at v$headV. Re-run " +
-                  "against the new head.", e)
-            }
-            curM = headM
-            curV = headV + 1
-        }
-      }
-      curV // unreachable
+      publishOptimistic(spark, fs, root, path, "replacepart", "overwritePartitions",
+        manifest, newV, Seq(commitDir), txn, stagedWithStats, inputPaths) { (headV, head) =>
+        val headAffected = head.files
+          .filter(f => affectedDirs.contains(partDirOf(f.path))).toSet
+        // a racer may have created a NEW partition under the static
+        // prefix (not in affectedDirs, so the file check alone would
+        // miss it) — static semantics clear EVERYTHING matching the
+        // prefix at commit time, so a changed prefix-dir set must
+        // withdraw, never silently survive
+        val headPrefixDirs: Set[String] =
+          if (prefixSegs.isEmpty) Set.empty
+          else head.files.map(f => partDirOf(f.path)).filter { d =>
+            prefixSegs.zip(d.split("/").toSeq).forall { case (a, b) => a == b }
+          }.toSet
+        if (headAffected == affectedFiles.toSet && headPrefixDirs == staticDirs &&
+          !shapeMoved(head, manifest, partitionCols, constraints = true)) None
+        else Some(s"partition overwrite of $path lost its race to a commit that " +
+          "touched its affected partitions (or changed the recorded " +
+          "shape) — the staged swap bakes in superseded pre-images and " +
+          s"was withdrawn; the table is intact at v$headV. Re-run " +
+          "against the new head.")
+      }(_.copy(schema = Some(tableSchema), partCols = partitionCols, cdf = relCdf,
+        colMap = colMapOut)).merge
     } finally {
       dfP.unpersist()
       ()
@@ -4991,8 +4900,7 @@ object ManifestLake {
         .observe(obsM, aggsM.head, aggsM.tail: _*)
         .drop("__action")
       val newV = v + 1
-      val commitDir = new Path(root,
-        f"$DataDir/v$newV%06d-${java.util.UUID.randomUUID().toString.take(8)}")
+      val commitDir = stagingDir(root, newV)
       val w = fromLogical(observed, manifest)
         .repartition(partitionCols.map(col): _*)
         .sortWithinPartitions(keyCols.map(col): _*)
@@ -5067,77 +4975,43 @@ object ManifestLake {
               physicalProjection(manifest) :+ col(ChangeTypeCol): _*)
           physChanges.repartition(partitionCols.map(col): _*)
             .write.mode(SaveMode.Overwrite).parquet(cdfP.toString)
-          val rootQ = fs.makeQualified(root).toString
-          Some(fs.makeQualified(cdfP).toString.stripPrefix(rootQ).stripPrefix("/"))
+          Some(relToRoot(fs, root, cdfP))
         }
-      // optimistic publish — upsert's partition-disjoint rules exactly
+      // optimistic publish — upsert's partition-disjoint rules exactly.
+      // WITH SCHEMA EVOLUTION, `manifest` is the in-memory EVOLVED
+      // manifest — comparing the raw head against it would declare
+      // every benign race lost (the head is always un-evolved).
+      // Re-apply the same evolution to the head: an identical result
+      // means the racing commit did not touch the shape this merge
+      // staged against, so the retry path stays open. A head whose
+      // shape makes the re-evolution diverge (or throw) fails the
+      // comparison with the clean race error.
       val inputPaths = affectedFiles.map(_.path).toSet
-      fireRaceHook("merge")
-      var attempt = 0
-      var curM = manifest
-      var curV = newV
-      while (true) {
-        try {
-          publish(fs, root, curV,
-            curM.files.filterNot(f => inputPaths.contains(f.path)) ++ stagedWithStats,
-            manifest.schema, partitionCols,
-            curM.txns ++ txn.toMap, op = Some("merge"), cdf = relCdf,
-            constraints = manifest.constraints, colMap = manifest.colMap,
-            droppedPhys = manifest.droppedPhys, bloomCols = manifest.bloomCols,
-          statsColsDefault = manifest.statsColsDefault,
-            generated = manifest.generated, defaults = manifest.defaults, identity = manifest.identity, clusterCols = manifest.clusterCols, extras = manifest.extras, fieldMap = manifest.fieldMap, fieldDropped = manifest.fieldDropped,
-            deltaHint = Some((stagedWithStats, inputPaths.toSeq)))
-          return MergeStats(curV, nUpd, nDel, nIns)
-        } catch {
-          case e: IllegalStateException if attempt >= 5 =>
-            retriesExhausted(fs, "merge", path, Seq(commitDir), e)
-          case e: IllegalStateException if attempt < 5 =>
-            attempt += 1
-            val headV = currentVersion(spark, path).getOrElse(throw e)
-            val headM0 = readManifest(fs, root, headV)
-            // WITH SCHEMA EVOLUTION, `manifest` is the in-memory
-            // EVOLVED manifest — comparing the raw head against it
-            // would declare every benign race lost (the head is always
-            // un-evolved). Re-apply the same evolution to the head: an
-            // identical result means the racing commit did not touch
-            // the shape this merge staged against, so the retry path
-            // stays open. A head whose shape makes the re-evolution
-            // diverge (or throw) fails the comparison below with the
-            // clean race error.
-            val headM = evolveWith match {
-              case None => headM0
-              case Some(srcSchema) =>
-                try evolveSchemaFor(headM0, srcSchema, path)
-                catch { case _: Exception => headM0 }
-            }
-            if (txn.exists { case (app, b) => headM.txns.get(app).exists(_ >= b) }) {
-              fs.delete(commitDir, true)
-              return MergeStats(headV, 0L, 0L, 0L)
-            }
-            val headAffected = headM.files
-              .filter(f => affectedDirs.contains(partDirOf(f.path))).toSet
-            // effectiveConstraints (not raw constraints): a concurrently
-            // ADDED generated column's synthetic validation was never run
-            // against this stage — publishing it unjudged would let the
-            // column silently diverge (append's guard has the same shape)
-            if (headAffected != affectedFiles.toSet ||
-              headM.schema != manifest.schema || headM.partCols != partitionCols ||
-              effectiveConstraints(headM) != effectiveConstraints(manifest) ||
-              headM.colMap != manifest.colMap ||
-              headM.fieldMap != manifest.fieldMap) {
-              fs.delete(commitDir, true)
-              throw new IllegalStateException(
-                s"merge of $path lost its race to a commit that touched its " +
-                  "affected partitions (or changed the recorded shape) — the " +
-                  "staged merge bakes in superseded pre-images and was " +
-                  s"withdrawn; the table is intact at v$headV. Re-run the " +
-                  "merge against the new head.", e)
-            }
-            curM = headM
-            curV = headV + 1
-        }
+      val reevolve: Manifest => Manifest = evolveWith match {
+        case None => identity
+        case Some(srcSchema) => head =>
+          try evolveSchemaFor(head, srcSchema, path)
+          catch { case _: Exception => head }
       }
-      MergeStats(curV, nUpd, nDel, nIns) // unreachable
+      publishOptimistic(spark, fs, root, path, "merge", "merge", manifest, newV,
+        Seq(commitDir), txn, stagedWithStats, inputPaths, reevolve) { (headV, head) =>
+        val headAffected = head.files
+          .filter(f => affectedDirs.contains(partDirOf(f.path))).toSet
+        // effectiveConstraints (not raw constraints): a concurrently
+        // ADDED generated column's synthetic validation was never run
+        // against this stage — publishing it unjudged would let the
+        // column silently diverge (append's guard has the same shape)
+        if (headAffected == affectedFiles.toSet &&
+          !shapeMoved(head, manifest, partitionCols, constraints = true)) None
+        else Some(s"merge of $path lost its race to a commit that touched its " +
+          "affected partitions (or changed the recorded shape) — the " +
+          "staged merge bakes in superseded pre-images and was " +
+          s"withdrawn; the table is intact at v$headV. Re-run the " +
+          "merge against the new head.")
+      }(_.copy(partCols = partitionCols, cdf = relCdf)) match {
+        case Left(headV) => MergeStats(headV, 0L, 0L, 0L)
+        case Right(published) => MergeStats(published, nUpd, nDel, nIns)
+      }
     } finally {
       cls.unpersist()
       source.unpersist()
@@ -5178,7 +5052,7 @@ object ManifestLake {
     * OPTIMISTICALLY: losing the version race to a commit that neither
     * touched the match-bearing files nor appended predicate-matching
     * rows retries at the new head; anything else is a loud conflict
-    * ([[publishDeleteOptimistic]]). Returns the (possibly unchanged)
+    * (see `publishDelete` in the body). Returns the (possibly unchanged)
     * head version.
     */
   // ---- column mapping (rename/drop without rewrite) ----
@@ -5571,107 +5445,42 @@ object ManifestLake {
     if (h != null) h(op)
   }
 
-  /** Publish a delete commit OPTIMISTICALLY: on a lost version race the
-    * loser re-reads the head and retries iff (a) every file the delete
-    * resolved as match-bearing is still live (no racer rewrote or
-    * removed them), (b) the recorded shape is unchanged, and (c) the
-    * files added since the delete's snapshot PROVABLY contain no
-    * predicate matches — decided exactly, by reading ONLY those files
-    * (bounded by the winners' batches, never the table). That last
-    * check is Delta's ConcurrentAppendException rule with data instead
-    * of stats: a matching row that appeared concurrently is a genuine
-    * conflict, because the delete promised its snapshot and silently
-    * leaving lookalike rows behind would read as a partial delete. A
-    * conflict withdraws `cleanup` (the staged dirs) and fails loudly;
-    * file-disjoint deletes and appends of non-matching data compose
-    * without coordination.
+  /** One canonical decoded (scheme, authority, path) form of `p`:
+    * input_file_name() and `_metadata.file_path` return URL-ENCODED
+    * URIs whose textual form (file:/// vs file:/, %20 escapes in
+    * partition values) differs from makeQualified's rendering, so both
+    * sides of a match resolve to this before comparing.
     */
-  private def publishDeleteOptimistic(spark: SparkSession, fs: FileSystem,
-                                      root: Path, path: String, predicate: Column,
-                                      snapshot: Manifest, v: Long,
-                                      candidates: Seq[LiveFile],
-                                      staged: Seq[LiveFile],
-                                      schema: StructType,
-                                      txn: Option[(String, Long)],
-                                      relCdf: Option[String],
-                                      cleanup: Seq[Path],
-                                      partitionOnly: Boolean): Long = {
-    fireRaceHook("delete")
-    val candidatePaths = candidates.map(_.path).toSet
-    var attempt = 0
-    var curM = snapshot
-    var curV = v + 1
-    while (true) {
-      try {
-        publish(fs, root, curV,
-          curM.files.filterNot(f => candidatePaths.contains(f.path)) ++ staged,
-          Some(schema), snapshot.partCols,
-          // deletes remove rows only, so they can never violate a
-          // constraint — carry the HEAD's (a concurrently-added one
-          // survives the retry instead of being clobbered)
-          curM.txns ++ txn.toMap, op = Some("delete"), cdf = relCdf,
-          constraints = curM.constraints, colMap = curM.colMap,
-          droppedPhys = curM.droppedPhys, bloomCols = curM.bloomCols,
-          statsColsDefault = curM.statsColsDefault,
-          generated = curM.generated, defaults = curM.defaults, identity = curM.identity, clusterCols = curM.clusterCols, extras = curM.extras, fieldMap = curM.fieldMap, fieldDropped = curM.fieldDropped,
-          deltaHint = Some((staged, candidatePaths.toSeq)))
-        return curV
-      } catch {
-        case e: IllegalStateException if attempt >= 5 =>
-          retriesExhausted(fs, "delete", path, cleanup, e)
-        case e: IllegalStateException if attempt < 5 =>
-          attempt += 1
-          val headV = currentVersion(spark, path).getOrElse(throw e)
-          val headM = readManifest(fs, root, headV)
-          if (txn.exists { case (app, b) => headM.txns.get(app).exists(_ >= b) }) {
-            cleanup.foreach(fs.delete(_, true))
-            return headV
-          }
-          def conflict(reason: String): Nothing = {
-            cleanup.foreach(fs.delete(_, true))
-            throw new IllegalStateException(
-              s"delete of $path lost its race to a commit that $reason — " +
-                s"the staged result was withdrawn; the table is intact at " +
-                s"v$headV. Re-run the delete against the new head.", e)
-          }
-          // ENTRY equality, not path presence: a racer that re-MASKED a
-          // candidate (deletion-vector delete) keeps its path but
-          // changes its entry — re-publishing our stale entry would
-          // silently undo the winner's mask
-          val headSet = headM.files.toSet
-          if (!candidates.forall(headSet.contains))
-            conflict("rewrote, removed, or re-masked its match-bearing files")
-          if (headM.schema != snapshot.schema || headM.partCols != snapshot.partCols ||
-            headM.colMap != snapshot.colMap ||
-            headM.fieldMap != snapshot.fieldMap)
-            conflict("changed the recorded shape")
-          val snapshotPaths = snapshot.files.map(_.path).toSet
-          val added = headM.files.filterNot(f => snapshotPaths.contains(f.path))
-          if (added.nonEmpty) {
-            // PARTITION-ONLY deletes decide this from the added files'
-            // partition dirs alone — a dir the predicate matches means
-            // every row in the file matches (conflict), any other dir
-            // provably contains none: the retry costs ZERO data I/O,
-            // so a metadata-only delete composes with disjoint
-            // appends/upserts/deletes at manifest speed. The rewrite
-            // path (data-column predicate) still reads only the added
-            // files — bounded by the winners' batches, never the table.
-            val matchingAdded =
-              if (partitionOnly)
-                matchedPartitionDirs(spark, schema, snapshot.partCols, predicate,
-                  added.map(f => partDirOf(f.path)).distinct)
-                  .map(m => added.exists(f => m.contains(partDirOf(f.path))))
-              else None
-            val hit = matchingAdded.getOrElse(
-              toLogical(readFileSlice(spark, path, headM, added), headM)
-                .where(predicate).limit(1).count() > 0)
-            if (hit) conflict("appended rows matching the delete predicate")
-          }
-          curM = headM
-          curV = headV + 1
-      }
-    }
-    curV // unreachable; the loop exits via return
+  private def canonPath(fs: FileSystem, p: Path): String = {
+    val u = fs.makeQualified(p).toUri
+    Option(u.getScheme).getOrElse("") + "://" +
+      Option(u.getAuthority).getOrElse("") + u.getPath
+  }
+
+  private def canonUri(fs: FileSystem, uri: String): String =
+    canonPath(fs, try new Path(new java.net.URI(uri))
+                  catch { case _: Exception => new Path(uri) })
+
+  /** The live files of `m` holding at least one row matching
+    * `predicate` (over the logical view) — the filtered single scan
+    * prunes via pushdown + manifest stats before opening anything.
+    * Per-row `_metadata.file_path`, not input_file_name(): the metadata
+    * column survives the deletion-vector anti-join and the
+    * masked/plain union, where input_file_name() goes blank.
+    */
+  private def matchBearingFiles(spark: SparkSession, fs: FileSystem, root: Path,
+                                m: Manifest, predicate: Column): Seq[LiveFile] = {
+    val matchedUris = toLogical(
+      scanWithRowMeta(spark, fs, root, m, m.files), m, extraCols = Seq("__dv_fp"))
+      .where(predicate)
+      .select(col("__dv_fp")).distinct()
+      .collect().map(r => canonUri(fs, r.getString(0))).toSet
+    val candidates =
+      m.files.filter(f => matchedUris.contains(canonPath(fs, new Path(root, f.path))))
+    require(candidates.size == matchedUris.size,
+      s"matched file paths did not resolve against the live set: " +
+        s"${matchedUris.size} matched, ${candidates.size} resolved")
+    candidates
   }
 
   def delete(spark: SparkSession, path: String, predicate: Column,
@@ -5692,6 +5501,62 @@ object ManifestLake {
         !logicalSchemaOf(manifest).fieldNames.contains(r),
         s"column name $r is reserved for the change feed's metadata"))
     if (manifest.files.isEmpty) return v
+    // OPTIMISTIC publish: on a lost version race the loser re-reads the
+    // head and retries iff (a) every file the delete resolved as
+    // match-bearing is still live (no racer rewrote or removed them),
+    // (b) the recorded shape is unchanged, and (c) the files added
+    // since the delete's snapshot PROVABLY contain no predicate matches
+    // — decided exactly, by reading ONLY those files (bounded by the
+    // winners' batches, never the table). That last check is Delta's
+    // ConcurrentAppendException rule with data instead of stats: a
+    // matching row that appeared concurrently is a genuine conflict,
+    // because the delete promised its snapshot and silently leaving
+    // lookalike rows behind would read as a partial delete. File-
+    // disjoint deletes and appends of non-matching data compose without
+    // coordination.
+    def publishDelete(candidates: Seq[LiveFile], staged: Seq[LiveFile],
+                      relCdf: Option[String], stages: Seq[Path],
+                      partitionOnly: Boolean): Long = {
+      publishOptimistic(spark, fs, root, path, "delete", "delete", manifest, v + 1,
+        stages, txn, staged, candidates.map(_.path).toSet) { (headV, head) =>
+        def lost(reason: String): Option[String] =
+          Some(s"delete of $path lost its race to a commit that $reason — " +
+            s"the staged result was withdrawn; the table is intact at " +
+            s"v$headV. Re-run the delete against the new head.")
+        // ENTRY equality, not path presence: a racer that re-MASKED a
+        // candidate (deletion-vector delete) keeps its path but
+        // changes its entry — re-publishing our stale entry would
+        // silently undo the winner's mask
+        val headSet = head.files.toSet
+        if (!candidates.forall(headSet.contains))
+          lost("rewrote, removed, or re-masked its match-bearing files")
+        else if (shapeMoved(head, manifest, manifest.partCols, constraints = false))
+          lost("changed the recorded shape")
+        else {
+          val snapshotPaths = manifest.files.map(_.path).toSet
+          val added = head.files.filterNot(f => snapshotPaths.contains(f.path))
+          // PARTITION-ONLY deletes decide this from the added files'
+          // partition dirs alone — a dir the predicate matches means
+          // every row in the file matches (conflict), any other dir
+          // provably contains none: the retry costs ZERO data I/O, so a
+          // metadata-only delete composes with disjoint
+          // appends/upserts/deletes at manifest speed. The rewrite path
+          // (data-column predicate) still reads only the added files.
+          val hit = added.nonEmpty && {
+            val matchingAdded =
+              if (partitionOnly)
+                matchedPartitionDirs(spark, schema, manifest.partCols, predicate,
+                  added.map(f => partDirOf(f.path)).distinct)
+                  .map(m => added.exists(f => m.contains(partDirOf(f.path))))
+              else None
+            matchingAdded.getOrElse(
+              toLogical(readFileSlice(spark, path, head, added), head)
+                .where(predicate).limit(1).count() > 0)
+          }
+          if (hit) lost("appended rows matching the delete predicate") else None
+        }
+      }(_.copy(cdf = relCdf)).merge
+    }
     // ---- METADATA-ONLY FAST PATH: a predicate over partition columns
     // alone is CONSTANT within every file, so the matched partitions'
     // files leave the live set BY REFERENCE — zero rewrite I/O, and
@@ -5716,50 +5581,20 @@ object ManifestLake {
             // the feed still serves the EXACT dropped rows — one read
             // of the dropped files, staged under a unique commit dir
             // that holds nothing but the change files
-            val commitDir = new Path(root,
-              f"$DataDir/v$newV%06d-${java.util.UUID.randomUUID().toString.take(8)}")
+            val commitDir = stagingDir(root, newV)
             val cdfP = new Path(commitDir, CdfDir)
             readFileSlice(spark, path, manifest, candidates)
               .withColumn(ChangeTypeCol, lit("delete"))
               .write.mode(SaveMode.Overwrite).parquet(cdfP.toString)
-            val rootQ = fs.makeQualified(root).toString
-            (Some(fs.makeQualified(cdfP).toString.stripPrefix(rootQ).stripPrefix("/")),
-              Seq(commitDir))
+            (Some(relToRoot(fs, root, cdfP)), Seq(commitDir))
           }
-        return publishDeleteOptimistic(spark, fs, root, path, predicate,
-          manifest, v, candidates, Seq.empty, schema,
-          txn, relCdf, cdfCleanup, partitionOnly = true)
+        return publishDelete(candidates, Seq.empty, relCdf, cdfCleanup,
+          partitionOnly = true)
       case None => () // references data columns: the rewrite path below
     }
-    // which files actually CONTAIN matches — the filtered single scan
-    // prunes via pushdown + manifest stats before opening anything.
-    // input_file_name() returns URL-ENCODED URIs whose textual form
-    // (file:/// vs file:/, %20 escapes in partition values) differs
-    // from makeQualified's rendering, so both sides resolve to one
-    // canonical decoded (scheme, authority, path) form before matching.
-    def canon(p: Path): String = {
-      val u = fs.makeQualified(p).toUri
-      Option(u.getScheme).getOrElse("") + "://" +
-        Option(u.getAuthority).getOrElse("") + u.getPath
-    }
-    def canonStr(sv: String): String =
-      canon(try new Path(new java.net.URI(sv))
-            catch { case _: Exception => new Path(sv) })
-    // per-row _metadata.file_path, not input_file_name(): the metadata
-    // column survives the deletion-vector anti-join and the
-    // masked/plain union, where input_file_name() goes blank
-    val matchedUris = toLogical(
-      scanWithRowMeta(spark, fs, root, manifest, manifest.files),
-      manifest, extraCols = Seq("__dv_fp"))
-      .where(predicate)
-      .select(col("__dv_fp")).distinct()
-      .collect().map(r => canonStr(r.getString(0))).toSet
-    if (matchedUris.isEmpty) return v
-    val candidates =
-      manifest.files.filter(f => matchedUris.contains(canon(new Path(root, f.path))))
-    require(candidates.size == matchedUris.size,
-      s"matched file paths did not resolve against the live set: " +
-        s"${matchedUris.size} matched, ${candidates.size} resolved")
+    // which files actually CONTAIN matches
+    val candidates = matchBearingFiles(spark, fs, root, manifest, predicate)
+    if (candidates.isEmpty) return v
     // ---- DELETION-VECTOR PATH: mark the matched rows instead of
     // rewriting the match-bearing files — the write amplification of a
     // needle-in-a-1GB-file delete drops from the file size to a KB-scale
@@ -5772,12 +5607,10 @@ object ManifestLake {
       val matched = metaL.where(predicate)
       matched.persist()
       try {
-        val newV = v + 1
-        val commitDir = new Path(root,
-          f"$DataDir/v$newV%06d-${java.util.UUID.randomUUID().toString.take(8)}")
+        val commitDir = stagingDir(root, v + 1)
         val dvP = new Path(commitDir, DvDir)
         val perFp = matched.groupBy(col("__dv_fp")).count().collect()
-          .map(r => canonStr(r.getString(0)) -> r.getLong(1)).toMap
+          .map(r => canonUri(fs, r.getString(0)) -> r.getLong(1)).toMap
         // DV files store the manifest-RELATIVE path (the table's
         // relocatability contract — see relPathExpr), derived from the
         // reader metadata by the same codegen'd extraction the probes
@@ -5801,10 +5634,9 @@ object ManifestLake {
               .unionByName(newRows)
           }
         dvAll.coalesce(1).write.mode(SaveMode.Overwrite).parquet(dvP.toString)
-        val rootQ = fs.makeQualified(root).toString
-        val relDv = fs.makeQualified(dvP).toString.stripPrefix(rootQ).stripPrefix("/")
+        val relDv = relToRoot(fs, root, dvP)
         val updated = candidates.flatMap { f =>
-          val newCount = perFp.getOrElse(canon(new Path(root, f.path)), 0L) +
+          val newCount = perFp.getOrElse(canonPath(fs, new Path(root, f.path)), 0L) +
             f.dvRows.getOrElse(0L)
           f.rows.foreach(r => require(newCount <= r,
             s"deletion-vector overflow for ${f.path}: $newCount masked of $r rows"))
@@ -5822,11 +5654,10 @@ object ManifestLake {
               else goneL.select(physicalProjection(manifest): _*)
             phys.withColumn(ChangeTypeCol, lit("delete"))
               .write.mode(SaveMode.Overwrite).parquet(cdfP.toString)
-            Some(fs.makeQualified(cdfP).toString.stripPrefix(rootQ).stripPrefix("/"))
+            Some(relToRoot(fs, root, cdfP))
           }
-        return publishDeleteOptimistic(spark, fs, root, path, predicate,
-          manifest, v, candidates, updated, schema,
-          txn, relCdf, Seq(commitDir), partitionOnly = false)
+        return publishDelete(candidates, updated, relCdf, Seq(commitDir),
+          partitionOnly = false)
       } finally {
         matched.unpersist()
         ()
@@ -5841,11 +5672,7 @@ object ManifestLake {
       // boundary)
       val keep = fromLogical(src.where(!coalesce(predicate, lit(false))), manifest)
       val gone = fromLogical(src.where(predicate), manifest)
-      val newV = v + 1
-      // unique staging dir: deletes publish optimistically (see
-      // publishDeleteOptimistic), so racers must never share one
-      val commitDir = new Path(root,
-        f"$DataDir/v$newV%06d-${java.util.UUID.randomUUID().toString.take(8)}")
+      val commitDir = stagingDir(root, v + 1)
       val w = keep.write.mode(SaveMode.Overwrite)
       (if (manifest.partCols.nonEmpty) w.partitionBy(manifest.partCols: _*) else w)
         .parquet(commitDir.toString)
@@ -5880,12 +5707,9 @@ object ManifestLake {
           val cdfP = new Path(commitDir, CdfDir)
           gone.withColumn(ChangeTypeCol, lit("delete"))
             .write.mode(SaveMode.Overwrite).parquet(cdfP.toString)
-          val rootQ = fs.makeQualified(root).toString
-          Some(fs.makeQualified(cdfP).toString.stripPrefix(rootQ).stripPrefix("/"))
+          Some(relToRoot(fs, root, cdfP))
         }
-      publishDeleteOptimistic(spark, fs, root, path, predicate,
-        manifest, v, candidates, withStats, schema,
-        txn, relCdf, Seq(commitDir), partitionOnly = false)
+      publishDelete(candidates, withStats, relCdf, Seq(commitDir), partitionOnly = false)
     } finally {
       src.unpersist()
       ()
@@ -5965,26 +5789,8 @@ object ManifestLake {
       require(!schema.fieldNames.contains(r) && !logical.fieldNames.contains(r),
         s"column name $r is reserved for the change feed's metadata"))
     if (manifest.files.isEmpty) return v
-    def canon(p: Path): String = {
-      val u = fs.makeQualified(p).toUri
-      Option(u.getScheme).getOrElse("") + "://" +
-        Option(u.getAuthority).getOrElse("") + u.getPath
-    }
-    def canonStr(sv: String): String =
-      canon(try new Path(new java.net.URI(sv))
-            catch { case _: Exception => new Path(sv) })
-    val matchedUris = toLogical(
-      scanWithRowMeta(spark, fs, root, manifest, manifest.files),
-      manifest, extraCols = Seq("__dv_fp"))
-      .where(condition)
-      .select(col("__dv_fp")).distinct()
-      .collect().map(r => canonStr(r.getString(0))).toSet
-    if (matchedUris.isEmpty) return v
-    val candidates =
-      manifest.files.filter(f => matchedUris.contains(canon(new Path(root, f.path))))
-    require(candidates.size == matchedUris.size,
-      s"matched file paths did not resolve against the live set: " +
-        s"${matchedUris.size} matched, ${candidates.size} resolved")
+    val candidates = matchBearingFiles(spark, fs, root, manifest, condition)
+    if (candidates.isEmpty) return v
     val src = toLogical(readFileSlice(spark, path, manifest, candidates), manifest)
     src.persist()
     try {
@@ -6032,9 +5838,7 @@ object ManifestLake {
             }
           projected.observe(obsPost, aggs.head, aggs.tail: _*)
         }
-      val newV = v + 1
-      val commitDir = new Path(root,
-        f"$DataDir/v$newV%06d-${java.util.UUID.randomUUID().toString.take(8)}")
+      val commitDir = stagingDir(root, v + 1)
       val w = fromLogical(observed, manifest).write.mode(SaveMode.Overwrite)
       (if (manifest.partCols.nonEmpty) w.partitionBy(manifest.partCols: _*) else w)
         .parquet(commitDir.toString)
@@ -6074,83 +5878,31 @@ object ManifestLake {
               physicalProjection(manifest) :+ col(ChangeTypeCol): _*)
           val cdfP = new Path(commitDir, CdfDir)
           physChanges.write.mode(SaveMode.Overwrite).parquet(cdfP.toString)
-          val rootQ = fs.makeQualified(root).toString
-          Some(fs.makeQualified(cdfP).toString.stripPrefix(rootQ).stripPrefix("/"))
+          Some(relToRoot(fs, root, cdfP))
         }
       // the feed dispatches CDF reads by op — "update" serves like
-      // upsert/delete/merge (see readChangeFeed)
-      publishUpdateOptimistic(spark, fs, root, path, manifest, v,
-        candidates, withStats, schema, txn, relCdf, Seq(commitDir))
+      // upsert/delete/merge (see readChangeFeed). OPTIMISTIC publish: a
+      // lost race retries iff every match-bearing file ENTRY is
+      // unchanged at the head and the recorded shape is identical —
+      // updates never conflict with added files (an UPDATE has no
+      // promise about rows that arrived after its snapshot, unlike a
+      // delete), so disjoint appends compose freely.
+      publishOptimistic(spark, fs, root, path, "update", "update", manifest, v + 1,
+        Seq(commitDir), txn, withStats, candidates.map(_.path).toSet) { (headV, head) =>
+        val headSet = head.files.toSet
+        // effectiveConstraints: see the merge guard — a concurrently
+        // added generated column's validation must not be bypassed
+        if (candidates.forall(headSet.contains) &&
+          !shapeMoved(head, manifest, manifest.partCols, constraints = true)) None
+        else Some(s"update of $path lost its race to a commit that touched its " +
+          "match-bearing files or changed the recorded shape — the " +
+          s"staged rewrite was withdrawn; the table is intact at v$headV. " +
+          "Re-run the update against the new head.")
+      }(_.copy(cdf = relCdf)).merge
     } finally {
       src.unpersist()
       ()
     }
-  }
-
-  /** Optimistic publish for [[update]]: a lost race retries iff every
-    * match-bearing file ENTRY is unchanged at the head and the recorded
-    * shape is identical — updates never conflict with added files (an
-    * UPDATE has no promise about rows that arrived after its snapshot,
-    * unlike a delete), so disjoint appends compose freely.
-    */
-  private def publishUpdateOptimistic(spark: SparkSession, fs: FileSystem,
-                                      root: Path, path: String,
-                                      snapshot: Manifest, v: Long,
-                                      candidates: Seq[LiveFile],
-                                      staged: Seq[LiveFile],
-                                      schema: StructType,
-                                      txn: Option[(String, Long)],
-                                      relCdf: Option[String],
-                                      cleanup: Seq[Path]): Long = {
-    fireRaceHook("update")
-    val candidatePaths = candidates.map(_.path).toSet
-    var attempt = 0
-    var curM = snapshot
-    var curV = v + 1
-    while (true) {
-      try {
-        publish(fs, root, curV,
-          curM.files.filterNot(f => candidatePaths.contains(f.path)) ++ staged,
-          Some(schema), snapshot.partCols,
-          curM.txns ++ txn.toMap, op = Some("update"), cdf = relCdf,
-          constraints = curM.constraints, colMap = curM.colMap,
-          droppedPhys = curM.droppedPhys, bloomCols = curM.bloomCols,
-          statsColsDefault = curM.statsColsDefault,
-          generated = curM.generated, defaults = curM.defaults, identity = curM.identity, clusterCols = curM.clusterCols, extras = curM.extras, fieldMap = curM.fieldMap, fieldDropped = curM.fieldDropped,
-          deltaHint = Some((staged, candidatePaths.toSeq)))
-        return curV
-      } catch {
-        case e: IllegalStateException if attempt >= 5 =>
-          retriesExhausted(fs, "update", path, cleanup, e)
-        case e: IllegalStateException if attempt < 5 =>
-          attempt += 1
-          val headV = currentVersion(spark, path).getOrElse(throw e)
-          val headM = readManifest(fs, root, headV)
-          if (txn.exists { case (app, b) => headM.txns.get(app).exists(_ >= b) }) {
-            cleanup.foreach(fs.delete(_, true))
-            return headV
-          }
-          val headSet = headM.files.toSet
-          // effectiveConstraints: see the merge guard — a concurrently
-          // added generated column's validation must not be bypassed
-          if (!candidates.forall(headSet.contains) ||
-            headM.schema != snapshot.schema ||
-            headM.partCols != snapshot.partCols ||
-            headM.colMap != snapshot.colMap ||
-            headM.fieldMap != snapshot.fieldMap ||
-            effectiveConstraints(headM) != effectiveConstraints(snapshot)) {
-            cleanup.foreach(fs.delete(_, true))
-            throw new IllegalStateException(
-              s"update of $path lost its race to a commit that touched its " +
-                "match-bearing files or changed the recorded shape — the " +
-                s"staged rewrite was withdrawn; the table is intact at v$headV. " +
-                "Re-run the update against the new head.", e)
-          }
-          curM = headM
-          curV = headV + 1
-      }
-    }
-    curV // unreachable
   }
 
   /** Roll the table back to version `v` by RE-PUBLISHING v's live set
@@ -6171,7 +5923,6 @@ object ManifestLake {
     val head = currentVersion(spark, path).get
     val target = readManifest(fs, root, v)
     val headM = readManifest(fs, root, head)
-    val headTxns = headM.txns
     val newV = head + 1
     // the IDENTITY watermark never rolls back: a restore restores the
     // rows, but re-handing-out ids that live in still-readable history
@@ -6200,15 +5951,10 @@ object ManifestLake {
       case (t, _) => t
     }
     // constraints RESTORE with the version (the contract travels with
-    // the data that satisfied it) — unlike txns, which carry from head
-    publish(fs, root, newV, target.files, target.schema, target.partCols, headTxns,
-      op = Some("restore"), constraints = target.constraints,
-      colMap = target.colMap, droppedPhys = target.droppedPhys,
-      bloomCols = target.bloomCols,
-      statsColsDefault = target.statsColsDefault, generated = target.generated,
-      defaults = target.defaults, identity = identityOut,
-      clusterCols = target.clusterCols, extras = target.extras,
-      fieldMap = target.fieldMap, fieldDropped = target.fieldDropped)
+    // the data that satisfied it) — unlike txns, which carry from head,
+    // and required features, which publish inherits from the head
+    publish(fs, root, newV, target.asNext("restore").copy(txns = headM.txns,
+      identity = identityOut, requires = Seq.empty))
     newV
   }
 
@@ -6272,11 +6018,8 @@ object ManifestLake {
           s"cannot add CHECK constraint $name (`$expression`) to $path: " +
             "existing rows violate it — clean the data first (the table is unchanged)")
     }
-    publish(fs, root, v + 1, m.files, m.schema, m.partCols, m.txns,
-      op = Some("constraint"), constraints = m.constraints + (name -> expression),
-      colMap = m.colMap, droppedPhys = m.droppedPhys, bloomCols = m.bloomCols,
-          statsColsDefault = m.statsColsDefault,
-      generated = m.generated, defaults = m.defaults, identity = m.identity, clusterCols = m.clusterCols, extras = m.extras, fieldMap = m.fieldMap, fieldDropped = m.fieldDropped,
+    publish(fs, root, v + 1,
+      m.asNext("constraint").copy(constraints = m.constraints + (name -> expression)),
       deltaHint = Some((Seq.empty, Seq.empty)))
     v + 1
   }
@@ -6290,11 +6033,7 @@ object ManifestLake {
     require(m.constraints.contains(name),
       s"no constraint named $name on $path (declared: " +
         s"${m.constraints.keys.toSeq.sorted.mkString(", ")})")
-    publish(fs, root, v + 1, m.files, m.schema, m.partCols, m.txns,
-      op = Some("constraint"), constraints = m.constraints - name,
-      colMap = m.colMap, droppedPhys = m.droppedPhys, bloomCols = m.bloomCols,
-          statsColsDefault = m.statsColsDefault,
-      generated = m.generated, defaults = m.defaults, identity = m.identity, clusterCols = m.clusterCols, extras = m.extras, fieldMap = m.fieldMap, fieldDropped = m.fieldDropped,
+    publish(fs, root, v + 1, m.asNext("constraint").copy(constraints = m.constraints - name),
       deltaHint = Some((Seq.empty, Seq.empty)))
     v + 1
   }
@@ -6336,13 +6075,7 @@ object ManifestLake {
       case _ => ()
     }
     fireRaceHook("properties")
-    publish(fs, root, v + 1, m.files, m.schema, m.partCols, m.txns,
-      op = Some("properties"), constraints = m.constraints, colMap = m.colMap,
-      droppedPhys = m.droppedPhys, bloomCols = m.bloomCols,
-      statsColsDefault = m.statsColsDefault, generated = m.generated,
-      defaults = m.defaults, identity = m.identity,
-      clusterCols = m.clusterCols, extras = m.extras, fieldMap = m.fieldMap,
-      fieldDropped = m.fieldDropped, dropRequires = Seq(feature),
+    publish(fs, root, v + 1, m.asNext("properties"), dropRequires = Seq(feature),
       forceSnapshot = true)
     v + 1
   }
@@ -6472,12 +6205,9 @@ object ManifestLake {
     if (stats == m.statsColsDefault && bloom == m.bloomCols &&
       cluster == m.clusterCols && ex == m.extras) return v
     fireRaceHook("properties")
-    publish(fs, root, v + 1, m.files, m.schema, m.partCols, m.txns,
-      op = Some("properties"), constraints = m.constraints,
-      colMap = m.colMap, droppedPhys = m.droppedPhys, bloomCols = bloom,
-      statsColsDefault = stats, generated = m.generated, defaults = m.defaults, identity = m.identity, clusterCols = cluster,
-      extras = ex,
-      fieldMap = m.fieldMap, fieldDropped = m.fieldDropped, deltaHint = Some((Seq.empty, Seq.empty)))
+    publish(fs, root, v + 1, m.asNext("properties").copy(bloomCols = bloom,
+      statsColsDefault = stats, clusterCols = cluster, extras = ex),
+      deltaHint = Some((Seq.empty, Seq.empty)))
     v + 1
   }
 
@@ -6518,13 +6248,7 @@ object ManifestLake {
       put("col:" + actual, value)
     }
     if (ex == m.extras) return v
-    publish(fs, root, v + 1, m.files, m.schema, m.partCols, m.txns,
-      op = Some("properties"), constraints = m.constraints,
-      colMap = m.colMap, droppedPhys = m.droppedPhys, bloomCols = m.bloomCols,
-      statsColsDefault = m.statsColsDefault, generated = m.generated,
-      defaults = m.defaults, identity = m.identity,
-      clusterCols = m.clusterCols, extras = ex,
-      fieldMap = m.fieldMap, fieldDropped = m.fieldDropped,
+    publish(fs, root, v + 1, m.asNext("properties").copy(extras = ex),
       deltaHint = Some((Seq.empty, Seq.empty)))
     v + 1
   }
@@ -6587,12 +6311,7 @@ object ManifestLake {
         m.defaults.filterNot(_._1.equalsIgnoreCase(f.name))
     }
     if (newDefaults == m.defaults) return v
-    publish(fs, root, v + 1, m.files, m.schema, m.partCols, m.txns,
-      op = Some("properties"), constraints = m.constraints,
-      colMap = m.colMap, droppedPhys = m.droppedPhys, bloomCols = m.bloomCols,
-      statsColsDefault = m.statsColsDefault, generated = m.generated,
-      defaults = newDefaults, identity = m.identity, clusterCols = m.clusterCols, extras = m.extras,
-      fieldMap = m.fieldMap, fieldDropped = m.fieldDropped,
+    publish(fs, root, v + 1, m.asNext("properties").copy(defaults = newDefaults),
       deltaHint = Some((Seq.empty, Seq.empty)))
     v + 1
   }
@@ -6660,14 +6379,8 @@ object ManifestLake {
     if ((gone.isEmpty && bloomGone.isEmpty) || dryRun) return report
     val repaired = bloomGone.map(_.copy(bloom = None))
     val bloomGonePaths = bloomGone.map(_.path).toSet
-    publish(fs, root, v + 1,
-      m.files.filterNot(f => gone.contains(f) || bloomGonePaths(f.path)) ++
-        repaired, m.schema,
-      m.partCols, m.txns, op = Some("fsck"), constraints = m.constraints,
-      colMap = m.colMap, droppedPhys = m.droppedPhys, bloomCols = m.bloomCols,
-      statsColsDefault = m.statsColsDefault, generated = m.generated,
-      defaults = m.defaults, identity = m.identity, clusterCols = m.clusterCols, extras = m.extras,
-      fieldMap = m.fieldMap, fieldDropped = m.fieldDropped,
+    publish(fs, root, v + 1, m.asNext("fsck").copy(files =
+      m.files.filterNot(f => gone.contains(f) || bloomGonePaths(f.path)) ++ repaired),
       deltaHint = Some((repaired, gone.map(_.path))))
     report
   }
@@ -6745,15 +6458,9 @@ object ManifestLake {
       case Some(hi) if hi >= start => start + ((hi - start) / step + 1L) * step
       case _ => start
     }
-    publish(fs, root, vSeed + 1, mSeed.files, mSeed.schema, mSeed.partCols,
-      mSeed.txns, op = Some("properties"), constraints = mSeed.constraints,
-      colMap = mSeed.colMap, droppedPhys = mSeed.droppedPhys,
-      bloomCols = mSeed.bloomCols,
+    publish(fs, root, vSeed + 1, mSeed.asNext("properties").copy(
       statsColsDefault = (mSeed.statsColsDefault :+ phys).distinct,
-      generated = mSeed.generated, defaults = mSeed.defaults,
-      identity = Some((f.name, start, step, wm, byDefault)),
-      clusterCols = mSeed.clusterCols, extras = mSeed.extras,
-      fieldMap = mSeed.fieldMap, fieldDropped = mSeed.fieldDropped,
+      identity = Some((f.name, start, step, wm, byDefault))),
       deltaHint = Some((Seq.empty, Seq.empty)))
     vSeed + 1
   }
@@ -6866,12 +6573,8 @@ object ManifestLake {
     def metadataOnly(): Long =
       if (newDefault == m.statsColsDefault) v
       else {
-        publish(fs, root, v + 1, m.files, m.schema, m.partCols, m.txns,
-          op = Some("analyze"), constraints = m.constraints, colMap = m.colMap,
-          droppedPhys = m.droppedPhys, bloomCols = m.bloomCols,
-          statsColsDefault = newDefault, generated = m.generated,
-          defaults = m.defaults, identity = m.identity, clusterCols = m.clusterCols, extras = m.extras,
-          fieldMap = m.fieldMap, fieldDropped = m.fieldDropped, deltaHint = Some((Seq.empty, Seq.empty)))
+        publish(fs, root, v + 1, m.asNext("analyze").copy(statsColsDefault = newDefault),
+          deltaHint = Some((Seq.empty, Seq.empty)))
         v + 1
       }
     if (candidates.isEmpty) return metadataOnly()
@@ -6887,7 +6590,6 @@ object ManifestLake {
       .flatMap(_.toIntOption).filter(_ > 0).getOrElse(16384)
     var curM = m
     var curV = v
-    fireRaceHook("analyze")
     candidates.grouped(chunkSize).foreach { chunk =>
       // explicit PHYSICAL schema: a column added after a file was
       // written reads as null there (its null count = the file's row
@@ -6914,50 +6616,26 @@ object ManifestLake {
           nullCounts = f.nullCounts ++ st.nullCounts,
           valueSets = f.valueSets ++ st.sets)))
       if (updated.nonEmpty) {
-        val updatedByPath = updated.map(f => f.path -> f).toMap
         // OPTIMISTIC publish per chunk: the backfill scan is long, so
         // a racing commit is realistic on a busy table. A retry is
         // sound iff every entry THIS chunk analyzed is still at the
         // head byte-identical (a rewrite/re-mask/re-stats under the
         // same path means the file we measured is not the file that
         // lives there — stale stats must not publish); the rest of the
-        // live set and every header fact rebase onto the head.
-        var attempt = 0
-        var published = false
-        while (!published) {
-          try {
-            publish(fs, root, curV + 1,
-              curM.files.map(f => updatedByPath.getOrElse(f.path, f)),
-              curM.schema, curM.partCols, curM.txns, op = Some("analyze"),
-              constraints = curM.constraints, colMap = curM.colMap,
-              droppedPhys = curM.droppedPhys, bloomCols = curM.bloomCols,
-              statsColsDefault = (curM.statsColsDefault ++ phys).distinct,
-              generated = curM.generated, defaults = curM.defaults, identity = curM.identity, clusterCols = curM.clusterCols, extras = curM.extras,
-              fieldMap = curM.fieldMap, fieldDropped = curM.fieldDropped,
-              deltaHint = Some((updated, updated.map(_.path))))
-            curV += 1
-            curM = readManifest(fs, root, curV)
-            published = true
-          } catch {
-            case e: IllegalStateException if attempt >= 5 =>
-              retriesExhausted(fs, "analyze", path, Seq.empty, e)
-            case e: IllegalStateException =>
-              attempt += 1
-              val headV = currentVersion(spark, path).getOrElse(throw e)
-              val headM = readManifest(fs, root, headV)
-              val headByPath = headM.files.map(f => f.path -> f).toMap
-              val conflicted = chunk.filterNot(c =>
-                headByPath.get(c.path).contains(c))
-              if (conflicted.nonEmpty) throw new IllegalStateException(
-                s"ANALYZE of $path lost its race to a commit that rewrote " +
-                  s"or re-masked ${conflicted.length} of the files it " +
-                  s"measured — the computed stats would be stale; the table " +
-                  s"is intact at v$headV (chunks already published stand). " +
-                  "Re-run the ANALYZE.", e)
-              curM = headM
-              curV = headV
-          }
-        }
+        // live set and every header fact rebase onto the head. The race
+        // hook is one-shot, so only the first chunk's publish fires it.
+        curV = publishOptimistic(spark, fs, root, path, "analyze", "analyze", curM,
+          curV + 1, Seq.empty, None, updated, updated.map(_.path).toSet) { (headV, head) =>
+          val headByPath = head.files.map(f => f.path -> f).toMap
+          val conflicted = chunk.filterNot(c => headByPath.get(c.path).contains(c))
+          if (conflicted.isEmpty) None
+          else Some(s"ANALYZE of $path lost its race to a commit that rewrote " +
+            s"or re-masked ${conflicted.length} of the files it " +
+            s"measured — the computed stats would be stale; the table " +
+            s"is intact at v$headV (chunks already published stand). " +
+            "Re-run the ANALYZE.")
+        }(base => base.copy(statsColsDefault = (base.statsColsDefault ++ phys).distinct)).merge
+        curM = readManifest(fs, root, curV)
       }
     }
     if (curV == v) metadataOnly() else curV
@@ -7131,11 +6809,8 @@ object ManifestLake {
         s"cannot rename $oldName: generated column $n (`$e`) derives from it")
     }
     val renamed = cm.map { case (l, p) => (if (l == oldName) newName else l) -> p }
-    publish(fs, root, v + 1, m.files, m.schema, m.partCols, m.txns,
-      op = Some("schema"), constraints = m.constraints,
-      colMap = Some(renamed), droppedPhys = m.droppedPhys,
-      bloomCols = m.bloomCols,
-          statsColsDefault = m.statsColsDefault,
+    publish(fs, root, v + 1, m.asNext("schema").copy(
+      colMap = Some(renamed),
       generated = m.generated.map { case (n, e) =>
         (if (n == oldName) newName else n) -> e
       },
@@ -7144,11 +6819,10 @@ object ManifestLake {
       },
       identity = m.identity.map { case (n, st, sp, wm, bd) =>
         (if (n == oldName) newName else n, st, sp, wm, bd)
-      }, clusterCols = m.clusterCols,
+      },
       extras = m.extras.map { case (k, e) =>
         (if (k == "col:" + oldName) "col:" + newName else k) -> e
-      },
-      fieldMap = m.fieldMap, fieldDropped = m.fieldDropped)
+      }))
     v + 1
   }
 
@@ -7240,13 +6914,7 @@ object ManifestLake {
     val newFieldMap =
       if (identity) cleaned // renamed back: identity again
       else cleaned :+ ((physRoot, newLogical, curPhys.mkString(".")))
-    publish(fs, root, v + 1, m.files, m.schema, m.partCols, m.txns,
-      op = Some("schema"), constraints = m.constraints,
-      colMap = m.colMap, droppedPhys = m.droppedPhys,
-      bloomCols = m.bloomCols,
-      statsColsDefault = m.statsColsDefault, generated = m.generated,
-      defaults = m.defaults, identity = m.identity, clusterCols = m.clusterCols, extras = m.extras,
-      fieldMap = newFieldMap, fieldDropped = m.fieldDropped,
+    publish(fs, root, v + 1, m.asNext("schema").copy(fieldMap = newFieldMap),
       deltaHint = Some((Seq.empty, Seq.empty)))
     v + 1
   }
@@ -7347,12 +7015,8 @@ object ManifestLake {
       (e._2 == oldLogical || e._2.startsWith(oldLogical + ".") ||
         e._3 == curPhysDotted || e._3.startsWith(curPhysDotted + ".")))
     if (validateOnly) return v
-    publish(fs, root, v + 1, m.files, Some(newSchema), m.partCols, m.txns,
-      op = Some("schema"), constraints = m.constraints,
-      colMap = m.colMap, droppedPhys = m.droppedPhys,
-      bloomCols = m.bloomCols, statsColsDefault = m.statsColsDefault,
-      generated = m.generated, defaults = m.defaults, identity = m.identity, clusterCols = m.clusterCols, extras = m.extras, fieldMap = newFieldMap,
-      fieldDropped = m.fieldDropped :+ ((physRoot, curPhysDotted)),
+    publish(fs, root, v + 1, m.asNext("schema").copy(schema = Some(newSchema),
+      fieldMap = newFieldMap, fieldDropped = m.fieldDropped :+ ((physRoot, curPhysDotted))),
       deltaHint = Some((Seq.empty, Seq.empty)))
     v + 1
   }
@@ -7427,12 +7091,8 @@ object ManifestLake {
       else m.fieldMap :+ ((physRoot, segs.mkString("."),
         (parentPhys :+ freshLeaf).mkString(".")))
     if (validateOnly) return v
-    publish(fs, root, v + 1, m.files, Some(newSchema), m.partCols, m.txns,
-      op = Some("schema"), constraints = m.constraints,
-      colMap = m.colMap, droppedPhys = m.droppedPhys,
-      bloomCols = m.bloomCols, statsColsDefault = m.statsColsDefault,
-      generated = m.generated, defaults = m.defaults, identity = m.identity, clusterCols = m.clusterCols, extras = m.extras, fieldMap = newFieldMap,
-      fieldDropped = m.fieldDropped,
+    publish(fs, root, v + 1,
+      m.asNext("schema").copy(schema = Some(newSchema), fieldMap = newFieldMap),
       deltaHint = Some((Seq.empty, Seq.empty)))
     v + 1
   }
@@ -7482,8 +7142,7 @@ object ManifestLake {
     // for future appends. droppedPhys is what keeps a re-added
     // logical name off this physical column forever.
     val newSchema = StructType(m.schema.get.fields.filterNot(_.name == phys))
-    publish(fs, root, v + 1, m.files, Some(newSchema), m.partCols, m.txns,
-      op = Some("schema"), constraints = m.constraints,
+    publish(fs, root, v + 1, m.asNext("schema").copy(schema = Some(newSchema),
       colMap = Some(cm.filterNot(_._1 == name)),
       droppedPhys = m.droppedPhys :+ phys,
       bloomCols = m.bloomCols.filterNot(_ == phys),
@@ -7495,7 +7154,7 @@ object ManifestLake {
       extras = m.extras.filterNot(e =>
         e._1 == "col:" + name || e._1 == "gentz:" + phys),
       fieldMap = m.fieldMap.filterNot(_._1 == phys),
-      fieldDropped = m.fieldDropped.filterNot(_._1 == phys))
+      fieldDropped = m.fieldDropped.filterNot(_._1 == phys)))
     v + 1
   }
 
@@ -7543,13 +7202,8 @@ object ManifestLake {
     val newRootType = rebuildAtPhysPath(physType, physPath, newType)
     val newSchema = StructType(m.schema.get.fields.map(f =>
       if (f.name == physRoot) f.copy(dataType = newRootType) else f))
-    publish(fs, root, v + 1, m.files, Some(newSchema), m.partCols, m.txns,
-      op = Some("schema"), constraints = m.constraints,
-      colMap = m.colMap, droppedPhys = m.droppedPhys,
-      bloomCols = m.bloomCols,
-      statsColsDefault = m.statsColsDefault, generated = m.generated,
-      defaults = m.defaults, identity = m.identity, clusterCols = m.clusterCols, extras = m.extras,
-      fieldMap = m.fieldMap, fieldDropped = m.fieldDropped, deltaHint = Some((Seq.empty, Seq.empty)))
+    publish(fs, root, v + 1, m.asNext("schema").copy(schema = Some(newSchema)),
+      deltaHint = Some((Seq.empty, Seq.empty)))
     v + 1
   }
 
@@ -7647,12 +7301,9 @@ object ManifestLake {
       if (!floatToDouble) m.files
       else m.files.map(f =>
         f.copy(stats = f.stats - phys, valueSets = f.valueSets - phys))
-    publish(fs, root, v + 1, newFiles, Some(newSchema), m.partCols, m.txns,
-      op = Some("schema"), constraints = m.constraints,
-      colMap = m.colMap, droppedPhys = m.droppedPhys,
-      bloomCols =
-        if (renderingStable) m.bloomCols else m.bloomCols.filterNot(_ == phys),
-      generated = m.generated, defaults = m.defaults, identity = m.identity, clusterCols = m.clusterCols, extras = m.extras, fieldMap = m.fieldMap, fieldDropped = m.fieldDropped)
+    publish(fs, root, v + 1, m.asNext("schema").copy(files = newFiles,
+      schema = Some(newSchema),
+      bloomCols = if (renderingStable) m.bloomCols else m.bloomCols.filterNot(_ == phys)))
     v + 1
   }
 
@@ -7735,11 +7386,8 @@ object ManifestLake {
     }
     val newSchema = StructType(m.schema.get.fields :+
       StructField(phys, dataType, nullable = true))
-    publish(fs, root, v + 1, m.files, Some(newSchema), m.partCols, m.txns,
-      op = Some("schema"), constraints = m.constraints,
-      colMap = newColMap, droppedPhys = m.droppedPhys, bloomCols = m.bloomCols,
-          statsColsDefault = m.statsColsDefault,
-      generated = m.generated, defaults = m.defaults, identity = m.identity, clusterCols = m.clusterCols, extras = m.extras, fieldMap = m.fieldMap, fieldDropped = m.fieldDropped)
+    publish(fs, root, v + 1,
+      m.asNext("schema").copy(schema = Some(newSchema), colMap = newColMap))
     v + 1
   }
 
@@ -7854,17 +7502,13 @@ object ManifestLake {
       if (!tzSensitive) m.extras
       else m.extras.filterNot(_._1 == "gentz:" + phys) :+
         ("gentz:" + phys -> spark.sessionState.conf.sessionLocalTimeZone)
+    val adopted = m.asNext("schema").copy(schema = Some(newSchema), colMap = newColMap,
+      generated = m.generated :+ (name -> expression), extras = extrasOut)
     // a table with NO rows adopts metadata-only — files may exist (an
     // empty CREATE stages one zero-row part file) but nothing needs a
     // backfill; parquet footers are the cheap ground truth
     if (m.files.isEmpty || footerRowCount(fs, root, m.files) == 0L) {
-      publish(fs, root, v + 1, m.files, Some(newSchema), m.partCols, m.txns,
-        op = Some("schema"), constraints = m.constraints,
-        colMap = newColMap, droppedPhys = m.droppedPhys,
-        bloomCols = m.bloomCols, statsColsDefault = m.statsColsDefault,
-        generated = m.generated :+ (name -> expression),
-        defaults = m.defaults, identity = m.identity, clusterCols = m.clusterCols, extras = extrasOut,
-        fieldMap = m.fieldMap, fieldDropped = m.fieldDropped)
+      publish(fs, root, v + 1, adopted)
       v + 1
     } else {
       require(backfill,
@@ -7874,8 +7518,7 @@ object ManifestLake {
       val src = toLogical(readFileSlice(spark, path, m, m.files), m)
         .withColumn(name, expr(expression).cast(dataType))
       val newV = v + 1
-      val commitDir = new Path(root,
-        f"$DataDir/v$newV%06d-${java.util.UUID.randomUUID().toString.take(8)}")
+      val commitDir = stagingDir(root, newV)
       val outPhys = newColMap match {
         case None => src
         case Some(ncm) => src.select(physicalProjection(m, Some(ncm)): _*)
@@ -7900,13 +7543,7 @@ object ManifestLake {
           .filter(k => m.schema.get.fieldNames.contains(k))
       val withStats = stageStats(spark, fs, root, commitDir, newSchema,
         statKeys, m.bloomCols, m.partCols, staged)
-      publish(fs, root, newV, withStats, Some(newSchema), m.partCols, m.txns,
-        op = Some("schema"), constraints = m.constraints,
-        colMap = newColMap, droppedPhys = m.droppedPhys,
-        bloomCols = m.bloomCols, statsColsDefault = m.statsColsDefault,
-        generated = m.generated :+ (name -> expression),
-        defaults = m.defaults, identity = m.identity, clusterCols = m.clusterCols, extras = extrasOut,
-        fieldMap = m.fieldMap, fieldDropped = m.fieldDropped)
+      publish(fs, root, newV, adopted.copy(files = withStats))
       newV
     }
   }
@@ -8083,7 +7720,7 @@ object ManifestLake {
         val commitV = if (digits.isEmpty) None else digits.toLongOption
         val suffixed = name.startsWith("v") && name.contains('-')
         val cdfP = new Path(d.getPath, CdfDir)
-        val relCdf = fs.makeQualified(cdfP).toString.stripPrefix(rootQ).stripPrefix("/")
+        val relCdf = relToRoot(fs, root, cdfP)
         val inFlight = !cdfEver.contains(relCdf) && d.getModificationTime >= cutoff &&
           (suffixed || commitV.exists(_ > head))
         if (!keptCdfPrefixes.contains(relCdf) && !inFlight && fs.exists(cdfP)) {

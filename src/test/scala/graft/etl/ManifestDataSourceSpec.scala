@@ -315,7 +315,7 @@ class ManifestDataSourceSpec extends AnyFunSuite {
     val (fs, root) = ManifestLake.fsFor(spark, dir)
     val m = ManifestLake.readManifest(fs, root, 1L)
     // strip the header: republish v2 as a headerless manifest
-    ManifestLake.publish(fs, root, 2L, m.files, None, Seq.empty)
+    ManifestLake.publish(fs, root, 2L, ManifestLake.Manifest(None, Seq.empty, m.files))
     val e = intercept[IllegalArgumentException] { fmt.load(dir) }
     assert(e.getMessage.contains("schema header"))
     // …but time travel to the headed version still works
@@ -333,7 +333,7 @@ class ManifestDataSourceSpec extends AnyFunSuite {
     // simulate the pre-header writer: republish headerless over the same files
     val gz = new org.apache.hadoop.fs.Path(root, "_manifest/v000001.list.gz")
     fs.delete(gz, false)
-    ManifestLake.publish(fs, root, 1L, m.files, None, Seq.empty)
+    ManifestLake.publish(fs, root, 1L, ManifestLake.Manifest(None, Seq.empty, m.files))
     assert(ManifestLake.readManifest(fs, root, 1L).schema.isEmpty)
     // an unadorned format append has no header to inherit partitioning
     // from — it must derive [chrom] from the files' hive layout, NOT

@@ -100,7 +100,8 @@ class ManifestLakeSpec extends AnyFunSuite {
       out.result()
     }
     val m1 = ManifestLake.readManifest(fs, root, 1L)
-    ManifestLake.publish(fs, root, 2L, m1.files ++ files, m1.schema, m1.partCols, m1.txns)
+    ManifestLake.publish(fs, root, 2L,
+      ManifestLake.Manifest(m1.schema, m1.partCols, m1.files ++ files, m1.txns))
     assert(ManifestLake.read(spark, dir).count() === 40)
   }
 
@@ -272,9 +273,8 @@ class ManifestLakeSpec extends AnyFunSuite {
     val (fs, root) = ManifestLake.fsFor(spark, dir)
     val before = ManifestLake.read(spark, dir).collect().toSeq
     intercept[IllegalStateException] {
-      ManifestLake.publish(fs, root, 2L,
-        Seq(ManifestLake.LiveFile(0L, "data/v000099/chrom=chr1/ghost.parquet")),
-        Some(a.schema), Seq("chrom"))
+      ManifestLake.publish(fs, root, 2L, ManifestLake.Manifest(Some(a.schema), Seq("chrom"),
+        Seq(ManifestLake.LiveFile(0L, "data/v000099/chrom=chr1/ghost.parquet"))))
     }
     // winner intact at v2, v1 still time-travels
     assert(ManifestLake.read(spark, dir).collect().toSeq === before)
@@ -1053,7 +1053,8 @@ class ManifestLakeSpec extends AnyFunSuite {
     // an untagged legacy manifest cannot prove it was an append
     val (fs, root) = ManifestLake.fsFor(spark, dir)
     val m5 = ManifestLake.readManifest(fs, root, 5L)
-    ManifestLake.publish(fs, root, 6L, m5.files, m5.schema, m5.partCols, m5.txns)
+    ManifestLake.publish(fs, root, 6L,
+      ManifestLake.Manifest(m5.schema, m5.partCols, m5.files, m5.txns))
     val eLegacy = intercept[IllegalArgumentException] {
       ManifestLake.readChanges(spark, dir, 4L, 6L)
     }
@@ -1256,7 +1257,7 @@ class ManifestLakeSpec extends AnyFunSuite {
     ManifestLake.write(spark, df, dir2, Seq.empty)
     val (fs2, root2) = ManifestLake.fsFor(spark, dir2)
     val m = ManifestLake.readManifest(fs2, root2, 1L)
-    ManifestLake.publish(fs2, root2, 2L, m.files, None, Seq.empty)
+    ManifestLake.publish(fs2, root2, 2L, ManifestLake.Manifest(None, Seq.empty, m.files))
     val e = intercept[IllegalArgumentException] {
       ManifestLake.delete(spark, dir2, col("id") === 1L)
     }
