@@ -3,7 +3,7 @@ package graft.etl
 import java.io.IOException
 
 import org.apache.hadoop.fs.{FileContext, FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
 
@@ -876,7 +876,7 @@ object ManifestLake {
     * the cold-read wall. Unknown keys and unexpected shapes are skipped
     * — the same forward-compatibility the old collect-based reader had.
     */
-  private def parseStats(json: String): (Map[String, (String, String)], Option[Long],
+  private[etl] def parseStats(json: String): (Map[String, (String, String)], Option[Long],
       Map[String, Long], Map[String, Seq[String]], Option[String], Option[Long],
       Option[String]) = {
     import com.fasterxml.jackson.core.JsonToken._
@@ -1000,7 +1000,7 @@ object ManifestLake {
     * AST-build + mapper-render path WAS the snapshot-write wall
     * (measured 54s of 60s). Same compact wire format, keys sorted.
     */
-  private def renderStats(stats: Map[String, (String, String)],
+  private[etl] def renderStats(stats: Map[String, (String, String)],
                           rows: Option[Long],
                           nullCounts: Map[String, Long],
                           valueSets: Map[String, Seq[String]],
@@ -1553,31 +1553,62 @@ object ManifestLake {
   private def relToRoot(fs: FileSystem, root: Path, p: Path): String =
     fs.makeQualified(p).toString.stripPrefix(fs.makeQualified(root).toString).stripPrefix("/")
 
-  private def withFileStats(f: LiveFile, s: Option[FileStats],
-                            bloomRef: Option[String] = None): LiveFile =
-    s match {
-      case Some(st) => f.copy(stats = st.bounds, rows = Some(st.rows),
-        nullCounts = st.nullCounts, valueSets = st.sets,
-        bloom = bloomRef.filter(_ => st.blooms.nonEmpty))
-      case None => f
-    }
-
-  /** The stats+bloom staging step every committing path shares: one
-    * aggregation pass over the staged commit, the bloom sidecar written
-    * from its results, every staged entry annotated.
+  /** A staged data file with what its footer says: its row count and
+    * the [[FileStats]] its writing task recorded, if any.
     */
-  private def stageStats(spark: SparkSession, fs: FileSystem, root: Path,
-                         commitDir: Path, schema: StructType,
-                         statsCols: Seq[String], bloomCols: Seq[String],
-                         partitionCols: Seq[String],
-                         staged: Seq[LiveFile]): Seq[LiveFile] =
-    if ((statsCols.isEmpty && bloomCols.isEmpty) || staged.isEmpty) staged
-    else {
-      val byRel = collectStats(spark, fs, root, commitDir, schema,
-        statsCols, partitionCols, bloomCols)
-      val sidecar = writeBloomSidecar(fs, root, commitDir, byRel)
-      staged.map(f => withFileStats(f, byRel.get(f.path), sidecar))
-    }
+  private final case class StagedFile(file: LiveFile, rows: Long, stats: Option[FileStats])
+
+  /** `w` set to stage parquet files whose footers carry the
+    * [[FileStats]] of `statsCols` and `bloomCols` (those of `schema`
+    * that are not partition columns), computed by the tasks that write
+    * them — no stats query runs.
+    */
+  private def statsWriter(w: DataFrameWriter[Row], schema: StructType,
+                          statsCols: Seq[String], bloomCols: Seq[String],
+                          partitionCols: Seq[String]): DataFrameWriter[Row] = {
+    val cols = FileStats.requested(schema, statsCols, bloomCols, partitionCols)
+    w.format(classOf[StatsParquetFileFormat].getName)
+      .option(StatsParquetFileFormat.StatsCols, StatsParquetFileFormat.encodeCols(cols))
+      .option(StatsParquetFileFormat.BloomCols,
+        StatsParquetFileFormat.encodeCols(bloomCols.distinct.filter(cols.contains)))
+  }
+
+  /** The staged data files under `dir`, each footer read once for its
+    * row count and its stats.
+    */
+  private def readStaged(fs: FileSystem, root: Path, dir: Path): Seq[StagedFile] = {
+    val files = stagedFiles(fs, root, dir)
+    files.zip(readFooters(fs, root, files) { r =>
+      (r.getRecordCount, FileStats.fromFooter(r.getFooter.getFileMetaData.getKeyValueMetaData))
+    }).map { case (f, (n, st)) => StagedFile(f, n, st) }
+  }
+
+  /** The staged entries annotated with their stats, the commit's bloom
+    * sidecar staged from them.
+    */
+  private def withStagedStats(fs: FileSystem, root: Path, commitDir: Path,
+                              staged: Seq[StagedFile]): Seq[LiveFile] = {
+    val sidecar = writeBloomSidecar(fs, root, commitDir,
+      staged.flatMap(s => s.stats.map(s.file.path -> _)).toMap)
+    staged.map(s => s.stats.fold(s.file)(st => s.file.copy(stats = st.bounds,
+      rows = Some(st.rows), nullCounts = st.nullCounts, valueSets = st.sets,
+      bloom = sidecar.filter(_ => st.blooms.nonEmpty))))
+  }
+
+  /** The staging step every committing path shares: `w` writes the
+    * commit's files under `commitDir` (see [[statsWriter]]), which are
+    * listed and each footer read once. Returns the entries annotated
+    * with their stats (the bloom sidecar staged) and the staged row
+    * count — the write-verification count, at metadata cost.
+    */
+  private def stageCommit(fs: FileSystem, root: Path, commitDir: Path,
+                          w: DataFrameWriter[Row], schema: StructType,
+                          statsCols: Seq[String], bloomCols: Seq[String],
+                          partitionCols: Seq[String]): (Seq[LiveFile], Long) = {
+    statsWriter(w, schema, statsCols, bloomCols, partitionCols).save(commitDir.toString)
+    val staged = readStaged(fs, root, commitDir)
+    (withStagedStats(fs, root, commitDir, staged), staged.map(_.rows).sum)
+  }
 
   /** All parquet files under a per-commit data dir, root-relative, with
     * sizes straight off the listing (no extra RPCs). Files under
@@ -1599,30 +1630,38 @@ object ManifestLake {
     out.result()
   }
 
-  /** Sum of parquet FOOTER record counts over freshly staged files —
-    * the write-verification row count at metadata cost: each footer is
-    * a few KB read driver-side (bounded concurrency), no Spark job, no
-    * re-scan of the staged data. The footer count is what the parquet
-    * WRITER committed per row group, so comparing it against the
-    * observed input count still catches a short write (lost task
-    * output, a file dropped between write and listing): a missing or
-    * truncated file simply contributes fewer rows.
+  /** Sum of parquet FOOTER record counts over `files` — a row count
+    * at metadata cost, no Spark job, no re-scan of the data (the input
+    * side of a rewrite whose files predate recorded counts; the staged
+    * side comes from [[readStaged]]). The footer count is what the
+    * parquet WRITER committed per row group, so comparing a staged
+    * count against the observed input count still catches a short
+    * write (lost task output, a file dropped between write and
+    * listing): a missing or truncated file simply contributes fewer
+    * rows.
     */
-  private[etl] def footerRowCount(fs: FileSystem, root: Path, files: Seq[LiveFile]): Long = {
-    if (files.isEmpty) return 0L
+  private[etl] def footerRowCount(fs: FileSystem, root: Path, files: Seq[LiveFile]): Long =
+    readFooters(fs, root, files)(_.getRecordCount).sum
+
+  /** `read` over each file's parquet footer, driver-side with bounded
+    * concurrency — a few KB per file, no Spark job.
+    */
+  private def readFooters[A](fs: FileSystem, root: Path, files: Seq[LiveFile])(
+      read: org.apache.parquet.hadoop.ParquetFileReader => A): Seq[A] = {
+    if (files.isEmpty) return Seq.empty
     val conf = fs.getConf
     val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(16, files.size))
     try {
       files.map { f =>
-        pool.submit(new java.util.concurrent.Callable[Long] {
-          def call(): Long = {
+        pool.submit(new java.util.concurrent.Callable[A] {
+          def call(): A = {
             val in = org.apache.parquet.hadoop.util.HadoopInputFile
               .fromPath(fs.makeQualified(new Path(root, f.path)), conf)
             val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-            try r.getRecordCount finally r.close()
+            try read(r) finally r.close()
           }
         })
-      }.map(_.get()).sum
+      }.map(_.get())
     } finally {
       pool.shutdown()
       ()
@@ -2268,91 +2307,34 @@ object ManifestLake {
     v
   }
 
-  /** Collected per-file stats for one staged file: [min, max] bounds,
-    * the file's row count, and per-column null counts.
+  /** Per-file [min, max] + row count + null counts + value sets +
+    * blooms of `statsCols` as ONE aggregation job over `scan`, keyed by
+    * root-relative path. Commits do not run it: their write tasks
+    * record the same [[FileStats]] in each staged file's footer (see
+    * [[StatsParquetFileFormat]]). It is the ANALYZE backfill's path,
+    * over an explicit list of live files read under the physical
+    * schema, and the oracle the in-write stats are tested against.
+    * Columns that are all-null in a file get no bounds entry (unknown =
+    * never skip) but DO get a null count, which is what lets `IS NOT
+    * NULL` prune them. Null counts are collected for every requested
+    * non-partition column regardless of type — a null count has no
+    * ordering or rendering hazard. Eligibility, caps and zero
+    * normalization are [[FileStats]]'.
     */
-  private final case class FileStats(bounds: Map[String, (String, String)],
-                                     rows: Long,
-                                     nullCounts: Map[String, Long],
-                                     sets: Map[String, Seq[String]],
-                                     blooms: Map[String, Array[Byte]] = Map.empty)
-
-  /** Value-set stats bounds: a file's DISTINCT values for a tracked
-    * column are recorded only when there are at most [[SetCap]] of them
-    * and every one renders at most [[MaxSetValueLen]] characters — the
-    * categorical shape (status codes, source tags, enum-ish columns)
-    * where min/max bounds are wide but membership is tiny. Both caps
-    * are soundness caps, not tuning: an overflowing or long-valued
-    * column records NO set (unknown = never skip), and the bounded
-    * aggregation ([[graft.functions.BoundedSortedSetAgg]]) keeps
-    * executor state at `SetCap + 1` entries even while a high-cardinality
-    * column is being measured.
-    */
-  private val SetCap = 24
-  private val MaxSetValueLen = 64
-
-  /** Per-file [min, max] + row count + null counts of `statsCols` over
-    * a freshly staged commit dir, keyed by root-relative path — one
-    * aggregation job over the BATCH (not the table), which is the
-    * write-time price of file-level data skipping at read time. Only
-    * atomic orderable types carry BOUNDS (binary/nested are excluded —
-    * their string casts don't round-trip; timestamps are zone-hazardous,
-    * see below); columns that are all-null in a file get no bounds
-    * entry (unknown = never skip) but DO get a null count, which is
-    * what lets `IS NOT NULL` prune them. Null counts are collected for
-    * every requested non-partition column regardless of type — a null
-    * count has no ordering or rendering hazard.
-    */
-  private def collectStats(spark: SparkSession, fs: FileSystem, root: Path,
-                           commitDir: Path, schema: StructType,
-                           statsCols: Seq[String],
-                           partitionCols: Seq[String],
-                           bloomCols: Seq[String] = Seq.empty): Map[String, FileStats] =
-    collectStatsOver(spark, spark.read.parquet(commitDir.toString), schema,
-      statsCols, partitionCols, bloomCols)
-
-  /** [[collectStats]] over an arbitrary scan (a staged commit dir, or —
-    * for the ANALYZE backfill — an explicit list of live files read
-    * under the physical schema).
-    */
-  private def collectStatsOver(spark: SparkSession,
-                           scan: => org.apache.spark.sql.DataFrame,
-                           schema: StructType,
-                           statsCols: Seq[String],
-                           partitionCols: Seq[String],
-                           bloomCols: Seq[String] = Seq.empty,
-                           tableRoot: Option[String] = None): Map[String, FileStats] = {
-    import org.apache.spark.sql.types._
-    // timestamps are excluded: their string form renders in the
-    // WRITER's session timezone and would re-parse in the READER's —
-    // a zone mismatch would shift the bounds and wrongly skip files,
-    // violating the stats-never-change-results contract. (Dates are
-    // zone-free and stay eligible.)
-    val requested = (statsCols ++ bloomCols).distinct
-      .filter(c => schema.fieldNames.contains(c) && !partitionCols.contains(c))
-    requested.foreach(c => require(!c.startsWith("#"),
-      s"stats column name must not start with '#' (reserved in the stats blob): $c"))
-    val eligible = requested.filter(c => schema(c).dataType match {
-      case _: NumericType | StringType | DateType | BooleanType => true
-      case _ => false
-    })
-    // value sets exclude float/double: their string forms carry ±0.0 /
-    // shortest-repr hazards that equality-on-render cannot survive;
-    // bounds (with read-side zero normalization) cover them instead
-    val setEligible = eligible.filter(c => schema(c).dataType match {
-      case FloatType | DoubleType => false
-      case _ => true
-    })
+  private[etl] def collectStatsOver(spark: SparkSession,
+                                    scan: => DataFrame,
+                                    schema: StructType,
+                                    statsCols: Seq[String],
+                                    partitionCols: Seq[String],
+                                    bloomCols: Seq[String],
+                                    tableRoot: String): Map[String, FileStats] = {
+    import FileStats.{SetCap, MaxSetValueLen}
+    val requested = FileStats.requested(schema, statsCols, bloomCols, partitionCols)
     if (requested.isEmpty) return Map.empty
-    // blooms share value sets' float/double exclusion: equality-on-
-    // string-render cannot survive ±0.0 / shortest-repr drift
+    val eligible = requested.filter(c => FileStats.boundEligible(schema(c).dataType))
+    val setEligible = requested.filter(c => FileStats.setEligible(schema(c).dataType))
     val bloomEligible = bloomCols.distinct
-      .filter(c => requested.contains(c))
-      .filter(c => schema(c).dataType match {
-        case FloatType | DoubleType => false
-        case _: NumericType | StringType | DateType | BooleanType => true
-        case _ => false
-      })
+      .filter(c => requested.contains(c) && FileStats.setEligible(schema(c).dataType))
     val bloomAgg = udaf(graft.functions.BloomAgg())
     val setAgg = udaf(graft.functions.BoundedSortedSetAgg(SetCap + 1))
     val aggs = eligible.flatMap(c => Seq(
@@ -2368,74 +2350,47 @@ object ManifestLake {
       .groupBy(input_file_name().as("__f"))
       .agg(aggs.head, aggs.tail: _*)
       .collect()
-    val marker = "/" + DataDir + "/v"
     // input_file_name() is URL-encoded while manifest paths come from
     // FileStatus unencoded — decode first or a table path / partition
     // value with a space (or hive-escaped char) mismatches every key
     // and silently drops all stats
     def decoded(abs: String): String =
       try new java.net.URI(abs).getPath catch { case _: Exception => abs }
-    // manifest-RELATIVE key: with the table root in hand strip it
-    // directly — this covers ADOPTED files, which live outside the
-    // data/v<N> layout the marker below locates; the marker remains for
-    // callers keying a staged commit dir without the root
-    val rootPrefix: Option[String] = tableRoot.map(r =>
-      (try new java.net.URI(r).getPath catch { case _: Exception => r })
-        .stripSuffix("/") + "/")
-    def relKey(abs: String): Option[String] = rootPrefix match {
-      case Some(pre) if abs.startsWith(pre) => Some(abs.stripPrefix(pre))
-      // OUTSIDE the root = a clone-referenced absolute entry: key by the
-      // decoded absolute path — the ANALYZE caller matches it against
-      // its entries scheme-insensitively (the manifest stores the
-      // qualified URI, the reader renders the plain path)
-      case Some(_) => Some(abs)
-      case None =>
-        val i = abs.lastIndexOf(marker)
-        if (i < 0) None else Some(abs.substring(i + 1))
-    }
-    // ±0.0 collapses to "0.0" in recorded float/double bounds: SQL
-    // comparison treats -0.0 == 0.0 while the read path's interpreted
-    // ordering is total (-0.0 < 0.0), so a recorded "-0.0" bound could
-    // wrongly prove `col = 0.0` impossible. Delta normalizes collected
-    // stats the same way; the reader also normalizes, which covers
-    // manifests written before this fix.
-    val floaty = eligible.filter(c => schema(c).dataType match {
-      case FloatType | DoubleType => true
-      case _ => false
-    }).toSet
-    def normZero(c: String, s: String): String =
-      if (floaty.contains(c) && s == "-0.0") "0.0" else s
-    rows.flatMap { r =>
-      val abs = decoded(r.getString(0))
-      relKey(abs) match {
-        case None => None
-        case Some(key) =>
-        {
-        val bounds = eligible.flatMap { c =>
-          val lo = r.getAs[String](s"__lo_$c")
-          val hi = r.getAs[String](s"__hi_$c")
-          if (lo == null || hi == null) None
-          else Some(c -> ((normZero(c, lo), normZero(c, hi))))
-        }.toMap
-        val nRows = r.getAs[Long]("__rows")
-        val nulls = requested.map(c => c -> (nRows - r.getAs[Long](s"__nn_$c"))).toMap
-        val sets = setEligible.flatMap { c =>
-          val arr = r.getAs[scala.collection.Seq[String]](s"__set_$c")
-          val lenMax = r.getAs[Any](s"__len_$c")
-          val short = lenMax == null ||
-            lenMax.asInstanceOf[Number].intValue() <= MaxSetValueLen
-          // an all-null file records the EMPTY set — complete and
-          // skip-bearing (equality never matches a value that is not
-          // there); an overflowing or long-valued column records none
-          if (arr != null && arr.size <= SetCap && short) Some(c -> arr.toSeq)
-          else None
-        }.toMap
-        val blooms = bloomEligible.flatMap { c =>
-          Option(r.getAs[Array[Byte]](s"__bloom_$c")).map(c -> _)
-        }.toMap
-        Some(key -> FileStats(bounds, nRows, nulls, sets, blooms))
-        }
-      }
+    // manifest-RELATIVE key: strip the table root directly — this
+    // covers ADOPTED files, which live outside the data/v<N> layout.
+    // OUTSIDE the root = a clone-referenced absolute entry: key by the
+    // decoded absolute path — the ANALYZE caller matches it against its
+    // entries scheme-insensitively (the manifest stores the qualified
+    // URI, the reader renders the plain path)
+    val rootPrefix = decoded(tableRoot).stripSuffix("/") + "/"
+    def relKey(abs: String): String =
+      if (abs.startsWith(rootPrefix)) abs.stripPrefix(rootPrefix) else abs
+    def normZero(c: String, s: String): String = FileStats.normZero(schema(c).dataType, s)
+    rows.map { r =>
+      val key = relKey(decoded(r.getString(0)))
+      val bounds = eligible.flatMap { c =>
+        val lo = r.getAs[String](s"__lo_$c")
+        val hi = r.getAs[String](s"__hi_$c")
+        if (lo == null || hi == null) None
+        else Some(c -> ((normZero(c, lo), normZero(c, hi))))
+      }.toMap
+      val nRows = r.getAs[Long]("__rows")
+      val nulls = requested.map(c => c -> (nRows - r.getAs[Long](s"__nn_$c"))).toMap
+      val sets = setEligible.flatMap { c =>
+        val arr = r.getAs[scala.collection.Seq[String]](s"__set_$c")
+        val lenMax = r.getAs[Any](s"__len_$c")
+        val short = lenMax == null ||
+          lenMax.asInstanceOf[Number].intValue() <= MaxSetValueLen
+        // an all-null file records the EMPTY set — complete and
+        // skip-bearing (equality never matches a value that is not
+        // there); an overflowing or long-valued column records none
+        if (arr != null && arr.size <= SetCap && short) Some(c -> arr.toSeq)
+        else None
+      }.toMap
+      val blooms = bloomEligible.flatMap { c =>
+        Option(r.getAs[Array[Byte]](s"__bloom_$c")).map(c -> _)
+      }.toMap
+      key -> FileStats(bounds, nRows, nulls, sets, blooms)
     }.toMap
   }
 
@@ -2743,27 +2698,25 @@ object ManifestLake {
     }
     val w = dfP.observe(obs, aggs.head, aggs.tail: _*)
       .write.mode(SaveMode.Overwrite)
-    (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-      .parquet(commitDir.toString)
     // verify the staged copy while it is still invisible — same
     // verify-before-commit stance as Lake.compact, minus any window:
     // a failure here aborts with the table untouched at v-1. The staged
-    // side is summed from parquet FOOTERS (metadata-only, no job), so a
-    // stats-less append costs exactly ONE Spark job end to end.
-    val staged = stagedFiles(fs, root, commitDir)
+    // side is summed from parquet FOOTERS (metadata-only, no job), and
+    // the stats ride the same footers, so an append costs exactly ONE
+    // Spark job end to end.
+    val (withStats, rowsOut) = stageCommit(fs, root, commitDir,
+      if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w,
+      tableSchema, statsColsOn(base0), bloomColsOn(base0), partitionCols)
     requireNoViolations(fs, commitDir, obs, consSeq, path, "batch", v - 1)
     val rowsIn = obsLong(obs, "rows")
     // empty input stages no parquet files — nothing to re-read (an empty
     // replace is a defined state: the manifest lists nothing)
-    val rowsOut = footerRowCount(fs, root, staged)
-    if (rowsOut != rowsIn || (rowsIn > 0 && staged.isEmpty)) {
+    if (rowsOut != rowsIn || (rowsIn > 0 && withStats.isEmpty)) {
       fs.delete(commitDir, true)
       throw new IllegalStateException(
         s"manifest write verification failed for $path v$v: $rowsIn rows in, " +
           s"$rowsOut staged — table still at v${v - 1}")
     }
-    val withStats = stageStats(spark, fs, root, commitDir, tableSchema,
-      statsColsOn(base0), bloomColsOn(base0), partitionCols, staged)
     // the watermark advances to one past the largest value this write
     // assigned — read off the staged files' OWN stats, zero extra jobs
     val newIdentity = identityPrev.map { case (n, st, sp, wm, bd) =>
@@ -2784,7 +2737,7 @@ object ManifestLake {
         fs.delete(commitDir, true)
         throw new IllegalStateException(
           s"IDENTITY watermark for $n on $path cannot advance: the batch " +
-            s"staged $rowsIn row(s) but the stats pass recorded no max for " +
+            s"staged $rowsIn row(s) but the staged files' stats record no max for " +
             s"the identity column — publishing would reuse ids; nothing " +
             s"published, table still at v${v - 1}")
       }
@@ -3592,8 +3545,8 @@ object ManifestLake {
         StructType(logical.fields ++ Seq(StructField("_row_file", StringType),
           StructField("_row_index", LongType))))
     // manifest-relative path from the reader's file_path: decode, then
-    // take everything from the LAST '/data/v' marker — the same
-    // resolution collectStats applies, in codegen'd string ops (no UDF)
+    // take everything from the LAST '/data/v' marker, in codegen'd
+    // string ops (no UDF)
     toLogical(scanWithRowMeta(spark, fs, root, m, m.files), m,
       extraCols = Seq("__dv_fp", "__dv_ri"))
       .withColumn("_row_file",
@@ -3852,7 +3805,13 @@ object ManifestLake {
     // files by full relative path; an abandoned stage vacuums as an
     // in-flight orphan after the grace window)
     val commitDir = stagingDir(root, newV)
-    val report = plans.map { case (part, fls, want) =>
+    // stats, once collected, are MAINTAINED: rewritten files re-collect
+    // [min,max] for whatever columns the live manifest already tracks,
+    // so compaction never silently degrades file skipping
+    val statKeys =
+      (live.flatMap(_.stats.keys) ++ live.flatMap(_.nullCounts.keys) ++
+        live.flatMap(_.valueSets.keys)).distinct
+    val rewritten = plans.map { case (part, fls, want) =>
       // deletion-vector-masked inputs compact through the masked-aware
       // slice read (the rewrite MATERIALIZES the masks: rewritten files
       // carry no vectors) — compaction doubles as DV garbage collection
@@ -3879,7 +3838,9 @@ object ManifestLake {
           if (cluster.nonEmpty) shaped.sortWithinPartitions(cluster: _*) else shaped
         }
       val dest = if (part.isEmpty) commitDir else new Path(commitDir, part)
-      sorted.write.mode(SaveMode.Overwrite).parquet(dest.toString)
+      statsWriter(sorted.write.mode(SaveMode.Overwrite),
+        manifest.schema.getOrElse(new StructType()), statKeys, manifest.bloomCols,
+        manifest.partCols).save(dest.toString)
       // row conservation from METADATA on both sides: source rows come
       // from the manifest's recorded counts (or the source footers when
       // a file predates stats), staged rows from the fresh footers — no
@@ -3888,27 +3849,16 @@ object ManifestLake {
         if (fls.forall(_.rows.isDefined)) fls.flatMap(_.rows).sum
         else footerRowCount(fs, root, fls)) -
         fls.flatMap(_.dvRows).sum // masked rows are not content
-      val destStaged = stagedFiles(fs, root, dest)
-      val rowsOut = footerRowCount(fs, root, destStaged)
+      val destStaged = readStaged(fs, root, dest)
+      val rowsOut = destStaged.map(_.rows).sum
       if (rowsOut != rowsIn)
         throw new IllegalStateException(
           s"manifest compact verification failed for $path $part: " +
             s"$rowsIn rows in, $rowsOut staged — table still at v$v")
-      (part, fls.length, destStaged.length)
+      (part, fls.length, destStaged)
     }
-    // stats, once collected, are MAINTAINED: rewritten files re-collect
-    // [min,max] for whatever columns the live manifest already tracks,
-    // so compaction never silently degrades file skipping
-    val staged = stagedFiles(fs, root, commitDir)
-    val statKeys =
-      (live.flatMap(_.stats.keys) ++ live.flatMap(_.nullCounts.keys) ++
-        live.flatMap(_.valueSets.keys)).distinct
-    val withStats = manifest.schema match {
-      case Some(sch) =>
-        stageStats(spark, fs, root, commitDir, sch, statKeys,
-          manifest.bloomCols, manifest.partCols, staged)
-      case _ => staged
-    }
+    val withStats = withStagedStats(fs, root, commitDir, rewritten.flatMap(_._3))
+    val report = rewritten.map { case (part, n, staged) => (part, n, staged.length) }
     // OPTIMISTIC PUBLISH: a compaction is LAYOUT-ONLY, so losing the
     // version race to a concurrent append does not invalidate hours of
     // rewrite I/O — the rewrite stays exactly equivalent as long as
@@ -4169,16 +4119,20 @@ object ManifestLake {
       consSeqU.map { case (n, e) =>
         count(when(not(coalesce(expr(e), lit(true))), lit(1))).as(s"viol_$n")
       }
-    merged.observe(obsU, aggsU.head, aggsU.tail: _*)
-      .sortWithinPartitions(keyColsP.map(col): _*)
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy(partitionCols: _*)
-      .parquet(commitDir.toString)
+    // rewritten partitions re-collect whatever stats columns the live
+    // manifest tracks — same stats-are-maintained stance as compact
+    val statKeys =
+      (live.flatMap(_.stats.keys) ++ live.flatMap(_.nullCounts.keys) ++
+        live.flatMap(_.valueSets.keys)).distinct
+    val (stagedWithStats, rowsOut) = stageCommit(fs, root, commitDir,
+      merged.observe(obsU, aggsU.head, aggsU.tail: _*)
+        .sortWithinPartitions(keyColsP.map(col): _*)
+        .write.mode(SaveMode.Overwrite)
+        .partitionBy(partitionCols: _*),
+      tableSchema, statKeys, manifest.bloomCols, partitionCols)
     // verify the staged merge while it is invisible: the footer row
     // count against the observed one, the constraints, then key
     // uniqueness and update-key coverage in one read-back aggregate
-    val staged = stagedFiles(fs, root, commitDir)
-    val rowsOut = footerRowCount(fs, root, staged)
     requireObservedStaged(fs, commitDir, obsLong(obsU, "n_obs_rows"), rowsOut,
       s"manifest upsert observation lost for $path", "constraint", s"table still at v$v")
     requireNoViolations(fs, commitDir, obsU, consSeqU, path, "merged", v)
@@ -4198,13 +4152,6 @@ object ManifestLake {
           s"$keysOut keys, $updKeysOut of $nUpdKeys update keys staged — " +
           s"table still at v$v")
     }
-    // rewritten partitions re-collect whatever stats columns the live
-    // manifest tracks — same stats-are-maintained stance as compact
-    val statKeys =
-      (live.flatMap(_.stats.keys) ++ live.flatMap(_.nullCounts.keys) ++
-        live.flatMap(_.valueSets.keys)).distinct
-    val stagedWithStats = stageStats(spark, fs, root, commitDir, tableSchema,
-      statKeys, manifest.bloomCols, partitionCols, staged)
     // ---- row-level change files (the Delta-CDC analog) ----
     // Stamp this commit's EXACT row deltas under the hidden
     // data/v<N>/_cdf dir while the commit is still invisible, so
@@ -4422,27 +4369,23 @@ object ManifestLake {
       }
       val newV = v + 1
       val commitDir = stagingDir(root, newV)
-      dfP.observe(obs, aggs.head, aggs.tail: _*)
-        .repartition(partitionCols.map(col): _*)
-        .write.mode(SaveMode.Overwrite).partitionBy(partitionCols: _*)
-        .parquet(commitDir.toString)
+      val statKeys =
+        (manifest.files.flatMap(_.stats.keys) ++
+          manifest.files.flatMap(_.nullCounts.keys) ++
+          manifest.files.flatMap(_.valueSets.keys)).distinct
+      val (stagedWithStats, rowsOut) = stageCommit(fs, root, commitDir,
+        dfP.observe(obs, aggs.head, aggs.tail: _*)
+          .repartition(partitionCols.map(col): _*)
+          .write.mode(SaveMode.Overwrite).partitionBy(partitionCols: _*),
+        tableSchema, statKeys, manifest.bloomCols, partitionCols)
       requireNoViolations(fs, commitDir, obs, consSeq, path, "batch", v)
       val rowsIn = obsLong(obs, "rows")
-      val staged = stagedFiles(fs, root, commitDir)
-      val rowsOut = footerRowCount(fs, root, staged)
-      if (rowsOut != rowsIn || (rowsIn > 0 && staged.isEmpty)) {
+      if (rowsOut != rowsIn || (rowsIn > 0 && stagedWithStats.isEmpty)) {
         fs.delete(commitDir, true)
         throw new IllegalStateException(
           s"manifest partition overwrite verification failed for $path v$newV: " +
             s"$rowsIn rows in, $rowsOut staged — table still at v$v")
       }
-      val statKeys =
-        (manifest.files.flatMap(_.stats.keys) ++
-          manifest.files.flatMap(_.nullCounts.keys) ++
-          manifest.files.flatMap(_.valueSets.keys)).distinct
-          .filter(k => tableSchema.fieldNames.contains(k))
-      val stagedWithStats = stageStats(spark, fs, root, commitDir, tableSchema,
-        statKeys, manifest.bloomCols, partitionCols, staged)
       val relCdf: Option[String] =
         if (!changeFeed) None
         else {
@@ -4904,9 +4847,14 @@ object ManifestLake {
       val w = fromLogical(observed, manifest)
         .repartition(partitionCols.map(col): _*)
         .sortWithinPartitions(keyCols.map(col): _*)
+      val statKeys =
+        (manifest.files.flatMap(_.stats.keys) ++
+          manifest.files.flatMap(_.nullCounts.keys) ++
+          manifest.files.flatMap(_.valueSets.keys)).distinct
       // partition columns are mapping-identity, so partitionBy holds
-      w.write.mode(SaveMode.Overwrite).partitionBy(partitionCols: _*)
-        .parquet(commitDir.toString)
+      val (stagedWithStats, rowsOut) = stageCommit(fs, root, commitDir,
+        w.write.mode(SaveMode.Overwrite).partitionBy(partitionCols: _*),
+        manifest.schema.get, statKeys, manifest.bloomCols, partitionCols)
       // a merge whose every classified row is a DELETE leaves nothing
       // to write: AQE's empty-relation propagation then elides the
       // CollectMetrics node and the observation reports NO keys at all.
@@ -4917,8 +4865,6 @@ object ManifestLake {
       // zero in the genuinely-empty case). A lost-metrics non-empty
       // write — where n_ins=0 would make the row-conservation check
       // below pass even with real constraint violations — fails HERE.
-      val staged = stagedFiles(fs, root, commitDir)
-      val rowsOut = footerRowCount(fs, root, staged)
       requireObservedStaged(fs, commitDir, obsLong(obsM, "n_obs_rows"), rowsOut,
         s"manifest merge observation lost for $path", "constraint/row",
         s"nothing published, table still at v$v")
@@ -4937,13 +4883,6 @@ object ManifestLake {
           s"manifest merge verification failed for $path: $rowsIn rows in, " +
             s"$nDel deleted + $nIns inserted, but $rowsOut staged — table still at v$v")
       }
-      val statKeys =
-        (manifest.files.flatMap(_.stats.keys) ++
-          manifest.files.flatMap(_.nullCounts.keys) ++
-          manifest.files.flatMap(_.valueSets.keys)).distinct
-          .filter(k => manifest.schema.get.fieldNames.contains(k))
-      val stagedWithStats = stageStats(spark, fs, root, commitDir,
-        manifest.schema.get, statKeys, manifest.bloomCols, partitionCols, staged)
       val relCdf: Option[String] =
         if (!changeFeed) None
         else {
@@ -5670,37 +5609,39 @@ object ManifestLake {
       // convert back to physical names for the rewritten files and the
       // stamped change files (the feed aliases to logical at its own
       // boundary)
-      val keep = fromLogical(src.where(!coalesce(predicate, lit(false))), manifest)
+      val hit = coalesce(predicate, lit(false))
+      // the deleted-row count rides the keep write as an observed
+      // metric (the slice's rows, before the filter) — no count job
+      val obs = org.apache.spark.sql.Observation()
+      val keep = fromLogical(src.observe(obs, count(when(hit, lit(1))).as("gone"))
+        .where(!hit), manifest)
       val gone = fromLogical(src.where(predicate), manifest)
       val commitDir = stagingDir(root, v + 1)
       val w = keep.write.mode(SaveMode.Overwrite)
-      (if (manifest.partCols.nonEmpty) w.partitionBy(manifest.partCols: _*) else w)
-        .parquet(commitDir.toString)
-      // row conservation, verified while the commit is invisible — the
-      // input side comes from the matched files' recorded counts (or
-      // their footers), the staged side from the fresh footers; only
-      // the deleted-row count runs as a job, over the cached slice
-      val rowsIn = (
-        if (candidates.forall(_.rows.isDefined)) candidates.flatMap(_.rows).sum
-        else footerRowCount(fs, root, candidates)) -
-        candidates.flatMap(_.dvRows).sum // masked rows never entered the slice
-      val rowsGone = gone.count()
-      val staged = stagedFiles(fs, root, commitDir)
-      val rowsOut = footerRowCount(fs, root, staged)
-      if (rowsOut + rowsGone != rowsIn) {
-        fs.delete(commitDir, true)
-        throw new IllegalStateException(
-          s"manifest delete verification failed for $path: $rowsIn rows in " +
-            s"rewritten files, $rowsOut kept + $rowsGone deleted — table still at v$v")
-      }
       val stagedCols = keep.schema.fieldNames.toSet
       val statKeys =
         (manifest.files.flatMap(_.stats.keys) ++
           manifest.files.flatMap(_.nullCounts.keys) ++
           manifest.files.flatMap(_.valueSets.keys)).distinct
           .filter(stagedCols.contains)
-      val withStats = stageStats(spark, fs, root, commitDir, schema,
-        statKeys, manifest.bloomCols, manifest.partCols, staged)
+      val (withStats, rowsOut) = stageCommit(fs, root, commitDir,
+        if (manifest.partCols.nonEmpty) w.partitionBy(manifest.partCols: _*) else w,
+        schema, statKeys, manifest.bloomCols, manifest.partCols)
+      // row conservation, verified while the commit is invisible — the
+      // input side comes from the matched files' recorded counts (or
+      // their footers), the staged side from the fresh footers, the
+      // deleted side from the observation
+      val rowsIn = (
+        if (candidates.forall(_.rows.isDefined)) candidates.flatMap(_.rows).sum
+        else footerRowCount(fs, root, candidates)) -
+        candidates.flatMap(_.dvRows).sum // masked rows never entered the slice
+      val rowsGone = obsLong(obs, "gone")
+      if (rowsOut + rowsGone != rowsIn) {
+        fs.delete(commitDir, true)
+        throw new IllegalStateException(
+          s"manifest delete verification failed for $path: $rowsIn rows in " +
+            s"rewritten files, $rowsOut kept + $rowsGone deleted — table still at v$v")
+      }
       val relCdf =
         if (!changeFeed) None
         else {
@@ -5840,12 +5781,15 @@ object ManifestLake {
         }
       val commitDir = stagingDir(root, v + 1)
       val w = fromLogical(observed, manifest).write.mode(SaveMode.Overwrite)
-      (if (manifest.partCols.nonEmpty) w.partitionBy(manifest.partCols: _*) else w)
-        .parquet(commitDir.toString)
+      val statKeys =
+        (manifest.files.flatMap(_.stats.keys) ++
+          manifest.files.flatMap(_.nullCounts.keys) ++
+          manifest.files.flatMap(_.valueSets.keys)).distinct
+      val (withStats, rowsOut) = stageCommit(fs, root, commitDir,
+        if (manifest.partCols.nonEmpty) w.partitionBy(manifest.partCols: _*) else w,
+        schema, statKeys, manifest.bloomCols, manifest.partCols)
       val rowsIn = obsLong(obs, "rows")
       val nUpd = obsLong(obs, "n_upd")
-      val staged = stagedFiles(fs, root, commitDir)
-      val rowsOut = footerRowCount(fs, root, staged)
       if (consSeq.nonEmpty)
         requireObservedStaged(fs, commitDir, obsLong(obsPost, "n_obs_rows"), rowsOut,
           s"manifest update observation lost for $path", "constraint", s"table still at v$v")
@@ -5857,14 +5801,6 @@ object ManifestLake {
             s"$rowsOut staged — table still at v$v")
       }
       require(nUpd > 0, "internal: matched files held no matching rows")
-      val stagedCols = rewritten.schema.fieldNames.toSet
-      val statKeys =
-        (manifest.files.flatMap(_.stats.keys) ++
-          manifest.files.flatMap(_.nullCounts.keys) ++
-          manifest.files.flatMap(_.valueSets.keys)).distinct
-          .filter(k => schema.fieldNames.contains(k))
-      val withStats = stageStats(spark, fs, root, commitDir, schema,
-        statKeys, manifest.bloomCols, manifest.partCols, staged)
       val relCdf =
         if (!changeFeed) None
         else {
@@ -6396,7 +6332,7 @@ object ManifestLake {
     * lattice, and GAPS ARE EXPECTED (the distributed assignment
     * reserves per-partition lanes; Delta documents the same). The
     * watermark only ever advances — past the max of everything
-    * assigned OR supplied (one stats pass, zero extra jobs) — so
+    * assigned OR supplied (the staged files' stats, zero extra jobs) — so
     * values never reuse across the table's history and time travel
     * stays unambiguous.
     *
@@ -6590,52 +6526,61 @@ object ManifestLake {
       .flatMap(_.toIntOption).filter(_ > 0).getOrElse(16384)
     var curM = m
     var curV = v
-    candidates.grouped(chunkSize).foreach { chunk =>
-      // explicit PHYSICAL schema: a column added after a file was
-      // written reads as null there (its null count = the file's row
-      // count — correct), and no partition-dir inference happens
-      // (partition columns are excluded from file stats anyway)
-      val scan = spark.read
-        .schema(StructType(physSchema.fields.filterNot(f =>
-          m.partCols.contains(f.name))))
-        .parquet(chunk.map(f => new Path(root, f.path).toString): _*)
-      val computed = collectStatsOver(spark, scan, physSchema, phys, m.partCols,
-        tableRoot = Some(fs.makeQualified(root).toString))
-      // clone-referenced absolute entries store the QUALIFIED URI while
-      // the stats pass keys the reader's plain path — match either form
-      def statsFor(f: LiveFile): Option[FileStats] =
-        computed.get(f.path).orElse(
-          // Path handles percent-encoding; raw `new URI(...)` throws on
-          // unencoded characters (a space in the source table's path)
-          // and would silently skip those clone-referenced files' stats
-          try computed.get(new Path(f.path).toUri.getPath)
-          catch { case _: Exception => None })
-      val updated = chunk.flatMap(f => statsFor(f).map(st =>
-        f.copy(stats = f.stats ++ st.bounds,
-          rows = f.rows.orElse(Some(st.rows)),
-          nullCounts = f.nullCounts ++ st.nullCounts,
-          valueSets = f.valueSets ++ st.sets)))
-      if (updated.nonEmpty) {
-        // OPTIMISTIC publish per chunk: the backfill scan is long, so
-        // a racing commit is realistic on a busy table. A retry is
-        // sound iff every entry THIS chunk analyzed is still at the
-        // head byte-identical (a rewrite/re-mask/re-stats under the
-        // same path means the file we measured is not the file that
-        // lives there — stale stats must not publish); the rest of the
-        // live set and every header fact rebase onto the head. The race
-        // hook is one-shot, so only the first chunk's publish fires it.
-        curV = publishOptimistic(spark, fs, root, path, "analyze", "analyze", curM,
-          curV + 1, Seq.empty, None, updated, updated.map(_.path).toSet) { (headV, head) =>
-          val headByPath = head.files.map(f => f.path -> f).toMap
-          val conflicted = chunk.filterNot(c => headByPath.get(c.path).contains(c))
-          if (conflicted.isEmpty) None
-          else Some(s"ANALYZE of $path lost its race to a commit that rewrote " +
-            s"or re-masked ${conflicted.length} of the files it " +
-            s"measured — the computed stats would be stale; the table " +
-            s"is intact at v$headV (chunks already published stand). " +
-            "Re-run the ANALYZE.")
-        }(base => base.copy(statsColsDefault = (base.statsColsDefault ++ phys).distinct)).merge
-        curM = readManifest(fs, root, curV)
+    candidates.grouped(chunkSize).foreach { planned =>
+      // chunks were planned from the first snapshot: a commit that
+      // landed since (a delete, a rewrite, a re-mask) may have removed
+      // or replaced some of these entries, and publishing their stats
+      // would bring them back — measure only entries still live
+      // byte-identical at the head the chunk publishes onto
+      val curFiles = curM.files.toSet
+      val chunk = planned.filter(curFiles.contains)
+      if (chunk.nonEmpty) {
+        // explicit PHYSICAL schema: a column added after a file was
+        // written reads as null there (its null count = the file's row
+        // count — correct), and no partition-dir inference happens
+        // (partition columns are excluded from file stats anyway)
+        val scan = spark.read
+          .schema(StructType(physSchema.fields.filterNot(f =>
+            m.partCols.contains(f.name))))
+          .parquet(chunk.map(f => new Path(root, f.path).toString): _*)
+        val computed = collectStatsOver(spark, scan, physSchema, phys, m.partCols,
+          Seq.empty, fs.makeQualified(root).toString)
+        // clone-referenced absolute entries store the QUALIFIED URI while
+        // the stats pass keys the reader's plain path — match either form
+        def statsFor(f: LiveFile): Option[FileStats] =
+          computed.get(f.path).orElse(
+            // Path handles percent-encoding; raw `new URI(...)` throws on
+            // unencoded characters (a space in the source table's path)
+            // and would silently skip those clone-referenced files' stats
+            try computed.get(new Path(f.path).toUri.getPath)
+            catch { case _: Exception => None })
+        val updated = chunk.flatMap(f => statsFor(f).map(st =>
+          f.copy(stats = f.stats ++ st.bounds,
+            rows = f.rows.orElse(Some(st.rows)),
+            nullCounts = f.nullCounts ++ st.nullCounts,
+            valueSets = f.valueSets ++ st.sets)))
+        if (updated.nonEmpty) {
+          // OPTIMISTIC publish per chunk: the backfill scan is long, so
+          // a racing commit is realistic on a busy table. A retry is
+          // sound iff every entry THIS chunk analyzed is still at the
+          // head byte-identical (a rewrite/re-mask/re-stats under the
+          // same path means the file we measured is not the file that
+          // lives there — stale stats must not publish); the rest of the
+          // live set and every header fact rebase onto the head. The race
+          // hook is one-shot, so only the first chunk's publish fires it.
+          curV = publishOptimistic(spark, fs, root, path, "analyze", "analyze", curM,
+            curV + 1, Seq.empty, None, updated, updated.map(_.path).toSet) { (headV, head) =>
+            val headByPath = head.files.map(f => f.path -> f).toMap
+            val conflicted = chunk.filterNot(c => headByPath.get(c.path).contains(c))
+            if (conflicted.isEmpty) None
+            else Some(s"ANALYZE of $path lost its race to a commit that rewrote " +
+              s"or re-masked ${conflicted.length} of the files it " +
+              s"measured — the computed stats would be stale; the table " +
+              s"is intact at v$headV (chunks already published stand). " +
+              "Re-run the ANALYZE.")
+          }(base => base.copy(statsColsDefault = (base.statsColsDefault ++ phys).distinct)).merge
+          curM = readManifest(fs, root, curV)
+        }
       }
     }
     if (curV == v) metadataOnly() else curV
@@ -7524,25 +7469,22 @@ object ManifestLake {
         case Some(ncm) => src.select(physicalProjection(m, Some(ncm)): _*)
       }
       val w = outPhys.write.mode(SaveMode.Overwrite)
-      (if (m.partCols.nonEmpty) w.partitionBy(m.partCols: _*) else w)
-        .parquet(commitDir.toString)
-      val staged = stagedFiles(fs, root, commitDir)
+      val statKeys =
+        (m.files.flatMap(_.stats.keys) ++ m.files.flatMap(_.nullCounts.keys) ++
+          m.files.flatMap(_.valueSets.keys)).distinct
+          .filter(k => m.schema.get.fieldNames.contains(k))
+      val (withStats, rowsOut) = stageCommit(fs, root, commitDir,
+        if (m.partCols.nonEmpty) w.partitionBy(m.partCols: _*) else w,
+        newSchema, statKeys, m.bloomCols, m.partCols)
       val rowsIn = (
         if (m.files.forall(_.rows.isDefined)) m.files.flatMap(_.rows).sum
         else footerRowCount(fs, root, m.files)) - m.files.flatMap(_.dvRows).sum
-      val rowsOut = footerRowCount(fs, root, staged)
       if (rowsOut != rowsIn) {
         fs.delete(commitDir, true)
         throw new IllegalStateException(
           s"generated-column backfill verification failed for $path: " +
             s"$rowsIn rows in, $rowsOut staged — table still at v$v")
       }
-      val statKeys =
-        (m.files.flatMap(_.stats.keys) ++ m.files.flatMap(_.nullCounts.keys) ++
-          m.files.flatMap(_.valueSets.keys)).distinct
-          .filter(k => m.schema.get.fieldNames.contains(k))
-      val withStats = stageStats(spark, fs, root, commitDir, newSchema,
-        statKeys, m.bloomCols, m.partCols, staged)
       publish(fs, root, newV, adopted.copy(files = withStats))
       newV
     }

@@ -11,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** How `ManifestLake.delete` decides between its metadata-only path
   * (a predicate over partition columns alone) and its rewrite path:
   * from the predicate's references, with no query that fails on
-  * purpose.
+  * purpose; and the queries the rewrite path runs.
   */
 class ManifestDeleteProbeSpec extends AnyFunSuite {
   private lazy val spark = graft.TestSpark.spark
@@ -49,11 +49,18 @@ class ManifestDeleteProbeSpec extends AnyFunSuite {
       }
     }
     spark.listenerManager.register(listener)
-    try {
-      assert(ManifestLake.delete(spark, dir, col("chrom") === "chr1" && col("pos") >= 30) === 2L)
-      ListenerDrain.drain(spark, plans)
-    } finally spark.listenerManager.unregister(listener)
+    val execs =
+      try {
+        assert(ManifestLake.delete(spark, dir, col("chrom") === "chr1" && col("pos") >= 30) === 2L)
+        ListenerDrain.drain(spark, plans)
+      } finally spark.listenerManager.unregister(listener)
     assert(failures.isEmpty, failures.toArray.mkString("\n"))
+    // three queries: the probe, the keep write and the change files —
+    // the deleted-row count rides the keep write and the rewritten
+    // files' stats ride its footers
+    assert(execs.size === 3, execs.map(_.nodeName).mkString(", "))
+    val (fs, root) = ManifestLake.fsFor(spark, dir)
+    assert(ManifestLake.readManifest(fs, root, 2L).files.forall(_.stats.contains("pos")))
     val left = ManifestLake.read(spark, dir)
     assert(left.count() === 50)
     assert(left.where(col("chrom") === "chr1" && col("pos") >= 30).count() === 0)

@@ -320,6 +320,37 @@ class ManifestDeltaSpec extends AnyFunSuite {
     } finally ManifestLake.CheckpointShardThreshold = prevT
   }
 
+  test("a chunked ANALYZE never brings back files a commit removed between its chunks") {
+    import spark.implicits._
+    val dir = freshDir("mlake-analyze-race")
+    // three stat-less writes into `a` and `b`; the first file in the
+    // list is in `a`, so the first chunk publishes over the racing delete
+    ManifestLake.write(spark, Seq((1L, "a")).toDF("id", "grp"), dir, Seq("grp"))
+    (2 to 3).foreach { i =>
+      ManifestLake.write(spark, Seq((i.toLong, "a"), (i.toLong, "b")).toDF("id", "grp"),
+        dir, Seq("grp"), replace = false)
+    }
+    val (fs, root) = ManifestLake.fsFor(spark, dir)
+    val v0 = ManifestLake.currentVersion(spark, dir).get
+    assert(ManifestLake.partDirOf(ManifestLake.readManifest(fs, root, v0).files.head.path) ===
+      "grp=a")
+    ManifestLake.raceHook.set { fired =>
+      assert(fired === "analyze")
+      spark.sparkContext.clearJobGroup()
+      ManifestLake.delete(spark, dir, col("grp") === "b"): Unit
+    }
+    spark.conf.set("spark.graft.analyze.chunkFiles", "1")
+    try ManifestLake.analyzeStats(spark, dir, Seq("id"))
+    finally {
+      spark.conf.unset("spark.graft.analyze.chunkFiles")
+      assert(ManifestLake.raceHook.getAndSet(null) == null, "ANALYZE never reached its publish")
+    }
+    assert(ManifestLake.read(spark, dir).select("grp").as[String].collect().sorted.toSeq ===
+      Seq("a", "a", "a"))
+    val head = ManifestLake.readManifest(fs, root, ManifestLake.currentVersion(spark, dir).get)
+    assert(head.files.forall(f => ManifestLake.partDirOf(f.path) == "grp=a" && f.stats.contains("id")))
+  }
+
   test("ANALYZE backfill chunks the stat-less file list: one bounded in-place commit per chunk, identical skipping") {
     import spark.implicits._
     val dir = freshDir("mlake-analyze-chunks")

@@ -246,16 +246,15 @@ class ManifestUpsertSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     }
     val widths = exchanges(execs).map(_.outputPartitioning.numPartitions)
     val shape = s"${execs.size} executions, ${widths.size} exchanges, widths $widths"
-    // the stats pass (the query yielding per-file `__rows`) shuffles
-    // per-task partial aggregates at the session's width; narrowing it
-    // would move rows instead
-    val (statsPass, own) = execs.partition(_.output.exists(_.name == "__rows"))
     info(shape)
     assert(failures.get === 0, shape)
-    assert(execs.size <= 5, shape)
+    // the write tasks record the per-file stats: no stats pass (the
+    // aggregate yielding per-file `__rows`) runs, so no exchange keeps
+    // the session's width
+    assert(execs.size <= 4, shape)
     assert(widths.size <= 7, shape)
-    assert(statsPass.size === 1, shape)
-    assert(exchanges(own).forall(_.outputPartitioning.numPartitions <= derivedWidth), shape)
+    assert(!execs.exists(_.output.exists(_.name == "__rows")), shape)
+    assert(widths.forall(_ <= derivedWidth), shape)
     assert(tableRows(dir) === (model ++ batch).toMap)
   }
 }
