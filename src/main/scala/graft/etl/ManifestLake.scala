@@ -1541,6 +1541,188 @@ object ManifestLake {
       head.colMap != snapshot.colMap || head.fieldMap != snapshot.fieldMap ||
       (constraints && effectiveConstraints(head) != effectiveConstraints(snapshot))
 
+  /** A DML verb's view of the table, opened by [[openDml]] on one
+    * manifest read: the head version `v`, its manifest `m`, the txn the
+    * commit carries, and the verb's names — `verb` in the retry
+    * exhaustion message, `noun` in refusals and guards.
+    */
+  private final case class Dml(spark: SparkSession, fs: FileSystem, root: Path, path: String,
+                               v: Long, m: Manifest, txn: Option[(String, Long)],
+                               verb: String, noun: String)
+
+  /** The preamble every DML verb shares. `Left(v)` when the txn ledger
+    * already records `txn` (a replay: the table holds its effect).
+    * Refuses a missing table and a headerless manifest unless the verb
+    * `creates` (upsert creates a table, `v = 0` with an empty manifest,
+    * and adopts a legacy one), an IDENTITY column when the verb inserts
+    * rows it cannot assign (`identity` names the remedy), and a column
+    * named like the change feed's metadata.
+    */
+  private def openDml(spark: SparkSession, path: String, txn: Option[(String, Long)],
+                      verb: String, noun: String, identity: Option[String] = None,
+                      creates: Boolean = false): Either[Long, Dml] = {
+    val (fs, root) = fsFor(spark, path)
+    val v = currentVersion(spark, path).getOrElse(
+      if (creates) 0L else throw new IllegalArgumentException(s"no manifested table at $path"))
+    val m = if (v == 0L) Manifest(None, Seq.empty, Seq.empty) else readManifest(fs, root, v)
+    if (txn.exists { case (app, b) => m.txns.get(app).exists(_ >= b) }) return Left(v)
+    if (!creates && m.schema.isEmpty)
+      throw new IllegalArgumentException(s"table at $path has a headerless legacy manifest — " +
+        s"$noun needs the recorded schema (run one append or upsert to adopt a header first)")
+    for (remedy <- identity; (n, _, _, _, _) <- m.identity)
+      throw new IllegalArgumentException(s"table at $path has IDENTITY column $n — $remedy")
+    refuseReserved(m)
+    Right(Dml(spark, fs, root, path, v, m, txn, verb, noun))
+  }
+
+  /** The change feed's metadata names are reserved: a table column so
+    * named, physical or logical, would collide with the change files a
+    * commit stamps (rename the column, or use a replace write).
+    */
+  private def refuseReserved(m: Manifest): Unit =
+    Seq(ChangeTypeCol, CommitVersionCol).foreach(r =>
+      require(!m.schema.exists(_.fieldNames.contains(r)) &&
+        !logicalSchemaOf(m).fieldNames.contains(r),
+        s"column name $r is reserved for the change feed's metadata"))
+
+  /** What a DML commit replaces and when a lost race is a conflict.
+    * `files` are the snapshot entries the commit read: every entry in
+    * the partition `dirs` it rewrites, or (`dirs = None`) the
+    * match-bearing files. A lost race retries only while the head's
+    * entries in that scope equal `files`, the recorded shape has not
+    * moved and `extra(headV, head)` names no reason; otherwise
+    * `lost(headV, reason)` is the conflict. `judged` names the rows
+    * CHECK constraints judge (None: the verb adds no values, so nothing
+    * is judged and a changed constraint set is no conflict). `op` is the
+    * commit's op and race-hook name, `header` the verb's header change,
+    * `rebase` what a re-read head goes through before it is compared.
+    */
+  private final case class Touched(op: String, files: Seq[LiveFile], dirs: Option[Set[String]],
+                                   judged: Option[String], lost: (Long, String) => String,
+                                   extra: (Long, Manifest) => Option[String] = (_, _) => None,
+                                   header: Manifest => Manifest = identity,
+                                   rebase: Manifest => Manifest = identity) {
+    def in(m: Manifest): Set[LiveFile] = {
+      val paths = files.map(_.path).toSet
+      m.files.filter(f => dirs.fold(paths.contains(f.path))(_.contains(partDirOf(f.path)))).toSet
+    }
+  }
+
+  /** The one conflict-checked commit of a DML verb: `adds` replace
+    * `t.files`, `relCdf` names the commit's change files, and the
+    * conflict rule is [[Touched]]'s.
+    */
+  private def publishTouched(d: Dml, t: Touched, adds: Seq[LiveFile], stages: Seq[Path],
+                             relCdf: Option[String]): Either[Long, Long] = {
+    val read = t.files.toSet
+    val partCols = t.header(d.m).partCols
+    publishOptimistic(d.spark, d.fs, d.root, d.path, t.op, d.verb, d.m, d.v + 1, stages, d.txn,
+      adds, t.files.map(_.path).toSet, t.rebase) { (headV, head) =>
+      val reason =
+        if (t.in(head) != read) Some(if (t.dirs.isEmpty)
+          "rewrote, removed, or re-masked its match-bearing files"
+          else "touched its affected partitions")
+        else if (shapeMoved(head, d.m, partCols, t.judged.isDefined))
+          Some("changed the recorded shape")
+        else t.extra(headV, head)
+      reason.map(t.lost(headV, _))
+    }(m => t.header(m).copy(cdf = relCdf))
+  }
+
+  /** Stamps a commit's row-level change files: `changes` (logical rows
+    * tagged with `_change_type`) in `m`'s physical names under the
+    * commit's hidden `_cdf` dir, which the manifest references by the
+    * returned root-relative path. None, and nothing written, when the
+    * change feed is off. Stamped after verification, inside the
+    * commit's own unique dir, so nothing observes it mid-write.
+    */
+  private def stampChanges(d: Dml, m: Manifest, commitDir: Path,
+                           changes: Option[DataFrame]): Option[String] =
+    changes.map { c =>
+      val cdfP = new Path(commitDir, CdfDir)
+      fromLogical(c, m, Seq(ChangeTypeCol)).write.mode(SaveMode.Overwrite).parquet(cdfP.toString)
+      relToRoot(d.fs, d.root, cdfP)
+    }
+
+  /** The one touched-files rewrite (Delta's DML shape) behind upsert,
+    * overwritePartitions, merge, delete and update: `rows` (logical,
+    * helper columns dropped at the write) replace `t.files`. One write
+    * job stages the rows under a fresh commit dir, with one observation
+    * on it: `n_obs_rows` (the rows `keep` lets through to the write),
+    * one `viol_<name>` per effective CHECK constraint when rows are
+    * judged, and the verb's `counts`. `shape` lays out the physical rows
+    * for the write. Each staged file's footer carries its stats, for the
+    * columns the live files track. Before anything publishes, the
+    * observed count must equal the staged footer count, no constraint
+    * may be violated, and `verify(commitDir, rowsOut, observed)` must
+    * name no failure; any failure withdraws the stage. Then the change
+    * files are stamped and the commit publishes through
+    * [[publishTouched]].
+    */
+  private def rewriteTouched(d: Dml, t: Touched, rows: DataFrame, changes: Option[DataFrame],
+                             keep: Column = lit(true), counts: Seq[Column] = Seq.empty,
+                             shape: DataFrame => DataFrame = identity)(
+                             verify: (Path, Long, String => Long) => Option[String])
+      : Either[Long, Long] = {
+    val published = t.header(d.m)
+    refuseReserved(published)
+    val cons = if (t.judged.isEmpty) Seq.empty else effectiveConstraints(d.m).toSeq.sortBy(_._1)
+    val obs = org.apache.spark.sql.Observation()
+    val aggs = count(when(keep, lit(1))).as("n_obs_rows") +: (violationCounts(cons) ++ counts)
+    val partCols = published.partCols
+    val w = shape(fromLogical(rows.observe(obs, aggs.head, aggs.tail: _*).where(keep)
+      .select(logicalSchemaOf(published).fieldNames.map(col).toSeq: _*), published))
+      .write.mode(SaveMode.Overwrite)
+    val commitDir = stagingDir(d.root, d.v + 1)
+    val (staged, rowsOut) = stageCommit(d.fs, d.root, commitDir,
+      if (partCols.nonEmpty) w.partitionBy(partCols: _*) else w,
+      published.schema.get, trackedStats(d.m.files), d.m.bloomCols, partCols)
+    requireObservedStaged(d.fs, commitDir, obsLong(obs, "n_obs_rows"), rowsOut,
+      s"manifest ${d.noun} observation lost for ${d.path}", "constraint/row",
+      s"nothing published, table still at v${d.v}")
+    requireNoViolations(d.fs, commitDir, obs, cons, d.path, t.judged.getOrElse(""), d.v)
+    verify(commitDir, rowsOut, obsLong(obs, _)).foreach { msg =>
+      d.fs.delete(commitDir, true)
+      throw new IllegalStateException(msg)
+    }
+    publishTouched(d, t, staged, Seq(commitDir), stampChanges(d, published, commitDir, changes))
+  }
+
+  /** The stats columns `files` record: what a rewrite keeps collecting,
+    * so a rewrite never silently degrades file skipping.
+    */
+  private def trackedStats(files: Seq[LiveFile]): Seq[String] =
+    (files.flatMap(_.stats.keys) ++ files.flatMap(_.nullCounts.keys) ++
+      files.flatMap(_.valueSets.keys)).distinct
+
+  /** The live rows of `files`, from metadata: recorded counts (the
+    * footers, for files that predate them) less the masked rows.
+    */
+  private def liveRows(fs: FileSystem, root: Path, files: Seq[LiveFile]): Long =
+    (if (files.forall(_.rows.isDefined)) files.flatMap(_.rows).sum
+     else footerRowCount(fs, root, files)) - files.flatMap(_.dvRows).sum
+
+  /** One `viol_<name>` count per CHECK constraint (SQL CHECK semantics:
+    * TRUE or NULL passes, FALSE violates).
+    */
+  private def violationCounts(constraints: Seq[(String, String)]): Seq[Column] =
+    constraints.map { case (n, e) =>
+      count(when(not(coalesce(expr(e), lit(true))), lit(1))).as(s"viol_$n")
+    }
+
+  /** The distinct partition dirs of `rows` (partition values rendered as
+    * strings), escaped the way partitioned writes render them; a null
+    * partition value is refused.
+    */
+  private def partDirs(d: Dml, cols: Seq[String], rows: Seq[Row]): Set[String] = {
+    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName
+    require(rows.forall(r => cols.indices.forall(i => !r.isNullAt(i))),
+      s"null partition values are not supported by the manifest ${d.noun}")
+    rows.map(r => cols.zipWithIndex.map { case (c, i) =>
+      s"${escapePathName(c)}=${escapePathName(r.getString(i))}"
+    }.mkString("/")).toSet
+  }
+
   /** A unique staging dir for a commit at `v`: optimistic committers
     * computing the same next version must never share one. The version
     * prefix is for operator legibility and vacuum's in-flight
@@ -2295,14 +2477,11 @@ object ManifestLake {
             txn: Option[(String, Long)] = None,
             statsCols: Seq[String] = Seq.empty,
             bloomCols: Seq[String] = Seq.empty): Long = {
-    // the plan feeds the staged write AND the verification count — pin
-    // it so both observe one evaluation (a non-deterministic or
-    // concurrently-changing source must not write one row set and
-    // verify another); same stance as upsert's pinning
-    df.persist()
-    val v =
-      try writePinned(spark, df, path, partitionCols, replace, txn, statsCols, bloomCols)
-      finally { df.unpersist(); () }
+    // not persisted: the write job is the only action over `df` (its
+    // verification count rides that job as an observation and the staged
+    // side comes from footers), and a persisted plan keeps the session's
+    // full shuffle width where AQE would coalesce the write's input
+    val v = writePinned(spark, df, path, partitionCols, replace, txn, statsCols, bloomCols)
     maybeAutoCompact(spark, path, v)
     v
   }
@@ -2540,8 +2719,8 @@ object ManifestLake {
         // while the write re-plans another (AQE finalizes per
         // execution) could let an executed p exceed the measured P.
         // The RDD hop costs a local Row conversion, no shuffle — and
-        // the caller has already persisted the batch, so finalizing
-        // the plan here does not re-run its upstream at write time.
+        // the write runs the pinned RDD, so finalizing the plan here
+        // does not re-run its upstream at write time.
         val pinned = spark.createDataFrame(dfG0.rdd, dfG0.schema)
         val parts = math.max(pinned.rdd.getNumPartitions, 1).toLong
         val mid = monotonically_increasing_id()
@@ -2693,9 +2872,7 @@ object ManifestLake {
       }
     }
     val obs = org.apache.spark.sql.Observation()
-    val aggs = count(lit(1)).as("rows") +: consSeq.map { case (n, e) =>
-      count(when(not(coalesce(expr(e), lit(true))), lit(1))).as(s"viol_$n")
-    }
+    val aggs = count(lit(1)).as("rows") +: violationCounts(consSeq)
     val w = dfP.observe(obs, aggs.head, aggs.tail: _*)
       .write.mode(SaveMode.Overwrite)
     // verify the staged copy while it is still invisible — same
@@ -3805,12 +3982,7 @@ object ManifestLake {
     // files by full relative path; an abandoned stage vacuums as an
     // in-flight orphan after the grace window)
     val commitDir = stagingDir(root, newV)
-    // stats, once collected, are MAINTAINED: rewritten files re-collect
-    // [min,max] for whatever columns the live manifest already tracks,
-    // so compaction never silently degrades file skipping
-    val statKeys =
-      (live.flatMap(_.stats.keys) ++ live.flatMap(_.nullCounts.keys) ++
-        live.flatMap(_.valueSets.keys)).distinct
+    val statKeys = trackedStats(live)
     val rewritten = plans.map { case (part, fls, want) =>
       // deletion-vector-masked inputs compact through the masked-aware
       // slice read (the rewrite MATERIALIZES the masks: rewritten files
@@ -3845,10 +4017,7 @@ object ManifestLake {
       // from the manifest's recorded counts (or the source footers when
       // a file predates stats), staged rows from the fresh footers — no
       // second and third scan of the data being compacted
-      val rowsIn = (
-        if (fls.forall(_.rows.isDefined)) fls.flatMap(_.rows).sum
-        else footerRowCount(fs, root, fls)) -
-        fls.flatMap(_.dvRows).sum // masked rows are not content
+      val rowsIn = liveRows(fs, root, fls)
       val destStaged = readStaged(fs, root, dest)
       val rowsOut = destStaged.map(_.rows).sum
       if (rowsOut != rowsIn)
@@ -3933,39 +4102,29 @@ object ManifestLake {
         "pruning keys on the partition columns); replace flat tables wholesale")
     require(partitionCols.forall(keyCols.contains),
       "partition columns must be part of the key")
-    val (fs, root) = fsFor(spark, path)
     // the batch feeds four queries (the batch aggregate, the merge
     // write, the key-coverage check, the change files) — pin it for the
     // call's lifetime so each reuses one evaluation instead of replaying
     // the caller's upstream plan
     updates.persist()
     val v =
-      try upsertPinned(spark, fs, root, path, updates, partitionCols, keyCols, txn, changeFeed)
+      try upsertPinned(spark, path, updates, partitionCols, keyCols, txn, changeFeed)
       finally { updates.unpersist(); () }
     maybeAutoCompact(spark, path, v)
     v
   }
 
-  private def upsertPinned(spark: SparkSession, fs: FileSystem, root: Path,
-                           path: String, updates: DataFrame,
+  private def upsertPinned(spark: SparkSession, path: String, updates: DataFrame,
                            partitionCols: Seq[String], keyCols: Seq[String],
                            txn: Option[(String, Long)],
                            changeFeed: Boolean): Long = {
-    currentVersion(spark, path).map(readManifest(fs, root, _))
-      .flatMap(_.identity).foreach { case (n, _, _, _, _) =>
-        throw new IllegalArgumentException(
-          s"table at $path has IDENTITY column $n — upsert cannot assign " +
-            "identity values for inserted keys; append/INSERT new rows " +
-            "(the engine assigns) and UPDATE/DELETE existing ones")
-      }
-    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName
-    val v = currentVersion(spark, path).getOrElse(0L)
-    val manifest0 = if (v == 0L) None else Some(readManifest(fs, root, v))
-    // exactly-once: skip a replayed (appId, batchId) before any work —
-    // the table already contains this batch's effect
-    if (txn.exists { case (app, b) =>
-      manifest0.exists(_.txns.get(app).exists(_ >= b)) })
-      return v
+    val d = openDml(spark, path, txn, "upsert", "upsert", creates = true, identity = Some(
+      "upsert cannot assign identity values for inserted keys; append/INSERT new rows " +
+        "(the engine assigns) and UPDATE/DELETE existing ones")) match {
+      case Left(replayed) => return replayed
+      case Right(opened) => opened
+    }
+    val (v, manifest) = (d.v, d.m)
     // ONE aggregate over the batch (it also materializes the pin): row
     // count, distinct-key count, distinct partition values (a small
     // batch's one partition serves both groupings; a larger one hashes
@@ -3986,7 +4145,6 @@ object ManifestLake {
       throw new IllegalArgumentException(
         s"updates are not key-unique on ${keyCols.mkString(",")}: $nUpd rows, $nUpdKeys keys")
     if (v == 0L) return write(spark, updates, path, partitionCols, replace = true, txn)
-    val manifest = manifest0.get
     // COLUMN MAPPING: the batch and the key columns arrive in LOGICAL
     // names — rename to physical on entry (partition columns are
     // mapping-identity by renameColumn's refusal, so affected-dir
@@ -4020,7 +4178,7 @@ object ManifestLake {
     // when the merge publishes — verify the shapes agree first (same
     // silent-null hazard as the append path; see writePinned)
     if (manifest.schema.isEmpty && manifest.files.nonEmpty) {
-      val inferred = readFilesGrouped(spark, root, manifest.files.map(_.path)).schema
+      val inferred = readFilesGrouped(spark, d.root, manifest.files.map(_.path)).schema
       require(sameShape(inferred, updatesP.schema),
         s"upsert batch schema ${updatesP.schema.catalogString} does not match the " +
           s"legacy table's inferred schema ${inferred.catalogString} — a headerless " +
@@ -4028,46 +4186,33 @@ object ManifestLake {
           "must agree (use a replace write to change the schema)")
     }
 
-    // affected partition dirs, rendered exactly as partitioned writes
-    // render them (the batch aggregate's rows — bounded by the batch's
-    // partition spread, which is small against the lake by definition)
-    require(partRows.forall(r => partitionCols.indices.forall(i => !r.isNullAt(i))),
-      "null partition values are not supported by the manifest upsert")
-    val affectedDirs = partRows.map(r =>
-      partitionCols.zipWithIndex.map { case (c, i) =>
-        s"${escapePathName(c)}=${escapePathName(r.getString(i))}"
-      }.mkString("/")).toSet
+    // affected partition dirs (the batch aggregate's rows — bounded by
+    // the batch's partition spread, which is small against the lake by
+    // definition)
+    val affectedDirs = partDirs(d, partitionCols, partRows.toSeq)
+    val affectedFiles = manifest.files.filter(f => affectedDirs.contains(partDirOf(f.path)))
 
-    val live = manifest.files
-    val (affectedFiles, untouched) =
-      live.partition(f => affectedDirs.contains(partDirOf(f.path)))
-
-    // merge: updates win key collisions outright (the batch is the
-    // newer truth) — same shape as Lake.upsert's merge
-    val updSchema = updatesP.schema
     // the post-merge table schema: widened when the manifest records
     // one, the batch's own otherwise (legacy adoption, verified above)
-    val tableSchema = widened.getOrElse(updSchema)
-    // the feed's metadata columns are reserved — a table column named
-    // _change_type would collide with the change files this commit
-    // stamps (rename the column, or use a replace write)
-    Seq(ChangeTypeCol, CommitVersionCol).foreach(r =>
-      require(!tableSchema.fieldNames.contains(r),
-        s"column name $r is reserved for the change feed's metadata"))
+    val tableSchema = widened.getOrElse(updatesP.schema)
+    val header = (m: Manifest) =>
+      m.copy(schema = Some(tableSchema), partCols = partitionCols, colMap = colMapOutU)
+    val published = header(manifest)
     // the pre-merge rows of the affected partitions, read through the
     // WIDENED schema so a batch that adds columns merges against typed
     // nulls, not an unresolved-column failure — reused by the merge AND
-    // by the change-file stamping below
+    // by the change files
     val affected: Option[DataFrame] =
       if (affectedFiles.isEmpty) None
-      else Some(readFiles(spark, fs, root,
+      else Some(readFiles(spark, d.fs, d.root,
         Manifest(widened.orElse(manifest.schema), manifest.partCols, affectedFiles))
         .select(tableSchema.fieldNames.map(n =>
           col(n).cast(tableSchema(n).dataType)): _*))
     val commitBytes = affectedFiles.map(_.bytes).sum + batchBytes
-    // ONE merge shuffle: the repartition on the partition columns
-    // clusters every key, so the row_number window and the write both
-    // run on it
+    // merge: updates win key collisions outright (the batch is the
+    // newer truth). ONE merge shuffle: the repartition on the partition
+    // columns clusters every key, so the row_number window and the
+    // write both run on it
     val merged = affected match {
       case None => commitRepartition(spark, updatesP, commitBytes, partitionCols)
       case Some(aff) =>
@@ -4079,137 +4224,61 @@ object ManifestLake {
           .where(col("__rn") === 1)
           .drop("__src", "__rn")
     }
-
-    val newV = v + 1
-    // unique staging dir (see writePinned): partition-disjoint upserts
-    // race optimistically, so two committers computing the same next
-    // version must never share a staging path — and the change files
-    // stamp INSIDE it (manifest-referenced via #cdf), so they can never
-    // collide either
-    val commitDir = stagingDir(root, newV)
-    // CHECK constraints ride the merge write as observed metrics (zero
-    // extra jobs): carried rows already satisfy them (write/addConstraint
-    // invariant), so any violation is the update batch's — judged
-    // before publish, stage withdrawn on failure
-    val consSeqU = {
-      val logical = effectiveConstraints(manifest).toSeq.sortBy(_._1)
-      if (mappingU.isEmpty && manifest.fieldMap.isEmpty) logical
-      else {
-        val cm = mappingU.getOrElse(
-          manifest.schema.map(_.fieldNames.toSeq).getOrElse(Seq.empty)
-            .map(n => n -> n))
-        val full = cm ++ colMapOutU.toSeq.flatten.filterNot(cm.contains)
-        logical.map { case (n, e) =>
-          n -> exprToPhysical(spark, e, full, manifest.fieldMap)
-        }
-      }
-    }
-    consSeqU.foreach { case (n, e) =>
-      try { merged.select(expr(e)); () } catch {
-        case ex: org.apache.spark.sql.AnalysisException =>
-          throw new IllegalArgumentException(
-            s"CHECK constraint $n (`$e`) on $path cannot be evaluated " +
-              s"against this upsert batch: ${ex.getMessage}", ex)
-      }
-    }
-    // count(*) always rides the write: violation counts (absent keys
-    // default to 0) are trusted once it matches the staged footer count
-    val obsU = org.apache.spark.sql.Observation()
-    val aggsU = count(lit(1)).as("n_obs_rows") +:
-      consSeqU.map { case (n, e) =>
-        count(when(not(coalesce(expr(e), lit(true))), lit(1))).as(s"viol_$n")
-      }
-    // rewritten partitions re-collect whatever stats columns the live
-    // manifest tracks — same stats-are-maintained stance as compact
-    val statKeys =
-      (live.flatMap(_.stats.keys) ++ live.flatMap(_.nullCounts.keys) ++
-        live.flatMap(_.valueSets.keys)).distinct
-    val (stagedWithStats, rowsOut) = stageCommit(fs, root, commitDir,
-      merged.observe(obsU, aggsU.head, aggsU.tail: _*)
-        .sortWithinPartitions(keyColsP.map(col): _*)
-        .write.mode(SaveMode.Overwrite)
-        .partitionBy(partitionCols: _*),
-      tableSchema, statKeys, manifest.bloomCols, partitionCols)
-    // verify the staged merge while it is invisible: the footer row
-    // count against the observed one, the constraints, then key
-    // uniqueness and update-key coverage in one read-back aggregate
-    requireObservedStaged(fs, commitDir, obsLong(obsU, "n_obs_rows"), rowsOut,
-      s"manifest upsert observation lost for $path", "constraint", s"table still at v$v")
-    requireNoViolations(fs, commitDir, obsU, consSeqU, path, "merged", v)
     val updKeys = updatesP.select(keyColsP.map(col): _*).withColumn("__upd", lit(true))
-    val keyCheck = commitRepartition(spark, spark.read.parquet(commitDir.toString)
-        .select(keyColsP.map(col): _*)
-        .join(broadcast(updKeys), keyColsP.toSeq, "left"), commitBytes, keyColsP)
-      .groupBy(keyColsP.map(col): _*).agg(max(col("__upd")).as("__upd"))
-      .agg(count(lit(1)), count(when(col("__upd"), lit(1))))
-      .head()
-    val keysOut = keyCheck.getLong(0)
-    val updKeysOut = keyCheck.getLong(1)
-    if (rowsOut != keysOut || updKeysOut != nUpdKeys) {
-      fs.delete(commitDir, true)
-      throw new IllegalStateException(
-        s"manifest upsert verification failed for $path: $rowsOut rows / " +
-          s"$keysOut keys, $updKeysOut of $nUpdKeys update keys staged — " +
-          s"table still at v$v")
-    }
-    // ---- row-level change files (the Delta-CDC analog) ----
-    // Stamp this commit's EXACT row deltas under the hidden
-    // data/v<N>/_cdf dir while the commit is still invisible, so
-    // readChangeFeed can serve an upsert instead of refusing it:
-    // pre-images are the affected partitions' pre-merge rows whose key
-    // the batch touches; post-images and inserts are the batch itself,
-    // split by whether the key already existed. Every join is bounded
-    // by the BATCH (pre-images ≤ |updates| rows), so the broadcasts
-    // never scale with the table. Stamped last — after verification and
-    // stats — so nothing else ever observes the hidden dir mid-write;
-    // the merge's Overwrite wipes any stale _cdf from an aborted
-    // earlier attempt at this version before we get here.
-    val relCdf: Option[String] =
-      if (!changeFeed) None
-      else {
-        val tableCols = tableSchema.fieldNames.map(col).toSeq
-        val updNorm = updatesP.select(tableCols: _*)
-        val changes = affected match {
-          case None =>
-            // no affected partition existed — every batch row is an insert
-            updNorm.withColumn(ChangeTypeCol, lit("insert"))
-          case Some(aff) =>
-            val keySeq = keyColsP.toSeq
-            val pre = aff.select(tableCols: _*)
-              .join(broadcast(updKeys), keySeq, "left_semi")
-            val preKeys = pre.select(keyColsP.map(col): _*)
-            pre.withColumn(ChangeTypeCol, lit("update_preimage"))
-              .unionByName(updNorm.join(broadcast(preKeys), keySeq, "left_semi")
-                .withColumn(ChangeTypeCol, lit("update_postimage")))
-              .unionByName(updNorm.join(broadcast(preKeys), keySeq, "left_anti")
-                .withColumn(ChangeTypeCol, lit("insert")))
-        }
-        val cdfP = new Path(commitDir, CdfDir)
-        commitRepartition(spark, changes, commitBytes, partitionCols)
-          .write.mode(SaveMode.Overwrite).parquet(cdfP.toString)
-        Some(relToRoot(fs, root, cdfP))
+    // the commit's EXACT row deltas: pre-images are the affected
+    // partitions' pre-merge rows whose key the batch touches;
+    // post-images and inserts are the batch itself, split by whether
+    // the key already existed. Every join is bounded by the BATCH
+    // (pre-images ≤ |updates| rows), so the broadcasts never scale with
+    // the table.
+    val changes = Option.when(changeFeed) {
+      val tableCols = tableSchema.fieldNames.map(col).toSeq
+      val updNorm = updatesP.select(tableCols: _*)
+      val rows = affected match {
+        case None =>
+          // no affected partition existed — every batch row is an insert
+          updNorm.withColumn(ChangeTypeCol, lit("insert"))
+        case Some(aff) =>
+          val keySeq = keyColsP.toSeq
+          val pre = aff.select(tableCols: _*)
+            .join(broadcast(updKeys), keySeq, "left_semi")
+          val preKeys = pre.select(keyColsP.map(col): _*)
+          pre.withColumn(ChangeTypeCol, lit("update_preimage"))
+            .unionByName(updNorm.join(broadcast(preKeys), keySeq, "left_semi")
+              .withColumn(ChangeTypeCol, lit("update_postimage")))
+            .unionByName(updNorm.join(broadcast(preKeys), keySeq, "left_anti")
+              .withColumn(ChangeTypeCol, lit("insert")))
       }
-    // OPTIMISTIC PUBLISH for partition-disjoint racers: the staged
-    // merge (and its stamped pre-images) stays exact as long as the
-    // new head's affected partitions hold EXACTLY the files the merge
-    // read and the recorded shape is unchanged. Anything else — files
-    // added/rewritten/removed in an affected partition, a widened
-    // schema — invalidates the pre-images: loud conflict, stage
-    // withdrawn.
-    val inputPaths = affectedFiles.map(_.path).toSet
-    publishOptimistic(spark, fs, root, path, "upsert", "upsert", manifest, newV,
-      Seq(commitDir), txn, stagedWithStats, inputPaths) { (headV, head) =>
-      val headAffected = head.files
-        .filter(f => affectedDirs.contains(partDirOf(f.path))).toSet
-      if (headAffected == affectedFiles.toSet &&
-        !shapeMoved(head, manifest, partitionCols, constraints = true)) None
-      else Some(s"upsert of $path lost its race to a commit that touched its " +
+      toLogical(commitRepartition(spark, rows, commitBytes, partitionCols), published,
+        Seq(ChangeTypeCol))
+    }
+    // carried rows already satisfy the constraints (write/addConstraint
+    // invariant), so a violation is the update batch's. Partition-
+    // disjoint upserts race optimistically: the staged merge (and its
+    // pre-images) stays exact while the head's affected partitions hold
+    // exactly the files the merge read and the recorded shape holds.
+    rewriteTouched(d, Touched("upsert", affectedFiles, Some(affectedDirs), Some("merged"),
+      (headV, _) => s"upsert of $path lost its race to a commit that touched its " +
         s"affected partitions (or changed the recorded shape) — the " +
         "staged merge bakes in superseded pre-images and was " +
         s"withdrawn; the table is intact at v$headV. Re-run the " +
-        "upsert against the new head.")
-    }(_.copy(schema = Some(tableSchema), partCols = partitionCols, cdf = relCdf,
-      colMap = colMapOutU)).merge
+        "upsert against the new head.", header = header),
+      toLogical(merged, published), changes,
+      shape = _.sortWithinPartitions(keyColsP.map(col): _*)) { (commitDir, rowsOut, _) =>
+      // key uniqueness and update-key coverage in one read-back aggregate
+      val keyCheck = commitRepartition(spark, spark.read.parquet(commitDir.toString)
+          .select(keyColsP.map(col): _*)
+          .join(broadcast(updKeys), keyColsP.toSeq, "left"), commitBytes, keyColsP)
+        .groupBy(keyColsP.map(col): _*).agg(max(col("__upd")).as("__upd"))
+        .agg(count(lit(1)), count(when(col("__upd"), lit(1))))
+        .head()
+      val keysOut = keyCheck.getLong(0)
+      val updKeysOut = keyCheck.getLong(1)
+      Option.when(rowsOut != keysOut || updKeysOut != nUpdKeys)(
+        s"manifest upsert verification failed for $path: $rowsOut rows / " +
+          s"$keysOut keys, $updKeysOut of $nUpdKeys update keys staged — " +
+          s"table still at v$v")
+    }.merge
   }
 
   /** DYNAMIC PARTITION OVERWRITE as ONE manifest commit — Spark's
@@ -4244,33 +4313,21 @@ object ManifestLake {
                           changeFeed: Boolean = true,
                           staticPrefix: Seq[(String, String)] = Seq.empty): Long = {
     import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName
-    val (fs, root) = fsFor(spark, path)
-    val v = currentVersion(spark, path).getOrElse(
-      throw new IllegalArgumentException(s"no manifested table at $path"))
-    val manifest = readManifest(fs, root, v)
-    if (txn.exists { case (app, b) => manifest.txns.get(app).exists(_ >= b) })
-      return v
+    val d = openDml(spark, path, txn, "overwritePartitions", "partition overwrite",
+      identity = Some("partition overwrite cannot assign identity values for its batch; " +
+        "append/INSERT new rows (the engine assigns) and DELETE what they supersede")) match {
+      case Left(replayed) => return replayed
+      case Right(opened) => opened
+    }
+    val (v, manifest) = (d.v, d.m)
     require(manifest.partCols.nonEmpty,
       "overwritePartitions needs a partitioned table — overwriting a flat " +
         "table is a replace write")
-    manifest.identity.foreach { case (n, _, _, _, _) =>
-      throw new IllegalArgumentException(
-        s"table at $path has IDENTITY column $n — partition overwrite " +
-          "cannot assign identity values for its batch; append/INSERT " +
-          "new rows (the engine assigns) and DELETE what they supersede")
-    }
-    val recorded = manifest.schema.getOrElse(throw new IllegalArgumentException(
-      s"table at $path has a headerless legacy manifest — partition " +
-        "overwrite needs the recorded schema (run one append or upsert to " +
-        "adopt a header first)"))
     val partitionCols = manifest.partCols
-    Seq(ChangeTypeCol, CommitVersionCol).foreach(r =>
-      require(!logicalSchemaOf(manifest).fieldNames.contains(r),
-        s"column name $r is reserved for the change feed's metadata"))
     // generated columns compute-if-absent / validate-if-supplied, and
     // the batch renames to physical on entry — the append path's rules
-    val dfG = manifest.generated.foldLeft(df) { case (d, (n, e)) =>
-      if (d.columns.contains(n)) d else d.withColumn(n, expr(e))
+    val dfG = manifest.generated.foldLeft(df) { case (acc, (n, e)) =>
+      if (acc.columns.contains(n)) acc else acc.withColumn(n, expr(e))
     }
     val (dfP0, colMapOut) = manifest.colMap match {
       case None => (dfG, None)
@@ -4279,8 +4336,11 @@ object ManifestLake {
         (pp, Some(ext))
     }
     val dfP = nestedToPhysical(dfP0, manifest)
-    val tableSchema = widen(recorded, dfP.schema, partitionCols,
+    val tableSchema = widen(manifest.schema.get, dfP.schema, partitionCols,
       "overwritePartitions")
+    val header = (m: Manifest) =>
+      m.copy(schema = Some(tableSchema), partCols = partitionCols, colMap = colMapOut)
+    val published = header(manifest)
     // PIN the batch: partition discovery and the staged write must see
     // one evaluation (a nondeterministic source must not land rows in
     // partitions discovery never saw)
@@ -4289,9 +4349,7 @@ object ManifestLake {
       val partRows = dfP
         .select(partitionCols.map(c => col(c).cast("string").as(c)): _*)
         .distinct().collect()
-      require(partRows.forall(r =>
-        partitionCols.indices.forall(i => !r.isNullAt(i))),
-        "null partition values are not supported by the manifest partition overwrite")
+      val batchDirs = partDirs(d, partitionCols, partRows.toSeq)
       // static-mode prefix: validate it is the leading partition
       // columns in order, render its path segments, and collect every
       // LIVE partition dir under it — those clear even if the batch
@@ -4323,109 +4381,50 @@ object ManifestLake {
           }
           s"${escapePathName(partitionCols(i))}=${escapePathName(canonical)}"
       }
-      val batchDirs = partRows.map(r =>
-        partitionCols.zipWithIndex.map { case (c, i) =>
-          s"${escapePathName(c)}=${escapePathName(r.getString(i))}"
-        }.mkString("/")).toSet
-      require(batchDirs.forall(d =>
-        prefixSegs.zip(d.split("/").toSeq).forall { case (a, b) => a == b }),
+      require(batchDirs.forall(dir =>
+        prefixSegs.zip(dir.split("/").toSeq).forall { case (a, b) => a == b }),
         s"every batch row must carry the static PARTITION values " +
           s"(${staticPrefix.map { case (k, v0) => s"$k=$v0" }.mkString(", ")}); " +
           "the batch writes outside the static prefix")
-      val staticDirs: Set[String] =
+      // the live partition dirs under the static prefix
+      def prefixDirs(m: Manifest): Set[String] =
         if (prefixSegs.isEmpty) Set.empty
-        else manifest.files.map(f => partDirOf(f.path)).filter { d =>
-          val segs = d.split("/").toSeq
+        else m.files.map(f => partDirOf(f.path)).filter { dir =>
+          val segs = dir.split("/").toSeq
           prefixSegs.zip(segs).forall { case (a, b) => a == b } &&
             segs.lengthCompare(prefixSegs.length) >= 0
         }.toSet
+      val staticDirs = prefixDirs(manifest)
       if (partRows.isEmpty && staticDirs.isEmpty)
         return v // nothing touched: the table is the result
       val affectedDirs = batchDirs ++ staticDirs
       val affectedFiles =
         manifest.files.filter(f => affectedDirs.contains(partDirOf(f.path)))
-      val consLogical = effectiveConstraints(manifest).toSeq.sortBy(_._1)
-      val consSeq =
-        if (manifest.colMap.isEmpty && manifest.fieldMap.isEmpty) consLogical
-        else {
-          val cm = manifest.colMap.getOrElse(
-            recorded.fieldNames.toSeq.map(n => n -> n))
-          val full = cm ++ colMapOut.toSeq.flatten.filterNot(cm.contains)
-          consLogical.map { case (n, e) =>
-            n -> exprToPhysical(spark, e, full, manifest.fieldMap)
-          }
-        }
-      consSeq.foreach { case (n, e) =>
-        try { dfP.select(expr(e)); () } catch {
-          case ex: org.apache.spark.sql.AnalysisException =>
-            throw new IllegalArgumentException(
-              s"CHECK constraint $n (`$e`) on $path cannot be evaluated " +
-                s"against this batch: ${ex.getMessage}", ex)
-        }
-      }
-      val obs = org.apache.spark.sql.Observation()
-      val aggs = count(lit(1)).as("rows") +: consSeq.map { case (n, e) =>
-        count(when(not(coalesce(expr(e), lit(true))), lit(1))).as(s"viol_$n")
-      }
-      val newV = v + 1
-      val commitDir = stagingDir(root, newV)
-      val statKeys =
-        (manifest.files.flatMap(_.stats.keys) ++
-          manifest.files.flatMap(_.nullCounts.keys) ++
-          manifest.files.flatMap(_.valueSets.keys)).distinct
-      val (stagedWithStats, rowsOut) = stageCommit(fs, root, commitDir,
-        dfP.observe(obs, aggs.head, aggs.tail: _*)
-          .repartition(partitionCols.map(col): _*)
-          .write.mode(SaveMode.Overwrite).partitionBy(partitionCols: _*),
-        tableSchema, statKeys, manifest.bloomCols, partitionCols)
-      requireNoViolations(fs, commitDir, obs, consSeq, path, "batch", v)
-      val rowsIn = obsLong(obs, "rows")
-      if (rowsOut != rowsIn || (rowsIn > 0 && stagedWithStats.isEmpty)) {
-        fs.delete(commitDir, true)
-        throw new IllegalStateException(
-          s"manifest partition overwrite verification failed for $path v$newV: " +
-            s"$rowsIn rows in, $rowsOut staged — table still at v$v")
-      }
-      val relCdf: Option[String] =
-        if (!changeFeed) None
-        else {
-          // exact row deltas: the replaced partitions' previous rows as
-          // deletes (DV masks already applied by the slice read), the
-          // batch as inserts — physical names, like every stamp
-          val pre = readFileSlice(spark, path, manifest, affectedFiles)
-            .withColumn(ChangeTypeCol, lit("delete"))
-          val changes = pre.unionByName(
-            dfP.withColumn(ChangeTypeCol, lit("insert")),
+      // exact row deltas: the replaced partitions' previous rows as
+      // deletes (DV masks already applied by the slice read), the batch
+      // as inserts
+      val changes = Option.when(changeFeed)(
+        readFileSliceLogical(spark, path, manifest, affectedFiles)
+          .withColumn(ChangeTypeCol, lit("delete"))
+          .unionByName(toLogical(dfP, published).withColumn(ChangeTypeCol, lit("insert")),
             allowMissingColumns = true)
-          val cdfP = new Path(commitDir, CdfDir)
-          changes.repartition(partitionCols.map(col): _*)
-            .write.mode(SaveMode.Overwrite).parquet(cdfP.toString)
-          Some(relToRoot(fs, root, cdfP))
-        }
-      val inputPaths = affectedFiles.map(_.path).toSet
-      publishOptimistic(spark, fs, root, path, "replacepart", "overwritePartitions",
-        manifest, newV, Seq(commitDir), txn, stagedWithStats, inputPaths) { (headV, head) =>
-        val headAffected = head.files
-          .filter(f => affectedDirs.contains(partDirOf(f.path))).toSet
-        // a racer may have created a NEW partition under the static
-        // prefix (not in affectedDirs, so the file check alone would
-        // miss it) — static semantics clear EVERYTHING matching the
-        // prefix at commit time, so a changed prefix-dir set must
-        // withdraw, never silently survive
-        val headPrefixDirs: Set[String] =
-          if (prefixSegs.isEmpty) Set.empty
-          else head.files.map(f => partDirOf(f.path)).filter { d =>
-            prefixSegs.zip(d.split("/").toSeq).forall { case (a, b) => a == b }
-          }.toSet
-        if (headAffected == affectedFiles.toSet && headPrefixDirs == staticDirs &&
-          !shapeMoved(head, manifest, partitionCols, constraints = true)) None
-        else Some(s"partition overwrite of $path lost its race to a commit that " +
+          .repartition(partitionCols.map(col): _*))
+      // a racer may have created a NEW partition under the static
+      // prefix (not in affectedDirs, so the scope check alone would miss
+      // it) — static semantics clear EVERYTHING matching the prefix at
+      // commit time, so a changed prefix-dir set must withdraw, never
+      // silently survive
+      rewriteTouched(d, Touched("replacepart", affectedFiles, Some(affectedDirs), Some("batch"),
+        (headV, _) => s"partition overwrite of $path lost its race to a commit that " +
           "touched its affected partitions (or changed the recorded " +
           "shape) — the staged swap bakes in superseded pre-images and " +
           s"was withdrawn; the table is intact at v$headV. Re-run " +
-          "against the new head.")
-      }(_.copy(schema = Some(tableSchema), partCols = partitionCols, cdf = relCdf,
-        colMap = colMapOut)).merge
+          "against the new head.",
+        extra = (_, head) => Option.when(prefixDirs(head) != staticDirs)(
+          "changed the partitions under its static prefix"),
+        header = header),
+        toLogical(dfP, published), changes,
+        shape = _.repartition(partitionCols.map(col): _*))((_, _, _) => None).merge
     } finally {
       dfP.unpersist()
       ()
@@ -4561,7 +4560,6 @@ object ManifestLake {
                    changeFeed: Boolean = true,
                    plainEqKeys: Set[String] = Set.empty,
                    evolveWith: Option[StructType] = None): MergeStats = {
-    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName
     require(partitionCols.nonEmpty,
       "manifest merge needs a partitioned table; replace flat tables wholesale")
     require(partitionCols.forall(keyCols.contains),
@@ -4571,14 +4569,12 @@ object ManifestLake {
     require(plainEqKeys.forall(keyCols.contains),
       s"plainEqKeys ${plainEqKeys.mkString(",")} must be a subset of the " +
         s"merge keys (${keyCols.mkString(",")})")
-    currentVersion(spark, path).map(v0 =>
-      readManifest(fsFor(spark, path)._1, fsFor(spark, path)._2, v0))
-      .flatMap(_.identity).foreach { case (n, _, _, _, _) =>
-        throw new IllegalArgumentException(
-          s"table at $path has IDENTITY column $n — MERGE cannot assign " +
-            "identity values for inserted rows; append/INSERT new rows " +
-            "(the engine assigns) and UPDATE/DELETE existing ones")
-      }
+    val opened = openDml(spark, path, txn, "merge", "merge", identity = Some(
+      "MERGE cannot assign identity values for inserted rows; append/INSERT new rows " +
+        "(the engine assigns) and UPDATE/DELETE existing ones")) match {
+      case Left(replayed) => return MergeStats(replayed, 0L, 0L, 0L)
+      case Right(o) => o
+    }
     matched.foreach {
       case _: MergeInsert => throw new IllegalArgumentException(
         "WHEN MATCHED supports UPDATE and DELETE clauses, not INSERT")
@@ -4597,9 +4593,7 @@ object ManifestLake {
         "WHEN NOT MATCHED BY SOURCE supports UPDATE and DELETE, not INSERT")
       case _ => ()
     }
-    val (fs, root) = fsFor(spark, path)
-    val v = currentVersion(spark, path).getOrElse(
-      throw new IllegalArgumentException(s"no manifested table at $path"))
+    val v = opened.v
     // WITH SCHEMA EVOLUTION is folded into THIS merge's single commit:
     // the manifest is extended IN MEMORY with the source's new columns
     // (nullable, metadata-only — old files serve NULL via the
@@ -4608,17 +4602,9 @@ object ManifestLake {
     // constraint violation, lost race) leaves NO schema residue, and a
     // concurrent reader can never observe an evolved-but-unmerged
     // intermediate state.
-    val manifest = evolveWith match {
-      case None => readManifest(fs, root, v)
-      case Some(srcSchema) =>
-        evolveSchemaFor(readManifest(fs, root, v), srcSchema, path)
-    }
-    if (txn.exists { case (app, b) => manifest.txns.get(app).exists(_ >= b) })
-      return MergeStats(v, 0L, 0L, 0L)
-    val logical = manifest.schema.map(_ => logicalSchemaOf(manifest)).getOrElse(
-      throw new IllegalArgumentException(
-        s"table at $path has a headerless legacy manifest — merge needs the " +
-          "recorded schema (run one append or upsert to adopt a header first)"))
+    val manifest = evolveWith.fold(opened.m)(evolveSchemaFor(opened.m, _, path))
+    val d = opened.copy(m = manifest)
+    val logical = logicalSchemaOf(manifest)
     // The source must carry the key columns always, and every table
     // column at exact type only when some clause takes the source row
     // wholesale (SET * / INSERT *) — the CDC-apply shape ships an op
@@ -4646,9 +4632,6 @@ object ManifestLake {
           "(cast/select first; merge does not widen — extra source-only " +
           "columns are allowed and visible to clause conditions as s.<col>)")
     }
-    Seq(ChangeTypeCol, CommitVersionCol).foreach(r =>
-      require(!logical.fieldNames.contains(r),
-        s"column name $r is reserved for the change feed's metadata"))
     // resolve clause assignment names against the logical schema (case-
     // insensitive, like the rest of Spark SQL), refusing unknown and
     // doubly-assigned columns up front
@@ -4715,15 +4698,9 @@ object ManifestLake {
     // resolves) must still unpersist the source — the main try/finally
     // below only engages once `cls` is built
     val (affectedDirs, affectedFiles, cls) = try {
-      val partRows = source
+      val srcDirs = partDirs(d, partitionCols, source
         .select(partitionCols.map(c => col(c).cast("string").as(c)): _*)
-        .distinct().collect()
-      require(partRows.forall(r => partitionCols.indices.forall(i => !r.isNullAt(i))),
-        "null partition values are not supported by the manifest merge")
-      val srcDirs = partRows.map(r =>
-        partitionCols.zipWithIndex.map { case (c, i) =>
-          s"${escapePathName(c)}=${escapePathName(r.getString(i))}"
-        }.mkString("/")).toSet
+        .distinct().collect().toSeq)
       // NOT MATCHED BY SOURCE clauses act on target rows the source
       // does not name — every live partition is affected, the whole
       // table is the rewrite set (the SQL semantics demand it)
@@ -4800,15 +4777,6 @@ object ManifestLake {
           s"merge source is not key-unique on ${keyCols.mkString(",")}: " +
             s"${chk.getLong(1)} key(s) carry multiple source rows — " +
             s"nothing written, table still at v$v")
-      // constraints enforce on the merged LOGICAL rows, riding the write
-      val consSeqM = effectiveConstraints(manifest).toSeq.sortBy(_._1)
-      val obsM = org.apache.spark.sql.Observation()
-      val aggsM = count(lit(1)).as("n_obs_rows") +:
-        count(when(isUpd, lit(1))).as("n_upd") +:
-        count(when(isIns, lit(1))).as("n_ins") +:
-        consSeqM.map { case (n, e) =>
-          count(when(not(coalesce(expr(e), lit(true))), lit(1))).as(s"viol_$n")
-        }
       // the merged value of column n for every action code: K keeps the
       // target value; full-row U/I take the source row; explicit SETs
       // update the named columns (others keep target for updates; for
@@ -4818,7 +4786,7 @@ object ManifestLake {
         val dt = logical(n).dataType
         def insertAbsent: Column = manifest.defaults
           .find(_._1.equalsIgnoreCase(n))
-          .map { case (_, d) => expr(d).cast(dt) }
+          .map { case (_, dflt) => expr(dflt).cast(dt) }
           .getOrElse(lit(null).cast(dt))
         val cases: Seq[(String, Column)] =
           updSets.map { case (code, so) =>
@@ -4836,87 +4804,23 @@ object ManifestLake {
           when(col("__action") === code, vc).otherwise(acc)
         }
       }
-      // __action survives into the observed node and is dropped after
-      val observed = cls.where(isKept)
-        .select(col("__action") +:
-          logical.fieldNames.map(n => mergedValue(n).as(n)).toSeq: _*)
-        .observe(obsM, aggsM.head, aggsM.tail: _*)
-        .drop("__action")
-      val newV = v + 1
-      val commitDir = stagingDir(root, newV)
-      val w = fromLogical(observed, manifest)
-        .repartition(partitionCols.map(col): _*)
-        .sortWithinPartitions(keyCols.map(col): _*)
-      val statKeys =
-        (manifest.files.flatMap(_.stats.keys) ++
-          manifest.files.flatMap(_.nullCounts.keys) ++
-          manifest.files.flatMap(_.valueSets.keys)).distinct
-      // partition columns are mapping-identity, so partitionBy holds
-      val (stagedWithStats, rowsOut) = stageCommit(fs, root, commitDir,
-        w.write.mode(SaveMode.Overwrite).partitionBy(partitionCols: _*),
-        manifest.schema.get, statKeys, manifest.bloomCols, partitionCols)
-      // a merge whose every classified row is a DELETE leaves nothing
-      // to write: AQE's empty-relation propagation then elides the
-      // CollectMetrics node and the observation reports NO keys at all.
-      // Absent metrics default to 0 — sound ONLY while absence implies
-      // an empty observed subtree, so that implication is itself
-      // verified before any defaulted-to-0 count is trusted: the
-      // observed count(*) must equal the staged footer row count (both
-      // zero in the genuinely-empty case). A lost-metrics non-empty
-      // write — where n_ins=0 would make the row-conservation check
-      // below pass even with real constraint violations — fails HERE.
-      requireObservedStaged(fs, commitDir, obsLong(obsM, "n_obs_rows"), rowsOut,
-        s"manifest merge observation lost for $path", "constraint/row",
-        s"nothing published, table still at v$v")
-      requireNoViolations(fs, commitDir, obsM, consSeqM, path, "merged", v)
-      val nUpd = obsLong(obsM, "n_upd")
-      val nIns = obsLong(obsM, "n_ins")
-      // nDel came from the validation pass above
-      // row conservation from footers vs the observed classification
-      val rowsIn = (
-        if (affectedFiles.forall(_.rows.isDefined)) affectedFiles.flatMap(_.rows).sum
-        else footerRowCount(fs, root, affectedFiles)) -
-        affectedFiles.flatMap(_.dvRows).sum // masked rows never entered the merge
-      if (rowsOut != rowsIn - nDel + nIns) {
-        fs.delete(commitDir, true)
-        throw new IllegalStateException(
-          s"manifest merge verification failed for $path: $rowsIn rows in, " +
-            s"$nDel deleted + $nIns inserted, but $rowsOut staged — table still at v$v")
-      }
-      val relCdf: Option[String] =
-        if (!changeFeed) None
-        else {
-          val lcols = logical.fieldNames.toSeq
-          // post-images and inserted rows come from the SAME merged
-          // projection the write used (a partial SET's post-image is
-          // the merged row, not the source row); pre-images and
-          // deletes are the target side
-          def tSide(cond: Column, tag: String) =
-            cls.where(cond)
-              .select(lcols.map(n => col(s"t.$n").as(n)): _*)
-              .withColumn(ChangeTypeCol, lit(tag))
-          def postSide(cond: Column, tag: String) =
-            cls.where(cond)
-              .select(lcols.map(n => mergedValue(n).as(n)): _*)
-              .withColumn(ChangeTypeCol, lit(tag))
-          val changes =
-            tSide(isUpd, "update_preimage")
-              .unionByName(postSide(isUpd, "update_postimage"))
-              .unionByName(tSide(isDel, "delete"))
-              .unionByName(postSide(isIns, "insert"))
-          val cdfP = new Path(commitDir, CdfDir)
-          // change files store PHYSICAL names (the feed aliases to
-          // logical at its boundary); keep the metadata column through
-          // the mapping select
-          val physChanges =
-            if (manifest.colMap.isEmpty && manifest.fieldMap.isEmpty) changes
-            else changes.select(
-              physicalProjection(manifest) :+ col(ChangeTypeCol): _*)
-          physChanges.repartition(partitionCols.map(col): _*)
-            .write.mode(SaveMode.Overwrite).parquet(cdfP.toString)
-          Some(relToRoot(fs, root, cdfP))
-        }
-      // optimistic publish — upsert's partition-disjoint rules exactly.
+      val lcols = logical.fieldNames.toSeq
+      // post-images and inserted rows come from the SAME merged
+      // projection the write uses (a partial SET's post-image is the
+      // merged row, not the source row); pre-images and deletes are the
+      // target side
+      def tSide(cond: Column, tag: String) =
+        cls.where(cond).select(lcols.map(n => col(s"t.$n").as(n)): _*)
+          .withColumn(ChangeTypeCol, lit(tag))
+      def postSide(cond: Column, tag: String) =
+        cls.where(cond).select(lcols.map(n => mergedValue(n).as(n)): _*)
+          .withColumn(ChangeTypeCol, lit(tag))
+      val changes = Option.when(changeFeed)(
+        tSide(isUpd, "update_preimage")
+          .unionByName(postSide(isUpd, "update_postimage"))
+          .unionByName(tSide(isDel, "delete"))
+          .unionByName(postSide(isIns, "insert"))
+          .repartition(partitionCols.map(col): _*))
       // WITH SCHEMA EVOLUTION, `manifest` is the in-memory EVOLVED
       // manifest — comparing the raw head against it would declare
       // every benign race lost (the head is always un-evolved).
@@ -4925,31 +4829,40 @@ object ManifestLake {
       // staged against, so the retry path stays open. A head whose
       // shape makes the re-evolution diverge (or throw) fails the
       // comparison with the clean race error.
-      val inputPaths = affectedFiles.map(_.path).toSet
       val reevolve: Manifest => Manifest = evolveWith match {
         case None => identity
         case Some(srcSchema) => head =>
           try evolveSchemaFor(head, srcSchema, path)
           catch { case _: Exception => head }
       }
-      publishOptimistic(spark, fs, root, path, "merge", "merge", manifest, newV,
-        Seq(commitDir), txn, stagedWithStats, inputPaths, reevolve) { (headV, head) =>
-        val headAffected = head.files
-          .filter(f => affectedDirs.contains(partDirOf(f.path))).toSet
-        // effectiveConstraints (not raw constraints): a concurrently
-        // ADDED generated column's synthetic validation was never run
-        // against this stage — publishing it unjudged would let the
-        // column silently diverge (append's guard has the same shape)
-        if (headAffected == affectedFiles.toSet &&
-          !shapeMoved(head, manifest, partitionCols, constraints = true)) None
-        else Some(s"merge of $path lost its race to a commit that touched its " +
+      var counted = (0L, 0L)
+      // __action rides into the observation (the per-clause counts) and
+      // leaves at the write; partition columns are mapping-identity, so
+      // partitionBy holds
+      rewriteTouched(d, Touched("merge", affectedFiles, Some(affectedDirs), Some("merged"),
+        (headV, _) => s"merge of $path lost its race to a commit that touched its " +
           "affected partitions (or changed the recorded shape) — the " +
           "staged merge bakes in superseded pre-images and was " +
           s"withdrawn; the table is intact at v$headV. Re-run the " +
-          "merge against the new head.")
-      }(_.copy(partCols = partitionCols, cdf = relCdf)) match {
+          "merge against the new head.",
+        header = _.copy(partCols = partitionCols), rebase = reevolve),
+        cls.where(isKept).select(col("__action") +: lcols.map(n => mergedValue(n).as(n)): _*),
+        changes,
+        counts = Seq(count(when(isUpd, lit(1))).as("n_upd"),
+          count(when(isIns, lit(1))).as("n_ins")),
+        shape = _.repartition(partitionCols.map(col): _*)
+          .sortWithinPartitions(keyCols.map(col): _*)) { (_, rowsOut, observed) =>
+        val (nUpd, nIns) = (observed("n_upd"), observed("n_ins"))
+        counted = (nUpd, nIns)
+        // row conservation: nDel came from the validation pass above;
+        // masked rows never entered the merge
+        val rowsIn = liveRows(d.fs, d.root, affectedFiles)
+        Option.when(rowsOut != rowsIn - nDel + nIns)(
+          s"manifest merge verification failed for $path: $rowsIn rows in, " +
+            s"$nDel deleted + $nIns inserted, but $rowsOut staged — table still at v$v")
+      } match {
         case Left(headV) => MergeStats(headV, 0L, 0L, 0L)
-        case Right(published) => MergeStats(published, nUpd, nDel, nIns)
+        case Right(published) => MergeStats(published, counted._1, nDel, counted._2)
       }
     } finally {
       cls.unpersist()
@@ -5120,10 +5033,12 @@ object ManifestLake {
     * field names). Dropped physical columns are absent from the result —
     * they are invisible logically, and a rewritten file serves them as
     * typed nulls through the recorded physical schema if ever scanned.
+    * `extraCols` pass through after the mapped ones, as in [[toLogical]].
     */
-  private def fromLogical(df: DataFrame, m: Manifest): DataFrame =
+  private def fromLogical(df: DataFrame, m: Manifest,
+                          extraCols: Seq[String] = Seq.empty): DataFrame =
     if (m.colMap.isEmpty && m.fieldMap.isEmpty) df
-    else df.select(physicalProjection(m): _*)
+    else df.select(physicalProjection(m) ++ extraCols.map(col): _*)
 
   /** The logical→physical write projection every physical sink
     * (rewrites, change-file stamps) shares.
@@ -5426,19 +5341,11 @@ object ManifestLake {
              txn: Option[(String, Long)] = None,
              changeFeed: Boolean = true,
              deletionVectors: Boolean = false): Long = {
-    val (fs, root) = fsFor(spark, path)
-    val v = currentVersion(spark, path).getOrElse(
-      throw new IllegalArgumentException(s"no manifested table at $path"))
-    val manifest = readManifest(fs, root, v)
-    if (txn.exists { case (app, b) => manifest.txns.get(app).exists(_ >= b) })
-      return v
-    val schema = manifest.schema.getOrElse(throw new IllegalArgumentException(
-      s"table at $path has a headerless legacy manifest — delete needs the " +
-        "recorded schema (run one append or upsert to adopt a header first)"))
-    Seq(ChangeTypeCol, CommitVersionCol).foreach(r =>
-      require(!schema.fieldNames.contains(r) &&
-        !logicalSchemaOf(manifest).fieldNames.contains(r),
-        s"column name $r is reserved for the change feed's metadata"))
+    val d = openDml(spark, path, txn, "delete", "delete") match {
+      case Left(replayed) => return replayed
+      case Right(opened) => opened
+    }
+    val (fs, root, v, manifest) = (d.fs, d.root, d.v, d.m)
     if (manifest.files.isEmpty) return v
     // OPTIMISTIC publish: on a lost version race the loser re-reads the
     // head and retries iff (a) every file the delete resolved as
@@ -5453,25 +5360,12 @@ object ManifestLake {
     // lookalike rows behind would read as a partial delete. File-
     // disjoint deletes and appends of non-matching data compose without
     // coordination.
-    def publishDelete(candidates: Seq[LiveFile], staged: Seq[LiveFile],
-                      relCdf: Option[String], stages: Seq[Path],
-                      partitionOnly: Boolean): Long = {
-      publishOptimistic(spark, fs, root, path, "delete", "delete", manifest, v + 1,
-        stages, txn, staged, candidates.map(_.path).toSet) { (headV, head) =>
-        def lost(reason: String): Option[String] =
-          Some(s"delete of $path lost its race to a commit that $reason — " +
-            s"the staged result was withdrawn; the table is intact at " +
-            s"v$headV. Re-run the delete against the new head.")
-        // ENTRY equality, not path presence: a racer that re-MASKED a
-        // candidate (deletion-vector delete) keeps its path but
-        // changes its entry — re-publishing our stale entry would
-        // silently undo the winner's mask
-        val headSet = head.files.toSet
-        if (!candidates.forall(headSet.contains))
-          lost("rewrote, removed, or re-masked its match-bearing files")
-        else if (shapeMoved(head, manifest, manifest.partCols, constraints = false))
-          lost("changed the recorded shape")
-        else {
+    def touched(candidates: Seq[LiveFile], partitionOnly: Boolean) =
+      Touched("delete", candidates, None, None,
+        (headV, reason) => s"delete of $path lost its race to a commit that $reason — " +
+          s"the staged result was withdrawn; the table is intact at " +
+          s"v$headV. Re-run the delete against the new head.",
+        extra = { (_, head) =>
           val snapshotPaths = manifest.files.map(_.path).toSet
           val added = head.files.filterNot(f => snapshotPaths.contains(f.path))
           // PARTITION-ONLY deletes decide this from the added files'
@@ -5484,7 +5378,7 @@ object ManifestLake {
           val hit = added.nonEmpty && {
             val matchingAdded =
               if (partitionOnly)
-                matchedPartitionDirs(spark, schema, manifest.partCols, predicate,
+                matchedPartitionDirs(spark, manifest.schema.get, manifest.partCols, predicate,
                   added.map(f => partDirOf(f.path)).distinct)
                   .map(m => added.exists(f => m.contains(partDirOf(f.path))))
               else None
@@ -5492,10 +5386,8 @@ object ManifestLake {
               toLogical(readFileSlice(spark, path, head, added), head)
                 .where(predicate).limit(1).count() > 0)
           }
-          if (hit) lost("appended rows matching the delete predicate") else None
-        }
-      }(_.copy(cdf = relCdf)).merge
-    }
+          Option.when(hit)("appended rows matching the delete predicate")
+        })
     // ---- METADATA-ONLY FAST PATH: a predicate over partition columns
     // alone is CONSTANT within every file, so the matched partitions'
     // files leave the live set BY REFERENCE — zero rewrite I/O, and
@@ -5513,22 +5405,15 @@ object ManifestLake {
         val candidates =
           manifest.files.filter(f => matched.contains(partDirOf(f.path)))
         if (candidates.isEmpty) return v // no partition matches: table is the result
-        val newV = v + 1
-        val (relCdf, cdfCleanup) =
-          if (!changeFeed) (None, Seq.empty[Path])
-          else {
-            // the feed still serves the EXACT dropped rows — one read
-            // of the dropped files, staged under a unique commit dir
-            // that holds nothing but the change files
-            val commitDir = stagingDir(root, newV)
-            val cdfP = new Path(commitDir, CdfDir)
-            readFileSlice(spark, path, manifest, candidates)
-              .withColumn(ChangeTypeCol, lit("delete"))
-              .write.mode(SaveMode.Overwrite).parquet(cdfP.toString)
-            (Some(relToRoot(fs, root, cdfP)), Seq(commitDir))
-          }
-        return publishDelete(candidates, Seq.empty, relCdf, cdfCleanup,
-          partitionOnly = true)
+        // the feed still serves the EXACT dropped rows — one read of the
+        // dropped files, staged under a unique commit dir that holds
+        // nothing but the change files
+        val commitDir = stagingDir(root, v + 1)
+        val relCdf = stampChanges(d, manifest, commitDir, Option.when(changeFeed)(
+          readFileSliceLogical(spark, path, manifest, candidates)
+            .withColumn(ChangeTypeCol, lit("delete"))))
+        return publishTouched(d, touched(candidates, partitionOnly = true), Seq.empty,
+          Seq(commitDir), relCdf).merge
       case None => () // references data columns: the rewrite path below
     }
     // which files actually CONTAIN matches
@@ -5583,74 +5468,33 @@ object ManifestLake {
           if (f.rows.contains(newCount)) None
           else Some(f.copy(dv = Some(relDv), dvRows = Some(newCount)))
         }
-        val relCdf =
-          if (!changeFeed) None
-          else {
-            val cdfP = new Path(commitDir, CdfDir)
-            val goneL = matched.drop("__dv_fp", "__dv_ri")
-            val phys =
-              if (manifest.colMap.isEmpty && manifest.fieldMap.isEmpty) goneL
-              else goneL.select(physicalProjection(manifest): _*)
-            phys.withColumn(ChangeTypeCol, lit("delete"))
-              .write.mode(SaveMode.Overwrite).parquet(cdfP.toString)
-            Some(relToRoot(fs, root, cdfP))
-          }
-        return publishDelete(candidates, updated, relCdf, Seq(commitDir),
-          partitionOnly = false)
+        val relCdf = stampChanges(d, manifest, commitDir, Option.when(changeFeed)(
+          matched.drop("__dv_fp", "__dv_ri").withColumn(ChangeTypeCol, lit("delete"))))
+        return publishTouched(d, touched(candidates, partitionOnly = false), updated,
+          Seq(commitDir), relCdf).merge
       } finally {
         matched.unpersist()
         ()
       }
     }
-    val src = toLogical(readFileSlice(spark, path, manifest, candidates), manifest)
+    // the predicate evaluates on the LOGICAL view; the deleted-row count
+    // rides the keep write as an observed metric (the slice's rows,
+    // before the filter) — no count job
+    val src = readFileSliceLogical(spark, path, manifest, candidates)
     src.persist()
     try {
-      // predicate evaluates on the LOGICAL view; the kept/deleted rows
-      // convert back to physical names for the rewritten files and the
-      // stamped change files (the feed aliases to logical at its own
-      // boundary)
       val hit = coalesce(predicate, lit(false))
-      // the deleted-row count rides the keep write as an observed
-      // metric (the slice's rows, before the filter) — no count job
-      val obs = org.apache.spark.sql.Observation()
-      val keep = fromLogical(src.observe(obs, count(when(hit, lit(1))).as("gone"))
-        .where(!hit), manifest)
-      val gone = fromLogical(src.where(predicate), manifest)
-      val commitDir = stagingDir(root, v + 1)
-      val w = keep.write.mode(SaveMode.Overwrite)
-      val stagedCols = keep.schema.fieldNames.toSet
-      val statKeys =
-        (manifest.files.flatMap(_.stats.keys) ++
-          manifest.files.flatMap(_.nullCounts.keys) ++
-          manifest.files.flatMap(_.valueSets.keys)).distinct
-          .filter(stagedCols.contains)
-      val (withStats, rowsOut) = stageCommit(fs, root, commitDir,
-        if (manifest.partCols.nonEmpty) w.partitionBy(manifest.partCols: _*) else w,
-        schema, statKeys, manifest.bloomCols, manifest.partCols)
-      // row conservation, verified while the commit is invisible — the
-      // input side comes from the matched files' recorded counts (or
-      // their footers), the staged side from the fresh footers, the
-      // deleted side from the observation
-      val rowsIn = (
-        if (candidates.forall(_.rows.isDefined)) candidates.flatMap(_.rows).sum
-        else footerRowCount(fs, root, candidates)) -
-        candidates.flatMap(_.dvRows).sum // masked rows never entered the slice
-      val rowsGone = obsLong(obs, "gone")
-      if (rowsOut + rowsGone != rowsIn) {
-        fs.delete(commitDir, true)
-        throw new IllegalStateException(
+      rewriteTouched(d, touched(candidates, partitionOnly = false), src,
+        Option.when(changeFeed)(src.where(predicate).withColumn(ChangeTypeCol, lit("delete"))),
+        keep = !hit, counts = Seq(count(when(hit, lit(1))).as("gone"))) { (_, rowsOut, observed) =>
+        // row conservation: the matched files' live rows are the kept
+        // (staged) rows plus the deleted (observed) ones
+        val rowsIn = liveRows(fs, root, candidates)
+        val rowsGone = observed("gone")
+        Option.when(rowsOut + rowsGone != rowsIn)(
           s"manifest delete verification failed for $path: $rowsIn rows in " +
             s"rewritten files, $rowsOut kept + $rowsGone deleted — table still at v$v")
-      }
-      val relCdf =
-        if (!changeFeed) None
-        else {
-          val cdfP = new Path(commitDir, CdfDir)
-          gone.withColumn(ChangeTypeCol, lit("delete"))
-            .write.mode(SaveMode.Overwrite).parquet(cdfP.toString)
-          Some(relToRoot(fs, root, cdfP))
-        }
-      publishDelete(candidates, withStats, relCdf, Seq(commitDir), partitionOnly = false)
+      }.merge
     } finally {
       src.unpersist()
       ()
@@ -5676,15 +5520,11 @@ object ManifestLake {
              txn: Option[(String, Long)] = None,
              changeFeed: Boolean = true): Long = {
     require(set.nonEmpty, "UPDATE needs at least one SET assignment")
-    val (fs, root) = fsFor(spark, path)
-    val v = currentVersion(spark, path).getOrElse(
-      throw new IllegalArgumentException(s"no manifested table at $path"))
-    val manifest = readManifest(fs, root, v)
-    if (txn.exists { case (app, b) => manifest.txns.get(app).exists(_ >= b) })
-      return v
-    val schema = manifest.schema.getOrElse(throw new IllegalArgumentException(
-      s"table at $path has a headerless legacy manifest — update needs the " +
-        "recorded schema (run one append or upsert to adopt a header first)"))
+    val d = openDml(spark, path, txn, "update", "update") match {
+      case Left(replayed) => return replayed
+      case Right(opened) => opened
+    }
+    val (v, manifest) = (d.v, d.m)
     val logical = logicalSchemaOf(manifest)
     // assignments may target a top-level column or a field ONE level
     // inside a struct column (`meta.qual = …` — the Delta nested-SET
@@ -5726,13 +5566,10 @@ object ManifestLake {
         (rootL, (fieldL, e))
       }
       .groupBy(_._1).map { case (r, xs) => r -> xs.map(_._2) }
-    Seq(ChangeTypeCol, CommitVersionCol).foreach(r =>
-      require(!schema.fieldNames.contains(r) && !logical.fieldNames.contains(r),
-        s"column name $r is reserved for the change feed's metadata"))
     if (manifest.files.isEmpty) return v
-    val candidates = matchBearingFiles(spark, fs, root, manifest, condition)
+    val candidates = matchBearingFiles(spark, d.fs, d.root, manifest, condition)
     if (candidates.isEmpty) return v
-    val src = toLogical(readFileSlice(spark, path, manifest, candidates), manifest)
+    val src = readFileSliceLogical(spark, path, manifest, candidates)
     src.persist()
     try {
       val hit = coalesce(condition, lit(false))
@@ -5755,86 +5592,30 @@ object ManifestLake {
           }
         }
       }
-      val rewritten = src.select(outCols: _*)
-      // two observation points on the ONE write job: the row/match
-      // counts see the PRE-update frame (the condition references
-      // pre-update values), the CHECK constraints judge the POST-update
-      // projection — evaluating them pre-update would wave through a
-      // SET that writes violating values
-      val consSeq = effectiveConstraints(manifest).toSeq.sortBy(_._1)
-      val obs = org.apache.spark.sql.Observation()
-      val obsPost = org.apache.spark.sql.Observation()
-      val preObserved = src.observe(obs,
-        count(lit(1)).as("rows"), count(when(hit, lit(1))).as("n_upd"))
-      val projected = preObserved.select(outCols: _*)
-      val observed =
-        if (consSeq.isEmpty) projected
-        else {
-          // count(*) rides along — see the merge path: defaulted-to-0
-          // violation counts are only trusted when the observed count
-          // matches the staged footer count
-          val aggs = count(lit(1)).as("n_obs_rows") +:
-            consSeq.map { case (n, e) =>
-              count(when(not(coalesce(expr(e), lit(true))), lit(1))).as(s"viol_$n")
-            }
-          projected.observe(obsPost, aggs.head, aggs.tail: _*)
-        }
-      val commitDir = stagingDir(root, v + 1)
-      val w = fromLogical(observed, manifest).write.mode(SaveMode.Overwrite)
-      val statKeys =
-        (manifest.files.flatMap(_.stats.keys) ++
-          manifest.files.flatMap(_.nullCounts.keys) ++
-          manifest.files.flatMap(_.valueSets.keys)).distinct
-      val (withStats, rowsOut) = stageCommit(fs, root, commitDir,
-        if (manifest.partCols.nonEmpty) w.partitionBy(manifest.partCols: _*) else w,
-        schema, statKeys, manifest.bloomCols, manifest.partCols)
-      val rowsIn = obsLong(obs, "rows")
-      val nUpd = obsLong(obs, "n_upd")
-      if (consSeq.nonEmpty)
-        requireObservedStaged(fs, commitDir, obsLong(obsPost, "n_obs_rows"), rowsOut,
-          s"manifest update observation lost for $path", "constraint", s"table still at v$v")
-      requireNoViolations(fs, commitDir, obsPost, consSeq, path, "updated", v)
-      if (rowsOut != rowsIn) {
-        fs.delete(commitDir, true)
-        throw new IllegalStateException(
-          s"manifest update verification failed for $path: $rowsIn rows in, " +
-            s"$rowsOut staged — table still at v$v")
-      }
-      require(nUpd > 0, "internal: matched files held no matching rows")
-      val relCdf =
-        if (!changeFeed) None
-        else {
-          val pre = src.where(hit).withColumn(ChangeTypeCol, lit("update_preimage"))
-          val postM = src.where(hit).select(outCols: _*)
-            .withColumn(ChangeTypeCol, lit("update_postimage"))
-          val changes = pre.unionByName(postM)
-          val physChanges =
-            if (manifest.colMap.isEmpty && manifest.fieldMap.isEmpty) changes
-            else changes.select(
-              physicalProjection(manifest) :+ col(ChangeTypeCol): _*)
-          val cdfP = new Path(commitDir, CdfDir)
-          physChanges.write.mode(SaveMode.Overwrite).parquet(cdfP.toString)
-          Some(relToRoot(fs, root, cdfP))
-        }
-      // the feed dispatches CDF reads by op — "update" serves like
-      // upsert/delete/merge (see readChangeFeed). OPTIMISTIC publish: a
-      // lost race retries iff every match-bearing file ENTRY is
-      // unchanged at the head and the recorded shape is identical —
-      // updates never conflict with added files (an UPDATE has no
-      // promise about rows that arrived after its snapshot, unlike a
-      // delete), so disjoint appends compose freely.
-      publishOptimistic(spark, fs, root, path, "update", "update", manifest, v + 1,
-        Seq(commitDir), txn, withStats, candidates.map(_.path).toSet) { (headV, head) =>
-        val headSet = head.files.toSet
-        // effectiveConstraints: see the merge guard — a concurrently
-        // added generated column's validation must not be bypassed
-        if (candidates.forall(headSet.contains) &&
-          !shapeMoved(head, manifest, manifest.partCols, constraints = true)) None
-        else Some(s"update of $path lost its race to a commit that touched its " +
+      // the CHECK constraints judge the POST-update projection —
+      // evaluating them pre-update would wave through a SET that writes
+      // violating values; the condition (over pre-update values) rides
+      // along as __hit for the update count. Updates never conflict with
+      // added files: an UPDATE makes no promise about rows that arrived
+      // after its snapshot, unlike a delete, so disjoint appends compose
+      // freely.
+      rewriteTouched(d, Touched("update", candidates, None, Some("updated"),
+        (headV, _) => s"update of $path lost its race to a commit that touched its " +
           "match-bearing files or changed the recorded shape — the " +
           s"staged rewrite was withdrawn; the table is intact at v$headV. " +
-          "Re-run the update against the new head.")
-      }(_.copy(cdf = relCdf)).merge
+          "Re-run the update against the new head."),
+        src.select(outCols :+ hit.as("__hit"): _*),
+        Option.when(changeFeed)(
+          src.where(hit).withColumn(ChangeTypeCol, lit("update_preimage"))
+            .unionByName(src.where(hit).select(outCols: _*)
+              .withColumn(ChangeTypeCol, lit("update_postimage")))),
+        counts = Seq(count(when(col("__hit"), lit(1))).as("n_upd"))) { (_, rowsOut, observed) =>
+        val rowsIn = liveRows(d.fs, d.root, candidates)
+        if (rowsOut != rowsIn)
+          Some(s"manifest update verification failed for $path: $rowsIn rows in, " +
+            s"$rowsOut staged — table still at v$v")
+        else Option.when(observed("n_upd") == 0)("internal: matched files held no matching rows")
+      }.merge
     } finally {
       src.unpersist()
       ()
@@ -7469,16 +7250,10 @@ object ManifestLake {
         case Some(ncm) => src.select(physicalProjection(m, Some(ncm)): _*)
       }
       val w = outPhys.write.mode(SaveMode.Overwrite)
-      val statKeys =
-        (m.files.flatMap(_.stats.keys) ++ m.files.flatMap(_.nullCounts.keys) ++
-          m.files.flatMap(_.valueSets.keys)).distinct
-          .filter(k => m.schema.get.fieldNames.contains(k))
       val (withStats, rowsOut) = stageCommit(fs, root, commitDir,
         if (m.partCols.nonEmpty) w.partitionBy(m.partCols: _*) else w,
-        newSchema, statKeys, m.bloomCols, m.partCols)
-      val rowsIn = (
-        if (m.files.forall(_.rows.isDefined)) m.files.flatMap(_.rows).sum
-        else footerRowCount(fs, root, m.files)) - m.files.flatMap(_.dvRows).sum
+        newSchema, trackedStats(m.files), m.bloomCols, m.partCols)
+      val rowsIn = liveRows(fs, root, m.files)
       if (rowsOut != rowsIn) {
         fs.delete(commitDir, true)
         throw new IllegalStateException(

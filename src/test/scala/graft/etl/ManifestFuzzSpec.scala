@@ -61,7 +61,27 @@ class ManifestFuzzSpec extends AnyFunSuite {
       model = seedRows.toMap
       record()
 
+      // the change feed of commit v, replayed onto the model at v-1:
+      // delete/update_preimage rows leave (each must be a row the model
+      // held), insert/update_postimage rows arrive
+      def replayFeed(v: Long): Map[(String, Long), String] = {
+        val feed = ManifestLake.readChangeFeed(spark, dir, v - 1, v).collect()
+          .map(r => (r.getAs[String]("_change_type"),
+            (r.getAs[String]("part"), r.getAs[Long]("id")) -> r.getAs[String]("payload")))
+        val gone = feed.collect { case (t, kv) if t == "delete" || t == "update_preimage" => kv }
+        val added = feed.collect { case (t, kv) if t == "insert" || t == "update_postimage" => kv }
+        assert(feed.length === gone.length + added.length, s"v$v: unknown change types")
+        gone.foreach { case (k, p) =>
+          assert(history(v - 1).get(k).contains(p), s"v$v: feed removes a row v${v - 1} lacks: $k")
+        }
+        assert(gone.map(_._1).distinct.length === gone.length, s"v$v: a row leaves twice")
+        history(v - 1) -- gone.map(_._1) ++ added
+      }
+      // the ops whose commits change rows and stamp or derive a feed
+      val dataOps = Set(0, 1, 2, 3, 4, 5, 6, 11, 12, 13)
+
       (1 to steps).foreach { step =>
+        val headBefore = ManifestLake.currentVersion(spark, dir).get
         val op = rnd.nextInt(14)
         op match {
           case 0 | 1 | 2 => // append fresh keys
@@ -158,8 +178,13 @@ class ManifestFuzzSpec extends AnyFunSuite {
         // invariant 1: the head always equals the model
         assert(readNow() === model,
           s"seed=$seed step=$step op=$op: head diverged from the model")
+        // invariant 2: a data commit's change feed replays the model
+        val headAfter = ManifestLake.currentVersion(spark, dir).get
+        if (dataOps(op) && headAfter == headBefore + 1)
+          assert(replayFeed(headAfter) === model,
+            s"seed=$seed step=$step op=$op: v$headAfter's change feed does not replay v$headBefore")
       }
-      // invariant 2: every surviving version reads back exactly its
+      // invariant 3: every surviving version reads back exactly its
       // recorded content — chains, masks, and sidecars stayed honest
       // through every vacuum/restore boundary
       val survivors = ManifestLake.versions(spark, dir).map(_._1)

@@ -1481,6 +1481,10 @@ class ManifestLakeSpec extends AnyFunSuite {
     val m = ManifestLake.readManifest(fs, root, 1L)
     assert(m.files.length >= 12 && m.files.forall(_.stats.contains("pos")),
       s"expected a fragmented lake with pos stats, got ${m.files.length} files")
+    // each (chrom, pos_bucket) partition is written by one task: 500
+    // rows at 100 per file
+    assert(m.files.groupBy(f => ManifestLake.partDirOf(f.path)).values.map(_.size).toSet ===
+      Set(5))
     def filesRead(filtered: org.apache.spark.sql.DataFrame): (Long, Long) = {
       val n = filtered.collect().length.toLong
       val scan = filtered.queryExecution.executedPlan.collect {
@@ -1507,6 +1511,42 @@ class ManifestLakeSpec extends AnyFunSuite {
     Lake.writeManifested(spark, extra, dir, replace = false, maxRecordsPerFile = 100)
     assert(ManifestLake.read(spark, dir)
       .where(col("chrom") === "chr2" && col("pos") === 145L).count() === 2)
+  }
+
+  test("writeManifested runs its clustering shuffle at the width AQE coalesces to, not the session's") {
+    import spark.implicits._
+    val dir = freshDir("mlake-genomic-width")
+    val df = (0 until 600).map(i => (s"chr${i % 3 + 1}", (i / 300).toLong, i.toLong, s"e$i"))
+      .toDF("chrom", "pos_bucket", "pos", "entries")
+    val sc = spark.sparkContext
+    val group = s"writeManifested-width-${System.nanoTime}"
+    val saved = spark.conf.getOption("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "200")
+    sc.setJobGroup(group, group)
+    try Lake.writeManifested(spark, df, dir)
+    finally {
+      sc.clearJobGroup()
+      saved match {
+        case Some(w) => spark.conf.set("spark.sql.shuffle.partitions", w)
+        case None => spark.conf.unset("spark.sql.shuffle.partitions")
+      }
+    }
+    // the status store catches up with the listener bus asynchronously
+    val tracker = sc.statusTracker
+    def tasks: Option[Int] = {
+      val jobs = tracker.getJobIdsForGroup(group).toSeq.flatMap(tracker.getJobInfo(_))
+      if (jobs.isEmpty || jobs.exists(_.status != org.apache.spark.JobExecutionStatus.SUCCEEDED))
+        None
+      else Some(jobs.flatMap(_.stageIds).flatMap(tracker.getStageInfo(_))
+        .map(_.numCompletedTasks).sum)
+    }
+    val deadline = System.currentTimeMillis + 30000
+    while (tasks.isEmpty && System.currentTimeMillis < deadline) Thread.sleep(50)
+    // a persisted input would keep the repartition at 200 partitions
+    // (cached plans keep their output partitioning) and run two
+    // 200-task stages for 6 buckets
+    assert(tasks.exists(_ < 50), s"tasks: $tasks")
+    assert(ManifestLake.read(spark, dir).count() === 600)
   }
 
   test("optimistic concurrent appends: racing appenders all land, every row set present") {

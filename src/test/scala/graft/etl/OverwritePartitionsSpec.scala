@@ -60,6 +60,28 @@ class OverwritePartitionsSpec extends AnyFunSuite {
     assert(ManifestLake.read(spark, dir).where(col("id") === 8L).count() === 0)
   }
 
+  test("a batch adding a column named like the change feed's metadata refuses, as upsert does; nothing publishes") {
+    import spark.implicits._
+    val dir = freshDir("mlake-owp-reserved")
+    ManifestLake.write(spark, Seq(("aa", 1L, "a1"), ("bb", 2L, "b2"))
+      .toDF("part", "id", "payload"), dir, Seq("part"))                        // v1
+    val clash = Seq(("aa", 9L, "a9", "x")).toDF("part", "id", "payload", "_change_type")
+    val eUpsert = intercept[IllegalArgumentException] {
+      ManifestLake.upsert(spark, dir, clash, Seq("part"), Seq("part", "id"))
+    }
+    val eOverwrite = intercept[IllegalArgumentException] {
+      ManifestLake.overwritePartitions(spark, dir, clash)
+    }
+    Seq(eUpsert, eOverwrite).foreach(e => assert(
+      e.getMessage.contains("column name _change_type is reserved for the change feed's metadata"),
+      e.getMessage))
+    assert(ManifestLake.currentVersion(spark, dir) === Some(1L))
+    // the table still serves its feed and takes a clean overwrite
+    assert(ManifestLake.overwritePartitions(spark, dir,
+      Seq(("aa", 9L, "a9")).toDF("part", "id", "payload")) === 2L)
+    assert(ManifestLake.readChangeFeed(spark, dir, 1L, 2L).count() === 2)
+  }
+
   test("constraints enforce on the swap; a violating batch is withdrawn whole") {
     import spark.implicits._
     val dir = freshDir("mlake-owp-cons")
