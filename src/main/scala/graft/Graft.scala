@@ -23,19 +23,16 @@ object Graft {
   val catalog: Seq[Op] = Seq(
     // --- reference-parity ETL ---
     Op("etl", "VCF->annotated-lake pipeline (reference 8-arg CLI)", "graft.etl.Main", "q40-q43"),
-    Op("etl", "VCF read: glob, gzip, header filter, provenance", "graft.etl.Vcf.read", "q40, q18"),
+    Op("etl", "VCF read: glob, gzip, header filter, provenance", "graft.etl.Vcf.raw", "q40, q18"),
     Op("etl", "annotation joins: impact/dbSNP/gnomAD/alpha", "graft.etl.Annotations", "q41, q42"),
     Op("etl", "position-bucketed partitioned lake write", "graft.etl.Lake.build/write", "q41, q42"),
     Op("etl", "ingest-status JSON append", "graft.etl.Lake.writeStatus", "q43"),
     // --- lake maintenance ---
-    Op("lake", "fragmentation inventory (rename-swap lake)", "graft.etl.Lake.inventory", "q75"),
-    Op("lake", "crash-safe small-file compaction", "graft.etl.Lake.compact", "q75"),
-    Op("lake", "key-level upsert (merge-into)", "graft.etl.Lake.upsert", "q76"),
     Op("lake", "manifest-committed table: versioned write/read/time travel/restore, txn ledger, file-skipping stats ([min,max], null counts, distinct-value sets)", "graft.etl.ManifestLake.write/read/readVersion/versions/restore/lastCommitted", "q88, q92, q101"),
-    Op("lake", "manifest upsert (untouched partitions carried by reference; PARTITION-DISJOINT upserts race optimistically)", "graft.etl.ManifestLake.upsert", "q89"),
+    Op("lake", "manifest upsert (untouched partitions carried by reference; PARTITION-DISJOINT upserts race optimistically)", "graft.etl.ManifestLake.upsert", "q76, q89"),
     Op("lake", "row-level DELETE: match-bearing-file rewrite, NULL-keep semantics, METADATA-ONLY partition drops", "graft.etl.ManifestLake.delete", "q100"),
     Op("lake", "optimistic concurrent appends (unique staging; losers re-publish by reference)", "graft.etl.ManifestLake.write(replace=false) under race", "q99"),
-    Op("lake", "manifest compact + zero-RPC inventory + vacuum + maintain; compaction loses append races gracefully", "graft.etl.ManifestLake.compact/inventory/vacuum/maintain", "q88, q96"),
+    Op("lake", "manifest compact + zero-RPC inventory + vacuum + maintain; compaction loses append races gracefully", "graft.etl.ManifestLake.compact/inventory/vacuum/maintain", "q75, q88, q96"),
     Op("lake", "graft-manifest data source: format()/SQL temp views/writer API, versionAsOf/timestampAsOf", "spark.read.format(\"graft-manifest\") via graft.etl.ManifestDataSource", "q95"),
     Op("lake", "z-order (Morton) clustering: file skipping on MULTIPLE columns at once", "graft.ops.ZOrder.cluster/zvalue, graft.etl.ManifestLake.compact(zOrderBy)", "q96"),
     Op("lake", "append-only change feed between versions (incremental consumers)", "graft.etl.ManifestLake.readChanges", "q97"),
@@ -65,7 +62,7 @@ object Graft {
     Op("lake", "DV-aware maintenance: rewrite files past maxMaskedFraction (REORG APPLY PURGE analog)", "graft.etl.ManifestLake.maintain/compact", "spec"),
     Op("lake", "nested-column schema evolution at ANY depth, metadata-only: struct columns first-class; nested-field RENAME (dotted-path fieldmap, positional-cast boundary), WIDEN (reader upcast), DROP (physical path retired; re-adds mint fresh fields — dropped data never resurrects), and ADD (typed nulls from old files); non-struct paths refuse typed; nested-ref expressions lock their exact branch", "graft.etl.ManifestLake.renameColumn/widenColumnType/dropColumn/addColumn (dotted targets)", "q135, q138"),
     Op("lake", "NAMED tables via a DSv2 TableCatalog: spark.sql.catalog.<cat>=graft.etl.GraftCatalog + warehouse maps cat.ns.t onto manifest roots — every SQL verb by name, USE for bare names, SHOW TABLES/NAMESPACES, DROP/RENAME TABLE, spark.table() and the full df.writeTo() verb set (append/overwritePartitions/overwrite/create/createOrReplace); name and path spellings address the SAME state", "graft.etl.GraftCatalog (+ GraftCatalogRule via GraftExtensions)", "q136; NamedCatalogSpec"),
-    Op("lake", "in-place adoption of an existing parquet directory (CONVERT TO DELTA idiom): v1 manifest over the files already there — zero data movement; layout-discovered partition columns, declarable value types with round-trip canonicality checks; SQL CONVERT TO GRAFT parquet.`/path`", "graft.etl.ManifestLake.adopt / GraftConvertCommand", "q137; AdoptSpec"),
+    Op("lake", "in-place adoption of an existing parquet directory (CONVERT TO DELTA idiom): v1 manifest over the files already there — zero data movement; layout-discovered partition columns, declarable value types with round-trip canonicality checks; SQL CONVERT TO GRAFT parquet.`/path`", "graft.etl.ManifestLake.adopt / GraftConvertCommand", "q75, q76, q137; AdoptSpec"),
     Op("lake", "live table properties: ALTER TABLE SET/UNSET TBLPROPERTIES flips graft.statsCols/graft.bloomCols on an existing table (metadata-only); SET then ANALYZE makes an undeclared table skippable", "graft.etl.ManifestLake.setTableProperties", "spec"),
     Op("lake", "sharded parquet checkpoints above 1M files: parallel snapshot write + parallel cold parse (10M files: 8.9s cold read), spark.read.parquet-readable file inventory, atomic pointer manifest, vacuum-managed", "graft.etl.ManifestLake (CheckpointShardThreshold)", "spec"),
     Op("lake", "column DEFAULT values: CREATE-time DEFAULT lit + ALTER COLUMN SET/DROP DEFAULT (metadata-only header fact, literal-only, ANSI-validated at declare); INSERT/MERGE column lists omitting the column materialize it, explicit NULL stays NULL", "graft.etl.ManifestLake.setColumnDefault", "q140; ColumnDefaultSpec"),
@@ -84,7 +81,7 @@ object Graft {
     Op("lake", "metadata-only commits never kill a stream: constraint/properties/analyze/metadata-schema commits with an unchanged path set serve an EMPTY diff in both append feeds; a schema backfill (files rewritten) still refuses", "graft.etl.ManifestLake.isEmptyMetadataDiff", "ManifestStreamSourceSpec"),
     Op("lake", "reader feature gating: #requires <feature> header facts name what a manifest depends on for correct row visibility; an unimplemented required feature refuses typed (UnsupportedTableFeatureException) at the parse chokepoint every read path shares — batch, SQL, streaming, CDC, writers; advisory unknown directives stay ignorable; features are sticky (publish inherits — no commit path can drop one silently), deletion vectors auto-stamp, clones carry", "graft.etl.ManifestLake (SupportedReaderFeatures)", "FeatureGateSpec"),
     Op("lake", "ALTER TABLE t DROP FEATURE '<name>': remove a provably-unused required feature so older readers regain the table — refuses while evidence remains (live DV masks need REORG APPLY (PURGE) first), the publish-time auto-stamp outruns any drop, historical versions keep their own stamps", "graft.etl.ManifestLake.dropFeature", "FeatureGateSpec"),
-    Op("lake", "write-time bin packing (optimizeWrite/autoCompact idiom): opt-in graft.autoCompact.targetFileBytes/.minNumFiles TBLPROPERTIES — after an append/upsert/COPY commit, partitions holding minNumFiles files under the target get their SMALL files packed as a follow-on commit (right-sized files never rewritten: bounded write amplification); failed or raced packs defer to the next write", "graft.etl.ManifestLake.maybeAutoCompact", "q146; AutoCompactSpec"),
+    Op("lake", "write-time bin packing (optimizeWrite/autoCompact idiom): opt-in graft.autoCompact.targetFileBytes/.minNumFiles TBLPROPERTIES — after an append/upsert/COPY commit, partitions holding minNumFiles files under the target get their SMALL files packed as a follow-on commit (right-sized files never rewritten: bounded write amplification); failed or raced packs defer to the next write", "graft.etl.ManifestLake.setTableProperties (autoCompact properties)", "q146; AutoCompactSpec"),
     Op("stream", "streaming BY NAME: readStream.table(\"graft.ns.t\") onto the manifest source (checkpoint-interchangeable with the path spelling, readChangeFeed via options) and writeStream.format(\"graft-manifest\").toTable onto the exactly-once sink via the V1-fallback seam", "graft.etl.GraftNamedTable + GraftCatalogRule", "NamedStreamingSpec"),
     Op("stream", "streaming CDC apply: foreachBatch conditional merge, txn-ledger exactly-once across restart", "graft.streaming.EventStreams.manifestMergeSink", "spec"),
     Op("stream", "streaming partition-snapshot sink: each batch swaps exactly its partitions atomically (periodic dimension refresh shape)", "graft.streaming.EventStreams.manifestPartitionOverwriteSink", "spec"),
@@ -161,7 +158,6 @@ object Graft {
     Op("streaming", "TTL-bounded streaming dedup (vs corpus / by id)", "graft.streaming.EventStreams.streamDedupAgainstCorpus/dedupByEventId", "spec"),
     Op("multimodal", "perceptual image hash + cross-modal near-dup join (aHash bits, banded hamming reuse)", "graft.ops.Multimodal.perceptualHash/imageNearDups", "q112"),
     Op("corpus", "token-budget mixture: per-stratum greedy md5-priority prefix to a token budget", "graft.ops.CorpusOps.mixToTokenBudgets", "q111"),
-    Op("streaming", "keyed upsert sink (rename-swap lake)", "graft.streaming.EventStreams.upsertSink", "spec"),
     Op("streaming", "manifest-committed upsert sink: exactly-once txn ledger + auto-maintenance", "graft.streaming.EventStreams.manifestUpsertSink", "spec"),
     Op("streaming", "append-only manifest sink (log streams; exactly-once)", "graft.streaming.EventStreams.manifestAppendSink", "spec"),
     Op("streaming", "manifest lake as a STREAMING SOURCE: version offsets, snapshot + verified appends, checkpointed restart, ignoreNonAppend, maxFiles/BytesPerTrigger rate limits", "spark.readStream.format(\"graft-manifest\") via graft.streaming.ManifestStreamSource", "spec"),

@@ -565,9 +565,13 @@ object Profile {
         }
         val tScan = wall { agg(ManifestLake.read(spark, dir)) }
         // the replaced shape, reconstructed: one read per commit dir,
-        // left-deep unionByName (what every read used to plan)
+        // left-deep unionByName (what every read used to plan); a
+        // commit dir is the whole `data/v<N>-<token>` segment
         val byCommit = ManifestLake.read(spark, dir).inputFiles.toSeq
-          .groupBy(f => f.substring(0, f.indexOf("/data/v") + 13)).toSeq.sortBy(_._1)
+          .groupBy { f =>
+            val seg = f.indexOf("/data/v") + "/data/".length
+            f.substring(0, f.indexOf('/', seg))
+          }.toSeq.sortBy(_._1)
         val tUnion = wall {
           agg(byCommit.map { case (commitDir, fls) =>
             spark.read.option("basePath", commitDir).parquet(fls: _*)

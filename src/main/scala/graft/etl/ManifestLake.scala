@@ -7,11 +7,17 @@ import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Row, SaveMode, 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
 
-/** Manifest-committed lake — the OBJECT-STORE-NATIVE commit path that
-  * [[Lake.compact]]/[[Lake.upsert]] deliberately do not provide (their
-  * rename-swap contract holds on HDFS/ABFS-HNS/GCS; see the storage
-  * contract at Lake.compact). On S3-class stores rename is copy+delete,
-  * so this layout never moves a data file at all:
+/** Manifest-committed lake — the one maintenance path for the lake,
+  * and a commit protocol that holds on every store. Rewriting a hive
+  * directory in place and swapping files in by rename is safe only where
+  * `FileSystem.rename` is a metadata operation (HDFS, local disks,
+  * ABFS with HNS, GCS); on S3-class stores rename is a client-side
+  * copy+delete, and a process dying mid-copy can leave a partition
+  * holding both old and new copies of a row. This layout never moves a
+  * data file at all, so its safety rests on no rename of data. A hive
+  * lake written by [[Lake.write]] joins it through [[adopt]] (no data
+  * movement) and is then maintained by [[compact]], [[upsert]] and
+  * the other verbs:
   *
   *   - data files are written ONCE, under a per-commit directory
   *     `data/v<N>/…` (hive-partitioned inside it), and stay there for
@@ -59,12 +65,11 @@ import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, 
   * leaves the table exactly at the previous version plus some
   * unreferenced files that [[vacuum]] later deletes. There is no
   * window where a reader can observe partial, duplicate, or missing
-  * rows. Concurrency contract: SINGLE WRITER (same as Lake's
-  * maintenance ops) — but the contract is CHECKED at the only point
-  * two writers can collide: both compute the same next version, and
-  * the no-overwrite publish makes the loser fail loudly with the
-  * table still readable at every version. Vacuum shares the writer
-  * lock (see [[vacuum]]).
+  * rows. Concurrency contract: SINGLE WRITER — but the contract is
+  * CHECKED at the only point two writers can collide: both compute
+  * the same next version, and the no-overwrite publish makes the
+  * loser fail loudly with the table still readable at every version.
+  * Vacuum shares the writer lock (see [[vacuum]]).
   *
   * Scale notes: the manifest lists every live file — fine into the
   * low millions of files as a flat list (a 100-byte line per file);
@@ -2875,12 +2880,11 @@ object ManifestLake {
     val aggs = count(lit(1)).as("rows") +: violationCounts(consSeq)
     val w = dfP.observe(obs, aggs.head, aggs.tail: _*)
       .write.mode(SaveMode.Overwrite)
-    // verify the staged copy while it is still invisible — same
-    // verify-before-commit stance as Lake.compact, minus any window:
-    // a failure here aborts with the table untouched at v-1. The staged
-    // side is summed from parquet FOOTERS (metadata-only, no job), and
-    // the stats ride the same footers, so an append costs exactly ONE
-    // Spark job end to end.
+    // verify the staged copy while it is still invisible
+    // (verify-before-commit): a failure here aborts with the table
+    // untouched at v-1. The staged side is summed from parquet
+    // FOOTERS (metadata-only, no job), and the stats ride the same
+    // footers, so an append costs exactly ONE Spark job end to end.
     val (withStats, rowsOut) = stageCommit(fs, root, commitDir,
       if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w,
       tableSchema, statsColsOn(base0), bloomColsOn(base0), partitionCols)
@@ -3733,11 +3737,11 @@ object ManifestLake {
       .drop("__dv_fp", "__dv_ri")
   }
 
-  /** Metadata-only fragmentation inventory — [[Lake.inventory]]'s twin
-    * for manifested tables, except it costs ONE manifest read and an
-    * in-memory fold: no filesystem listing, no per-file stats. One row
-    * per live partition with file count, bytes, largest file, and
-    * whether [[compact]] would rewrite it at `targetBytes`.
+  /** Metadata-only fragmentation inventory — the signal a maintenance
+    * scheduler polls to decide WHEN to compact. It costs ONE manifest
+    * read and an in-memory fold: no filesystem listing, no per-file
+    * stats. One row per live partition with file count, bytes, largest
+    * file, and whether [[compact]] would rewrite it at `targetBytes`.
     */
   def inventory(spark: SparkSession, path: String,
                 targetBytes: Long = 128L * 1024 * 1024): DataFrame = {
@@ -3768,8 +3772,8 @@ object ManifestLake {
     * [[vacuum]]. Detection reads ZERO file metadata: sizes live in the
     * manifest, so deciding what to compact is a pure in-memory fold
     * over it — the manifest IS the listing, which is the other thing
-    * this layout buys at 720k-leaf scale (the rename-swap lake's
-    * detection pass lists every partition per poll).
+    * this layout buys at 720k-leaf scale (a listing-based detection
+    * pass would list every partition per poll).
     *
     * `clusterBy` range-clusters rewritten files on ONE sort key
     * (perfect skipping on that key); `zOrderBy` instead lays rows along
@@ -3993,10 +3997,10 @@ object ManifestLake {
         else readFileSlice(spark, path, manifest, fls)
           .drop(manifest.partCols: _*)
       val cluster = clusterEff.filter(src.columns.contains).map(col)
-      // same file-count-target stance as Lake.compact: when the scan
-      // bin-packs below the target, coalesce can only undershoot — range-
-      // repartition on the cluster key (free row-group clustering) or
-      // round-robin when the table has no sort key. zOrderBy always
+      // file-count target: when the scan bin-packs below the target,
+      // coalesce can only undershoot — range-repartition on the
+      // cluster key (free row-group clustering) or round-robin when
+      // the table has no sort key. zOrderBy always
       // range-repartitions on the z-value (curve-contiguous files are
       // the entire point; a coalesce would interleave curve segments)
       val sorted =
@@ -4060,8 +4064,8 @@ object ManifestLake {
   }
 
   /** Key-level upsert (merge-into) under manifest commit — the
-    * object-store twin of [[Lake.upsert]]: rows in `updates` replace
-    * live rows with the same key, new keys append, and only the
+    * operation an append-only ingest can't express: rows in `updates`
+    * replace live rows with the same key, new keys append, and only the
     * AFFECTED partitions' data is rewritten — untouched partitions'
     * files carry into the new manifest by reference, zero I/O. The
     * merge becomes visible atomically when the manifest publishes; a
@@ -4072,8 +4076,8 @@ object ManifestLake {
     * values rendered through Spark's own partition-path escaping, so
     * the dir names match what partitioned writes produced. `updates`
     * must be key-unique, its partition values non-null, and its shape
-    * must match the recorded table schema (all checked — same
-    * loud-failure stance as Lake.upsert).
+    * must match the recorded table schema (all checked loudly — a
+    * batch with two rows for one key has no deterministic winner).
     *
     * PARTITION-DISJOINT upserts may run CONCURRENTLY: an upsert that
     * loses the version race re-reads the head and, when the winner(s)

@@ -4,6 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 import graft.etl.{Fixtures, Lake, ManifestLake, Vcf}
 
@@ -310,13 +311,14 @@ object EtlGate {
            |FROM vcf_raw""".stripMargin)),
 
     // Lake compaction under the oracle: write a many-tiny-files
-    // two-level lake from `documents` (unlike the fixture-driven gates
-    // above, this one DOES read the sf dir), run the crash-safe
-    // compact, and hash the read-back content against DuckDB computing
-    // the same aggregates from the source table directly — compaction
-    // must be invisible to every reader. The order-independent md5
-    // checksum over text pins row content, not just counts;
-    // CompactionSpec separately pins the file-count mechanics.
+    // two-level hive lake from `documents` (unlike the fixture-driven
+    // gates above, this one DOES read the sf dir), adopt it as a
+    // manifest table in place, compact it, and hash the read-back
+    // content against DuckDB computing the same aggregates from the
+    // source table directly — compaction must be invisible to every
+    // reader. The order-independent md5 checksum over text pins row
+    // content, not just counts; CompactionSpec separately pins the
+    // file-count mechanics.
     Q(
       "q75_compact_roundtrip",
       (s, dir) => {
@@ -326,10 +328,11 @@ object EtlGate {
           .repartition(col("lang"), col("pb"))
           .write.option("maxRecordsPerFile", 10)
           .partitionBy("lang", "pb").parquet(out)
-        val report = Lake.compact(s, out, targetBytes = Long.MaxValue,
+        ManifestLake.adopt(s, out, partitionTypes = Map("pb" -> LongType))
+        val report = ManifestLake.compact(s, out, targetBytes = Long.MaxValue,
           clusterBy = Seq("doc_id"))
         require(report.nonEmpty, "compaction gate must actually compact")
-        s.read.parquet(out)
+        ManifestLake.read(s, out)
           .groupBy(col("lang"))
           .agg(count(lit(1)).as("n_docs"),
             sum(col("n_chars")).as("sum_chars"),
@@ -342,12 +345,13 @@ object EtlGate {
              |  CAST(sum(('0x' || substr(md5(text), 1, 8))::BIGINT) AS BIGINT) AS content_sum
              |FROM documents GROUP BY lang ORDER BY lang""".stripMargin)),
 
-    // Lake upsert under the oracle: build a lake from `documents`,
-    // merge a batch that rewrites every 10th document (n_chars → -1)
-    // and adds a shifted-id copy of every 100th, then hash the merged
-    // read-back against DuckDB replaying the merge relationally. Pins
-    // update-wins collision semantics, new-key appends, and untouched
-    // rows — through the real partition-pruned rename-swap path.
+    // Lake upsert under the oracle: build a hive lake from `documents`,
+    // adopt it as a manifest table, merge a batch that rewrites every
+    // 10th document (n_chars → -1) and adds a shifted-id copy of every
+    // 100th, then hash the merged read-back against DuckDB replaying
+    // the merge relationally. Pins update-wins collision semantics,
+    // new-key appends, and untouched rows — through the manifest
+    // upsert on an adopted hive lake.
     Q(
       "q76_upsert_roundtrip",
       (s, dir) => {
@@ -363,10 +367,11 @@ object EtlGate {
               .withColumn("doc_id", col("doc_id") + lit(1000000L))
               .withColumn("pb", pmod(col("doc_id"), lit(3L)))
               .withColumn("n_chars", lit(-1L)))
-        Lake.upsert(s, out, updates,
+        ManifestLake.adopt(s, out, partitionTypes = Map("pb" -> LongType))
+        ManifestLake.upsert(s, out, updates,
           partitionCols = Seq("lang", "pb"),
           keyCols = Seq("lang", "pb", "doc_id"))
-        s.read.parquet(out)
+        ManifestLake.read(s, out)
           .groupBy(col("lang"))
           .agg(count(lit(1)).as("n_docs"),
             sum(col("n_chars")).cast("long").as("sum_chars"),

@@ -202,46 +202,7 @@ object EventStreams {
     }
   }
 
-  /** Continuous lake maintenance: every micro-batch key-level-upserted
-    * into a hive-partitioned lake via foreachBatch — the streaming
-    * front door to `Lake.upsert`, turning the batch merge-into
-    * operator into an always-on ingest path (re-delivered keys
-    * overwrite, new keys append, untouched partitions never rewritten).
-    *
-    * `versionCol` resolves WITHIN-batch key collisions (retransmitted
-    * rows in one trigger): the row with the max version wins, ties
-    * broken by the full row for determinism. Without it, a batch
-    * carrying duplicate keys fails `Lake.upsert`'s key-unique
-    * precondition by design — silent nondeterministic winners are
-    * worse than a loud retry.
-    *
-    * Exactly-once note: foreachBatch gives at-least-once batch
-    * delivery; the upsert itself is idempotent for identical replays
-    * (same keys, same rows → same lake state), which is the practical
-    * exactly-once a keyed sink needs.
-    */
-  def upsertSink(stream: DataFrame, lakePath: String,
-                 partitionCols: Seq[String], keyCols: Seq[String],
-                 versionCol: Option[String] = None)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream.foreachBatch {
-      (batch: DataFrame, _: Long) =>
-        val unique = dedupWithinBatch(batch, keyCols, versionCol)
-        // persist for the trigger's lifetime: the isEmpty probe plus
-        // Lake.upsert's own actions (key-unique count, merge write,
-        // verification joins) evaluate this frame ~6 times — without
-        // the pin each action would replay the dedup aggregation over
-        // the micro-batch
-        unique.persist()
-        try {
-          if (!unique.isEmpty)
-            graft.etl.Lake.upsert(batch.sparkSession, lakePath, unique,
-              partitionCols, keyCols)
-        } finally unique.unpersist()
-        ()
-    }
-
-  /** Within-batch key-collision resolution shared by the upsert sinks:
+  /** Within-batch key-collision resolution shared by the keyed manifest sinks:
     * with a `versionCol`, the row with the max version wins, ties
     * broken by the full row for determinism; without one, the batch
     * passes through and duplicate keys fail the upsert's key-unique
@@ -259,11 +220,15 @@ object EventStreams {
       case None => batch
     }
 
-  /** [[upsertSink]]'s object-store twin: every micro-batch commits
-    * through [[graft.etl.ManifestLake.upsert]] instead of the
-    * rename-swap lake — each trigger becomes ONE manifest version
-    * (immutable data files + atomic manifest publish), so this is the
-    * sink for S3-class stores where rename is copy+delete. Streaming
+  /** The keyed stream sink: every micro-batch commits through
+    * [[graft.etl.ManifestLake.upsert]] — re-delivered keys overwrite,
+    * new keys append, untouched partitions are carried by reference —
+    * and each trigger becomes ONE manifest version (immutable data
+    * files + atomic manifest publish), so it needs no rename to be a
+    * metadata-only operation and runs on S3-class stores. A hive lake
+    * written by [[graft.etl.Lake.write]] takes this sink after one
+    * [[graft.etl.ManifestLake.adopt]]. `versionCol` resolves
+    * within-batch key collisions (`dedupWithinBatch`). Streaming
     * is exactly the workload that accretes commits (one per trigger);
     * the manifest read path stays O(1) in commit count by design, and
     * periodic `ManifestLake.compact`/`vacuum` runs — from the SAME

@@ -2,83 +2,98 @@ package graft.etl
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Lake.compact: collapses fragmented partition directories, preserves
-  * every row, and leaves well-compacted partitions untouched.
+/** ManifestLake.compact and inventory on hive lakes adopted in place —
+  * the lake's one maintenance path: fragmented partitions collapse,
+  * every row is preserved, well-compacted partitions are left alone,
+  * and a compaction that fails before publish changes nothing.
   */
 class CompactionSpec extends AnyFunSuite {
   private lazy val spark = graft.TestSpark.spark
 
+  /** Write `df` as a plain hive tree under a fresh temp dir and adopt
+    * it as manifest v1.
+    */
+  private def adoptedLake(prefix: String, df: DataFrame, partitionBy: Seq[String] = Seq.empty,
+                          types: Map[String, DataType] = Map.empty): String = {
+    val dir = Files.createTempDirectory(prefix).toString + "/lake"
+    if (partitionBy.isEmpty) df.write.parquet(dir)
+    else df.write.partitionBy(partitionBy: _*).parquet(dir)
+    assert(ManifestLake.adopt(spark, dir, partitionTypes = types) === 1L)
+    dir
+  }
+
+  private def rows(dir: String): Seq[Row] =
+    ManifestLake.read(spark, dir).orderBy(col("pos")).collect().toSeq
+
+  /** partition dir → live file count, from the manifest. */
+  private def fileCounts(dir: String): Map[String, Long] =
+    ManifestLake.inventory(spark, dir).collect()
+      .map(r => r.getAs[String]("partition_dir") -> r.getAs[Long]("n_files")).toMap
+
+  private def liveFiles(dir: String): Seq[ManifestLake.LiveFile] =
+    ManifestLake.liveFilesAt(spark, dir, ManifestLake.currentVersion(spark, dir).get)
+
+  private val bucketTypes = Map("pos_bucket" -> LongType)
+
   test("compact merges fragmented partitions and preserves data") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("compact").toString + "/lake"
     val df = (0 until 400).map { i =>
       (s"chr${i % 2 + 1}", (i % 4).toLong, i, s"payload$i")
     }.toDF("chrom", "pos_bucket", "pos", "payload")
     // 6-way repartition before partitionBy → up to 6 files per directory
-    df.repartition(6).write.partitionBy("chrom", "pos_bucket").parquet(dir)
+    val dir = adoptedLake("compact", df.repartition(6), Seq("chrom", "pos_bucket"), bucketTypes)
 
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def fileCounts: Map[String, Int] = fs.listStatus(new org.apache.hadoop.fs.Path(dir))
-      .filter(_.isDirectory).flatMap(c => fs.listStatus(c.getPath).filter(_.isDirectory))
-      .map(p => p.getPath.toString ->
-        fs.listStatus(p.getPath).count(f => f.isFile && f.getPath.getName.endsWith(".parquet")))
-      .toMap
-    val before = fileCounts
+    val before = fileCounts(dir)
     assert(before.values.forall(_ > 1), s"fixture should be fragmented: $before")
-    val expected = spark.read.parquet(dir).orderBy(col("pos")).collect().toSeq
+    val expected = rows(dir)
 
-    val report = Lake.compact(spark, dir, targetBytes = 1L << 30)
+    val report = ManifestLake.compact(spark, dir, targetBytes = 1L << 30, clusterBy = Seq("pos"))
     assert(report.size === before.size) // every partition was fragmented
     assert(report.forall { case (_, b, a) => b > 1 && a === 1 })
-    val after = fileCounts
-    assert(after.values.forall(_ === 1))
-    assert(spark.read.parquet(dir).orderBy(col("pos")).collect().toSeq === expected)
+    assert(fileCounts(dir).values.forall(_ === 1))
+    assert(rows(dir) === expected)
 
     // idempotent: a second pass finds nothing to do
-    assert(Lake.compact(spark, dir, targetBytes = 1L << 30).isEmpty)
+    assert(ManifestLake.compact(spark, dir, targetBytes = 1L << 30).isEmpty)
   }
 
   test("compact hits the file-count target even when the scan bin-packs tiny files") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("compact-target").toString + "/lake"
     // one partition directory, 12 tiny files — Spark's scan bin-packs
-    // these into far fewer splits than the byte-derived target, which
-    // the old coalesce-only rewrite silently undershot
-    (0 until 1200).map(i => ("chr1", 0L, i, s"payload$i" * 40))
-      .toDF("chrom", "pos_bucket", "pos", "payload")
-      .repartition(12).write.partitionBy("chrom", "pos_bucket").parquet(dir)
+    // these into far fewer splits than the byte-derived target, which a
+    // coalesce-only rewrite silently undershoots
+    val dir = adoptedLake("compact-target",
+      (0 until 1200).map(i => ("chr1", 0L, i, s"payload$i" * 40))
+        .toDF("chrom", "pos_bucket", "pos", "payload").repartition(12),
+      Seq("chrom", "pos_bucket"), bucketTypes)
 
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val pDir = fs.listStatus(new org.apache.hadoop.fs.Path(dir))
-      .filter(_.isDirectory).flatMap(c => fs.listStatus(c.getPath).filter(_.isDirectory))
-      .head.getPath
-    val bytes = fs.listStatus(pDir)
-      .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet")).map(_.getLen).sum
+    val bytes = liveFiles(dir).map(_.bytes).sum
     // pick targetBytes so want is ~4 (strictly between 1 and filesBefore)
     val target = bytes / 4 + 1
     val want = math.ceil(bytes.toDouble / target).toInt
     assert(want > 1 && want < 12, s"fixture should target a middle count, got $want")
 
-    val expected = spark.read.parquet(dir).orderBy(col("pos")).collect().toSeq
-    val report = Lake.compact(spark, dir, targetBytes = target)
+    val expected = rows(dir)
+    val report = ManifestLake.compact(spark, dir, targetBytes = target, clusterBy = Seq("pos"))
     assert(report.size === 1)
     assert(report.head._3 === want, s"filesAfter should equal the target $want: $report")
-    assert(spark.read.parquet(dir).orderBy(col("pos")).collect().toSeq === expected)
+    assert(liveFiles(dir).length === want)
+    assert(rows(dir) === expected)
   }
 
   test("inventory reports fragmentation metadata-only and agrees with compact") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("inventory").toString + "/lake"
-    (0 until 400).map(i => (s"chr${i % 2 + 1}", (i % 4).toLong, i, s"payload$i"))
-      .toDF("chrom", "pos_bucket", "pos", "payload")
-      .repartition(6).write.partitionBy("chrom", "pos_bucket").parquet(dir)
+    val dir = adoptedLake("inventory",
+      (0 until 400).map(i => (s"chr${i % 2 + 1}", (i % 4).toLong, i, s"payload$i"))
+        .toDF("chrom", "pos_bucket", "pos", "payload").repartition(6),
+      Seq("chrom", "pos_bucket"), bucketTypes)
 
-    val inv = Lake.inventory(spark, dir, targetBytes = 1L << 30).collect()
+    val inv = ManifestLake.inventory(spark, dir, targetBytes = 1L << 30).collect()
     assert(inv.length === 4) // 2 chroms x 2 buckets
     assert(inv.forall(_.getAs[Long]("n_files") > 1))
     assert(inv.forall(_.getAs[Boolean]("needs_compaction")))
@@ -86,123 +101,71 @@ class CompactionSpec extends AnyFunSuite {
 
     // compact exactly the partitions inventory flagged; a fresh
     // inventory then reports nothing left to do
-    val report = Lake.compact(spark, dir, targetBytes = 1L << 30)
+    val report = ManifestLake.compact(spark, dir, targetBytes = 1L << 30)
     assert(report.map(_._1).toSet ===
       inv.map(_.getAs[String]("partition_dir")).toSet)
-    val after = Lake.inventory(spark, dir, targetBytes = 1L << 30).collect()
+    val after = ManifestLake.inventory(spark, dir, targetBytes = 1L << 30).collect()
     assert(after.forall(r => !r.getAs[Boolean]("needs_compaction")))
     assert(after.forall(_.getAs[Long]("n_files") === 1))
     // missing lake → empty inventory, not an error
-    assert(Lake.inventory(spark, dir + "-nope").isEmpty)
-  }
-
-  test("partitionLeaves: parallel walk equals a serial reference walk on a 300-leaf tree") {
-    import org.apache.hadoop.fs.Path
-    val dir = Files.createTempDirectory("leafwalk").toString + "/lake"
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // 12 x 25 = 300 leaves, built directly on the filesystem — the walk
-    // is metadata-only, so the fixture needs structure, not data
-    val leaves = for { a <- 0 until 12; b <- 0 until 25 }
-      yield new Path(root, s"a=$a/b=$b")
-    leaves.foreach { p =>
-      fs.mkdirs(p)
-      fs.createNewFile(new Path(p, "part-00000.parquet"))
-    }
-    // hidden maintenance dirs and their contents must stay invisible
-    fs.mkdirs(new Path(root, ".compact_tmp/x=1"))
-    fs.mkdirs(new Path(root, "a=0/.upsert_old"))
-    // the pre-parallelization walk, verbatim, as the reference
-    def serial(p: Path): Seq[Path] = {
-      val kids = fs.listStatus(p)
-        .filter(s => s.isDirectory && s.getPath.getName.contains("="))
-      if (kids.isEmpty) Seq(p) else kids.toSeq.flatMap(k => serial(k.getPath))
-    }
-    val expected = serial(root).map(_.toString).sorted
-    assert(expected.length === 300)
-    val found = Lake.inventory(spark, dir).collect()
-      .map(_.getAs[String]("partition_dir")).toSeq.sorted
-    assert(found === expected)
+    assert(ManifestLake.inventory(spark, dir + "-nope").isEmpty)
   }
 
   test("compact discovers partitions at any depth — 1-level, 3-level, and unpartitioned") {
     import spark.implicits._
-    val fsConf = spark.sparkContext.hadoopConfiguration
-    def parquetCount(p: String): Int = {
-      val path = new org.apache.hadoop.fs.Path(p)
-      val fs = path.getFileSystem(fsConf)
-      def walk(q: org.apache.hadoop.fs.Path): Int =
-        fs.listStatus(q).map { s =>
-          if (s.isDirectory && !s.getPath.getName.startsWith(".")) walk(s.getPath)
-          else if (s.isFile && s.getPath.getName.endsWith(".parquet")) 1
-          else 0
-        }.sum
-      walk(path)
-    }
     val df = (0 until 200).map(i => (s"chr${i % 2 + 1}", (i % 2).toLong, i, s"p$i"))
       .toDF("chrom", "pos_bucket", "pos", "payload")
 
-    // 1-level layout — the old walker expected exactly two levels and
-    // silently returned no work here
-    val one = Files.createTempDirectory("compact-1l").toString + "/lake"
-    df.repartition(5).write.partitionBy("chrom").parquet(one)
-    val expected1 = spark.read.parquet(one).orderBy(col("pos")).collect().toSeq
-    val r1 = Lake.compact(spark, one, targetBytes = 1L << 30)
+    // 1-level layout
+    val one = adoptedLake("compact-1l", df.repartition(5), Seq("chrom"))
+    val expected1 = rows(one)
+    val r1 = ManifestLake.compact(spark, one, targetBytes = 1L << 30)
     assert(r1.nonEmpty && r1.forall { case (_, b, a) => b > 1 && a === 1 })
-    assert(spark.read.parquet(one).orderBy(col("pos")).collect().toSeq === expected1)
+    assert(rows(one) === expected1)
 
     // 3-level layout
-    val three = Files.createTempDirectory("compact-3l").toString + "/lake"
-    df.withColumn("third", col("pos") % 2)
-      .repartition(5).write.partitionBy("chrom", "pos_bucket", "third").parquet(three)
-    val expected3 = spark.read.parquet(three).orderBy(col("pos")).collect().toSeq
-    val r3 = Lake.compact(spark, three, targetBytes = 1L << 30)
+    val three = adoptedLake("compact-3l",
+      df.withColumn("third", col("pos") % 2).repartition(5),
+      Seq("chrom", "pos_bucket", "third"), bucketTypes + ("third" -> IntegerType))
+    val expected3 = rows(three)
+    val r3 = ManifestLake.compact(spark, three, targetBytes = 1L << 30)
     assert(r3.nonEmpty && r3.forall { case (_, b, a) => b > 1 && a === 1 })
-    assert(spark.read.parquet(three).orderBy(col("pos")).collect().toSeq === expected3)
+    assert(rows(three) === expected3)
 
-    // unpartitioned table — the root itself is the single leaf
-    val flat = Files.createTempDirectory("compact-0l").toString + "/lake"
-    df.repartition(5).write.parquet(flat)
-    assert(parquetCount(flat) === 5)
-    val expected0 = spark.read.parquet(flat).orderBy(col("pos")).collect().toSeq
-    val r0 = Lake.compact(spark, flat, targetBytes = 1L << 30, clusterBy = Seq("pos"))
+    // unpartitioned table — the root itself is the single partition
+    val flat = adoptedLake("compact-0l", df.repartition(5))
+    assert(liveFiles(flat).length === 5)
+    val expected0 = rows(flat)
+    val r0 = ManifestLake.compact(spark, flat, targetBytes = 1L << 30, clusterBy = Seq("pos"))
     assert(r0.size === 1 && r0.head._2 === 5 && r0.head._3 === 1)
-    assert(parquetCount(flat) === 1)
-    assert(spark.read.parquet(flat).orderBy(col("pos")).collect().toSeq === expected0)
+    assert(liveFiles(flat).length === 1)
+    assert(rows(flat) === expected0)
   }
 
   test("a failure after write but before swap leaves the originals fully intact") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("compact-crash").toString + "/lake"
-    (0 until 300).map(i => ("chr1", 0L, i, s"payload$i"))
-      .toDF("chrom", "pos_bucket", "pos", "payload")
-      .repartition(5).write.partitionBy("chrom", "pos_bucket").parquet(dir)
+    val dir = adoptedLake("compact-crash",
+      (0 until 300).map(i => ("chr1", 0L, i, s"payload$i"))
+        .toDF("chrom", "pos_bucket", "pos", "payload").repartition(5),
+      Seq("chrom", "pos_bucket"), bucketTypes)
+    val originals = liveFiles(dir)
+    val expected = rows(dir)
 
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def liveFiles: Set[String] = {
-      def walk(p: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.FileStatus] =
-        fs.listStatus(p).toSeq.flatMap(s => if (s.isDirectory) walk(s.getPath) else Seq(s))
-      walk(new org.apache.hadoop.fs.Path(dir)).map(_.getPath.toString)
-        .filter(n => n.endsWith(".parquet") && !n.contains("/."))
-        .toSet
-    }
-    val originals = liveFiles
-    val expected = spark.read.parquet(dir).orderBy(col("pos")).collect().toSeq
-
-    // simulated crash between verification and swap
-    val boom = intercept[RuntimeException] {
-      Lake.compact(spark, dir, targetBytes = 1L << 30,
-        failpoint = _ => throw new RuntimeException("simulated crash"))
-    }
+    // simulated crash after the rewrite is staged and verified, before
+    // its manifest publishes
+    ManifestLake.raceHook.set(_ => throw new RuntimeException("simulated crash"))
+    val boom =
+      try intercept[RuntimeException] { ManifestLake.compact(spark, dir, targetBytes = 1L << 30) }
+      finally ManifestLake.raceHook.set(null)
     assert(boom.getMessage === "simulated crash")
-    assert(liveFiles === originals, "every original file must survive the crash")
-    assert(spark.read.parquet(dir).orderBy(col("pos")).collect().toSeq === expected,
-      "the partition must still read back exactly (hidden temp dir ignored)")
+    assert(ManifestLake.currentVersion(spark, dir) === Some(1L))
+    assert(liveFiles(dir) === originals, "every original file must stay live")
+    assert(rows(dir) === expected,
+      "the table must still read back exactly (the abandoned stage is invisible)")
 
-    // a later clean pass recovers: stale temp dir is replaced, swap completes
-    val report = Lake.compact(spark, dir, targetBytes = 1L << 30)
+    // a later clean pass publishes
+    val report = ManifestLake.compact(spark, dir, targetBytes = 1L << 30)
     assert(report.size === 1 && report.head._3 === 1)
-    assert(spark.read.parquet(dir).orderBy(col("pos")).collect().toSeq === expected)
+    assert(rows(dir) === expected)
   }
 }

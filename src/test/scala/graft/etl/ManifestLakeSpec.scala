@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** ManifestLake: immutable data files + atomic small-manifest commit —
-  * the object-store path where Lake.compact/upsert's rename-swap
-  * contract does not hold. Pins: versioned visibility (uncommitted and
+  * a commit path that holds on object stores, where rename is a
+  * copy+delete. Pins: versioned visibility (uncommitted and
   * superseded data is invisible), append vs replace, compaction under
   * manifest with old-version readability, crash-orphan invisibility,
   * and vacuum's referenced-files-survive guarantee.

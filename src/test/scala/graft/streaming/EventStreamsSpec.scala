@@ -248,38 +248,6 @@ class EventStreamsSpec extends AnyFunSuite {
     }
   }
 
-  test("upsertSink merges each micro-batch into the lake; re-delivered keys overwrite") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val lake = java.nio.file.Files.createTempDirectory("stream-upsert").toString + "/lake"
-    val in = MemoryStream[(String, Long, Long, String)]
-    val stream = in.toDF().toDF("part", "key", "version", "payload")
-    val q = EventStreams.upsertSink(stream, lake,
-      partitionCols = Seq("part"), keyCols = Seq("part", "key"),
-      versionCol = Some("version")).start()
-    try {
-      // batch 1: two partitions, three keys — plus a within-batch
-      // duplicate key where the higher version must win
-      in.addData(("a", 1L, 1L, "a1-v1"), ("a", 1L, 2L, "a1-v2"),
-        ("a", 2L, 1L, "a2-v1"), ("b", 1L, 1L, "b1-v1"))
-      q.processAllAvailable()
-      val afterOne = spark.read.parquet(lake)
-        .collect().map(r => (r.getAs[String]("part"), r.getAs[Long]("key")) ->
-          r.getAs[String]("payload")).toMap
-      assert(afterOne === Map(("a", 1L) -> "a1-v2", ("a", 2L) -> "a2-v1",
-        ("b", 1L) -> "b1-v1"))
-      // batch 2: re-delivery of (a,1) with a newer version + a new key;
-      // partition b is untouched
-      in.addData(("a", 1L, 3L, "a1-v3"), ("a", 3L, 1L, "a3-v1"))
-      q.processAllAvailable()
-      val afterTwo = spark.read.parquet(lake)
-        .collect().map(r => (r.getAs[String]("part"), r.getAs[Long]("key")) ->
-          r.getAs[String]("payload")).toMap
-      assert(afterTwo === Map(("a", 1L) -> "a1-v3", ("a", 2L) -> "a2-v1",
-        ("a", 3L) -> "a3-v1", ("b", 1L) -> "b1-v1"))
-    } finally q.stop()
-  }
-
   test("manifestUpsertSink: each trigger is one manifest version; time travel + idempotent replay") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
