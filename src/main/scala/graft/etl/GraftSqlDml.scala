@@ -1260,9 +1260,6 @@ final case class GraftAlterCommand(path: String, op: GraftAlterOp)
         val (fs, root) = ManifestLake.fsFor(spark, path)
         val m = ManifestLake.readManifest(fs, root, head())
         val logical = ManifestLake.logicalSchemaOf(m)
-        require(logical.nonEmpty,
-          s"table at $path has a headerless legacy manifest — NOT NULL " +
-            "needs the recorded schema (run one append first)")
         // pre-validate the WHOLE list before the first commit — each
         // change is its own atomic version, and a bad second column
         // must not leave the statement half-applied
@@ -1524,9 +1521,6 @@ final case class GraftDescribeCommand(path: String, isExtended: Boolean)
       throw new IllegalArgumentException(s"no manifested table at $path"))
     val m = ManifestLake.readManifest(fs, root, v)
     val logical = ManifestLake.logicalSchemaOf(m)
-    require(logical.nonEmpty,
-      s"table at $path has a headerless legacy manifest — DESCRIBE needs " +
-        "the recorded schema (run one append or upsert to adopt a header first)")
     // the comment column carries the recorded column COMMENT plus a
     // lowered NOT NULL marker (DESCRIBE has no nullability column of
     // its own; Delta renders it the same way)
@@ -1644,10 +1638,6 @@ final case class GraftShowCreateCommand(path: String)
       throw new IllegalArgumentException(s"no manifested table at $path"))
     val m = ManifestLake.readManifest(fs, root, v)
     val logical = ManifestLake.logicalSchemaOf(m)
-    require(logical.nonEmpty,
-      s"table at $path has a headerless legacy manifest — SHOW CREATE " +
-        "TABLE needs the recorded schema (run one append or upsert to " +
-        "adopt a header first)")
     val genByName = m.generated.toMap
     // CREATE requires generated columns to trail the plain ones (and
     // generated PARTITION columns to lead the generated trailer) — a
@@ -1781,9 +1771,6 @@ final case class GraftInsertCommand(path: String, queryPlan: LogicalPlan,
           "create one with the writer API)"))
     val m = ManifestLake.readManifest(fs, root, v)
     val logical = ManifestLake.logicalSchemaOf(m)
-    require(logical.nonEmpty,
-      s"table at $path has a headerless legacy manifest — SQL INSERT needs " +
-        "the recorded schema (run one append or upsert to adopt a header first)")
     val df = SparkShims.ofRows(spark, queryPlan)
     val byLower = logical.fieldNames.map(f => f.toLowerCase -> f).toMap
     staticPart.foreach { case (k, _) =>

@@ -22,8 +22,8 @@ import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, 
   *   - data files are written ONCE, under a per-commit directory
   *     `data/v<N>/…` (hive-partitioned inside it), and stay there for
   *     their whole life;
-  *   - a commit is the publication of ONE SMALL manifest file
-  *     `_manifest/v<N>.list`: header lines carrying the TABLE SCHEMA
+  *   - a commit is the publication of ONE SMALL gzipped manifest file
+  *     `_manifest/v<N>.list.gz`: header lines carrying the TABLE SCHEMA
   *     and partition columns, then one `<bytes>\t<relpath>` line per
   *     live data file (sizes ride along so maintenance decisions never
   *     stat a file). Readers resolve the highest published version
@@ -127,17 +127,6 @@ object ManifestLake {
     */
   private val CdfDir = "_cdf"
   private val DvDir = "_dv"
-  private def cdfDir(root: Path, v: Long): Path =
-    new Path(root, f"$DataDir/v$v%06d/$CdfDir")
-
-  /** Where commit `v` stamped its row-level change files: the
-    * manifest-recorded `#cdf` path when present (stamped inside the
-    * committer's own unique staging dir, so racing writers never share
-    * a change-file location), else the legacy version-keyed
-    * `data/v<N>/_cdf` of manifests written before the directive.
-    */
-  private def cdfPathOf(root: Path, v: Long, m: Manifest): Path =
-    m.cdf.map(new Path(root, _)).getOrElse(cdfDir(root, v))
 
   /** Reserved change-feed metadata column names — a table column with
     * one of these names would collide with the feed's own output.
@@ -155,39 +144,33 @@ object ManifestLake {
     * million-file manifest shrinks ~10× and the head-read every query
     * plans against moves that much less over the wire. Still ONE object
     * and one atomic rename, so nothing about the commit protocol
-    * changes. Readers accept BOTH extensions: tables written before
-    * compression keep their plain `.list` manifests readable forever
-    * (the version number is the identity; the extension is encoding).
+    * changes. It is the only manifest form this reader accepts.
     */
   private def manifestPath(root: Path, v: Long): Path =
     new Path(new Path(root, ManifestDir), f"v$v%06d.list.gz")
 
-  private def legacyManifestPath(root: Path, v: Long): Path =
-    new Path(new Path(root, ManifestDir), f"v$v%06d.list")
-
-  /** The on-disk manifest for `v` under either encoding, or None. The
-    * gz form wins when both exist (it is the one the current writer
-    * publishes; a both-present state only arises from a mixed-version
-    * writer history and the newer artifact is the newer truth).
-    */
+  /** The on-disk manifest for `v`, or None. */
   private def existingManifestPath(fs: FileSystem, root: Path, v: Long): Option[Path] =
-    Seq(manifestPath(root, v), legacyManifestPath(root, v)).find(fs.exists)
+    Some(manifestPath(root, v)).filter(fs.exists)
 
-  /** Version number of a manifest file name under either encoding. */
-  private def versionOf(name: String): Option[Long] =
-    if (!name.startsWith("v")) None
-    else if (name.endsWith(".list.gz"))
-      name.stripPrefix("v").stripSuffix(".list.gz").toLongOption
-    else if (name.endsWith(".list"))
-      name.stripPrefix("v").stripSuffix(".list").toLongOption
-    else None
-
+  /** The published versions, ascending. A plain `v<N>.list` is a
+    * foreign (pre-gzip) manifest and refuses loudly: skipping it would
+    * report no table, and the next write would publish a new v1 over
+    * the old one.
+    */
   private def listVersions(fs: FileSystem, root: Path): Seq[Long] = {
     val dir = new Path(root, ManifestDir)
     if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).toSeq
-      .flatMap(s => versionOf(s.getPath.getName))
-      .distinct.sorted
+    else fs.listStatus(dir).toSeq.map(_.getPath).flatMap { p =>
+      val name = p.getName
+      if (!name.startsWith("v")) None
+      else if (name.endsWith(".list.gz"))
+        name.stripPrefix("v").stripSuffix(".list.gz").toLongOption
+      else if (name.endsWith(".list"))
+        throw new IllegalArgumentException(s"manifest $p is a plain .list " +
+          "file; this reader accepts only gzipped v<N>.list.gz manifests")
+      else None
+    }.sorted
   }
 
   /** Highest published version, or None for a not-yet-created table. */
@@ -216,8 +199,8 @@ object ManifestLake {
     * annotation columns produce at scale, and where `IS NOT NULL`
     * scans concentrate). Absent (pre-null-stats manifests) means
     * "unknown — never skip", same conservative stance as the bounds.
-    */
-  /** `dv`/`dvRows`: DELETION VECTOR — rows of this file marked deleted
+    *
+    * `dv`/`dvRows`: DELETION VECTOR — rows of this file marked deleted
     * WITHOUT rewriting it (the Delta deletion-vector analog, opted into
     * per delete call). `dv` names the commit-relative parquet dir whose
     * `(file_path, row_index)` rows mask this file; `dvRows` is this
@@ -237,11 +220,10 @@ object ManifestLake {
   /** A parsed manifest: the table shape, the live file set, and the
     * per-writer transaction watermarks (`txns`: appId → highest
     * committed batchId, carried forward by every commit — the
-    * exactly-once ledger for streaming sinks). The schema is absent
-    * only for manifests written before the header existed — those read
-    * through the legacy per-commit grouped path.
-    */
-  /** `colMap`: COLUMN MAPPING — the rename/drop-without-rewrite
+    * exactly-once ledger for streaming sinks). Every manifest records
+    * its schema (`#schema`); one without it is refused at parse.
+    *
+    * `colMap`: COLUMN MAPPING — the rename/drop-without-rewrite
     * indirection (Delta's column-mapping analog). `schema` always
     * records the PHYSICAL shape (the column names as written in the
     * parquet files — every internal path: scans, stats, skipping,
@@ -253,8 +235,8 @@ object ManifestLake {
     * `droppedPhys` records every physical name ever dropped so a
     * re-added logical column of the same name gets a FRESH physical
     * name instead of resurrecting old file data.
-    */
-  /** `chain`/`baseVersions`: DELTA-COMMIT bookkeeping on the RESOLVED
+    *
+    * `chain`/`baseVersions`: DELTA-COMMIT bookkeeping on the RESOLVED
     * manifest. A full-snapshot (checkpoint) manifest has chain 0 and no
     * bases; a delta commit records only its own adds/removes and
     * resolves against version-(base) at read time — `chain` is its hop
@@ -263,7 +245,7 @@ object ManifestLake {
     * versions its resolution consumed (what vacuum must retain for the
     * version to stay readable).
     */
-  private[graft] final case class Manifest(schema: Option[StructType],
+  private[graft] final case class Manifest(schema: StructType,
                                          partCols: Seq[String],
                                          files: Seq[LiveFile],
                                          txns: Map[String, Long] = Map.empty,
@@ -291,6 +273,9 @@ object ManifestLake {
       */
     def asNext(op: String): Manifest = copy(op = Some(op), cdf = None)
   }
+
+  /** The table before its first commit (v = 0): no columns, no files. */
+  private val emptyManifest = Manifest(new StructType(), Seq.empty, Seq.empty)
 
   /** Published manifests are IMMUTABLE (a version is never rewritten —
     * restore publishes a NEW version), so parsed manifests cache across
@@ -735,6 +720,9 @@ object ManifestLake {
     }.toMap
     val schema = dmap.get("#schema")
       .map(j => DataType.fromJson(j).asInstanceOf[StructType])
+      .getOrElse(throw new IllegalArgumentException(s"manifest $p is headerless: " +
+        "it has no #schema header, and this reader accepts only manifests " +
+        "that record their schema header"))
     val partCols = dmap.get("#partcols")
       .map(s => if (s.isEmpty) Seq.empty[String] else s.split(",").toSeq)
       .getOrElse(Seq.empty)
@@ -1065,14 +1053,13 @@ object ManifestLake {
     sb.toString
   }
 
-  /** Hive-style partition columns derived from manifest file PATHS: the
-    * `name=value` directory segments between the per-commit dir
-    * (`data/vNNNNNN`) and the file name. The one ground truth a
-    * headerless legacy manifest has about its partitioning — directory
-    * layout IS the partitioning for hive-laid tables. Files must agree
-    * (a table whose files disagree on partition columns was never
-    * readable under one schema); disagreement is a loud failure, not a
-    * guess.
+  /** Hive-style partition columns derived from relative file PATHS:
+    * the `name=value` directory segments before the file name. The one
+    * ground truth a hive tree [[adopt]] takes over has about its
+    * partitioning — directory layout IS the partitioning for hive-laid
+    * tables. Files must agree (a table whose files disagree on
+    * partition columns was never readable under one schema);
+    * disagreement is a loud failure, not a guess.
     */
   private[etl] def hivePartColsOf(relPaths: Seq[String]): Seq[String] = {
     val perFile = relPaths.map { rel =>
@@ -1087,23 +1074,15 @@ object ManifestLake {
     perFile.headOption.getOrElse(Seq.empty)
   }
 
-  /** The head manifest's recorded partition columns — or, for a legacy
-    * HEADERLESS manifest, the partitioning derived from its files' hive
-    * directory layout ([[hivePartColsOf]]). Lets an unadorned
+  /** The head manifest's recorded partition columns. Lets an unadorned
     * `mode("append")` through the data source inherit the table's
-    * partitioning instead of restating it — including on legacy tables,
-    * where inheriting Seq.empty would stamp an unpartitioned header
-    * over hive-partitioned carried files and silently null their
-    * partition column on read. None only when the table doesn't exist.
+    * partitioning instead of restating it. None only when the table
+    * doesn't exist.
     */
   private[graft] def recordedPartitionCols(spark: SparkSession,
                                            path: String): Option[Seq[String]] = {
     val (fs, root) = fsFor(spark, path)
-    currentVersion(spark, path).map { v =>
-      val m = readManifest(fs, root, v)
-      if (m.schema.isDefined) m.partCols
-      else hivePartColsOf(m.files.map(_.path))
-    }
+    currentVersion(spark, path).map(v => readManifest(fs, root, v).partCols)
   }
 
   /** The highest batchId `appId` has committed to the table, or None.
@@ -1173,8 +1152,8 @@ object ManifestLake {
     // writing one shared tmp file
     val tmp = new Path(dir,
       f".tmp-v$v%06d-${java.util.UUID.randomUUID().toString.take(8)}.list.gz")
-    def mkHeader(reqEff: Seq[String]): Seq[String] = next.schema.toSeq.flatMap(s =>
-      Seq(s"#schema\t${s.json}", s"#partcols\t${next.partCols.mkString(",")}")) ++
+    def mkHeader(reqEff: Seq[String]): Seq[String] =
+      Seq(s"#schema\t${next.schema.json}", s"#partcols\t${next.partCols.mkString(",")}") ++
       reqEff.sorted.map(f => s"#requires\t$f") ++
       next.op.map(o => s"#op\t$o").toSeq ++
       next.cdf.map(c => s"#cdf\t$c").toSeq ++
@@ -1338,17 +1317,6 @@ object ManifestLake {
         out.write(l.getBytes("UTF-8")); out.write('\n')
       }
     } finally out.close()
-    // a PLAIN-extension manifest for this version (older library
-    // version racing, or a partially-migrated table) means the version
-    // is taken — the no-overwrite rename only guards the gz name, so
-    // check the legacy name explicitly before committing
-    if (fs.exists(legacyManifestPath(root, v))) {
-      fs.delete(tmp, false)
-      throw new IllegalStateException(
-        s"manifest version $v already published at ${legacyManifestPath(root, v)} — " +
-          "lost a commit race (this layout is single-writer; serialize " +
-          "committers). The table is intact at the winner's version.")
-    }
     val target = manifestPath(root, v)
     try {
       if ("file" == fs.getScheme) {
@@ -1410,21 +1378,6 @@ object ManifestLake {
               "commit race (this layout is single-writer; serialize " +
               "committers). The table is intact at the winner's version.", e)
         else throw e
-    }
-    // the pre-rename legacy check is check-then-rename: a mixed-version
-    // writer publishing the PLAIN extension in the gap leaves BOTH
-    // encodings on disk, and readers prefer the gz even though the
-    // plain manifest committed first — the commit-order winner would
-    // silently lose. Re-check after the rename and withdraw the gz
-    // loudly, so a both-present state never survives the race.
-    if (fs.exists(legacyManifestPath(root, v))) {
-      fs.delete(target, false)
-      throw new IllegalStateException(
-        s"manifest version $v was concurrently published at " +
-          s"${legacyManifestPath(root, v)} (plain extension) — lost a commit " +
-          "race with a mixed-version writer (this layout is single-writer; " +
-          "serialize committers). The gz manifest was withdrawn; the table " +
-          "is intact at the winner's version.")
     }
     // CACHE WHAT WAS JUST PUBLISHED: the next commit's readManifest(v)
     // — and every query planned before another commit lands — would
@@ -1557,11 +1510,10 @@ object ManifestLake {
 
   /** The preamble every DML verb shares. `Left(v)` when the txn ledger
     * already records `txn` (a replay: the table holds its effect).
-    * Refuses a missing table and a headerless manifest unless the verb
-    * `creates` (upsert creates a table, `v = 0` with an empty manifest,
-    * and adopts a legacy one), an IDENTITY column when the verb inserts
-    * rows it cannot assign (`identity` names the remedy), and a column
-    * named like the change feed's metadata.
+    * Refuses a missing table unless the verb `creates` (upsert creates
+    * a table: `v = 0` with an empty manifest), an IDENTITY column when
+    * the verb inserts rows it cannot assign (`identity` names the
+    * remedy), and a column named like the change feed's metadata.
     */
   private def openDml(spark: SparkSession, path: String, txn: Option[(String, Long)],
                       verb: String, noun: String, identity: Option[String] = None,
@@ -1569,11 +1521,8 @@ object ManifestLake {
     val (fs, root) = fsFor(spark, path)
     val v = currentVersion(spark, path).getOrElse(
       if (creates) 0L else throw new IllegalArgumentException(s"no manifested table at $path"))
-    val m = if (v == 0L) Manifest(None, Seq.empty, Seq.empty) else readManifest(fs, root, v)
+    val m = if (v == 0L) emptyManifest else readManifest(fs, root, v)
     if (txn.exists { case (app, b) => m.txns.get(app).exists(_ >= b) }) return Left(v)
-    if (!creates && m.schema.isEmpty)
-      throw new IllegalArgumentException(s"table at $path has a headerless legacy manifest — " +
-        s"$noun needs the recorded schema (run one append or upsert to adopt a header first)")
     for (remedy <- identity; (n, _, _, _, _) <- m.identity)
       throw new IllegalArgumentException(s"table at $path has IDENTITY column $n — $remedy")
     refuseReserved(m)
@@ -1586,7 +1535,7 @@ object ManifestLake {
     */
   private def refuseReserved(m: Manifest): Unit =
     Seq(ChangeTypeCol, CommitVersionCol).foreach(r =>
-      require(!m.schema.exists(_.fieldNames.contains(r)) &&
+      require(!m.schema.fieldNames.contains(r) &&
         !logicalSchemaOf(m).fieldNames.contains(r),
         s"column name $r is reserved for the change feed's metadata"))
 
@@ -1681,7 +1630,7 @@ object ManifestLake {
     val commitDir = stagingDir(d.root, d.v + 1)
     val (staged, rowsOut) = stageCommit(d.fs, d.root, commitDir,
       if (partCols.nonEmpty) w.partitionBy(partCols: _*) else w,
-      published.schema.get, trackedStats(d.m.files), d.m.bloomCols, partCols)
+      published.schema, trackedStats(d.m.files), d.m.bloomCols, partCols)
     requireObservedStaged(d.fs, commitDir, obsLong(obs, "n_obs_rows"), rowsOut,
       s"manifest ${d.noun} observation lost for ${d.path}", "constraint/row",
       s"nothing published, table still at v${d.v}")
@@ -1855,14 +1804,6 @@ object ManifestLake {
     }
   }
 
-  /** Name → type comparison, order-insensitive, nullability-blind —
-    * the shape an append/upsert must preserve for the recorded-schema
-    * read to be exact.
-    */
-  private def sameShape(a: StructType, b: StructType): Boolean =
-    a.fields.map(f => (f.name, f.dataType.catalogString)).sortBy(_._1).toSeq ==
-      b.fields.map(f => (f.name, f.dataType.catalogString)).sortBy(_._1).toSeq
-
   /** ADDITIVE schema evolution: the widened table schema for an append
     * or upsert batch against the recorded schema. Every recorded column
     * must appear in the batch with the SAME type (a missing or re-typed
@@ -2017,7 +1958,7 @@ object ManifestLake {
           "directory, not file stats")
     }
     val schema = StructType(data.fields ++ partFields)
-    publish(fs, root, 1L, Manifest(Some(schema), partCols,
+    publish(fs, root, 1L, Manifest(schema, partCols,
       files.map { case (rel, bytes) => LiveFile(bytes, rel) }, op = Some("adopt"),
       statsColsDefault = statsCols.map(c =>
         data.fieldNames.find(_.equalsIgnoreCase(c)).get)))
@@ -2079,9 +2020,6 @@ object ManifestLake {
         s"no manifested table at $path (COPY INTO needs an existing table — " +
           "create it first)"))
     val m = readManifest(fs, root, v)
-    require(m.schema.isDefined,
-      s"table at $path has a headerless legacy manifest — COPY INTO needs " +
-        "the recorded schema (run one append or upsert to adopt a header first)")
     val fmt = format.toLowerCase
     require(Set("parquet", "csv", "json").contains(fmt),
       s"COPY INTO FILEFORMAT must be PARQUET, CSV, or JSON; got $format")
@@ -2773,7 +2711,7 @@ object ManifestLake {
     // the table before this commit (empty for a CREATE); a lost race
     // rebases onto the head instead, so the sticky sets below union
     // with whatever that head records
-    val base0 = prev.getOrElse(Manifest(None, Seq.empty, Seq.empty))
+    val base0 = prev.getOrElse(emptyManifest)
     def bloomColsOn(base: Manifest): Seq[String] =
       if (replace) bloomColsP else (base.bloomCols ++ bloomColsP).distinct
     // MIN/MAX STAT TRACKING is sticky too: once declared (at CREATE or
@@ -2792,42 +2730,16 @@ object ManifestLake {
       ((if (replace) statsColsP else (base.statsColsDefault ++ statsColsP).distinct)
         ++ identityPhys.toSeq).distinct
     // an append joins an existing table, so its shape must match what
-    // the manifest records. A legacy HEADERLESS manifest has no recorded
-    // shape to check against, and stamping this batch's schema over the
-    // carried legacy files unverified would make them read back as
-    // silent nulls under the new explicit single-scan schema — exactly
-    // the failure the header exists to prevent — so the append verifies
-    // the batch against the legacy grouped read's inferred schema first
-    // and only then adopts the header for the whole table.
+    // the manifest records
     val tableSchema = prev match {
-      case Some(m) if !replace && m.schema.isDefined =>
+      case Some(m) if !replace =>
         require(m.partCols == partitionCols,
           s"append partitioned by ${partitionCols.mkString(",")} but the table " +
             s"is partitioned by ${m.partCols.mkString(",")} — schema evolution is a replace")
         // additive evolution: a superset batch WIDENS the recorded
         // schema (new nullable columns; old files read them as null);
         // a missing or re-typed column still fails loudly inside widen
-        widen(m.schema.get, dfP.schema, partitionCols, "append")
-      case Some(m) if !replace && m.files.nonEmpty =>
-        val inferred = readFilesGrouped(spark, root, m.files.map(_.path)).schema
-        require(sameShape(inferred, dfP.schema),
-          s"append schema ${dfP.schema.catalogString} does not match the legacy " +
-            s"table's inferred schema ${inferred.catalogString} — a headerless " +
-            "manifest adopts this batch's schema as the table header, so the " +
-            "shapes must agree (use a replace write to change the schema)")
-        // the adopted header also records PARTITIONING — and the legacy
-        // files' hive layout is the ground truth. Stamping different
-        // partCols (e.g. empty, from a caller that had no header to
-        // inherit from) would make the explicit single scan read the
-        // carried files' partition column back as silent nulls.
-        val legacyPartCols = hivePartColsOf(m.files.map(_.path))
-        require(legacyPartCols == partitionCols,
-          s"append partitioned by [${partitionCols.mkString(",")}] but the " +
-            s"legacy table's directory layout is partitioned by " +
-            s"[${legacyPartCols.mkString(",")}] — the adopted header must " +
-            "record the carried files' real partitioning (use a replace " +
-            "write to change it)")
-        dfP.schema
+        widen(m.schema, dfP.schema, partitionCols, "append")
       case _ => dfP.schema
     }
     // appends stage under a UNIQUE dir (`v<N>-<token>`): two optimistic
@@ -2861,7 +2773,7 @@ object ManifestLake {
       if (mapping.isEmpty && prevFieldMap.isEmpty) consLogical
       else {
         val cm = mapping.getOrElse(
-          prev.flatMap(_.schema).map(_.fieldNames.toSeq).getOrElse(Seq.empty)
+          prev.map(_.schema.fieldNames.toSeq).getOrElse(Seq.empty)
             .map(n => n -> n))
         val full = cm ++ colMapOut.toSeq.flatten.filterNot(cm.contains)
         consLogical.map { case (n, e) =>
@@ -2935,7 +2847,7 @@ object ManifestLake {
     }
     var curSchema = tableSchema
     def next(base: Manifest): Manifest = base.copy(
-      schema = Some(curSchema), partCols = partitionCols,
+      schema = curSchema, partCols = partitionCols,
       // COPY INTO's per-file entries ride the txn ledger — exactly-once
       // by file identity
       txns = base.txns ++ copyLedger,
@@ -3002,22 +2914,12 @@ object ManifestLake {
           s"append to $path lost its race to a commit that changed the " +
             "table's nested-field mapping — the batch's struct columns were " +
             "cast under the old mapping; re-run the append")
-        head.schema match {
-          case Some(recorded) =>
-            require(head.partCols == partitionCols,
-              s"append partitioned by ${partitionCols.mkString(",")} but the " +
-                s"table (after a concurrent commit) is partitioned by " +
-                s"${head.partCols.mkString(",")} — genuine conflict, not retryable")
-            curSchema = widen(recorded, df.schema, partitionCols, "append")
-            None
-          // a concurrent writer replaced the table with a headerless
-          // manifest mid-race — pre-header writers are single-writer by
-          // contract; surface the race rather than guess
-          case None =>
-            Some(s"append to $path lost its race to a commit that published " +
-              s"a headerless manifest at v$headV — pre-header writers are " +
-              "single-writer; re-run the append")
-        }
+        require(head.partCols == partitionCols,
+          s"append partitioned by ${partitionCols.mkString(",")} but the " +
+            s"table (after a concurrent commit) is partitioned by " +
+            s"${head.partCols.mkString(",")} — genuine conflict, not retryable")
+        curSchema = widen(head.schema, df.schema, partitionCols, "append")
+        None
       }
     }(next).merge
   }
@@ -3032,42 +2934,36 @@ object ManifestLake {
     * partition column whose directory values inferred differently
     * across commits. Partition pruning still happens at the scan (the
     * index evaluates partition predicates against the typed values).
-    * Headerless legacy manifests fall back to the per-commit grouped
-    * union.
     */
   private def readFiles(spark: SparkSession, fs: FileSystem, root: Path,
-                        m: Manifest): DataFrame = m.schema match {
-    case Some(schema) =>
-      val (masked, plain) = m.files.partition(_.dv.isDefined)
-      // HadoopFsRelation appends partition columns after data columns;
-      // present the table in its recorded column order
-      def scanOf(files: Seq[LiveFile]) = spark.baseRelationToDataFrame(
-        hadoopFsRelation(spark, fs, root, m.copy(files = files)))
-      if (masked.isEmpty)
-        scanOf(m.files).select(schema.fieldNames.map(col): _*)
-      else {
-        // DELETION-VECTOR masked files: scan with the parquet reader's
-        // (file_path, row_index) metadata and anti-join the referenced
-        // DV rows — the masked rows vanish without the files having
-        // moved. DV row volume is bounded by masked-row count, and only
-        // the files CARRYING a mask pay the join; unmasked files keep
-        // the plain single scan.
-        val dvDirs = masked.flatMap(_.dv).distinct
-          .map(p => fs.makeQualified(new Path(root, p)).toString)
-        val dvDf = spark.read.parquet(dvDirs: _*)
-          .select(dvRelExpr(col("file_path")).as("__dv_fp"),
-            col("row_index").as("__dv_ri"))
-        val maskedDf = scanOf(masked)
-          .select(relPathExpr(col("_metadata.file_path")).as("__dv_fp") +:
-            col("_metadata.row_index").as("__dv_ri") +:
-            schema.fieldNames.map(col): _*)
-          .join(dvDf, Seq("__dv_fp", "__dv_ri"), "left_anti")
-          .select(schema.fieldNames.map(col): _*)
-        if (plain.isEmpty) maskedDf
-        else scanOf(plain).select(schema.fieldNames.map(col): _*)
-          .unionByName(maskedDf)
-      }
-    case None => readFilesGrouped(spark, root, m.files.map(_.path))
+                        m: Manifest): DataFrame = {
+    val cols = m.schema.fieldNames.map(col)
+    val (masked, plain) = m.files.partition(_.dv.isDefined)
+    // HadoopFsRelation appends partition columns after data columns;
+    // present the table in its recorded column order
+    def scanOf(files: Seq[LiveFile]) = spark.baseRelationToDataFrame(
+      hadoopFsRelation(spark, fs, root, m.copy(files = files)))
+    if (masked.isEmpty) scanOf(m.files).select(cols: _*)
+    else {
+      // DELETION-VECTOR masked files: scan with the parquet reader's
+      // (file_path, row_index) metadata and anti-join the referenced
+      // DV rows — the masked rows vanish without the files having
+      // moved. DV row volume is bounded by masked-row count, and only
+      // the files CARRYING a mask pay the join; unmasked files keep
+      // the plain single scan.
+      val dvDirs = masked.flatMap(_.dv).distinct
+        .map(p => fs.makeQualified(new Path(root, p)).toString)
+      val dvDf = spark.read.parquet(dvDirs: _*)
+        .select(dvRelExpr(col("file_path")).as("__dv_fp"),
+          col("row_index").as("__dv_ri"))
+      val maskedDf = scanOf(masked)
+        .select(relPathExpr(col("_metadata.file_path")).as("__dv_fp") +:
+          col("_metadata.row_index").as("__dv_ri") +: cols: _*)
+        .join(dvDf, Seq("__dv_fp", "__dv_ri"), "left_anti")
+        .select(cols: _*)
+      if (plain.isEmpty) maskedDf
+      else scanOf(plain).select(cols: _*).unionByName(maskedDf)
+    }
   }
 
   /** The manifest's live set as a [[HadoopFsRelation]] over a
@@ -3080,7 +2976,7 @@ object ManifestLake {
   private def hadoopFsRelation(
       spark: SparkSession, fs: FileSystem, root: Path,
       m: Manifest): org.apache.spark.sql.execution.datasources.HadoopFsRelation = {
-    val schema = m.schema.get
+    val schema = m.schema
     val partSchema = StructType(m.partCols.map(c => schema(c)).toArray)
     val dataSchema =
       StructType(schema.fields.filterNot(f => m.partCols.contains(f.name)))
@@ -3091,7 +2987,7 @@ object ManifestLake {
     // generated PARTITION columns, translated to PHYSICAL names — the
     // filter-inference seam: an equality filter on the (single) base
     // column lets the optimizer derive the partition predicate
-    val cm = m.colMap.getOrElse(schema.fieldNames.toSeq.map(n => n -> n))
+    val cm = columnMapping(m)
     val physOf = cm.toMap
     val genPart = m.generated.flatMap { case (n, e) =>
       val phys = physOf.getOrElse(n, n)
@@ -3139,29 +3035,16 @@ object ManifestLake {
   /** [[org.apache.spark.sql.sources.BaseRelation]] for the table at
     * `path` (at `version`, or the head) — the entry point
     * [[ManifestDataSource]] serves `spark.read.format("graft-manifest")`
-    * and `CREATE TEMPORARY VIEW … USING graft-manifest` from. Requires a
-    * schema-headed manifest: the relation's explicit schema IS the
-    * recorded one, and a headerless legacy manifest has nothing to
-    * record — those read only through [[read]]'s grouped fallback (one
-    * replace-write adopts a header and unlocks the SQL surface).
+    * and `CREATE TEMPORARY VIEW … USING graft-manifest` from. The
+    * relation's explicit schema IS the recorded one.
     */
   private[etl] def relation(spark: SparkSession, path: String,
                             version: Option[Long]): org.apache.spark.sql.sources.BaseRelation = {
     val (fs, root) = fsFor(spark, path)
     val head = currentVersion(spark, path).getOrElse(
       throw new IllegalArgumentException(
-        s"no manifest table at $path (no _manifest/v*.list published)"))
-    val v = version.getOrElse(head)
-    if (existingManifestPath(fs, root, v).isEmpty)
-      throw new IllegalArgumentException(
-        s"version $v of $path does not exist (never published, or vacuumed); " +
-          s"available: ${versions(spark, path).map(_._1).mkString(", ")}")
-    val m = readManifest(fs, root, v)
-    if (m.schema.isEmpty)
-      throw new IllegalArgumentException(
-        s"manifest v$v of $path predates the schema header — the " +
-          "graft-manifest data source needs the recorded schema; read it " +
-          "with ManifestLake.read, or replace-write once to adopt a header")
+        s"no manifest table at $path (no _manifest/v*.list.gz published)"))
+    val m = manifestAtOrFail(spark, path, version.getOrElse(head))
     if (m.colMap.isDefined)
       throw new IllegalArgumentException(
         s"$path uses column mapping (renamed/dropped columns) — the raw " +
@@ -3178,27 +3061,6 @@ object ManifestLake {
           "would serve masked rows; read it with ManifestLake.read (and " +
           "register a temp view for SQL), or compact to materialize the masks")
     hadoopFsRelation(spark, fs, root, m)
-  }
-
-  /** The legacy (pre-schema-header) read: one DataFrame per per-commit
-    * dir so partition-column discovery works, later groups aligned to
-    * the first group's inferred schema. Kept for headerless manifests
-    * and as the oracle the single-scan path is spec-checked against —
-    * its plan grows with commit count, which is exactly why it is no
-    * longer the default.
-    */
-  private[etl] def readFilesGrouped(spark: SparkSession, root: Path,
-                                    files: Seq[String]): DataFrame = {
-    val groups = files.groupBy(_.split("/").take(2).mkString("/")).toSeq.sortBy(_._1)
-    val frames = groups.map { case (commitDir, fls) =>
-      spark.read
-        .option("basePath", new Path(root, commitDir).toString)
-        .parquet(fls.map(f => new Path(root, f).toString): _*)
-    }
-    frames.reduce { (a, b) =>
-      val cols = a.schema.fields.map(f => col(f.name).cast(f.dataType))
-      a.unionByName(b.select(cols: _*))
-    }
   }
 
   /** The table's commit history as a DataFrame — the DESCRIBE HISTORY
@@ -3246,7 +3108,7 @@ object ManifestLake {
       m.files.length.toLong,
       m.files.map(_.bytes).sum,
       m.partCols.mkString(","),
-      m.schema.map(_.fieldNames.length.toLong).getOrElse(-1L),
+      m.schema.fieldNames.length.toLong,
       coverage(_.stats.keys),
       coverage(_.nullCounts.keys),
       coverage(_.valueSets.keys),
@@ -3368,10 +3230,8 @@ object ManifestLake {
   def emptyChangeFeed(spark: SparkSession, path: String, v: Long): DataFrame = {
     val (fs, root) = fsFor(spark, path)
     val head = readManifest(fs, root, v)
-    val s = StructType(
-      (if (head.schema.isDefined) logicalSchemaOf(head).fields.toSeq
-       else Seq.empty) ++ Seq(StructField(ChangeTypeCol, StringType),
-        StructField(CommitVersionCol, LongType)))
+    val s = StructType(logicalSchemaOf(head).fields ++ Seq(
+      StructField(ChangeTypeCol, StringType), StructField(CommitVersionCol, LongType)))
     spark.createDataFrame(spark.sparkContext.emptyRDD[Row], s)
   }
 
@@ -3385,17 +3245,9 @@ object ManifestLake {
     */
   def readVersion(spark: SparkSession, path: String, v: Long): DataFrame = {
     val (fs, root) = fsFor(spark, path)
-    if (existingManifestPath(fs, root, v).isEmpty)
-      throw new IllegalArgumentException(
-        s"version $v of $path does not exist (never published, or vacuumed); " +
-          s"available: ${versions(spark, path).map(_._1).mkString(", ")}")
-    val m = readManifest(fs, root, v)
+    val m = manifestAtOrFail(spark, path, v)
     if (m.files.isEmpty)
-      m.schema match {
-        case Some(_) =>
-          spark.createDataFrame(spark.sparkContext.emptyRDD[Row], logicalSchemaOf(m))
-        case None => spark.emptyDataFrame
-      }
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], logicalSchemaOf(m))
     else toLogical(readFiles(spark, fs, root, m), m)
   }
 
@@ -3413,7 +3265,7 @@ object ManifestLake {
     * existed): appends only ever ACCRETE files, so the added rows are
     * exactly the head's files minus `fromV`'s — and anything else in
     * the range (compaction, upsert, replace, restore — ops that move
-    * or rewrite rows; or a legacy manifest that cannot prove what it
+    * or rewrite rows; or an untagged commit that cannot prove what it
     * was) is a typed refusal, never a silently-wrong feed — unless
     * `skipNonAppend = true`, which SKIPS those versions entirely:
     * their files never surface as adds, and later appends diff against
@@ -3423,57 +3275,16 @@ object ManifestLake {
     * skipped upsert/replace are silently not fed. `fromV` itself may
     * be any commit kind — the feed starts after it. `fromV = 0` means
     * "since before the table existed" (every live file at `toV` is a
-    * change).
+    * change). The versions are [[addedFilesAt]]'s, the streaming
+    * source's, read in one scan under `toV`'s recorded shape.
     */
   def readChanges(spark: SparkSession, path: String, fromV: Long, toV: Long,
                   skipNonAppend: Boolean = false): DataFrame = {
     require(fromV >= 0 && toV > fromV, s"need 0 <= fromV < toV, got fromV=$fromV toV=$toV")
-    val (fs, root) = fsFor(spark, path)
-    def manifestAt(v: Long): Manifest = {
-      if (existingManifestPath(fs, root, v).isEmpty)
-        throw new IllegalArgumentException(
-          s"version $v of $path does not exist (never published, or vacuumed); " +
-            s"available: ${versions(spark, path).map(_._1).mkString(", ")}")
-      readManifest(fs, root, v)
-    }
-    // the table-CREATING commit (v1) is an append from empty whatever
-    // its flag says — a replace there had nothing to rewrite
-    def isAppend(v: Long, m: Manifest): Boolean =
-      m.op.contains("append") ||
-        (v == 1 && (m.op.contains("replace") || m.op.contains("adopt")))
-    var prevPaths: Set[String] =
-      if (fromV == 0) Set.empty
-      else manifestAt(fromV).files.map(_.path).toSet
-    val added = Seq.newBuilder[LiveFile]
-    var head: Manifest = Manifest(None, Seq.empty, Seq.empty)
-    ((fromV + 1) to toV).foreach { v =>
-      val m = manifestAt(v)
-      if (isAppend(v, m))
-        added ++= m.files.filterNot(f => prevPaths.contains(f.path))
-      // metadata-shaped commit with the path set unchanged: provably no
-      // new/moved rows — an empty diff, never a feed-killer (see
-      // [[isEmptyMetadataDiff]])
-      else if (m.op.exists(MetadataOps) &&
-        m.files.map(_.path).toSet == prevPaths) ()
-      else if (!skipNonAppend)
-        throw new IllegalArgumentException(
-          s"version $v of $path is ${m.op.map("a " + _).getOrElse("an untagged legacy commit")}, " +
-            "not an append — the change feed is defined only over append-only " +
-            "ranges (compaction/upsert/replace/restore move or rewrite rows; " +
-            "use readChangeFeed for row-level deltas across upserts, read a " +
-            "full version instead, or opt into skipNonAppend)")
-      prevPaths = m.files.map(_.path).toSet
-      head = m
-    }
-    val files = added.result()
-    if (files.isEmpty)
-      head.schema match {
-        case Some(_) =>
-          spark.createDataFrame(spark.sparkContext.emptyRDD[Row], logicalSchemaOf(head))
-        case None => spark.emptyDataFrame
-      }
-    else toLogical(
-      readFiles(spark, fs, root, Manifest(head.schema, head.partCols, files)), head)
+    // a vacuumed fromV names what is available instead of diffing air
+    if (fromV > 0) manifestAtOrFail(spark, path, fromV)
+    val files = ((fromV + 1) to toV).flatMap(addedFilesAt(spark, path, _, skipNonAppend))
+    readFileSliceLogical(spark, path, manifestAtOrFail(spark, path, toV), files)
   }
 
   /** The ROW-LEVEL change feed over `(fromV, toV]` — table columns plus
@@ -3487,9 +3298,9 @@ object ManifestLake {
     *  - an UPSERT / MERGE / UPDATE commit serves the exact
     *    pre/post-image/insert rows it stamped under its hidden `_cdf`
     *    dir at commit time, and a DELETE commit its `delete` rows —
-    *    deletion-vector deletes included (a rewrite committed before
-    *    stamping existed has no provable row deltas — typed refusal,
-    *    or skipped under `skipUnresolved`);
+    *    deletion-vector deletes included (a rewrite whose manifest
+    *    records no `#cdf` change files has no provable row deltas —
+    *    typed refusal, or skipped under `skipUnresolved`);
     *  - a COMPACT commit contributes NOTHING: compaction (and z-order)
     *    is layout-only with content verified invariant, so unlike
     *    Delta — which cannot prove row identity across a rewrite and
@@ -3514,10 +3325,10 @@ object ManifestLake {
     // a table that HAS a column named like the feed's metadata (written
     // by appends, which legally accept any name) cannot be served — the
     // stamped columns would shadow the user's data
-    head.schema.foreach(s => Seq(ChangeTypeCol, CommitVersionCol).foreach(r =>
-      require(!s.fieldNames.contains(r) &&
+    Seq(ChangeTypeCol, CommitVersionCol).foreach(r =>
+      require(!head.schema.fieldNames.contains(r) &&
         !logicalSchemaOf(head).fieldNames.contains(r),
-        s"table column $r collides with the change feed's reserved metadata column")))
+        s"table column $r collides with the change feed's reserved metadata column"))
     def refuse(v: Long, what: String): Nothing =
       throw new IllegalArgumentException(
         s"version $v of $path is $what — its row-level deltas are not " +
@@ -3544,17 +3355,15 @@ object ManifestLake {
       else if (m.op.exists(o =>
         o == "upsert" || o == "delete" || o == "merge" || o == "update" ||
         o == "replacepart")) {
-        val dir = cdfPathOf(root, v, m)
-        m.schema match {
-          case Some(s) if fs.exists(dir) =>
+        m.cdf.map(new Path(root, _)).filter(fs.exists) match {
+          case Some(dir) =>
             Some(spark.read
-              .schema(StructType(s.fields :+ StructField(ChangeTypeCol, StringType)))
+              .schema(StructType(m.schema.fields :+ StructField(ChangeTypeCol, StringType)))
               .parquet(dir.toString)
               .withColumn(CommitVersionCol, lit(v)))
-          case _ if skipUnresolved => None
-          case _ => refuse(v, s"${m.op.map("a " + _).get} with no stamped change files " +
-            "(stamping disabled via changeFeed=false, committed before change " +
-            "stamping existed, or its _cdf dir was vacuumed)")
+          case None if skipUnresolved => None
+          case None => refuse(v, s"${m.op.map("a " + _).get} with no stamped change files " +
+            "(stamping disabled via changeFeed=false, or its _cdf dir was vacuumed)")
         }
       } else if (skipUnresolved) None
       else refuse(v, m.op.map("a " + _).getOrElse("an untagged legacy commit"))
@@ -3573,30 +3382,25 @@ object ManifestLake {
         // before a widening lack the new columns and carry typed nulls
         val norm = metaFields.foldLeft(df)((d, f) =>
           d.withColumn(f.name, when(lit(true), col(f.name))))
-        val physOrdered = head.schema match {
-          case Some(s) =>
-            norm.select((s.fieldNames.toSeq ++ metaFields.map(_.name)).map(col): _*)
-          case None => norm
-        }
+        val physOrdered =
+          norm.select((head.schema.fieldNames.toSeq ++ metaFields.map(_.name)).map(col): _*)
         // logical names at the boundary — toV's mapping names the whole
         // window, the same rule widening applies to column ORDER
         toLogical(physOrdered, head, extraCols = metaFields.map(_.name))
       case None =>
-        val s = StructType(
-          (if (head.schema.isDefined) logicalSchemaOf(head).fields.toSeq
-           else Seq.empty) ++ metaFields)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], s)
+        spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+          StructType(logicalSchemaOf(head).fields ++ metaFields))
     }
   }
 
-  // ---- building blocks for the rate-limited streaming source ----
-  // The source slices version file-lists into bounded micro-batches, so
-  // it needs the per-version pieces readChanges composes internally:
-  // a typed-error manifest fetch, the append test, the per-version
-  // added-file diff, and "read exactly THESE live files".
+  // ---- building blocks shared by readChanges and the streaming source ----
+  // The source slices version file-lists into bounded micro-batches;
+  // readChanges reads a whole range at once. Both compose the same
+  // per-version pieces: a typed-error manifest fetch, the append test,
+  // the per-version added-file diff, and "read exactly THESE live files".
 
-  /** Manifest at `v`, or the same typed vacuumed/never-published error
-    * the batch readers raise.
+  /** Manifest at `v`, or a typed vacuumed/never-published error naming
+    * the versions that are available.
     */
   private[graft] def manifestAtOrFail(spark: SparkSession, path: String,
                                       v: Long): Manifest = {
@@ -3609,8 +3413,7 @@ object ManifestLake {
   }
 
   /** Whether commit `v` is an append (the table-creating v1 counts even
-    * when flagged replace — it had nothing to rewrite). Same rule
-    * [[readChanges]] applies.
+    * when flagged replace, adopt or clone — it had nothing to rewrite).
     */
   private[graft] def isAppendCommit(v: Long, m: Manifest): Boolean =
     m.op.contains("append") ||
@@ -3638,8 +3441,8 @@ object ManifestLake {
 
   /** The files version `v` ADDED over `v - 1`, path-sorted (chunk
     * boundaries must be deterministic across restarts). A non-append
-    * commit yields nothing under `skipNonAppend`, else the same typed
-    * refusal as [[readChanges]].
+    * commit yields nothing under `skipNonAppend`, else a typed
+    * refusal.
     */
   private[graft] def addedFilesAt(spark: SparkSession, path: String, v: Long,
                                   skipNonAppend: Boolean): Seq[LiveFile] = {
@@ -3655,7 +3458,8 @@ object ManifestLake {
       s"version $v of $path is ${m.op.map("a " + _).getOrElse("an untagged legacy commit")}, " +
         "not an append — the change feed is defined only over append-only " +
         "ranges (compaction/upsert/replace/restore move or rewrite rows; " +
-        "read a full version instead, or opt into skipNonAppend)")
+        "use readChangeFeed for row-level deltas across upserts, read a " +
+        "full version instead, or opt into skipNonAppend)")
   }
 
   /** Version `v`'s full live set, path-sorted — the snapshot list the
@@ -3679,11 +3483,7 @@ object ManifestLake {
                                    head: Manifest,
                                    files: Seq[LiveFile]): DataFrame = {
     val (fs, root) = fsFor(spark, path)
-    if (files.isEmpty)
-      head.schema match {
-        case Some(s) => spark.createDataFrame(spark.sparkContext.emptyRDD[Row], s)
-        case None => spark.emptyDataFrame
-      }
+    if (files.isEmpty) spark.createDataFrame(spark.sparkContext.emptyRDD[Row], head.schema)
     else readFiles(spark, fs, root, Manifest(head.schema, head.partCols, files))
   }
 
@@ -3714,9 +3514,6 @@ object ManifestLake {
     val v = currentVersion(spark, path).getOrElse(
       throw new IllegalArgumentException(s"no manifested table at $path"))
     val m = readManifest(fs, root, v)
-    require(m.schema.isDefined,
-      s"table at $path has a headerless legacy manifest — row ids need the " +
-        "recorded schema (run one append or upsert to adopt a header first)")
     val logical = logicalSchemaOf(m)
     Seq("_row_file", "_row_index").foreach(r =>
       require(!logical.fieldNames.contains(r),
@@ -3868,21 +3665,19 @@ object ManifestLake {
       else if (manifest.clusterCols.isEmpty) (Seq.empty[String], Seq.empty[String])
       else {
         val cc = manifest.clusterCols
-        val zable = manifest.schema.exists(s => cc.forall(c =>
-          s.fields.find(_.name == c).map(_.dataType).exists {
+        val zable = cc.forall(c =>
+          manifest.schema.fields.find(_.name == c).map(_.dataType).exists {
             case _: org.apache.spark.sql.types.NumericType => true
             case org.apache.spark.sql.types.DateType => true
             case org.apache.spark.sql.types.TimestampType => true
             case _ => false
-          }))
+          })
         if (cc.size >= 2 && zable) (Seq.empty[String], cc) else (cc, Seq.empty[String])
       }
-    manifest.schema.foreach { s =>
-      val missing = zOrderEff.filterNot(s.fieldNames.contains)
-      require(missing.isEmpty,
-        s"zOrderBy column(s) ${missing.mkString(", ")} not in the recorded " +
-          s"schema ${s.fieldNames.mkString(", ")}")
-    }
+    val missing = zOrderEff.filterNot(manifest.schema.fieldNames.contains)
+    require(missing.isEmpty,
+      s"zOrderBy column(s) ${missing.mkString(", ")} not in the recorded " +
+        s"schema ${manifest.schema.fieldNames.mkString(", ")}")
     // a partition column is constant within each rewritten partition —
     // z-ordering on it wastes curve bits at best, and the per-partition
     // file read doesn't even carry it as a data column
@@ -4015,7 +3810,7 @@ object ManifestLake {
         }
       val dest = if (part.isEmpty) commitDir else new Path(commitDir, part)
       statsWriter(sorted.write.mode(SaveMode.Overwrite),
-        manifest.schema.getOrElse(new StructType()), statKeys, manifest.bloomCols,
+        manifest.schema, statKeys, manifest.bloomCols,
         manifest.partCols).save(dest.toString)
       // row conservation from METADATA on both sides: source rows come
       // from the manifest's recorded counts (or the source footers when
@@ -4172,23 +3967,10 @@ object ManifestLake {
     // additive evolution, same contract as the append path: a superset
     // batch widens the recorded schema; untouched partitions' old files
     // serve the new columns as typed nulls through the single scan
-    val widened: Option[StructType] = manifest.schema.map { recorded =>
-      require(manifest.partCols == partitionCols,
-        s"upsert partitioned by ${partitionCols.mkString(",")} but the table " +
-          s"is partitioned by ${manifest.partCols.mkString(",")}")
-      widen(recorded, updatesP.schema, partitionCols, "upsert")
-    }
-    // a legacy headerless table adopts THIS batch's schema as its header
-    // when the merge publishes — verify the shapes agree first (same
-    // silent-null hazard as the append path; see writePinned)
-    if (manifest.schema.isEmpty && manifest.files.nonEmpty) {
-      val inferred = readFilesGrouped(spark, d.root, manifest.files.map(_.path)).schema
-      require(sameShape(inferred, updatesP.schema),
-        s"upsert batch schema ${updatesP.schema.catalogString} does not match the " +
-          s"legacy table's inferred schema ${inferred.catalogString} — a headerless " +
-          "manifest adopts the batch's schema as the table header, so the shapes " +
-          "must agree (use a replace write to change the schema)")
-    }
+    require(manifest.partCols == partitionCols,
+      s"upsert partitioned by ${partitionCols.mkString(",")} but the table " +
+        s"is partitioned by ${manifest.partCols.mkString(",")}")
+    val tableSchema = widen(manifest.schema, updatesP.schema, partitionCols, "upsert")
 
     // affected partition dirs (the batch aggregate's rows — bounded by
     // the batch's partition spread, which is small against the lake by
@@ -4196,11 +3978,8 @@ object ManifestLake {
     val affectedDirs = partDirs(d, partitionCols, partRows.toSeq)
     val affectedFiles = manifest.files.filter(f => affectedDirs.contains(partDirOf(f.path)))
 
-    // the post-merge table schema: widened when the manifest records
-    // one, the batch's own otherwise (legacy adoption, verified above)
-    val tableSchema = widened.getOrElse(updatesP.schema)
     val header = (m: Manifest) =>
-      m.copy(schema = Some(tableSchema), partCols = partitionCols, colMap = colMapOutU)
+      m.copy(schema = tableSchema, partCols = partitionCols, colMap = colMapOutU)
     val published = header(manifest)
     // the pre-merge rows of the affected partitions, read through the
     // WIDENED schema so a batch that adds columns merges against typed
@@ -4209,7 +3988,7 @@ object ManifestLake {
     val affected: Option[DataFrame] =
       if (affectedFiles.isEmpty) None
       else Some(readFiles(spark, d.fs, d.root,
-        Manifest(widened.orElse(manifest.schema), manifest.partCols, affectedFiles))
+        Manifest(tableSchema, manifest.partCols, affectedFiles))
         .select(tableSchema.fieldNames.map(n =>
           col(n).cast(tableSchema(n).dataType)): _*))
     val commitBytes = affectedFiles.map(_.bytes).sum + batchBytes
@@ -4340,10 +4119,10 @@ object ManifestLake {
         (pp, Some(ext))
     }
     val dfP = nestedToPhysical(dfP0, manifest)
-    val tableSchema = widen(manifest.schema.get, dfP.schema, partitionCols,
+    val tableSchema = widen(manifest.schema, dfP.schema, partitionCols,
       "overwritePartitions")
     val header = (m: Manifest) =>
-      m.copy(schema = Some(tableSchema), partCols = partitionCols, colMap = colMapOut)
+      m.copy(schema = tableSchema, partCols = partitionCols, colMap = colMapOut)
     val published = header(manifest)
     // PIN the batch: partition discovery and the staged write must see
     // one evaluation (a nondeterministic source must not land rows in
@@ -5022,10 +4801,8 @@ object ManifestLake {
                         extraCols: Seq[String] = Seq.empty): DataFrame =
     if (m.colMap.isEmpty && m.fieldMap.isEmpty) df
     else {
-      val cm = m.colMap.getOrElse(
-        m.schema.map(_.fieldNames.toSeq).getOrElse(Seq.empty).map(n => n -> n))
-      df.select(cm.map { case (l, p) =>
-        val physType = m.schema.get(p).dataType
+      df.select(columnMapping(m).map { case (l, p) =>
+        val physType = m.schema(p).dataType
         val logType = logicalTypeOf(m, p, physType)
         boundaryCol(m, p, l,
           if (logType == physType) None else Some(logType))
@@ -5050,13 +4827,11 @@ object ManifestLake {
   private def physicalProjection(m: Manifest,
                                  mapping: Option[Seq[(String, String)]] = None)
       : Seq[Column] = {
-    val cm = mapping.orElse(m.colMap).getOrElse(
-      m.schema.map(_.fieldNames.toSeq).getOrElse(Seq.empty).map(n => n -> n))
-    cm.map { case (l, p) =>
+    mapping.getOrElse(columnMapping(m)).map { case (l, p) =>
       // columns not yet in the recorded schema (an extended mapping —
       // additive widening, a generated-column backfill) have no
       // physical type to cast to; they alias through
-      m.schema.flatMap(_.fields.find(_.name == p)) match {
+      m.schema.fields.find(_.name == p) match {
         case None => col(l).as(p)
         case Some(f) =>
           val logType = logicalTypeOf(m, p, f.dataType)
@@ -5074,7 +4849,7 @@ object ManifestLake {
   private def nestedToPhysical(df: DataFrame, m: Manifest): DataFrame =
     if (m.fieldMap.isEmpty) df
     else m.fieldMap.map(_._1).distinct.foldLeft(df) { (d, pcol) =>
-      m.schema.flatMap(_.fields.find(_.name == pcol)) match {
+      m.schema.fields.find(_.name == pcol) match {
         case Some(f) if d.columns.contains(pcol) =>
           d.withColumn(pcol, col(pcol).cast(f.dataType))
         case _ => d
@@ -5085,17 +4860,17 @@ object ManifestLake {
     * Physical when no mapping is active.
     */
   private[etl] def logicalSchemaOf(m: Manifest): StructType =
-    if (m.colMap.isEmpty && m.fieldMap.isEmpty)
-      m.schema.getOrElse(StructType(Seq.empty))
-    else {
-      val cm = m.colMap.getOrElse(
-        m.schema.map(_.fieldNames.toSeq).getOrElse(Seq.empty).map(n => n -> n))
-      val phys = m.schema.get
-      StructType(cm.map { case (l, p) =>
-        val f = phys(p)
-        f.copy(name = l, dataType = logicalTypeOf(m, p, f.dataType))
-      }.toArray)
-    }
+    if (m.colMap.isEmpty && m.fieldMap.isEmpty) m.schema
+    else StructType(columnMapping(m).map { case (l, p) =>
+      val f = m.schema(p)
+      f.copy(name = l, dataType = logicalTypeOf(m, p, f.dataType))
+    }.toArray)
+
+  /** The (logical, physical) column mapping: the recorded one, or every
+    * recorded column mapped to itself.
+    */
+  private def columnMapping(m: Manifest): Seq[(String, String)] =
+    m.colMap.getOrElse(m.schema.fieldNames.toSeq.map(n => n -> n))
 
   /** Rename a LOGICAL batch to physical names for writing. Known
     * logical columns take their mapped physical name; NEW columns
@@ -5180,7 +4955,7 @@ object ManifestLake {
     */
   private def scanWithRowMeta(spark: SparkSession, fs: FileSystem, root: Path,
                               m: Manifest, files: Seq[LiveFile]): DataFrame = {
-    val schema = m.schema.get
+    val schema = m.schema
     val scan = spark.baseRelationToDataFrame(
       hadoopFsRelation(spark, fs, root, m.copy(files = files)))
       .select(col("_metadata.file_path").as("__dv_fp") +:
@@ -5382,7 +5157,7 @@ object ManifestLake {
           val hit = added.nonEmpty && {
             val matchingAdded =
               if (partitionOnly)
-                matchedPartitionDirs(spark, manifest.schema.get, manifest.partCols, predicate,
+                matchedPartitionDirs(spark, manifest.schema, manifest.partCols, predicate,
                   added.map(f => partDirOf(f.path)).distinct)
                   .map(m => added.exists(f => m.contains(partDirOf(f.path))))
               else None
@@ -5705,9 +5480,6 @@ object ManifestLake {
     val v = currentVersion(spark, path).getOrElse(
       throw new IllegalArgumentException(s"no manifested table at $path"))
     val m = readManifest(fs, root, v)
-    require(m.schema.isDefined,
-      s"table at $path has a headerless legacy manifest — constraints need " +
-        "the recorded schema (run one append or upsert to adopt a header first)")
     require(!m.constraints.contains(name),
       s"constraint $name already exists on $path (drop it first to change it)")
     // Column nodes parse LAZILY (at analysis), so validate the SQL text
@@ -5825,9 +5597,6 @@ object ManifestLake {
     val v = currentVersion(spark, path).getOrElse(
       throw new IllegalArgumentException(s"no manifested table at $path"))
     val m = readManifest(fs, root, v)
-    require(m.schema.isDefined,
-      s"table at $path has a headerless legacy manifest — table properties " +
-        "need the recorded schema (run one append or upsert to adopt a header first)")
     // graft.* keys are ENGINE facts (validated, column-resolved);
     // anything else is a USER property, stored verbatim as an `#extra`
     // fact (`prop:<key>`) — Delta's arbitrary-TBLPROPERTIES contract.
@@ -5951,9 +5720,6 @@ object ManifestLake {
     val v = currentVersion(spark, path).getOrElse(
       throw new IllegalArgumentException(s"no manifested table at $path"))
     val m = readManifest(fs, root, v)
-    require(m.schema.isDefined,
-      s"table at $path has a headerless legacy manifest — comments need " +
-        "the recorded schema (run one append or upsert to adopt a header first)")
     val logical = logicalSchemaOf(m)
     var ex = m.extras
     def put(k: String, value: Option[String]): Unit = value match {
@@ -6261,9 +6027,6 @@ object ManifestLake {
     val v = currentVersion(spark, path).getOrElse(
       throw new IllegalArgumentException(s"no manifested table at $path"))
     val m = readManifest(fs, root, v)
-    require(m.schema.isDefined,
-      s"table at $path has a headerless legacy manifest — ANALYZE needs " +
-        "the recorded schema (run one append or upsert to adopt a header first)")
     val logical = logicalSchemaOf(m)
     val cm = m.colMap.getOrElse(logical.fieldNames.toSeq.map(n => n -> n)).toMap
     val requestedLogical =
@@ -6287,7 +6050,7 @@ object ManifestLake {
         s"ANALYZE column $c is a partition column — partitions prune by " +
           "directory, not file stats"))
     val phys = resolved.map(c => cm.getOrElse(c, c))
-    val physSchema = m.schema.get
+    val physSchema = m.schema
     val newDefault = (m.statsColsDefault ++ phys).distinct
     val candidates = m.files.filter(f =>
       phys.exists(c => !f.stats.contains(c) || !f.nullCounts.contains(c)))
@@ -6506,11 +6269,7 @@ object ManifestLake {
     val v = currentVersion(spark, path).getOrElse(
       throw new IllegalArgumentException(s"no manifested table at $path"))
     val m = readManifest(fs, root, v)
-    require(m.schema.isDefined,
-      s"table at $path has a headerless legacy manifest — column mapping " +
-        "needs the recorded schema (run one append or upsert to adopt a header first)")
-    val cm = m.colMap.getOrElse(
-      m.schema.get.fieldNames.toSeq.map(n => n -> n))
+    val cm = columnMapping(m)
     val logicalNames = cm.map(_._1)
     if (oldName.contains('.') && logicalNames.contains(oldName.takeWhile(_ != '.')))
       return renameNestedField(spark, fs, root, path, v, m, cm, oldName, newName)
@@ -6579,7 +6338,7 @@ object ManifestLake {
       !newName.exists(c => c == '\t' || c == '\n' || c == '\r'),
       s"new nested-field name must be a plain field name, got $newName")
     val physRoot = cm.find(_._1 == rootL).map(_._2).get
-    val rootType = m.schema.get(physRoot).dataType
+    val rootType = m.schema(physRoot).dataType
     val entries = m.fieldMap.filter(_._1 == physRoot)
     // resolve the PARENT level: its physical path (arrays transparent)
     // and its struct, which must exist for the target to be a field
@@ -6700,7 +6459,7 @@ object ManifestLake {
     val rootL = parts.head
     val segs = parts.tail
     val physRoot = cm.find(_._1 == rootL).map(_._2).get
-    val rootType = m.schema.get(physRoot).dataType
+    val rootType = m.schema(physRoot).dataType
     val entries = m.fieldMap.filter(_._1 == physRoot)
     val parentPhys = resolvePhysPath(entries, segs.dropRight(1))
     val parentType = typeAtPhysPath(rootType, parentPhys).getOrElse(
@@ -6739,13 +6498,13 @@ object ManifestLake {
     val curPhysDotted = curPhys.mkString(".")
     val newParent = StructType(parentStruct.fields.filterNot(_.name == physLeaf))
     val newRootType = replaceStructAt(rootType, parentPhys, newParent)
-    val newSchema = StructType(m.schema.get.fields.map(f =>
+    val newSchema = StructType(m.schema.fields.map(f =>
       if (f.name == physRoot) f.copy(dataType = newRootType) else f))
     val newFieldMap = m.fieldMap.filterNot(e => e._1 == physRoot &&
       (e._2 == oldLogical || e._2.startsWith(oldLogical + ".") ||
         e._3 == curPhysDotted || e._3.startsWith(curPhysDotted + ".")))
     if (validateOnly) return v
-    publish(fs, root, v + 1, m.asNext("schema").copy(schema = Some(newSchema),
+    publish(fs, root, v + 1, m.asNext("schema").copy(schema = newSchema,
       fieldMap = newFieldMap, fieldDropped = m.fieldDropped :+ ((physRoot, curPhysDotted))),
       deltaHint = Some((Seq.empty, Seq.empty)))
     v + 1
@@ -6776,7 +6535,7 @@ object ManifestLake {
       c == '\t' || c == '\n' || c == '\r'),
       s"nested field name must be non-empty with no tabs or newlines: $fieldL")
     val physRoot = cm.find(_._1 == rootL).map(_._2).get
-    val rootType = m.schema.get(physRoot).dataType
+    val rootType = m.schema(physRoot).dataType
     val entries = m.fieldMap.filter(_._1 == physRoot)
     val parentPhys = resolvePhysPath(entries, segs.dropRight(1))
     val parentType = typeAtPhysPath(rootType, parentPhys).getOrElse(
@@ -6814,7 +6573,7 @@ object ManifestLake {
     val newParent = StructType(parentStruct.fields :+
       StructField(freshLeaf, dataType, nullable = true))
     val newRootType = replaceStructAt(rootType, parentPhys, newParent)
-    val newSchema = StructType(m.schema.get.fields.map(f =>
+    val newSchema = StructType(m.schema.fields.map(f =>
       if (f.name == physRoot) f.copy(dataType = newRootType) else f))
     val newFieldMap =
       if (freshLeaf == fieldL) m.fieldMap
@@ -6822,7 +6581,7 @@ object ManifestLake {
         (parentPhys :+ freshLeaf).mkString(".")))
     if (validateOnly) return v
     publish(fs, root, v + 1,
-      m.asNext("schema").copy(schema = Some(newSchema), fieldMap = newFieldMap),
+      m.asNext("schema").copy(schema = newSchema, fieldMap = newFieldMap),
       deltaHint = Some((Seq.empty, Seq.empty)))
     v + 1
   }
@@ -6841,11 +6600,7 @@ object ManifestLake {
     val v = currentVersion(spark, path).getOrElse(
       throw new IllegalArgumentException(s"no manifested table at $path"))
     val m = readManifest(fs, root, v)
-    require(m.schema.isDefined,
-      s"table at $path has a headerless legacy manifest — column mapping " +
-        "needs the recorded schema (run one append or upsert to adopt a header first)")
-    val cm = m.colMap.getOrElse(
-      m.schema.get.fieldNames.toSeq.map(n => n -> n))
+    val cm = columnMapping(m)
     if (name.contains('.') && cm.map(_._1).contains(name.takeWhile(_ != '.')))
       return dropNestedField(spark, fs, root, path, v, m, cm, name,
         validateOnly)
@@ -6871,8 +6626,8 @@ object ManifestLake {
     // "batch carries every recorded column" contract keeps holding
     // for future appends. droppedPhys is what keeps a re-added
     // logical name off this physical column forever.
-    val newSchema = StructType(m.schema.get.fields.filterNot(_.name == phys))
-    publish(fs, root, v + 1, m.asNext("schema").copy(schema = Some(newSchema),
+    val newSchema = StructType(m.schema.fields.filterNot(_.name == phys))
+    publish(fs, root, v + 1, m.asNext("schema").copy(schema = newSchema,
       colMap = Some(cm.filterNot(_._1 == name)),
       droppedPhys = m.droppedPhys :+ phys,
       bloomCols = m.bloomCols.filterNot(_ == phys),
@@ -6912,7 +6667,7 @@ object ManifestLake {
     val rootL = parts.head
     val segs = parts.tail
     val physRoot = cm.find(_._1 == rootL).map(_._2).get
-    val physType = m.schema.get(physRoot).dataType
+    val physType = m.schema(physRoot).dataType
     val entries = m.fieldMap.filter(_._1 == physRoot)
     // the field arrives under its LOGICAL path; the schema stores the
     // physical one (arrays transparent at every level)
@@ -6930,9 +6685,9 @@ object ManifestLake {
         "decimal growth); anything else is a replace write")
     if (validateOnly) return v
     val newRootType = rebuildAtPhysPath(physType, physPath, newType)
-    val newSchema = StructType(m.schema.get.fields.map(f =>
+    val newSchema = StructType(m.schema.fields.map(f =>
       if (f.name == physRoot) f.copy(dataType = newRootType) else f))
-    publish(fs, root, v + 1, m.asNext("schema").copy(schema = Some(newSchema)),
+    publish(fs, root, v + 1, m.asNext("schema").copy(schema = newSchema),
       deltaHint = Some((Seq.empty, Seq.empty)))
     v + 1
   }
@@ -6977,10 +6732,7 @@ object ManifestLake {
     val v = currentVersion(spark, path).getOrElse(
       throw new IllegalArgumentException(s"no manifested table at $path"))
     val m = readManifest(fs, root, v)
-    require(m.schema.isDefined,
-      s"table at $path has a headerless legacy manifest — type widening " +
-        "needs the recorded schema (run one append or upsert to adopt a header first)")
-    val cm = m.colMap.getOrElse(m.schema.get.fieldNames.toSeq.map(n => n -> n))
+    val cm = columnMapping(m)
     if (name.contains('.') && cm.map(_._1).contains(name.takeWhile(_ != '.')))
       return widenNestedField(spark, fs, root, path, v, m, cm, name, newType,
         validateOnly)
@@ -6991,14 +6743,14 @@ object ManifestLake {
     val phys = cm.find(_._1 == name).map(_._2).getOrElse(
       throw new IllegalArgumentException(
         s"no column named $name on $path (columns: ${cm.map(_._1).mkString(", ")})"))
-    val field = m.schema.get(phys)
+    val field = m.schema(phys)
     require(widensTo(field.dataType, newType),
       s"cannot change $name from ${field.dataType.catalogString} to " +
         s"${newType.catalogString} — only value-preserving widenings are " +
         "metadata-only (integral up-casts, float->double, int->double, " +
         "decimal growth); anything else is a replace write")
     if (validateOnly) return v
-    val newSchema = StructType(m.schema.get.fields.map(f =>
+    val newSchema = StructType(m.schema.fields.map(f =>
       if (f.name == phys) f.copy(dataType = newType) else f))
     // What survives the widen, per skipping-stats family (the rule:
     // stats may only ever degrade toward KEEP, never toward a false
@@ -7032,7 +6784,7 @@ object ManifestLake {
       else m.files.map(f =>
         f.copy(stats = f.stats - phys, valueSets = f.valueSets - phys))
     publish(fs, root, v + 1, m.asNext("schema").copy(files = newFiles,
-      schema = Some(newSchema),
+      schema = newSchema,
       bloomCols = if (renderingStable) m.bloomCols else m.bloomCols.filterNot(_ == phys)))
     v + 1
   }
@@ -7056,9 +6808,6 @@ object ManifestLake {
     */
   private[etl] def evolveSchemaFor(m: Manifest, srcSchema: StructType,
                                    path: String): Manifest = {
-    require(m.schema.isDefined,
-      s"table at $path has a headerless legacy manifest — schema evolution " +
-        "needs the recorded schema (run one append or upsert to adopt a header first)")
     val existing = logicalSchemaOf(m).fieldNames.map(_.toLowerCase).toSet
     val news = srcSchema.fields.filterNot(f =>
       existing.contains(f.name.toLowerCase)).toSeq
@@ -7068,8 +6817,7 @@ object ManifestLake {
         s"evolved column name must be non-empty with no tabs or newlines: $name")
       require(!ReservedLogicalNames.contains(name),
         s"column name $name is reserved")
-      val cm = cur.colMap.getOrElse(
-        cur.schema.get.fieldNames.toSeq.map(n => n -> n))
+      val cm = columnMapping(cur)
       val (newColMap, phys) = cur.colMap match {
         case None => (None, name)
         case Some(_) =>
@@ -7080,8 +6828,8 @@ object ManifestLake {
           (Some(cm :+ (name -> fresh)), fresh)
       }
       cur.copy(
-        schema = Some(StructType(cur.schema.get.fields :+
-          StructField(phys, f.dataType, nullable = true))),
+        schema = StructType(cur.schema.fields :+
+          StructField(phys, f.dataType, nullable = true)),
         colMap = newColMap)
     }
   }
@@ -7093,13 +6841,10 @@ object ManifestLake {
     val v = currentVersion(spark, path).getOrElse(
       throw new IllegalArgumentException(s"no manifested table at $path"))
     val m = readManifest(fs, root, v)
-    require(m.schema.isDefined,
-      s"table at $path has a headerless legacy manifest — schema surgery " +
-        "needs the recorded schema (run one append or upsert to adopt a header first)")
     require(name.nonEmpty && !name.exists(c => c == '\t' || c == '\n' || c == '\r'),
       s"column name must be non-empty with no tabs or newlines: $name")
     require(!ReservedLogicalNames.contains(name), s"column name $name is reserved")
-    val cm = m.colMap.getOrElse(m.schema.get.fieldNames.toSeq.map(n => n -> n))
+    val cm = columnMapping(m)
     if (name.contains('.') && cm.map(_._1).contains(name.takeWhile(_ != '.')))
       return addNestedField(spark, fs, root, path, v, m, cm, name, dataType,
         validateOnly)
@@ -7114,10 +6859,10 @@ object ManifestLake {
           else Iterator.from(1).map(k => s"${name}__$k").find(!used.contains(_)).get
         (Some(cm :+ (name -> fresh)), fresh)
     }
-    val newSchema = StructType(m.schema.get.fields :+
+    val newSchema = StructType(m.schema.fields :+
       StructField(phys, dataType, nullable = true))
     publish(fs, root, v + 1,
-      m.asNext("schema").copy(schema = Some(newSchema), colMap = newColMap))
+      m.asNext("schema").copy(schema = newSchema, colMap = newColMap))
     v + 1
   }
 
@@ -7157,10 +6902,7 @@ object ManifestLake {
     val v = currentVersion(spark, path).getOrElse(
       throw new IllegalArgumentException(s"no manifested table at $path"))
     val m = readManifest(fs, root, v)
-    require(m.schema.isDefined,
-      s"table at $path has a headerless legacy manifest — generated columns " +
-        "need the recorded schema (run one append or upsert to adopt a header first)")
-    val cm = m.colMap.getOrElse(m.schema.get.fieldNames.toSeq.map(n => n -> n))
+    val cm = columnMapping(m)
     // declaring over an EXISTING column is allowed only while the table
     // is EMPTY (the create-partitioned-then-declare flow for generated
     // PARTITION columns) — existing data under the name could disagree
@@ -7171,9 +6913,9 @@ object ManifestLake {
         "columns adopt an existing column only while the table is empty")
     if (adopting) {
       val phys0 = cm.find(_._1 == name).get._2
-      require(m.schema.get(phys0).dataType == dataType,
+      require(m.schema(phys0).dataType == dataType,
         s"declared type ${dataType.catalogString} must match the existing " +
-          s"column's ${m.schema.get(phys0).dataType.catalogString}")
+          s"column's ${m.schema(phys0).dataType.catalogString}")
     }
     require(!m.generated.exists(_._1 == name),
       s"column $name is already generated on $path")
@@ -7210,8 +6952,8 @@ object ManifestLake {
           (Some(cm :+ (name -> fresh)), fresh)
       }
     val newSchema =
-      if (adopting) m.schema.get
-      else StructType(m.schema.get.fields :+
+      if (adopting) m.schema
+      else StructType(m.schema.fields :+
         StructField(phys, dataType, nullable = true))
     // TZ-PINNED GENERATION: an expression over a TIMESTAMP base
     // renders/converts through the SESSION timezone (CAST(ts AS DATE)
@@ -7232,7 +6974,7 @@ object ManifestLake {
       if (!tzSensitive) m.extras
       else m.extras.filterNot(_._1 == "gentz:" + phys) :+
         ("gentz:" + phys -> spark.sessionState.conf.sessionLocalTimeZone)
-    val adopted = m.asNext("schema").copy(schema = Some(newSchema), colMap = newColMap,
+    val adopted = m.asNext("schema").copy(schema = newSchema, colMap = newColMap,
       generated = m.generated :+ (name -> expression), extras = extrasOut)
     // a table with NO rows adopts metadata-only — files may exist (an
     // empty CREATE stages one zero-row part file) but nothing needs a
@@ -7355,20 +7097,9 @@ object ManifestLake {
     }
     val liveAcrossKept = retainedManifests.flatMap(_._2.files).map(_.path).toSet
     val referencedEver = allManifests.flatMap(_._2.files).map(_.path).toSet
-    // change-file dirs resolve per version: the manifest-referenced
-    // #cdf path, or (manifests predating the directive) the
-    // version-keyed legacy location — but only when the commit kind
-    // actually serves change files, so a stale _cdf left at a version
-    // later published as an append is reaped instead of billed until
-    // it ages out
-    def cdfRefOf(vv: Long, m: Manifest): Option[String] =
-      m.cdf.orElse {
-        if (m.op.exists(o => o == "upsert" || o == "delete"))
-          Some(f"$DataDir/v$vv%06d/$CdfDir")
-        else None
-      }
-    val keptCdfPrefixes = retainedManifests.flatMap { case (kv, km) => cdfRefOf(kv, km) }.toSet
-    val cdfEver = allManifests.flatMap { case (vv, m) => cdfRefOf(vv, m) }.toSet
+    // change-file dirs are the manifest-referenced #cdf paths
+    val keptCdfPrefixes = retainedManifests.flatMap(_._2.cdf).toSet
+    val cdfEver = allManifests.flatMap(_._2.cdf).toSet
     // deletion-vector dirs are LIVE-SET references (a kept manifest's
     // masked files are unreadable without them) — never reap a dv dir
     // any kept version's entry names; below the horizon they reap with
@@ -7450,15 +7181,11 @@ object ManifestLake {
         }
       }
     }
+    // versions a kept delta chains through are RETAINED (see keptChainBases)
     versions.dropRight(keepVersions).filterNot(keptChainBases.contains).foreach { old =>
-      // a version may exist under either encoding (or, after a partial
-      // migration, both) — reap whatever is actually on disk. Versions
-      // a kept delta chains through are RETAINED (see keptChainBases).
-      Seq(manifestPath(root, old), legacyManifestPath(root, old))
-        .filter(fs.exists).foreach { p =>
-          removed += p.toString
-          if (!dryRun) fs.delete(p, false): Unit
-        }
+      val p = manifestPath(root, old)
+      removed += p.toString
+      if (!dryRun) fs.delete(p, false): Unit
     }
     // sharded-checkpoint dirs reap with their version: keep every dir a
     // RETAINED manifest references; everything else (a reaped version's

@@ -110,6 +110,22 @@ class CloneSpec extends AnyFunSuite {
     assert(ManifestLake.readVersion(spark, b, 1L).count() === 10)
   }
 
+  test("readChanges serves a clone's creating commit as the source's rows, like the streaming source") {
+    val src = freshDir("clone-changes-src")
+    val tgt = freshDir("clone-changes-tgt")
+    ManifestLake.write(spark, batch(0, 10), src, Seq("grp"))
+    ManifestLake.write(spark, batch(10, 14), src, Seq("grp"), replace = false)
+    ManifestLake.shallowClone(spark, src, tgt)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("grp", "x", "payload").collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getString(2))).sorted.toSeq
+    // v1 of the target is the clone: the same files the streaming
+    // source feeds for it (addedFilesAt), read as one batch
+    assert(rows(ManifestLake.readChanges(spark, tgt, 0L, 1L)) === rows(ManifestLake.read(spark, src)))
+    assert(ManifestLake.addedFilesAt(spark, tgt, 1L, skipNonAppend = false).map(_.path).toSet ===
+      liveFiles(tgt).map(_.path).toSet)
+  }
+
   test("spellings and refusals: OR REPLACE, IF NOT EXISTS, self-clone, bad version") {
     val src = freshDir("clone-spell-src")
     val t1 = freshDir("clone-spell-t1")

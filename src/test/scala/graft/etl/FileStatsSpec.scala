@@ -97,7 +97,7 @@ class FileStatsSpec extends AnyFunSuite {
     val (fs, root) = ManifestLake.fsFor(spark, dir)
     val m0 = ManifestLake.readManifest(fs, root, ManifestLake.currentVersion(spark, dir).get)
     val m = m0.copy(files = m0.files.filterNot(f => skip.contains(f.path)))
-    val phys = m.schema.get
+    val phys = m.schema
     val statsCols = (m.statsColsDefault ++ m.identity.map(_._1)).distinct
     val scan = spark.read.schema(StructType(phys.fields.filterNot(f => m.partCols.contains(f.name))))
       .parquet(m.files.map(f => new Path(root, f.path).toString): _*)

@@ -313,39 +313,11 @@ class ManifestDataSourceSpec extends AnyFunSuite {
     val dir = freshDir("mds-legacy")
     ManifestLake.write(spark, Seq(("a", 1L)).toDF("part", "v"), dir, Seq("part"))
     val (fs, root) = ManifestLake.fsFor(spark, dir)
-    val m = ManifestLake.readManifest(fs, root, 1L)
-    // strip the header: republish v2 as a headerless manifest
-    ManifestLake.publish(fs, root, 2L, ManifestLake.Manifest(None, Seq.empty, m.files))
+    // a foreign v2: v1's file lines with no header at all
+    ForeignManifests.write(fs, root, 2L, ForeignManifests.dataLines(fs, root, 1L), gzip = true)
     val e = intercept[IllegalArgumentException] { fmt.load(dir) }
     assert(e.getMessage.contains("schema header"))
     // …but time travel to the headed version still works
     assert(fmt.option("versionAsOf", "1").load(dir).count() === 1)
-  }
-
-  test("append on a legacy headerless PARTITIONED table inherits the hive layout, not empty") {
-    import spark.implicits._
-    val dir = freshDir("mds-legacy-part")
-    val v1 = (0 until 20).map(i => (s"chr${i % 2 + 1}", i.toLong, s"p$i"))
-      .toDF("chrom", "pos", "payload")
-    ManifestLake.write(spark, v1, dir, Seq("chrom"))
-    val (fs, root) = ManifestLake.fsFor(spark, dir)
-    val m = ManifestLake.readManifest(fs, root, 1L)
-    // simulate the pre-header writer: republish headerless over the same files
-    val gz = new org.apache.hadoop.fs.Path(root, "_manifest/v000001.list.gz")
-    fs.delete(gz, false)
-    ManifestLake.publish(fs, root, 1L, ManifestLake.Manifest(None, Seq.empty, m.files))
-    assert(ManifestLake.readManifest(fs, root, 1L).schema.isEmpty)
-    // an unadorned format append has no header to inherit partitioning
-    // from — it must derive [chrom] from the files' hive layout, NOT
-    // stamp an unpartitioned header over partitioned carried files
-    val b = Seq(("chr1", 100L, "new")).toDF("chrom", "pos", "payload")
-    b.write.format("graft-manifest").mode("append").save(dir)
-    val m2 = ManifestLake.readManifest(fs, root, 2L)
-    assert(m2.schema.isDefined && m2.partCols === Seq("chrom"))
-    // the carried files' partition column survives the adopted header
-    val got = ManifestLake.read(spark, dir)
-    assert(got.count() === 21)
-    assert(got.where(col("chrom").isNull).count() === 0)
-    assert(got.where(col("chrom") === "chr2").count() === 10)
   }
 }

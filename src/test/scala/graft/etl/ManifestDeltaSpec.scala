@@ -234,7 +234,7 @@ class ManifestDeltaSpec extends AnyFunSuite {
         stats = Map("id" -> ((i * 10L).toString, (i * 10L + 9L).toString)),
         rows = Some(10L), nullCounts = Map("id" -> 0L))
       val files1 = (0 until 2500).map(file(_, 1))
-      ManifestLake.publish(fs, root, 1L, ManifestLake.Manifest(Some(schema), Seq("grp"), files1))
+      ManifestLake.publish(fs, root, 1L, ManifestLake.Manifest(schema, Seq("grp"), files1))
       // the manifest gz is a POINTER (tiny — no inline file lines) and
       // the shard dir is a legal parquet dataset
       assert(manifestBytes(dir, 1L) < 4096,
@@ -252,7 +252,7 @@ class ManifestDeltaSpec extends AnyFunSuite {
       assert(m1.files.forall(f => f.stats.contains("id") && f.rows.contains(10L)))
       // deltas chain on the sharded base and resolve exactly
       val files2 = files1.drop(3) ++ Seq(file(9001, 2), file(9002, 2))
-      ManifestLake.publish(fs, root, 2L, ManifestLake.Manifest(Some(schema), Seq("grp"), files2),
+      ManifestLake.publish(fs, root, 2L, ManifestLake.Manifest(schema, Seq("grp"), files2),
         deltaHint = Some((Seq(file(9001, 2), file(9002, 2)), files1.take(3).map(_.path))))
       assert(manifestBytes(dir, 2L) < 2048, "the delta stays O(changed)")
       ManifestLake.clearManifestCache()
@@ -263,7 +263,7 @@ class ManifestDeltaSpec extends AnyFunSuite {
       // a REPLACE-shaped snapshot at v3 writes a NEW ckpt dir; vacuum
       // keep-1 reaps v1's manifest AND its shard dir (grace 0)
       val files3 = (0 until 1500).map(file(_, 3))
-      ManifestLake.publish(fs, root, 3L, ManifestLake.Manifest(Some(schema), Seq("grp"), files3))
+      ManifestLake.publish(fs, root, 3L, ManifestLake.Manifest(schema, Seq("grp"), files3))
       ManifestLake.vacuum(spark, dir, keepVersions = 1, stagedGraceMs = 0)
       val after = fs.listStatus(new Path(root, "_manifest"))
         .filter(st => st.isDirectory && st.getPath.getName.startsWith("ckpt-"))
@@ -286,7 +286,7 @@ class ManifestDeltaSpec extends AnyFunSuite {
       def file(i: Int) = ManifestLake.LiveFile(1000L + i,
         f"data/v000001/grp=g${i % 8}/part-$i%06d.parquet", rows = Some(10L))
       ManifestLake.publish(fs, root, 1L,
-        ManifestLake.Manifest(Some(schema), Seq("grp"), (0 until 1500).map(file)))
+        ManifestLake.Manifest(schema, Seq("grp"), (0 until 1500).map(file)))
       val mdir = new Path(root, "_manifest")
       // an ORPHAN ckpt dir simulating a commit in flight: shards landed,
       // manifest rename not yet published. Object stores list synthetic

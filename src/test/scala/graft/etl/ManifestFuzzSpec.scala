@@ -44,6 +44,16 @@ class ManifestFuzzSpec extends AnyFunSuite {
         val v = ManifestLake.currentVersion(spark, dir).get
         history(v) = model
       }
+      // every commit publishes the one manifest form: a gzipped
+      // v<N>.list.gz whose header records the schema
+      def assertOneFormat(v: Long, at: String): Unit = {
+        val names = fs.listStatus(new org.apache.hadoop.fs.Path(root, "_manifest"))
+          .map(_.getPath.getName).toSet
+        assert(names.contains(f"v$v%06d.list.gz") && !names.contains(f"v$v%06d.list"),
+          s"$at: v$v is not published as v<N>.list.gz")
+        assert(ForeignManifests.lines(fs, root, v).exists(_.startsWith("#schema\t")),
+          s"$at: v$v carries no #schema header")
+      }
       def readNow(v: Option[Long] = None) = {
         val d = v.map(ManifestLake.readVersion(spark, dir, _))
           .getOrElse(ManifestLake.read(spark, dir))
@@ -60,6 +70,7 @@ class ManifestFuzzSpec extends AnyFunSuite {
         statsCols = Seq("id"))
       model = seedRows.toMap
       record()
+      assertOneFormat(1L, s"seed=$seed seed write")
 
       // the change feed of commit v, replayed onto the model at v-1:
       // delete/update_preimage rows leave (each must be a row the model
@@ -178,8 +189,10 @@ class ManifestFuzzSpec extends AnyFunSuite {
         // invariant 1: the head always equals the model
         assert(readNow() === model,
           s"seed=$seed step=$step op=$op: head diverged from the model")
-        // invariant 2: a data commit's change feed replays the model
         val headAfter = ManifestLake.currentVersion(spark, dir).get
+        ((headBefore + 1) to headAfter).foreach(v =>
+          assertOneFormat(v, s"seed=$seed step=$step op=$op"))
+        // invariant 2: a data commit's change feed replays the model
         if (dataOps(op) && headAfter == headBefore + 1)
           assert(replayFeed(headAfter) === model,
             s"seed=$seed step=$step op=$op: v$headAfter's change feed does not replay v$headBefore")

@@ -18,6 +18,25 @@ class ManifestLakeSpec extends AnyFunSuite {
   private def freshDir(tag: String): String =
     Files.createTempDirectory(tag).toString + "/table"
 
+  /** The per-commit grouped union the single-scan read replaced — the
+    * spec's reference read: one DataFrame per commit dir so partition
+    * discovery works, later groups aligned to the first group's
+    * inferred schema.
+    */
+  private def readFilesGrouped(root: org.apache.hadoop.fs.Path,
+                               files: Seq[String]): org.apache.spark.sql.DataFrame = {
+    val groups = files.groupBy(_.split("/").take(2).mkString("/")).toSeq.sortBy(_._1)
+    val frames = groups.map { case (commitDir, fls) =>
+      spark.read
+        .option("basePath", new org.apache.hadoop.fs.Path(root, commitDir).toString)
+        .parquet(fls.map(f => new org.apache.hadoop.fs.Path(root, f).toString): _*)
+    }
+    frames.reduce { (a, b) =>
+      val cols = a.schema.fields.map(f => col(f.name).cast(f.dataType))
+      a.unionByName(b.select(cols: _*))
+    }
+  }
+
   test("write → read round-trip, partitioned; append accretes, replace supersedes") {
     import spark.implicits._
     val dir = freshDir("mlake")
@@ -248,10 +267,10 @@ class ManifestLakeSpec extends AnyFunSuite {
     assert(r.queryExecution.optimizedPlan.collectLeaves().size === 1,
       s"expected one scan node:\n${r.queryExecution.optimizedPlan}")
     assert(r.count() === 200)
-    // row-for-row identical to the legacy per-commit grouped union
+    // row-for-row identical to the per-commit grouped union
     val (fs, root) = ManifestLake.fsFor(spark, dir)
     val m = ManifestLake.readManifest(fs, root, 200L)
-    val grouped = ManifestLake.readFilesGrouped(spark, root, m.files.map(_.path))
+    val grouped = readFilesGrouped(root, m.files.map(_.path))
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select(col("chrom"), col("pos"), col("payload"))
         .collect().map(r => (r.getString(0), r.getLong(1), r.getString(2))).sorted.toSeq
@@ -273,7 +292,7 @@ class ManifestLakeSpec extends AnyFunSuite {
     val (fs, root) = ManifestLake.fsFor(spark, dir)
     val before = ManifestLake.read(spark, dir).collect().toSeq
     intercept[IllegalStateException] {
-      ManifestLake.publish(fs, root, 2L, ManifestLake.Manifest(Some(a.schema), Seq("chrom"),
+      ManifestLake.publish(fs, root, 2L, ManifestLake.Manifest(a.schema, Seq("chrom"),
         Seq(ManifestLake.LiveFile(0L, "data/v000099/chrom=chr1/ghost.parquet"))))
     }
     // winner intact at v2, v1 still time-travels
@@ -766,7 +785,7 @@ class ManifestLakeSpec extends AnyFunSuite {
       replace = false, statsCols = Seq("pos", "score")) === 2L)
     val (fs, root) = ManifestLake.fsFor(spark, dir)
     val m = ManifestLake.readManifest(fs, root, 2L)
-    assert(m.schema.get.fieldNames.toSeq === Seq("chrom", "pos", "score"))
+    assert(m.schema.fieldNames.toSeq === Seq("chrom", "pos", "score"))
     val r = ManifestLake.read(spark, dir)
     // single scan node, widened schema, v1 rows serve score as null
     assert(r.queryExecution.executedPlan.collect {
@@ -838,26 +857,12 @@ class ManifestLakeSpec extends AnyFunSuite {
     ManifestLake.write(spark, v1, dir, Seq("chrom"))
     // strip the header directives AND the gzip encoding — the literal
     // artifact a pre-header, pre-compression writer left behind (plain
-    // `.list`, files only, no recorded schema). Rewriting it this way
-    // also pins that the read path still accepts the legacy extension.
+    // `.list`, files only, no recorded schema)
     val (fs, root) = ManifestLake.fsFor(spark, dir)
-    val gzPath = new org.apache.hadoop.fs.Path(root, "_manifest/v000001.list.gz")
-    val mPath = new org.apache.hadoop.fs.Path(root, "_manifest/v000001.list")
-    val body = {
-      val in = new java.util.zip.GZIPInputStream(fs.open(gzPath))
-      try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-      finally in.close()
-    }
-    val stripped = body.filterNot(_.startsWith("#"))
-    fs.delete(gzPath, false)
-    val out = fs.create(mPath, true)
-    try out.write((stripped.mkString("\n") + "\n").getBytes("UTF-8"))
-    finally out.close()
-    assert(ManifestLake.readManifest(fs, root, 1L).schema.isEmpty)
+    ForeignManifests.replaceWithPlain(fs, root, 1L, ForeignManifests.dataLines(fs, root, 1L))
 
     // an append whose shape disagrees with what the legacy files hold
-    // must be refused — stamping its schema as the table header would
-    // make the carried files read back as silent nulls
+    // must be refused
     val drifted = Seq(("chr1", "not-a-long", "x", 1.5))
       .toDF("chrom", "pos", "payload", "extra")
     intercept[IllegalArgumentException] {
@@ -868,22 +873,49 @@ class ManifestLakeSpec extends AnyFunSuite {
         Seq(("chr1", "s", "x", 1.5)).toDF("chrom", "pos", "payload", "extra"),
         Seq("chrom"), Seq("chrom", "pos"))
     }
-    // declaring partitioning that disagrees with the legacy files' hive
-    // layout must be refused too — the adopted header would record the
-    // wrong partCols and silently null the carried files' partition
-    // column under the explicit single scan
-    val okShape = Seq(("chr1", 100L, "new")).toDF("chrom", "pos", "payload")
-    val ePart = intercept[IllegalArgumentException] {
-      ManifestLake.write(spark, okShape, dir, Seq.empty, replace = false)
-    }
-    assert(ePart.getMessage.contains("directory layout"))
-    // a shape-matching append IS accepted and adopts the header for the
-    // whole table — the upgrade path off legacy manifests
+    // …and so must one whose shape and partitioning match: a foreign
+    // manifest is never adopted, whatever the batch
     val ok = Seq(("chr1", 100L, "new")).toDF("chrom", "pos", "payload")
-    assert(ManifestLake.write(spark, ok, dir, Seq("chrom"), replace = false) === 2L)
-    assert(ManifestLake.readManifest(fs, root, 2L).schema.isDefined)
-    assert(ManifestLake.read(spark, dir).count() === 21)
-    assert(ManifestLake.read(spark, dir).where(col("payload") === "p3").count() === 1)
+    val eOk = intercept[IllegalArgumentException] {
+      ManifestLake.write(spark, ok, dir, Seq("chrom"), replace = false)
+    }
+    assert(eOk.getMessage.contains("plain .list"))
+    assert(fs.listStatus(new org.apache.hadoop.fs.Path(root, "_manifest"))
+      .map(_.getPath.getName).filterNot(_.startsWith(".")).toSeq === Seq("v000001.list"))
+  }
+
+  test("a foreign manifest (headerless, or plain .list) refuses read, append and currentVersion; no write publishes beside it") {
+    import spark.implicits._
+    def batch(lo: Int, hi: Int) = (lo until hi).map(i => (s"chr${i % 2 + 1}", i.toLong, s"p$i"))
+      .toDF("chrom", "pos", "payload")
+    Seq("headerless", "plain").foreach { kind =>
+      val dir = freshDir(s"mlake-foreign-$kind")
+      ManifestLake.write(spark, batch(0, 10), dir, Seq("chrom"))
+      val (fs, root) = ManifestLake.fsFor(spark, dir)
+      // the headerless form keeps the gz encoding and loses the header;
+      // the plain form keeps the header and loses the gz encoding
+      if (kind == "headerless")
+        ForeignManifests.write(fs, root, 1L, ForeignManifests.dataLines(fs, root, 1L), gzip = true)
+      else ForeignManifests.replaceWithPlain(fs, root, 1L, ForeignManifests.lines(fs, root, 1L))
+      val mdir = new org.apache.hadoop.fs.Path(root, "_manifest")
+      def listing = fs.listStatus(mdir).map(_.getPath.getName).filterNot(_.startsWith(".")).toSeq
+      val before = listing
+      val word = if (kind == "headerless") "schema header" else "plain .list"
+      def refuses(what: String)(f: => Any): Unit = {
+        val e = intercept[IllegalArgumentException](f)
+        assert(e.getMessage.contains(word), s"$kind $what: ${e.getMessage}")
+      }
+      refuses("read")(ManifestLake.read(spark, dir))
+      refuses("readVersion")(ManifestLake.readVersion(spark, dir, 1L))
+      refuses("append")(ManifestLake.write(spark, batch(10, 12), dir, Seq("chrom"), replace = false))
+      refuses("replace")(ManifestLake.write(spark, batch(10, 12), dir, Seq("chrom")))
+      refuses("upsert")(ManifestLake.upsert(spark, dir, batch(0, 2), Seq("chrom"), Seq("chrom", "pos")))
+      refuses("delete")(ManifestLake.delete(spark, dir, col("pos") === 1L))
+      // never "no table": that would let the next write publish a new v1
+      if (kind == "plain") refuses("currentVersion")(ManifestLake.currentVersion(spark, dir))
+      else assert(ManifestLake.currentVersion(spark, dir) === Some(1L))
+      assert(listing === before, s"$kind: a write published beside the foreign manifest")
+    }
   }
 
   test("maintenance preserves stats: compact and upsert re-collect for rewritten files") {
@@ -1256,8 +1288,8 @@ class ManifestLakeSpec extends AnyFunSuite {
     val dir2 = freshDir("mlake-delete-legacy")
     ManifestLake.write(spark, df, dir2, Seq.empty)
     val (fs2, root2) = ManifestLake.fsFor(spark, dir2)
-    val m = ManifestLake.readManifest(fs2, root2, 1L)
-    ManifestLake.publish(fs2, root2, 2L, ManifestLake.Manifest(None, Seq.empty, m.files))
+    ForeignManifests.write(fs2, root2, 2L, ForeignManifests.dataLines(fs2, root2, 1L),
+      gzip = true)
     val e = intercept[IllegalArgumentException] {
       ManifestLake.delete(spark, dir2, col("id") === 1L)
     }
