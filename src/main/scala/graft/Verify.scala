@@ -4,8 +4,11 @@ import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
-  def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
+  /** The local session `Verify` and `Profile` run on: `SPARK_GRAFT_CPUS`
+    * cores (default 4) and as many shuffle partitions, graft's SQL
+    * extensions, UTC.
+    */
+  def session(): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -15,6 +18,12 @@ object Verify {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  def main(args: Array[String]): Unit = {
+    val Array(sfDir, outDir) = args
+    val spark = session()
     new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_ONLY=q21,q22 restricts the dump for focused local
     // verification; the driver never sets it, so its runs stay complete.

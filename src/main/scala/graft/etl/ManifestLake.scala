@@ -3470,9 +3470,10 @@ object ManifestLake {
     manifestAtOrFail(spark, path, v).files.sortBy(_.path)
 
   /** Read exactly `files` (already known live at some version) under
-    * `head`'s recorded shape — the single-scan manifest read over an
-    * arbitrary file slice. Empty slice = empty frame WITH the recorded
-    * schema.
+    * `head`'s recorded shape and header facts (generated-partition
+    * inference and bloom skipping apply) — the single-scan manifest
+    * read over an arbitrary file slice. Empty slice = empty frame WITH
+    * the recorded schema.
     */
   private[graft] def readFileSliceLogical(spark: SparkSession, path: String,
                                           head: Manifest,
@@ -3484,7 +3485,7 @@ object ManifestLake {
                                    files: Seq[LiveFile]): DataFrame = {
     val (fs, root) = fsFor(spark, path)
     if (files.isEmpty) spark.createDataFrame(spark.sparkContext.emptyRDD[Row], head.schema)
-    else readFiles(spark, fs, root, Manifest(head.schema, head.partCols, files))
+    else readFiles(spark, fs, root, head.copy(files = files))
   }
 
   /** Read the table at its highest published version. A table that was

@@ -5,8 +5,9 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic
 
-/** The two `private[sql]` bridges graft's SQL DML surface needs, and
-  * nothing else. Spark deliberately scopes plan-construction helpers to
+/** The `private[sql]` bridges graft's SQL DML surface needs, and the
+  * `private[spark]` listener-bus drain its tracer (`graft.obs.Trace`)
+  * needs. Spark deliberately scopes plan-construction helpers to
   * its own package; an extension that intercepts parsed `MERGE INTO` /
   * `UPDATE` / `DELETE` statements must still (a) wrap a parsed catalyst
   * `Expression` back into a public [[Column]] to hand it to the engine,
@@ -37,6 +38,14 @@ object SparkShims {
   def sameType(a: org.apache.spark.sql.types.StructType,
                b: org.apache.spark.sql.types.StructType): Boolean =
     a.sameType(b)
+
+  /** Waits until every event posted so far has reached every listener.
+    * Spark delivers listener events on background threads; a tracer
+    * drains the bus at each span boundary so the span's task metrics
+    * and query-execution callbacks are all attributed to it.
+    */
+  def drainListeners(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 }
 
 /** Public extension point over Spark's `private[sql]`

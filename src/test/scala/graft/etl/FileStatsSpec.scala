@@ -7,11 +7,11 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.obs.Trace
 
 /** The per-file stats a commit's write tasks record must equal what the
   * per-file aggregate (`ManifestLake.collectStatsOver`, ANALYZE's path)
@@ -221,19 +221,9 @@ class FileStatsSpec extends AnyFunSuite {
     val rnd = new SplittableRandom(31L)
     val dir = freshDir("fstats-one-query")
     val df = batch(rnd, 0L, 20)
-    val plans = new java.util.concurrent.LinkedBlockingQueue[SparkPlan]()
-    val listener = new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        plans.put(qe.executedPlan)
-      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    val execs =
-      try {
-        ManifestLake.write(spark, df, dir, Seq("grp"), statsCols = Stats, bloomCols = Blooms)
-        ListenerDrain.drain(spark, plans)
-      } finally spark.listenerManager.unregister(listener)
-    assert(execs.size === 1, execs.map(_.nodeName).mkString(", "))
+    val (_, span) = Trace.capture(spark)(
+      ManifestLake.write(spark, df, dir, Seq("grp"), statsCols = Stats, bloomCols = Blooms))
+    assert(span.plans.size === 1, span.plans.map(_.nodeName).mkString(", "))
     assert(checkAgainstAggregate(dir, "one-query write") > 0)
   }
 }

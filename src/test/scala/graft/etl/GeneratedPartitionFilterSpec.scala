@@ -287,4 +287,25 @@ class GeneratedPartitionFilterSpec extends AnyFunSuite {
       spark.sql(s"SELECT a FROM $t WHERE bkt = '0'"))
     assert(np === expect0 && fp < total)
   }
+
+  test("a filtered readChanges prunes generated partitions like a table read") {
+    import spark.implicits._
+    val dir = freshDir("genpart-changes")
+    val t = s"`graft-manifest`.`$dir`"
+    spark.sql(
+      s"""CREATE TABLE $t (id BIGINT, payload STRING,
+         |  bkt STRING GENERATED ALWAYS AS (CAST(id % 4 AS STRING)))
+         |USING `graft-manifest` PARTITIONED BY (bkt)""".stripMargin)
+    val created = ManifestLake.currentVersion(spark, dir).getOrElse(0L)
+    (0 until 80).map(i => (i.toLong, s"p$i")).toDF("id", "payload")
+      .createOrReplaceTempView("genpart_changes_src")
+    spark.sql(s"INSERT INTO $t (id, payload) SELECT * FROM genpart_changes_src")
+    spark.sql(s"INSERT INTO $t (id, payload) SELECT id + 80, payload FROM genpart_changes_src")
+    val head = ManifestLake.currentVersion(spark, dir).get
+    val (n, f) = filesRead(ManifestLake.readChanges(spark, dir, created, head)
+      .where(col("id") === 42L))
+    val pruned = filesIn(spark, dir, Set("bkt=2"))
+    assert(n === 1L)
+    assert(f <= pruned, s"id = 42 must prune the change feed to bkt=2 ($f read, $pruned there)")
+  }
 }

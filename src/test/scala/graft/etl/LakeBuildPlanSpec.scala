@@ -1,16 +1,16 @@
 package graft.etl
 
 import java.nio.file.Files
-import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
 
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.command.DataWritingCommandExec
 import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_COL, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
-import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.obs.Trace
 
 /** Pins the shuffles of an ingest: the AQE-final plan of
   * `Lake.write(Lake.build(..))`, captured from the write command.
@@ -20,28 +20,18 @@ class LakeBuildPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private lazy val cohort = RandomCohorts.write(spark, 7L, Files.createTempDirectory("plan-cohort"))
 
   private def ingestPlan(conf: (String, String)*): SparkPlan = {
-    val plans = new LinkedBlockingQueue[SparkPlan]()
-    val listener = new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        if (find(qe.executedPlan)(_.isInstanceOf[DataWritingCommandExec]).isDefined)
-          plans.put(qe.executedPlan)
-      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    val c = cohort // generated before the listener sees any write
+    val c = cohort // generated outside the traced span
     val saved = conf.map { case (k, _) => k -> spark.conf.getOption(k) }
     conf.foreach { case (k, v) => spark.conf.set(k, v) }
-    spark.listenerManager.register(listener)
-    try {
-      Lake.write(Lake.build(spark, c.vcfs, c.impact, c.dbSnp, t2t = false, c.gnomad, c.alpha),
-        Files.createTempDirectory("plan-lake").toString)
-      Option(plans.poll(30, TimeUnit.SECONDS)).getOrElse(fail("no write plan captured"))
-    } finally {
-      spark.listenerManager.unregister(listener)
-      saved.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
-      }
+    val (_, span) = try Trace.capture(spark)(
+        Lake.write(Lake.build(spark, c.vcfs, c.impact, c.dbSnp, t2t = false, c.gnomad, c.alpha),
+          Files.createTempDirectory("plan-lake").toString))
+    finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
     }
+    span.plans.find(p => find(p)(_.isInstanceOf[DataWritingCommandExec]).isDefined)
+      .getOrElse(fail("no write plan captured"))
   }
 
   private def shuffles(plan: SparkPlan): Seq[ShuffleExchangeExec] =

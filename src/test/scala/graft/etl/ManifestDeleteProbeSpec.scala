@@ -3,10 +3,10 @@ package graft.etl
 import java.nio.file.Files
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.obs.Trace
 
 /** How `ManifestLake.delete` decides between its metadata-only path
   * (a predicate over partition columns alone) and its rewrite path:
@@ -39,26 +39,14 @@ class ManifestDeleteProbeSpec extends AnyFunSuite {
 
   test("a data-column delete reports no failed query to listeners") {
     val dir = table("mlake-delete-probe")
-    val plans = new java.util.concurrent.LinkedBlockingQueue[SparkPlan]()
-    val failures = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        plans.put(qe.executedPlan)
-      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = {
-        failures.add(s"$funcName: ${e.getMessage}"); ()
-      }
-    }
-    spark.listenerManager.register(listener)
-    val execs =
-      try {
-        assert(ManifestLake.delete(spark, dir, col("chrom") === "chr1" && col("pos") >= 30) === 2L)
-        ListenerDrain.drain(spark, plans)
-      } finally spark.listenerManager.unregister(listener)
-    assert(failures.isEmpty, failures.toArray.mkString("\n"))
+    val (deleted, span) =
+      Trace.capture(spark)(ManifestLake.delete(spark, dir, col("chrom") === "chr1" && col("pos") >= 30))
+    assert(deleted === 2L)
+    assert(span.failures === 0)
     // three queries: the probe, the keep write and the change files —
     // the deleted-row count rides the keep write and the rewritten
     // files' stats ride its footers
-    assert(execs.size === 3, execs.map(_.nodeName).mkString(", "))
+    assert(span.plans.size === 3, span.plans.map(_.nodeName).mkString(", "))
     val (fs, root) = ManifestLake.fsFor(spark, dir)
     assert(ManifestLake.readManifest(fs, root, 2L).files.forall(_.stats.contains("pos")))
     val left = ManifestLake.read(spark, dir)

@@ -2,15 +2,15 @@ package graft.etl
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.obs.Trace
+
 /** The queries each ManifestLake DML verb runs, pinned: the number of
-  * executions a listener sees and the `ShuffleExchangeExec` nodes in
+  * executions a `graft.obs` span sees and the `ShuffleExchangeExec` nodes in
   * their final plans. `ManifestUpsertSpec` pins upsert and
   * `ManifestDeleteProbeSpec` the data-column delete; this spec pins the
   * other paths, so a refactor of the shared rewrite cannot add a query
@@ -35,23 +35,11 @@ class ManifestDmlPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     * ran; fails if any query failed.
     */
   private def shape(body: => Any): (Int, Int) = {
-    val plans = new java.util.concurrent.LinkedBlockingQueue[SparkPlan]()
-    val failures = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        plans.put(qe.executedPlan)
-      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = {
-        failures.add(s"$funcName: ${e.getMessage}"); ()
-      }
-    }
-    spark.listenerManager.register(listener)
-    val execs =
-      try { body; ListenerDrain.drain(spark, plans) }
-      finally spark.listenerManager.unregister(listener)
-    assert(failures.isEmpty, failures.toArray.mkString("\n"))
-    val exchanges = execs.map(p => collect(p) { case s: ShuffleExchangeExec => s }.size).sum
-    info(s"${execs.size} executions, $exchanges exchanges")
-    (execs.size, exchanges)
+    val (_, span) = Trace.capture(spark)(body)
+    assert(span.failures === 0)
+    val exchanges = span.plans.map(p => collect(p) { case s: ShuffleExchangeExec => s }.size).sum
+    info(s"${span.plans.size} executions, $exchanges exchanges")
+    (span.plans.size, exchanges)
   }
 
   private def rows(dir: String): Map[Int, String] =

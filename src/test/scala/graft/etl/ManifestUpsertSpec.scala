@@ -7,13 +7,14 @@ import scala.collection.mutable
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_COL, REPARTITION_BY_NUM, ShuffleExchangeExec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.obs.Trace
 
 /** `ManifestLake.upsert` against an in-memory model of the table:
   * seeded random batches of updates, inserts, new partitions and
@@ -69,21 +70,6 @@ class ManifestUpsertSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     model
   }
 
-  /** Runs `upsert` and returns the plans of the queries it ran. */
-  private def planned(upsert: => Long): (Long, Seq[SparkPlan]) = {
-    val plans = new java.util.concurrent.LinkedBlockingQueue[SparkPlan]()
-    val listener = new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        plans.put(qe.executedPlan)
-      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
-      val v = upsert
-      (v, ListenerDrain.drain(spark, plans))
-    } finally spark.listenerManager.unregister(listener)
-  }
-
   private def exchanges(ps: Seq[SparkPlan]): Seq[ShuffleExchangeExec] =
     ps.flatMap(p => collect(p) { case s: ShuffleExchangeExec => s })
 
@@ -113,9 +99,9 @@ class ManifestUpsertSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       val before = model.toMap
       val filesBefore = manifestAt(dir, v).files.map(_.path).toSet
 
-      val (newV, ps) = planned(ManifestLake.upsert(spark, dir, frame(batch), Parts, Keys))
+      val (newV, ps) = Trace.capture(spark)(ManifestLake.upsert(spark, dir, frame(batch), Parts, Keys))
       assert(newV === v + 1)
-      plans(ps)
+      plans(ps.plans.toSeq)
       model ++= batch
       assert(tableRows(dir) === model.toMap, s"round $round rows")
 
@@ -224,30 +210,22 @@ class ManifestUpsertSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     assert(manifestAt(dir, 1L).files.map(_.bytes).sum < (1L << 20) && advisory >= (1L << 20))
     val derivedWidth = 1
 
-    val failures = new java.util.concurrent.atomic.AtomicInteger()
-    val failed = new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = ()
-      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = {
-        failures.incrementAndGet(); ()
-      }
-    }
     // Spark's own default width, so a shuffle that ignores the bytes shows
     val saved = spark.conf.getOption("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "200")
     val updates = frame(batch)
-    spark.listenerManager.register(failed)
-    val execs = try planned(ManifestLake.upsert(spark, dir, updates, Parts, Keys))._2
+    val span = try Trace.capture(spark)(ManifestLake.upsert(spark, dir, updates, Parts, Keys))._2
     finally {
-      spark.listenerManager.unregister(failed)
       saved match {
         case Some(w) => spark.conf.set("spark.sql.shuffle.partitions", w)
         case None => spark.conf.unset("spark.sql.shuffle.partitions")
       }
     }
+    val execs = span.plans.toSeq
     val widths = exchanges(execs).map(_.outputPartitioning.numPartitions)
     val shape = s"${execs.size} executions, ${widths.size} exchanges, widths $widths"
     info(shape)
-    assert(failures.get === 0, shape)
+    assert(span.failures === 0, shape)
     // the write tasks record the per-file stats: no stats pass (the
     // aggregate yielding per-file `__rows`) runs, so no exchange keeps
     // the session's width

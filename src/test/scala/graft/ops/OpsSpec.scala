@@ -183,9 +183,12 @@ class OpsSpec extends AnyFunSuite {
     // returns a strong-ref snapshot of Spark's weak-values registry, and
     // a snapshot lingering in the polling frame's local slot across the
     // System.gc() call would itself keep the RDD alive (verified by
-    // heap dump: java_frame -> Map1.value1 -> RDD)
+    // heap dump: java_frame -> Map1.value1 -> RDD). The keys are copied
+    // out: `keySet` is a view whose `$outer` is that snapshot, and
+    // `keySet.toSet -- baseline` returns the view itself when nothing in
+    // `baseline` is still persisted
     def extras(baseline: Set[Int]): Set[Int] =
-      spark.sparkContext.getPersistentRDDs.keySet.toSet -- baseline
+      spark.sparkContext.getPersistentRDDs.keysIterator.toSet -- baseline
     def leaksAfter(baseline: Set[Int])(body: => Unit): Set[Int] = {
       body
       val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
